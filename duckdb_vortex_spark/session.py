@@ -14,6 +14,8 @@ import threading
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "duckdb_vortex_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
@@ -31,6 +33,10 @@ def get_spark(app_name: str = "duckdb_vortex_spark", cpus: int | None = None) ->
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # executor Python workers fork from this package's daemon (see
+        # worker_daemon), and every worker imports the package from any cwd
+        .config("spark.python.daemon.module", "duckdb_vortex_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -62,6 +62,12 @@ from pyspark.sql.datasource import (
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
+# Spark 4.1 forks DataSource planning workers (create, plan, pushdown,
+# write, commit) from the stock pyspark.daemon whatever
+# spark.python.daemon.module says. Such a worker is reused across
+# calls; importing worker_daemon here lets every call after its first
+# VTX1 call skip the re-read of Spark's archives too.
+from .. import worker_daemon  # noqa: F401
 from . import vortex_format as vfmt
 
 FILE_SUFFIX = ".vortex"
@@ -238,6 +244,27 @@ class VortexChunk(InputPartition):
 
     file: str
     row_group: int
+
+
+def _read_chunk_batches(partition: VortexChunk, schema: StructType):
+    """Decode one chunk onto ``schema``'s columns as Arrow batches: the
+    file's footer and only the projected columns are read, and columns
+    the file predates come back as typed nulls. A ``row_group < 0``
+    partition (nothing survives pruning, or a stream batch without new
+    data) yields one empty batch with the schema."""
+    cols = [f.name for f in schema.fields]
+    footer = vfmt.read_footer(partition.file)
+    if partition.row_group < 0:
+        yield from _with_missing_columns(
+            footer.schema.empty_table(), schema, cols
+        ).to_batches(max_chunksize=1)
+        return
+    present = [c for c in cols if footer.schema.get_field_index(c) >= 0]
+    n_rows = footer.chunks[partition.row_group]["n_rows"]
+    table = vfmt.read_chunk(partition.file, footer, partition.row_group, present)
+    yield from _with_missing_columns(
+        table, schema, cols, n_rows=n_rows
+    ).to_batches()
 
 
 class VortexReader(DataSourceReader):
@@ -459,47 +486,6 @@ class VortexReader(DataSourceReader):
                 continue  # incomparable stats (e.g. bytes vs str) — keep chunk
         return True
 
-    def _arrow_predicate(self):
-        """Arrow expression form of the pushed hints.  NOT applied in
-        ``read()`` (r7): a batch-level prefilter is scan-closure state,
-        and under the upstream single-slot readInfo caveat a stale
-        closure's prefilter silently removed rows another branch of the
-        same relation needed (its Filter node re-adds nothing that the
-        scan never yielded). Opt-in chunk pruning keeps the 100 TB win
-        for fresh-load-per-query scans (r8: hints default OFF); the
-        row-level prefilter only ever saved Arrow→JVM transfer that
-        Spark's retained Filter now handles. Kept for
-        diagnostics/tests."""
-        import pyarrow.compute as pc
-
-        expr = None
-        for f in self.pushed:
-            # tuple path → nested field reference (Acero resolves
-            # struct steps); single-segment stays a plain column ref
-            field = pc.field(*f.attribute)
-            if isinstance(f, EqualTo):
-                e = field == f.value
-            elif isinstance(f, GreaterThan):
-                e = field > f.value
-            elif isinstance(f, GreaterThanOrEqual):
-                e = field >= f.value
-            elif isinstance(f, LessThan):
-                e = field < f.value
-            elif isinstance(f, LessThanOrEqual):
-                e = field <= f.value
-            elif isinstance(f, IsNull):
-                e = field.is_null()
-            elif isinstance(f, IsNotNull):
-                e = ~field.is_null()
-            elif isinstance(f, In):
-                e = field.isin(list(f.value))
-            elif isinstance(f, StringStartsWith):
-                e = pc.starts_with(field, pattern=f.value)
-            else:
-                continue
-            expr = e if expr is None else (expr & e)
-        return expr
-
     def read(self, partition: VortexChunk):
         """Decode one chunk: prune columns (A5; chunk-level filter
         pruning happened in partitions()), yield Arrow RecordBatches
@@ -509,20 +495,7 @@ class VortexReader(DataSourceReader):
         back as typed nulls, so a filter on an evolved column is
         correct on old files too."""
         _apply_store_options(self.store)  # executor-side worker process
-        cols = [f.name for f in self.schema.fields]
-        footer = vfmt.read_footer(partition.file)
-        if partition.row_group < 0:
-            # survives-nothing scan: emit an empty batch with the schema
-            yield from _with_missing_columns(
-                footer.schema.empty_table(), self.schema, cols
-            ).to_batches(max_chunksize=1)
-            return
-        present = [c for c in cols if footer.schema.get_field_index(c) >= 0]
-        n_rows = footer.chunks[partition.row_group]["n_rows"]
-        table = vfmt.read_chunk(partition.file, footer, partition.row_group, present)
-        table = _with_missing_columns(table, self.schema, cols, n_rows=n_rows)
-        # no pushed-hint row prefilter here — see _arrow_predicate (r7)
-        yield from table.to_batches()
+        yield from _read_chunk_batches(partition, self.schema)
 
 
 class VortexStreamReader(DataSourceStreamReader):
@@ -574,19 +547,7 @@ class VortexStreamReader(DataSourceStreamReader):
 
     def read(self, partition: VortexChunk):
         _apply_store_options(self.store)  # executor-side worker process
-        cols = [f.name for f in self.schema.fields]
-        footer = vfmt.read_footer(partition.file)
-        if partition.row_group < 0:
-            yield from _with_missing_columns(
-                footer.schema.empty_table(), self.schema, cols
-            ).to_batches(max_chunksize=1)
-            return
-        present = [c for c in cols if footer.schema.get_field_index(c) >= 0]
-        n_rows = footer.chunks[partition.row_group]["n_rows"]
-        table = vfmt.read_chunk(partition.file, footer, partition.row_group, present)
-        yield from _with_missing_columns(
-            table, self.schema, cols, n_rows=n_rows
-        ).to_batches()
+        yield from _read_chunk_batches(partition, self.schema)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are self-describing; nothing to clean up

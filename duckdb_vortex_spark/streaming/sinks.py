@@ -22,6 +22,7 @@ from __future__ import annotations
 import contextlib
 import glob as globmod
 import json as _json
+import logging
 import math as _math
 import os
 import shutil
@@ -44,6 +45,8 @@ from ..sources.vortex import FILE_SUFFIX
 # it still has gate compute to overlap them with.
 _WRITE_POOL = None
 _WRITE_POOL_LOCK = _threading.Lock()
+_log = logging.getLogger(__name__)
+_SESSION_SETUP_WARNED = False
 
 
 def _write_pool() -> _ThreadPoolExecutor:
@@ -106,6 +109,7 @@ class overlapped_batch_writes:
                 props = None
 
         def _run():
+            global _SESSION_SETUP_WARNED
             if spark is not None:
                 try:
                     jvm = spark.sparkContext._jvm
@@ -123,7 +127,16 @@ class overlapped_batch_writes:
                         # job descriptions are thread-local (guide §1.5/§2.6)
                         spark.sparkContext.setJobDescription(label)
                 except Exception:
-                    pass
+                    # the write still runs; if it reads or writes a
+                    # Python data source it fails with a causeless
+                    # DATA_SOURCE_NOT_FOUND, so name the cause here
+                    if not _SESSION_SETUP_WARNED:
+                        _SESSION_SETUP_WARNED = True
+                        _log.warning(
+                            "overlapped batch write: could not set the active "
+                            "session or local properties on the write thread",
+                            exc_info=True,
+                        )
             return fn(*args, **kwargs)
 
         self._futs.append(_write_pool().submit(_run))

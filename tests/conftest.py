@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import math
 import os
+import warnings
 
 import duckdb
 import numpy as np
@@ -167,10 +168,21 @@ _SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    matched, files = set(), set()
     for item in items:
         # nodeid relative to tests/: "tests/test_x.py::test_y[param]"
         nid = item.nodeid
         if nid.startswith("tests/"):
             nid = nid[len("tests/"):]
+        files.add(nid.split("::", 1)[0])
         if nid in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+            matched.add(nid)
+    # a renamed or deleted test would silently drop out of the slow
+    # tier's bookkeeping; only files that were collected are checked,
+    # so running a single file does not warn about the others
+    for nid in sorted(_SLOW_TESTS - matched):
+        if nid.split("::", 1)[0] in files:
+            warnings.warn(
+                pytest.PytestWarning(f"_SLOW_TESTS entry matches no collected test: {nid}")
+            )
