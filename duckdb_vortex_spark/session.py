@@ -37,6 +37,12 @@ def get_spark(app_name: str = "duckdb_vortex_spark", cpus: int | None = None) ->
         # worker_daemon), and every worker imports the package from any cwd
         .config("spark.python.daemon.module", "duckdb_vortex_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # Spark's generated-class cache (default 100 entries) sized for
+        # the engine's working set: one round of all 250 catalog entries
+        # at sf0.001 compiles 3,170 distinct classes (a second round 129
+        # more), a vortex_ingest benchmark run 219. At 100, every warm
+        # vortex_ingest pass re-compiled about 250 of them.
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

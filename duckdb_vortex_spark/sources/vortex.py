@@ -66,9 +66,13 @@ from pyspark.sql.types import StructType
 # write, commit) from the stock pyspark.daemon whatever
 # spark.python.daemon.module says. Such a worker is reused across
 # calls; importing worker_daemon here lets every call after its first
-# VTX1 call skip the re-read of Spark's archives too.
-from .. import worker_daemon  # noqa: F401
+# VTX1 call skip the re-read of Spark's archives too. The call below
+# freezes the import-time heap of any Python worker (executor or
+# planning) that loads this source; in the driver it does nothing.
+from .. import worker_daemon
 from . import vortex_format as vfmt
+
+worker_daemon.freeze_worker_heap()
 
 FILE_SUFFIX = ".vortex"
 

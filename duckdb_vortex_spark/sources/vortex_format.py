@@ -315,25 +315,38 @@ def _decode_alp(meta: dict, buf: bytes, n: int):
 def fsst_train(sample: bytes, max_symbols: int = 254) -> list[bytes]:
     """One-pass sampled training (the paper trains on a sample too):
     count substrings of length 2..8, keep the highest-gain
-    (occurrences × saved bytes) non-overlapping-prefix set."""
-    from collections import Counter
+    (occurrences × saved bytes) symbols, ties broken by byte order.
 
-    if not sample:
-        return []
-    counts: Counter[bytes] = Counter()
+    Every length-``ln`` window is packed big-endian into a uint64, so
+    counting is one ``np.unique`` per length and integer order is byte
+    order. Only the candidates that can make the cut (gain at least the
+    ``max_symbols``-th largest) are turned back into bytes and sorted."""
+    import numpy as np
+
+    arr = np.frombuffer(sample, np.uint8)
+    keys, counts, lens = [], [], []
     for ln in (2, 3, 4, 6, 8):
-        for i in range(0, len(sample) - ln + 1):
-            counts[sample[i : i + ln]] += 1
-    scored = sorted(
-        ((cnt * (len(s) - 1), s) for s, cnt in counts.items() if cnt >= 4),
-        key=lambda t: (-t[0], t[1]),
-    )
-    symbols: list[bytes] = []
-    for _gain, s in scored:
-        if len(symbols) >= max_symbols:
+        m = len(arr) - ln + 1
+        if m <= 0:
             break
-        symbols.append(s)
-    return symbols
+        packed = np.zeros(m, np.uint64)
+        for j in range(ln):
+            packed = (packed << np.uint64(8)) | arr[j : j + m]
+        uniq, cnt = np.unique(packed, return_counts=True)
+        frequent = cnt >= 4
+        keys.append(uniq[frequent])
+        counts.append(cnt[frequent])
+        lens.append(np.full(int(frequent.sum()), ln))
+    if not keys:
+        return []
+    keys, lens = np.concatenate(keys), np.concatenate(lens)
+    gains = np.concatenate(counts) * (lens - 1)
+    cut = np.sort(gains)[-max_symbols] if len(gains) > max_symbols else 0
+    top = np.flatnonzero(gains >= cut)
+    scored = sorted(
+        (-int(gains[i]), int(keys[i]).to_bytes(int(lens[i]), "big")) for i in top
+    )
+    return [s for _gain, s in scored[:max_symbols]]
 
 
 _ESC = 0xFF

@@ -25,10 +25,11 @@ import json as _json
 import logging
 import math as _math
 import os
+import queue as _queue
 import shutil
 import threading as _threading
 import time as _time
-from concurrent.futures import ThreadPoolExecutor as _ThreadPoolExecutor
+from concurrent.futures import Future as _Future
 
 from pyspark.sql import DataFrame
 
@@ -42,21 +43,43 @@ from ..sources.vortex import FILE_SUFFIX
 # thread to its own JVM thread (PYSPARK_PIN_THREAD), so a per-batch pool
 # would leak one JVM thread per batch on a 24/7 stream. Two workers is
 # enough — a chain never has more than two store writes in flight while
-# it still has gate compute to overlap them with.
-_WRITE_POOL = None
+# it still has gate compute to overlap them with. The workers are daemon
+# threads, so a hung write cannot block interpreter exit: a
+# ThreadPoolExecutor joins its threads before any atexit hook runs. A
+# write cut off at exit belongs to a batch whose checkpoint never
+# committed, and that batch retries wholesale on restart.
+_WRITE_JOBS = None
 _WRITE_POOL_LOCK = _threading.Lock()
 _log = logging.getLogger(__name__)
 _SESSION_SETUP_WARNED = False
 
 
-def _write_pool() -> _ThreadPoolExecutor:
-    global _WRITE_POOL
+def _write_worker(jobs: _queue.SimpleQueue) -> None:
+    while True:
+        fut, fn = jobs.get()
+        if fut.set_running_or_notify_cancel():
+            try:
+                fut.set_result(fn())
+            except BaseException as e:  # noqa: BLE001 — the submitter re-raises it
+                fut.set_exception(e)
+        del fut, fn  # release the batch's frames before waiting for the next
+
+
+def _submit_write(fn) -> _Future:
+    global _WRITE_JOBS
     with _WRITE_POOL_LOCK:
-        if _WRITE_POOL is None:
-            _WRITE_POOL = _ThreadPoolExecutor(
-                max_workers=2, thread_name_prefix="dvs-batch-write"
-            )
-        return _WRITE_POOL
+        if _WRITE_JOBS is None:
+            _WRITE_JOBS = _queue.SimpleQueue()
+            for i in range(2):
+                _threading.Thread(
+                    target=_write_worker,
+                    args=(_WRITE_JOBS,),
+                    name=f"dvs-batch-write_{i}",
+                    daemon=True,
+                ).start()
+    fut = _Future()
+    _WRITE_JOBS.put((fut, fn))
+    return fut
 
 
 class overlapped_batch_writes:
@@ -139,7 +162,7 @@ class overlapped_batch_writes:
                         )
             return fn(*args, **kwargs)
 
-        self._futs.append(_write_pool().submit(_run))
+        self._futs.append(_submit_write(_run))
 
     def __enter__(self) -> "overlapped_batch_writes":
         return self

@@ -10,6 +10,9 @@ from __future__ import annotations
 import glob
 import json
 import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 from pyspark.sql import Window
@@ -735,3 +738,33 @@ def test_overlapped_write_session_setup_failure_warns_once(monkeypatch, caplog):
     assert ran == [1, 1]
     warned = [r for r in caplog.records if "active session" in r.getMessage()]
     assert len(warned) == 1 and "no JVM here" in caplog.text
+
+
+def test_hung_overlapped_write_does_not_block_exit(tmp_path):
+    """A process whose batch writes hang still exits when its main thread
+    ends: both pool workers stuck in a write, a third write queued, and
+    the interpreter exits without running the queued one."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    marker = tmp_path / "queued-write-ran"
+    script = f"""
+        import sys, threading
+        sys.path.insert(0, {repo!r})
+        from duckdb_vortex_spark.streaming import sinks
+
+        hang = threading.Event()
+        bw = sinks.overlapped_batch_writes()
+        bw.submit(hang.wait)
+        bw.submit(hang.wait)
+        bw.submit(open, {str(marker)!r}, "w")
+        print("exiting", flush=True)
+    """
+    env = dict(os.environ, DVS_OVERLAP_WRITES="1")
+    out = subprocess.run(
+        [sys.executable, "-c", textwrap.dedent(script)],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0 and out.stdout.strip() == "exiting", out.stderr[-3000:]
+    assert not marker.exists()

@@ -53,3 +53,26 @@ def test_quiet_accumulator_noise_scoped_and_idempotent(spark):
     assert flt is not None
     # a CompositeFilter here would mean the idempotence guard failed
     assert "Composite" not in flt.getClass().getSimpleName()
+
+
+def test_codegen_cache_holds_more_than_the_default_100_classes(spark):
+    """``get_spark`` sizes Spark's generated-class cache for the engine's
+    working set: after more than 100 distinct generated classes, the
+    first one is still cached, so running its query again compiles
+    nothing."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount
+
+    def projection(i):
+        # the literal is inlined, so each i generates a class of its own;
+        # preparing the physical plan compiles it without running a job
+        df = spark.range(2).selectExpr(f"id * {i + 7} + {i} AS v")
+        df._jdf.queryExecution().executedPlan().execute()
+
+    before = compiled()
+    for i in range(120):
+        projection(i)
+    assert compiled() - before >= 120
+    warm = compiled()
+    projection(0)
+    assert compiled() == warm

@@ -9,12 +9,16 @@ from __future__ import annotations
 
 import datetime
 import os
+from collections import Counter
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from duckdb_vortex_spark.sources import vortex_format as vf
+
+from .conftest import SF_DIR
 
 
 def _roundtrip_column(arr: pa.Array) -> tuple[str, pa.Array]:
@@ -142,6 +146,55 @@ def test_fsst_escape_handles_code_collisions():
     payload = bytes(range(256)) * 4 + b"abcabcabc" * 30
     symbols = vf.fsst_train(payload)
     assert vf.fsst_decode(vf.fsst_encode(payload, symbols), payload and symbols) == payload
+
+
+def _fsst_train_loop(sample: bytes, max_symbols: int = 254) -> list[bytes]:
+    """The original one-substring-at-a-time trainer, kept as the
+    reference the vectorized ``fsst_train`` must match byte for byte."""
+    if not sample:
+        return []
+    counts: Counter[bytes] = Counter()
+    for ln in (2, 3, 4, 6, 8):
+        for i in range(0, len(sample) - ln + 1):
+            counts[sample[i : i + ln]] += 1
+    scored = sorted(
+        ((cnt * (len(s) - 1), s) for s, cnt in counts.items() if cnt >= 4),
+        key=lambda t: (-t[0], t[1]),
+    )
+    return [s for _gain, s in scored[:max_symbols]]
+
+
+def _fsst_payloads() -> list[bytes]:
+    texts = pq.read_table(os.path.join(SF_DIR, "documents.parquet"), columns=["text"])
+    rng = np.random.default_rng(20261017)
+    return [
+        # a documents.text chunk column's payload, sampled as the writer does
+        "".join(texts.column("text").to_pylist()).encode()[: 1 << 16],
+        b"http://example.com/page/1;http://example.com/page/2;" * 50,
+        bytes(range(256)) * 4 + b"abcabcabc" * 30,
+        "".join(f"Value {i} the quick brown fox jumps over" for i in range(2000)).encode()[
+            : 1 << 16
+        ],
+        rng.integers(0, 256, 5000, dtype=np.uint8).tobytes(),
+        rng.integers(0, 4, 1 << 16, dtype=np.uint8).tobytes(),  # many gain ties
+        rng.integers(97, 100, 300, dtype=np.uint8).tobytes(),
+        b"",
+        b"aaaa",
+        b"abababababab",
+    ]
+
+
+@pytest.mark.parametrize("case", range(len(_fsst_payloads())))
+def test_fsst_train_matches_reference_loop(case):
+    """Same symbol table, in the same order, as the reference loop, so
+    ``fsst_encode`` writes the same bytes."""
+    payload = _fsst_payloads()[case]
+    symbols = vf.fsst_train(payload)
+    assert symbols == _fsst_train_loop(payload)
+    assert vf.fsst_encode(payload, symbols) == vf.fsst_encode(
+        payload, _fsst_train_loop(payload)
+    )
+    assert vf.fsst_train(payload, max_symbols=7) == _fsst_train_loop(payload, 7)
 
 
 def test_string_fsst_selected_for_compressible_high_cardinality():

@@ -4,10 +4,13 @@ and the worker environment ``get_spark`` sets up.
 The daemon stops ``importlib.invalidate_caches()`` from re-reading
 Spark's own archives (the zips ``pyspark`` and ``py4j`` are imported
 from, and the jars on the worker path), and leaves every other
-archive's stock re-read in place."""
+archive's stock re-read in place. A Python worker that loads the VTX1
+source freezes its import-time heap once (``freeze_worker_heap``); the
+driver never does."""
 
 from __future__ import annotations
 
+import gc
 import glob
 import os
 import subprocess
@@ -91,6 +94,117 @@ def test_vtx1_source_import_applies_the_patch(tmp_path):
     """
     out = _run(script, cwd=str(tmp_path), timeout=120)
     assert out.stdout.strip() == "duckdb_vortex_spark.worker_daemon", out.stderr[-3000:]
+
+
+def test_vtx1_source_freezes_worker_heap_once(tmp_path):
+    """Without Spark: in a process the worker factory started (it sets
+    ``PYTHON_WORKER_FACTORY_SECRET``), loading the VTX1 source freezes
+    the heap after importing what a VTX1 task uses; calling the freeze
+    again moves nothing more into the permanent generation. In the
+    driver (no secret) nothing is frozen."""
+    script = f"""
+        import gc, sys
+        sys.path.insert(0, {REPO!r})
+        from duckdb_vortex_spark import worker_daemon
+        import duckdb_vortex_spark.sources.vortex  # noqa: F401
+        first = gc.get_freeze_count()
+        allocated_since = [dict(i=i) for i in range(10000)]  # a second freeze would take these
+        worker_daemon.freeze_worker_heap()
+        print(first, gc.get_freeze_count(), "pandas" in sys.modules)
+    """
+    out = _run(script, cwd=str(tmp_path), timeout=120, PYTHON_WORKER_FACTORY_SECRET="s")
+    first, again, pandas_loaded = out.stdout.split()
+    assert int(first) > 0 and int(again) == int(first), out.stderr[-3000:]
+    assert pandas_loaded == "True"
+
+    out = _run(script, cwd=str(tmp_path), timeout=120)
+    assert out.stdout.split() == ["0", "0", "False"], out.stderr[-3000:]
+
+
+def test_daemon_parent_loads_no_task_modules(tmp_path):
+    """The daemon process forks every executor worker, so importing the
+    daemon module must not import pandas (whose import starts a thread)
+    or freeze anything: that happens in the forked worker."""
+    script = f"""
+        import gc, sys
+        sys.path.insert(0, {REPO!r})
+        import duckdb_vortex_spark.worker_daemon  # noqa: F401
+        print(gc.get_freeze_count(), "pandas" in sys.modules, "pyarrow" in sys.modules)
+    """
+    out = _run(script, cwd=str(tmp_path), timeout=120, PYTHON_WORKER_FACTORY_SECRET="s")
+    assert out.stdout.split() == ["0", "False", "False"], out.stderr[-3000:]
+
+
+def test_workers_that_loaded_vtx1_stay_frozen(spark, tmp_path):
+    """After VTX1 writes and reads, the Python workers that loaded the
+    VTX1 source report a non-zero freeze count, and further tasks do
+    not grow it (objects only leave the permanent generation, when
+    freed). The probe is itself a Python DataSource, so its ``read()``
+    runs in the executor workers that ran the VTX1 scans. Its
+    ``partitions()`` runs in a planning worker, which Spark forks from
+    the stock ``pyspark.daemon``; it loads the VTX1 source there. The
+    driver stays unfrozen."""
+    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+    from duckdb_vortex_spark.sources.vortex import register
+
+    def worker_state():
+        import gc
+        import os
+        import sys
+
+        return (
+            os.getpid(),
+            gc.get_freeze_count(),
+            "duckdb_vortex_spark.sources.vortex" in sys.modules,
+        )
+
+    class ProbeReader(DataSourceReader):
+        def partitions(self):
+            import duckdb_vortex_spark.sources.vortex  # noqa: F401
+
+            planner = worker_state()
+            # enough tasks to cycle through every idle worker in the pool
+            return [InputPartition(planner) for _ in range(64)]
+
+        def read(self, partition):
+            yield ("planning", *partition.value)
+            yield ("executor", *worker_state())
+
+    class FreezeProbe(DataSource):
+        @classmethod
+        def name(cls):
+            return "dvs_freeze_probe"
+
+        def schema(self):
+            return "role string, pid long, frozen long, vtx1 boolean"
+
+        def reader(self, schema):
+            return ProbeReader()
+
+    register(spark)
+    spark.dataSource.register(FreezeProbe)
+    path = str(tmp_path / "vtx")
+    df = spark.range(4000).withColumn("s", F.concat(F.lit("v"), F.col("id").cast("string")))
+
+    def vtx1_round_trip():
+        df.repartition(8).write.format("vortex").mode("overwrite").save(path)
+        spark.read.format("vortex").load(path).where("id % 7 = 1").count()
+
+    def probe():
+        rows = spark.read.format("dvs_freeze_probe").load().collect()
+        return {(r.role, r.pid): r.frozen for r in rows if r.vtx1}
+
+    vtx1_round_trip()
+    first = probe()
+    assert {role for role, _pid in first} == {"planning", "executor"}, first
+    assert all(n > 0 for n in first.values()), first
+    vtx1_round_trip()
+    second = probe()
+    same = set(first) & set(second)
+    assert same, (first, second)
+    assert all(0 < second[w] <= first[w] for w in same), (first, second)
+    assert gc.get_freeze_count() == 0
 
 
 def test_session_workers_run_the_daemon(spark):
