@@ -3,34 +3,37 @@
 The within-stream dedup in streaming/windows.py bounds its state by a
 watermark; a TRAINING-DATA ingest pipeline needs the other kind too —
 "have we EVER seen this document?" — whose state is the corpus itself
-and therefore lives in storage, not the stream state store. The
-standard shape at 100 TB/day:
+and therefore lives in storage, not the stream state store.
 
-1. per batch, fingerprint rows (xxhash64 of normalized text) and drop
-   in-batch duplicates;
-2. LEFT ANTI join the batch against the persistent fingerprint store
-   (a vortex dataset: tiny rows, one column, zone-map-prunable);
+This module is a one-gate chain over `exact_gate`, the gate the
+integrated chain (`incremental_pipeline`) runs first. Per micro-batch:
+
+1. fingerprint rows (xxhash64 of normalized text); in-batch, the
+   smallest id of each fingerprint wins;
+2. drop the rows whose fingerprint is in the persistent fingerprint
+   store (a vortex dataset: tiny rows, one column);
 3. append survivors to the output dataset AND their fingerprints to
    the store, both under the micro-batch's batch-id directory —
    retries overwrite their own dirs, so exactly-once composes with
    the streaming checkpoint.
 
-Scale: the anti join shuffles on the fingerprint — both sides hash-
-partition on a 64-bit key with no skew; the store grows by corpus
-cardinality (8 bytes/doc before encoding), and a periodic
-``compact_dataset`` keeps its file count flat. The batch side is one
-micro-batch (bounded); Spark broadcasts it when small.
+Scale: the store grows by corpus cardinality (8 bytes/doc before
+encoding), and periodic compaction keeps its file count flat. The
+batch side is one micro-batch (bounded).
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.vortex import FILE_SUFFIX  # noqa: F401  (store is a vortex dataset)
+from .sinks import (
+    label_jobs,
+    overlapped_batch_writes,
+    overwrite_batch_atomic,
+    read_state,
+    start_batch_stream,
+)
 
 
 def fingerprint(text_col: str = "text"):
@@ -39,6 +42,29 @@ def fingerprint(text_col: str = "text"):
     ones collapse."""
     norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
     return F.xxhash64(norm)
+
+
+def exact_gate(fp: DataFrame, seen: DataFrame | None) -> DataFrame:
+    """The exact gate. ``fp`` holds (id, __fp) for the rows reaching the
+    gate, ``seen`` the fingerprints of every earlier row (one ``__fp``
+    column; None before the first batch). Returns the dropped ids: each
+    row that is not the smallest id of its fingerprint, and each row
+    whose fingerprint is in ``seen``.
+
+    The first-wins window ranks ids only, so no payload column rides
+    its exchange. The batch side is bounded and the history is the
+    corpus, so the batch fingerprints are broadcast INTO the history
+    scan (map-side inner join) and only matched ids reach an exchange;
+    checkpointed frames carry no size stats, and without the hint the
+    planner sort-merged the batch against the whole store."""
+    fp = fp.withColumn(
+        "__rn", F.row_number().over(Window.partitionBy("__fp").orderBy("id"))
+    ).localCheckpoint(eager=False)
+    dropped = fp.filter(F.col("__rn") > 1).select("id")
+    if seen is not None:
+        hist = seen.join(F.broadcast(fp.select("id", "__fp")), "__fp").select("id")
+        dropped = dropped.unionByName(hist.distinct()).distinct()
+    return dropped.localCheckpoint(eager=False)
 
 
 def incremental_dedup_stream(
@@ -52,15 +78,12 @@ def incremental_dedup_stream(
     """Start the ingest pipeline on a streaming DataFrame; returns the
     StreamingQuery (caller awaits). Output dataset: survivors only,
     first occurrence wins across the whole stream history."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(batch_df, batch_id, out_dir, store_dir, text_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_batch_stream(
+        stream_df,
+        checkpoint,
+        lambda batch_df, batch_id: process_batch(
+            batch_df, batch_id, out_dir, store_dir, text_col
+        ),
     )
 
 
@@ -70,73 +93,25 @@ def process_batch(
     out_dir: str,
     store_dir: str,
     text_col: str = "text",
+    id_col: str = "doc_id",
 ) -> None:
     """One micro-batch of the ingest pipeline — exposed as a plain
     function so retry semantics are directly testable: calling it twice
     with the same batch_id is idempotent (the replay reads exactly the
     store state the first attempt read, then overwrites its own dirs)."""
     spark_ = batch_df.sparkSession
-    fp = batch_df.withColumn("__fp", fingerprint(text_col))
-    # in-batch dedup: keep one row per fingerprint (min doc_id for
-    # determinism under retries)
-    fp = (
-        fp.withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("__fp").orderBy(
-                    *[c for c in fp.columns if c != "__fp"]
-                )
-            ),
-        )
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    label_jobs(spark_, f"dedup b{batch_id}: exact gate")
+    rows = batch_df.withColumn("__fp", fingerprint(text_col)).localCheckpoint(eager=False)
+    dropped = exact_gate(
+        rows.select(F.col(id_col).alias("id"), "__fp"),
+        read_state(spark_, store_dir, batch_id, schema=rows.select("__fp").schema),
     )
-    # Anti-join ONLY against batches strictly earlier than this one.
-    # A retried batch may have half-written its own store dir before
-    # the checkpoint committed; globbing batch-* would see those
-    # stale fingerprints, classify every row as seen, and rewrite
-    # both dirs EMPTY — permanently dropping the documents. Listing
-    # ids < batch_id makes the replay read exactly what the first
-    # attempt read.
-    from .sinks import batch_dirs
-
-    prior = batch_dirs(store_dir, batch_id)
-    # checkpoint: fp feeds both the history probe and the two writes —
-    # without a barrier each consumer re-runs the first-wins window
-    # (and every F.broadcast build is its own query execution — r16)
-    fp = fp.localCheckpoint(eager=False)
-    if prior:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        seen = (
-            spark_.read.format("vortex")
-            # known store schema (xxhash64 → bigint): skips the
-            # footer-merging bind step per batch (r16)
-            .schema(StructType([StructField("__fp", LongType(), True)]))
-            .option("paths", json.dumps(prior))
-            .load()
-            .select("__fp")
-        )
-        # r16 (guide §3.1): the batch side is bounded, the store is the
-        # corpus — broadcast the batch fingerprints INTO the store scan
-        # (map-side semi; the store is never exchanged), then anti-join
-        # the bounded matched set back. Row-identical to the direct
-        # anti join: a batch fp is in `seen` iff it is in `matched`.
-        matched = seen.join(
-            F.broadcast(fp.select("__fp")), "__fp", "left_semi"
-        ).distinct()
-        fresh = fp.join(F.broadcast(matched), "__fp", "left_anti")
-    else:  # first batch: store empty — dedup is in-batch only
-        fresh = fp
-    from .sinks import overlapped_batch_writes, overwrite_batch_atomic
-
-    # r16 (guide §2.6): the two terminal writes are independent of each
-    # other (different stores, both atomic per batch) — overlap them;
-    # the context joins both before the batch returns, so exactly-once
-    # is unchanged (see `overlapped_batch_writes`).
+    fresh = rows.join(
+        F.broadcast(dropped.withColumnRenamed("id", id_col)), id_col, "left_anti"
+    )
     with overlapped_batch_writes(spark_) as bw:
         bw.submit(
             overwrite_batch_atomic, fresh.select("__fp"), store_dir, batch_id,
             label=f"dedup b{batch_id}: fp store (write)",
         )
-        overwrite_batch_atomic(fresh.drop("__fp"), out_dir, batch_id)
+        overwrite_batch_atomic(fresh.select(*batch_df.columns), out_dir, batch_id)

@@ -3,12 +3,13 @@
 `incremental_dedup.py` answers "have we EVER seen this exact
 document?"; a real training-data ingest also needs the fuzzy version —
 "is this a near-duplicate of anything already landed?" — continuously,
-without re-running MinHash over the whole corpus per batch. The
-standard shape at 100 TB/day:
+without re-running MinHash over the whole corpus per batch.
 
-1. per batch, compute MinHash signatures + LSH band buckets for the
-   NEW documents only (per-row work, zero shuffle —
-   `operators.dedup.minhash_signatures` / `band_buckets`);
+This module is a one-gate chain over `neardup_gate`, the gate the
+integrated chain (`incremental_pipeline`) runs second. Per micro-batch:
+
+1. compute MinHash signatures + LSH band buckets for the NEW documents
+   only (per-row work, zero shuffle — `lsh_signatures`);
 2. candidate pairs = batch buckets ⋈ the persistent bucket index on
    (band, h) — the index holds (band, h, id) for every document ever
    landed (~16 rows × 24 B/doc), so the join touches only colliding
@@ -56,19 +57,16 @@ already pays for; a production deployment would maintain a running
 aggregate.
 
 Exactly-once: every write lands under the micro-batch's batch-id
-directory; a retry reads only strictly-earlier batch dirs and
-overwrites its own, so replay is idempotent (same contract as
+directory; a retry reads only strictly-earlier state (`sinks.read_state`)
+and overwrites its own, so replay is idempotent (same contract as
 `incremental_dedup.process_batch`).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load, query
@@ -80,19 +78,117 @@ from ..operators.dedup import (
     minhash_signatures,
     shingle_table,
 )
-from .sinks import STATE_FILES, land_session_dataset, overlapped_batch_writes
-from .sinks import batch_dirs as _batch_dirs
-from .sinks import overwrite_batch_atomic as _overwrite_batch
+from .sinks import (
+    STATE_FILES,
+    label_jobs,
+    overlapped_batch_writes,
+    overwrite_batch_atomic,
+    read_state,
+    start_batch_stream,
+    three_batch_manifest,
+)
 
 
-def _nullable(schema):
-    """All-nullable copy of ``schema`` — store reads return nullable
-    columns, and passing the known schema skips the DataSource's
-    footer-merging bind step on every per-batch state read (r16)."""
-    from pyspark.sql.types import StructField, StructType
+def lsh_signatures(
+    docs: DataFrame, num_hashes: int = 32, n: int = 3, rows_per_band: int = 2
+) -> tuple[DataFrame, DataFrame]:
+    """What the near-dup gate reads of the (id, text) rows reaching it:
+    MinHash signatures (id, sh, mh) and LSH band buckets (id, band, h).
+    Both are lineage cuts (`localCheckpoint`), since several gate frames
+    and a store write consume each."""
+    sig = minhash_signatures(docs, "text", "id", num_hashes, n, engine="jvm")
+    sig = sig.localCheckpoint(eager=False)
+    return sig, band_buckets(sig, num_hashes, rows_per_band).localCheckpoint(eager=False)
 
-    return StructType(
-        [StructField(f.name, f.dataType, True) for f in schema.fields]
+
+def neardup_gate(
+    sig: DataFrame,
+    buckets: DataFrame,
+    index: DataFrame | None,
+    landed: DataFrame | None,
+    threshold: float = 0.8,
+    n: int = 3,
+    max_bucket: int = 1000,
+) -> DataFrame:
+    """The near-dup gate. ``sig`` and ``buckets`` are `lsh_signatures` of
+    the rows reaching the gate; ``index`` is the prior LSH index (band,
+    h, id) and ``landed`` the prior landed documents (id, text), each
+    None before the first batch. Returns the dropped ids: rows with an
+    earlier row (a prior batch, or a smaller id in this batch) whose
+    shingle Jaccard reaches ``threshold``.
+
+    Hot buckets: a (band, h) with more than ``max_bucket`` rows in the
+    index plus this batch is excluded from BOTH candidate joins. Only
+    the batch's bucket keys are counted (the index scan is semi-joined
+    to them map-side first), so the aggregate's exchange is bounded by
+    the batch, not by every key ever landed."""
+    bkeys = buckets.select("band", "h")
+    counted = bkeys
+    if index is not None:
+        counted = index.select("band", "h").join(
+            F.broadcast(bkeys), ["band", "h"], "left_semi"
+        ).unionByName(bkeys)
+    ok = (
+        counted.groupBy("band", "h")
+        .agg(F.count("*").alias("bn"))
+        .filter(F.col("bn") <= max_bucket)
+        .select("band", "h")
+    )
+    # three consumers, and each F.broadcast build is its own query
+    # execution: without the cut every build re-computes the subtree,
+    # hot-bucket aggregate included
+    buck_ok = buckets.join(F.broadcast(ok), ["band", "h"]).localCheckpoint(eager=False)
+    a = buck_ok.select("band", "h", F.col("id").alias("doc_a"))
+    b = buck_ok.select("band", "h", F.col("id").alias("doc_b"))
+    cand = (
+        a.join(F.broadcast(b), ["band", "h"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+    )
+    if index is not None:
+        # the index streams map-side; the bounded batch buckets broadcast
+        cross = (
+            index.withColumnRenamed("id", "doc_a")
+            .join(F.broadcast(buck_ok), ["band", "h"])
+            .select("doc_a", F.col("id").alias("doc_b"))
+        )
+        cand = cand.unionByName(cross)
+    cand = cand.distinct().localCheckpoint(eager=False)
+    # exact verify: old-side shingles of landed docs are re-built only
+    # for candidate ids, pruned BEFORE re-shingling (semi join on the
+    # landed store's sort key: zone-map point reads at scale)
+    new_sh = sig.select(F.col("id").alias("doc_b"), F.col("sh").alias("sh_b"))
+    old_sh = sig.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
+    if landed is not None:
+        old_docs = landed.join(
+            F.broadcast(cand.select(F.col("doc_a").alias("id")).distinct()),
+            "id",
+            "left_semi",
+        )
+        old_sh = (
+            shingle_table(old_docs, "text", "id", n)
+            .select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
+            .unionByName(old_sh)
+        )
+    return (
+        _with_jaccard(
+            old_sh.join(F.broadcast(cand), "doc_a").join(F.broadcast(new_sh), "doc_b")
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(F.col("doc_b").alias("id"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def keep_manifest(ids: DataFrame, dropped: DataFrame, id_name: str) -> DataFrame:
+    """(``id_name``, keep) for each ``id`` of ``ids``: keep is false for
+    the ``dropped`` ids."""
+    return ids.join(
+        F.broadcast(dropped.withColumn("__dup", F.lit(True))), "id", "left"
+    ).select(
+        F.col("id").alias(id_name),
+        F.coalesce(~F.col("__dup"), F.lit(True)).alias("keep"),
     )
 
 
@@ -116,150 +212,30 @@ def neardup_process_batch(
     (doc_id, keep)."""
     spark_ = batch_df.sparkSession
     with overlapped_batch_writes(spark_) as bw:
-        raw = (
-            batch_df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-            .repartitionByRange(STATE_FILES, "id")
-            .sortWithinPartitions("id")
-        )
-        # r16 write overlap (guide §2.6, same contract argument as the
-        # integrated chain): the raw and index writes are independent of
-        # the gate compute — state reads list strictly-earlier batch dirs
-        # only and a retry overwrites any partial write set atomically per
-        # store — so they run on the shared write pool and are joined
-        # before the batch returns; only their latency stops serializing.
+        docs = batch_df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+        raw = docs.repartitionByRange(STATE_FILES, "id").sortWithinPartitions("id")
         bw.submit(
-            _overwrite_batch, raw, raw_dir, batch_id, max_files=None,
+            overwrite_batch_atomic, raw, raw_dir, batch_id, max_files=None,
             label=f"neardup b{batch_id}: raw (write)",
         )
-
-        # localCheckpoint, not persist: cuts the signature expression
-        # tree out of every downstream plan — persist keeps the full
-        # logical plan and Catalyst re-analyzes the accumulated chain per
-        # action (measured on the integrated pipeline: 117 -> 48 s; see
-        # incremental_pipeline.py docstring for the rule).
-        sig = minhash_signatures(
-            batch_df, text_col, id_col, num_hashes, n, engine="arrow"
-        ).localCheckpoint(eager=False)
-        buckets = band_buckets(sig, num_hashes, rows_per_band).localCheckpoint(eager=False)
-        # the index gets ALL of the batch's buckets regardless of gate
-        # outcomes, so its write depends only on `buckets` — submit it
-        # here to overlap the whole candidate/verify section below
+        label_jobs(spark_, f"neardup b{batch_id}: neardup gate")
+        sig, buckets = lsh_signatures(docs, num_hashes, n, rows_per_band)
+        rows = buckets.select("band", "h", "id")
         bw.submit(
-            _overwrite_batch, buckets.select("band", "h", "id"), index_dir,
-            batch_id, label=f"neardup b{batch_id}: index (write)",
+            overwrite_batch_atomic, rows, index_dir, batch_id,
+            label=f"neardup b{batch_id}: index (write)",
         )
-
-        prior_index = _batch_dirs(index_dir, batch_id)
-        idx = (
-            spark_.read.format("vortex")
-            .schema(_nullable(buckets.select("band", "h", "id").schema))
-            .option("paths", json.dumps(prior_index))
-            .load()
-            if prior_index
-            else None
+        dropped = neardup_gate(
+            sig,
+            buckets,
+            read_state(spark_, index_dir, batch_id, schema=rows.schema),
+            read_state(spark_, raw_dir, batch_id, schema=raw.schema),
+            threshold,
+            n,
+            max_bucket,
         )
-        # Hot-bucket guard over history + this batch, applied UNIFORMLY to
-        # both the in-batch self-join and the history join (an asymmetric
-        # cap would make in-batch pair work unbounded AND make the answer
-        # depend on which join a pair happened to arrive through). The
-        # count is point-in-time by necessity — a stream cannot know a
-        # bucket's final size — so above the cap the guarantee degrades
-        # from "equals batch mode" to "bounded work" (see module
-        # docstring); below it (the designed regime: a bucket past
-        # max_bucket is a stop-shingle artifact) invariance is exact.
-        bkeys = buckets.select("band", "h")
-        if idx is not None:
-            # r16 (guide §2.3/§3.1, same change as the integrated chain):
-            # only the BATCH's bucket keys are consulted below — prune the
-            # index scan to them map-side (broadcast semi) before counting
-            # so the hot-bucket aggregate's exchange is bounded by the
-            # batch's buckets, not every (band, h) ever landed; counts for
-            # surviving keys are unchanged.
-            hist = idx.select("band", "h").join(
-                F.broadcast(bkeys), ["band", "h"], "left_semi"
-            ).unionByName(bkeys)
-        else:
-            hist = bkeys
-        ok = (
-            hist.groupBy("band", "h")
-            .agg(F.count("*").alias("bn"))
-            .filter(F.col("bn") <= max_bucket)
-            .select("band", "h")
-        )
-        # buck_ok feeds three consumers and each F.broadcast build is its
-        # own query execution — checkpoint so the subtree (including the
-        # hot-bucket aggregate) is computed once (r16, measured on the
-        # integrated chain as escalating per-build recompute)
-        buck_ok = buckets.join(F.broadcast(ok), ["band", "h"]).localCheckpoint(
-            eager=False
-        )
-        if idx is not None:
-            # index streams map-side; bounded batch buckets broadcast
-            cross = (
-                idx.withColumnRenamed("id", "doc_a")
-                .join(F.broadcast(buck_ok), ["band", "h"])
-                .select("doc_a", F.col("id").alias("doc_b"))
-            )
-        else:
-            cross = None
-
-        # in-batch candidates (smaller id is the earlier side); the inner
-        # per-branch distincts collapsed into the single final distinct
-        # (identical rows, two fewer exchanges — r16)
-        a = buck_ok.select("band", "h", F.col("id").alias("doc_a"))
-        b = buck_ok.select("band", "h", F.col("id").alias("doc_b"))
-        within = (
-            a.join(F.broadcast(b), ["band", "h"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-        )
-        cand = (
-            within.unionByName(cross) if cross is not None else within
-        ).distinct().localCheckpoint(eager=False)
-
-        # exact verification — old-side shingles come from the landed raw
-        # batches, pruned to candidate ids BEFORE re-shingling (semi join
-        # on the sort key → zone-map point reads at scale)
-        new_sh = sig.select(F.col("id").alias("doc_b"), F.col("sh").alias("sh_b"))
-        old_in_batch = sig.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
-        prior_raw = _batch_dirs(raw_dir, batch_id)
-        if prior_raw:
-            old_docs = (
-                spark_.read.format("vortex")
-                .schema(_nullable(raw.schema))
-                .option("paths", json.dumps(prior_raw))
-                .load()
-                .join(
-                    F.broadcast(cand.select(F.col("doc_a").alias("id")).distinct()),
-                    "id",
-                    "left_semi",
-                )
-            )
-            old_sh = (
-                shingle_table(old_docs, "text", "id", n)
-                .select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
-                .unionByName(old_in_batch)
-            )
-        else:
-            old_sh = old_in_batch
-        dup_ids = (
-            _with_jaccard(
-                old_sh.join(F.broadcast(cand), "doc_a")
-                .join(F.broadcast(new_sh), "doc_b")
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select(F.col("doc_b").alias("id"))
-            .distinct()
-        )
-        manifest = (
-            sig.select("id")
-            .join(F.broadcast(dup_ids.withColumn("__dup", F.lit(True))), "id", "left")
-            .select(
-                F.col("id").alias("doc_id"),
-                F.coalesce(~F.col("__dup"), F.lit(True)).alias("keep"),
-            )
-        )
-        _overwrite_batch(manifest, manifest_dir, batch_id)
+        manifest = keep_manifest(sig.select("id"), dropped, "doc_id")
+        overwrite_batch_atomic(manifest, manifest_dir, batch_id)
 
 
 def incremental_neardup_stream(
@@ -274,17 +250,12 @@ def incremental_neardup_stream(
     """Start the near-dup ingest on a streaming DataFrame; returns the
     StreamingQuery (caller awaits). Manifest across all batches =
     batch-mode MinHash dedup of the whole history, first-wins."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        neardup_process_batch(
+    return start_batch_stream(
+        stream_df,
+        checkpoint,
+        lambda batch_df, batch_id: neardup_process_batch(
             batch_df, batch_id, raw_dir, index_dir, manifest_dir, **kwargs
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -325,34 +296,12 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly the brute-force oracle, independent of batch chopping
     (the oracle assumes LSH misses nothing; miss probability ≤
     (1-0.8²)¹⁶ ≈ 7e-8 per true pair, as in dedup_minhash_lsh_pairs)."""
-    from ..sources.vortex import register
-
-    register(spark)
-    docs = load(spark, sf_dir, "documents")
-    batched = docs.withColumn(
-        "__b", F.ntile(3).over(Window.orderBy("doc_id"))
-    ).persist()
-    root = tempfile.mkdtemp(prefix="dvs_neardup_")
-    raw_d, idx_d, man_d = (os.path.join(root, d) for d in ("raw", "idx", "man"))
-    try:
-        for i in (1, 2, 3):
-            neardup_process_batch(
-                batched.filter(F.col("__b") == i).drop("__b"),
-                i,
-                raw_d,
-                idx_d,
-                man_d,
-            )
-        out = (
-            spark.read.format("vortex")
-            .option("paths", json.dumps(_batch_dirs(man_d, 10**9)))
-            .load()
-            .select("doc_id", "keep")
-        )
-        # Land executor-side before the scratch dir disappears (the
-        # driver may collect lazily after this function returns) —
-        # never through a driver collect (VERDICT r8 wrong #1).
-        return land_session_dataset(out, "neardup-manifest")
-    finally:
-        batched.unpersist()
-        shutil.rmtree(root, ignore_errors=True)
+    return three_batch_manifest(
+        load(spark, sf_dir, "documents"),
+        "doc_id",
+        "neardup",
+        ("doc_id", "keep"),
+        lambda batch_df, batch_id, root: neardup_process_batch(
+            batch_df, batch_id, *(os.path.join(root, d) for d in ("raw", "idx", "man"))
+        ),
+    )

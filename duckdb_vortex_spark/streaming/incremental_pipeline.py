@@ -8,33 +8,27 @@ by the exact gate never reaches the near-dup index; a near-dup never
 reaches the semantic index; and every gate's verification reads from
 the SAME shared landed-batch store the chain itself writes.
 
-Per micro-batch (documents already joined to their embeddings):
+Per micro-batch (documents already joined to their embeddings), a
+composition of the standalone modules' gate functions:
 
 0. land the raw batch (id, fp, text, vec) id-sorted into the SHARED
    raw store — the one corpus artifact every gate reads back (fp =
-   the exact-gate fingerprint, fused in as a column since r16: the
-   separate fp/ store rewrote the same scan for one 8-byte column);
-1. EXACT gate: xxhash64 over whitespace-normalized lowercased text;
-   in-batch first-wins by id, then drop ids whose fingerprint appears
-   in the landed history (the raw store's fp column, column-pruned —
-   8 B/doc read). Survivors s1;
-2. NEAR-DUP gate over s1: MinHash signatures + LSH band buckets;
-   candidates = in-batch (smaller id earlier) ∪ buckets ⋈ the
-   persistent LSH index (which holds every doc that REACHED this gate
-   — prior s1 sets); hot-bucket cap applied uniformly from
-   point-in-time history+batch counts (same degradation contract as
-   `incremental_neardup`); exact shingle-Jaccard verify re-shingles
-   ONLY candidate old docs, fetched from the SHARED raw store by id
-   semi-join (zone-map point reads — the store is id-sorted per
-   batch). Survivors s2; ALL s1 buckets append to the index;
-3. SEMANTIC gate over s2: 1-probe assignment against the static
-   broadcast codebook (offline-trained, `sample_centroids` over the
-   full embeddings table so the oracle can replay the pick);
-   candidates = earlier same-batch same-cluster rows ∪ the persistent
-   cluster-SORTED IVF index rows in the batch's probed clusters only
-   (holds every doc that reached this gate — prior s2 sets); exact
-   cosine >= threshold. Survivors s3; ALL s2 assignments append
-   cluster-sorted;
+   the exact-gate fingerprint, a column of the raw store);
+1. EXACT gate (`incremental_dedup.exact_gate`): in-batch first-wins
+   by id, then drop ids whose fingerprint is in the landed history
+   (the raw store's fp column, column-pruned — 8 B/doc read).
+   Survivors s1;
+2. NEAR-DUP gate over s1 (`incremental_neardup.neardup_gate`): the
+   persistent LSH index holds every doc that REACHED this gate (prior
+   s1 sets); the verify re-shingles only candidate old docs, fetched
+   from the SHARED raw store. Survivors s2; ALL s1 buckets append to
+   the index;
+3. SEMANTIC gate over s2 (`incremental_semdedup.semantic_gate`):
+   1-probe assignment against the static codebook (offline-trained,
+   `sample_centroids` over the full embeddings table so the oracle
+   can replay the pick); the persistent IVF index holds every doc
+   that reached this gate (prior s2 sets). Survivors s3; ALL s2
+   assignments append cluster-sorted;
 4. manifest row per batch document: first failing gate
    (stage ∈ exact | near_dup | semantic | kept).
 
@@ -56,7 +50,7 @@ every other cost).
 
 Store contention note: the raw store is written by stage 0 and read
 back by stage 2's verifier IN THE SAME BATCH only for cross-batch
-candidates (strictly-earlier dirs, `batch_dirs`' contract), so the
+candidates (strictly-earlier state, `state_dirs`' contract), so the
 shared store never reads its own half-written batch.
 
 State: fingerprints 8 B/doc (a raw-store column) + LSH
@@ -82,64 +76,27 @@ nothing here.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load, query
-from ..operators.dedup import (
-    _DUCK_TOKS,
-    _duck_shingles,
-    _with_jaccard,
-    band_buckets,
-    minhash_signatures,
-    shingle_table,
-)
-from ..operators.similarity import _dot, _sql_cos, ivf_assign, sample_centroids
-from .incremental_dedup import fingerprint
-from .sinks import batch_dirs as _batch_dirs
-from .sinks import overwrite_batch_atomic as _overwrite_batch
+from ..operators.dedup import _DUCK_TOKS, _duck_shingles
+from ..operators.similarity import _sql_cos, sample_centroids
+from .incremental_dedup import exact_gate, fingerprint
+from .incremental_neardup import lsh_signatures, neardup_gate
+from .incremental_semdedup import assign_clusters, cluster_sorted, semantic_gate
 from .sinks import (
     STATE_FILES,
-    land_session_dataset,
+    compact_dataset_incremental,
+    label_jobs,
     overlapped_batch_writes,
-    state_dirs,
+    overwrite_batch_atomic,
+    read_state,
+    start_batch_stream,
+    three_batch_manifest,
 )
-
-
-def _read_batches(
-    spark, base: str, before: int, schema=None, **options
-) -> DataFrame | None:
-    """State visible to batch ``before``: tiered listing (compaction
-    segments + strictly-earlier uncompacted batch dirs), so every store
-    the chain maintains can be incrementally compacted BETWEEN
-    micro-batches (`sinks.compact_dataset_incremental`) without
-    breaking the retry contract — see `sinks.state_dirs` for the
-    invariant.
-
-    ``schema`` (r16): the chain KNOWS each store's schema (it wrote
-    it — the store is the prior batches' frame), so passing it skips
-    the DataSource's bind step (a Python planning worker merging every
-    part file's footer) on every per-batch state read."""
-    dirs = state_dirs(base, before)
-    if not dirs:
-        return None
-    r = spark.read.format("vortex").option("paths", json.dumps(dirs))
-    if schema is not None:
-        from pyspark.sql.types import StructField, StructType
-
-        r = r.schema(
-            StructType(
-                [StructField(f.name, f.dataType, True) for f in schema.fields]
-            )
-        )
-    for k, v in options.items():
-        r = r.option(k, v)
-    return r.load()
 
 
 # Sort keys for each per-batch state store the chain reads back —
@@ -191,8 +148,6 @@ def compact_chain_stores(
     batch ids strictly below the batch about to (re)run, so the
     retry's atomic overwrite replaces the partial dirs as designed.
     Returns {store: new segment path or None}."""
-    from .sinks import compact_dataset_incremental
-
     out: dict[str, str | None] = {}
     for store, cols in CHAIN_STORE_SORT.items():
         p = os.path.join(root, store)
@@ -231,37 +186,18 @@ def ingest_process_batch(
         os.path.join(root, s) for s in ("raw", "lsh", "ivf", "man")
     )
 
-    def _label(stage: str) -> None:
-        # guide §1.5: label every action so per-batch cost attributes
-        # to a chain stage in the UI / status store (lazy-checkpoint
-        # materializations inherit the label of the action that
-        # triggers them). Best-effort: Connect has no sparkContext.
-        try:
-            spark_.sparkContext.setJobDescription(f"chain b{batch_id}: {stage}")
-        except Exception:
-            pass
+    def label(stage: str) -> None:
+        label_jobs(spark_, f"chain b{batch_id}: {stage}")
 
+    # Every store write is submitted to the write pool as soon as its
+    # frame exists and joined before the batch returns: this batch's
+    # state reads list strictly-earlier batch dirs only, so no gate
+    # waits on a write (`overlapped_batch_writes`).
     with overlapped_batch_writes(spark_) as bw:
-        # 0. land the raw batch into the SHARED store (id-sorted: stage-2
-        # candidate fetches and any audit replay are zone-map point reads).
-        # r16 (VERDICT r15 next #1, "fuse store writes that share a scan"):
-        # the exact-gate fingerprint rides along as a COLUMN of the raw
-        # store instead of a separate fp/ store — the fp write scanned the
-        # same checkpointed rows to emit one 8-byte column, and the exact
-        # gate's history read now column-prunes the raw store (columnar
-        # format: it reads just fp). One fewer store write + state read +
-        # maintained store per batch.
-        #
-        # r16 write overlap (guide §2.6): the raw/lsh/ivf store writes are
-        # INDEPENDENT of the downstream gate compute — every state read in
-        # this batch lists strictly-earlier batch dirs only (`state_dirs`'
-        # contract), and the retry protocol overwrites any partial write
-        # set atomically per store — so each write is submitted to the
-        # shared pool where it used to run inline, and joined before the
-        # batch returns (see `overlapped_batch_writes`). Sequencing the
-        # writes was pure latency: ~3 write turnarounds per batch that the
-        # gate actions now hide.
-        _label("land raw")
+        # 0. land the raw batch, id-sorted, with the exact-gate
+        # fingerprint as a column (the exact gate's history read
+        # column-prunes it)
+        label("land raw")
         rows = (
             batch_df.select(
                 F.col("doc_id").alias("id"), fingerprint("text").alias("fp"),
@@ -272,191 +208,53 @@ def ingest_process_batch(
             .localCheckpoint(eager=False)
         )
         bw.submit(
-            _overwrite_batch, rows, raw_d, batch_id, max_files=None,
+            overwrite_batch_atomic, rows, raw_d, batch_id, max_files=None,
             label=f"chain b{batch_id}: land raw (write)",
         )
 
-        _label("exact gate")
-        # 1. EXACT gate ---------------------------------------------------------
-        # r16 (guide §2.3): the first-wins window only ranks ids within a
-        # fingerprint — keep text/vec OUT of its exchange (the previous
-        # shape shuffled both payload columns on the __fp key just to
-        # compute __rn).
-        fp = rows.select("id", F.col("fp").alias("__fp"))
-        fp = fp.withColumn(
-            "__rn", F.row_number().over(Window.partitionBy("__fp").orderBy("id"))
-        ).localCheckpoint(eager=False)
-        seen_raw = _read_batches(spark_, raw_d, batch_id, schema=rows.schema)
-        seen = seen_raw.select("fp") if seen_raw is not None else None
-        if seen is not None:
-            # r16 (guide §3.1): checkpointed frames carry NO size stats, so
-            # the planner sort-merged the batch against the WHOLE
-            # fingerprint store (two exchanges, one of them history-sized)
-            # at every batch. The batch side is bounded by construction —
-            # broadcast it INTO the history scan (map-side inner join, one
-            # (id) per matching history row) and partial aggregation
-            # reduces the lone exchange to the matched batch ids.
-            hist_dup = (
-                seen.withColumnRenamed("fp", "__fp")
-                .join(F.broadcast(fp.select("id", "__fp")), "__fp")
-                .select("id")
-                .distinct()
-            )
-        else:
-            hist_dup = None
-        in_batch_dup = fp.filter(F.col("__rn") > 1).select("id")
-        exact_dropped = (
-            in_batch_dup.unionByName(hist_dup).distinct()
-            if hist_dup is not None
-            else in_batch_dup
-        ).localCheckpoint(eager=False)
+        # 1. EXACT gate
+        label("exact gate")
+        landed = read_state(spark_, raw_d, batch_id, schema=rows.schema)
+        exact_dropped = exact_gate(
+            rows.select("id", F.col("fp").alias("__fp")),
+            None if landed is None else landed.select(F.col("fp").alias("__fp")),
+        )
         s1 = rows.join(
             F.broadcast(exact_dropped), "id", "left_anti"
         ).localCheckpoint(eager=False)
 
-        _label("neardup gate")
-        # 2. NEAR-DUP gate over s1 ---------------------------------------------
-        sig = minhash_signatures(s1, "text", "id", num_hashes, n, engine="jvm").localCheckpoint(eager=False)
-        buckets = band_buckets(sig, num_hashes, rows_per_band).localCheckpoint(eager=False)
-        idx = _read_batches(
-            spark_, lsh_d, batch_id, schema=buckets.select("band", "h", "id").schema
+        # 2. NEAR-DUP gate over s1
+        label("neardup gate")
+        sig, buckets = lsh_signatures(s1, num_hashes, n, rows_per_band)
+        lsh_rows = buckets.select("band", "h", "id")
+        near_dropped = neardup_gate(
+            sig,
+            buckets,
+            read_state(spark_, lsh_d, batch_id, schema=lsh_rows.schema),
+            landed,
+            near_threshold,
+            n,
+            max_bucket,
         )
-        bkeys = buckets.select("band", "h")
-        if idx is not None:
-            # r16 (guide §2.3/§3.1): only the BATCH's bucket keys are ever
-            # consulted by the join below, so prune the index scan to them
-            # map-side (broadcast semi) before counting — the hot-bucket
-            # aggregate's exchange is then bounded by the batch's buckets
-            # instead of every (band, h) ever landed. Counts for the
-            # surviving keys are unchanged (the semi keeps every
-            # occurrence of a kept key).
-            hist_bh = idx.select("band", "h").join(
-                F.broadcast(bkeys), ["band", "h"], "left_semi"
-            ).unionByName(bkeys)
-        else:
-            hist_bh = bkeys
-        ok = (
-            hist_bh.groupBy("band", "h")
-            .agg(F.count("*").alias("bn"))
-            .filter(F.col("bn") <= max_bucket)
-            .select("band", "h")
-        )
-        # r16: buck_ok feeds THREE consumers (a, b, cross) and cand feeds
-        # two more — and every F.broadcast() build is its own query
-        # execution, so without a materialization barrier each build
-        # RE-COMPUTES the whole gate subtree below it (including the
-        # hot-bucket aggregate over the index): measured as six escalating
-        # 0.6→2.0 s broadcast-build jobs per batch at sf0.01. Checkpoint
-        # the two shared frames so each is computed once.
-        buck_ok = buckets.join(F.broadcast(ok), ["band", "h"]).localCheckpoint(
-            eager=False
-        )
-        a = buck_ok.select("band", "h", F.col("id").alias("doc_a"))
-        b = buck_ok.select("band", "h", F.col("id").alias("doc_b"))
-        cand = (
-            a.join(F.broadcast(b), ["band", "h"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-        )
-        if idx is not None:
-            # index streams map-side; the bounded batch buckets broadcast
-            cross = (
-                idx.withColumnRenamed("id", "doc_a")
-                .join(F.broadcast(buck_ok), ["band", "h"])
-                .select("doc_a", F.col("id").alias("doc_b"))
-            )
-            cand = cand.unionByName(cross)
-        cand = cand.distinct().localCheckpoint(eager=False)
-        new_sh = sig.select(F.col("id").alias("doc_b"), F.col("sh").alias("sh_b"))
-        old_in_batch = sig.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
-        prior_raw = seen_raw
-        if prior_raw is not None:
-            old_docs = prior_raw.join(
-                F.broadcast(cand.select(F.col("doc_a").alias("id")).distinct()),
-                "id",
-                "left_semi",
-            )
-            old_sh = (
-                shingle_table(old_docs, "text", "id", n)
-                .select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
-                .unionByName(old_in_batch)
-            )
-        else:
-            old_sh = old_in_batch
-        near_dropped = (
-            _with_jaccard(
-                old_sh.join(F.broadcast(cand), "doc_a")
-                .join(F.broadcast(new_sh), "doc_b")
-            )
-            .filter(F.col("jaccard") >= near_threshold)
-            .select(F.col("doc_b").alias("id"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # single consumer (asg, checkpointed below): no checkpoint —
-        # each localCheckpoint call costs ~0.4 s of driver-side
-        # planning/AQE stage execution per batch (r16 cProfile)
+        # single consumer (asg, checkpointed): no checkpoint — each
+        # localCheckpoint call costs ~0.4 s of driver-side planning/AQE
+        # stage execution per batch
         s2 = s1.join(F.broadcast(near_dropped), "id", "left_anti")
         bw.submit(
-            _overwrite_batch, buckets.select("band", "h", "id"), lsh_d, batch_id,
+            overwrite_batch_atomic, lsh_rows, lsh_d, batch_id,
             label=f"chain b{batch_id}: lsh store (write)",
         )
 
-        _label("semantic gate")
-        # 3. SEMANTIC gate over s2 ----------------------------------------------
-        asg = (
-            ivf_assign(s2.select("id", "vec"), centroids, 1, "id", "vec")
-            .select("cluster_id", "id", "vec", "vnorm")
-            .localCheckpoint(eager=False)
-        )
-        _label("probed clusters")
-        probed = sorted(
-            r["cluster_id"] for r in asg.select("cluster_id").distinct().collect()
-        )
-        new_side = asg.select(
-            "cluster_id",
-            F.col("id").alias("id_b"),
-            F.col("vec").alias("vec_b"),
-            F.col("vnorm").alias("n_b"),
-        )
-        old_side = asg.select(
-            "cluster_id",
-            F.col("id").alias("id_a"),
-            F.col("vec").alias("vec_a"),
-            F.col("vnorm").alias("n_a"),
-        )
-        landed = _read_batches(
-            spark_, ivf_d, batch_id, schema=asg.schema, pushdown="true"
-        )
-        if landed is not None:
-            landed = landed.filter(F.col("cluster_id").isin(probed)).select(
-                "cluster_id",
-                F.col("id").alias("id_a"),
-                F.col("vec").alias("vec_a"),
-                F.col("vnorm").alias("n_a"),
-            )
-            old_side = landed.unionByName(old_side)
-        sem_dropped = (
-            # batch side bounded → broadcast; history IVF rows stream.
-            # Single consumer (the manifest join): no checkpoint (see s2).
-            old_side.join(F.broadcast(new_side), "cluster_id")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(
-                (_dot(F.col("vec_a"), F.col("vec_b")) / (F.col("n_a") * F.col("n_b")))
-                >= sem_threshold
-            )
-            .select(F.col("id_b").alias("id"))
-            .distinct()
-        )
+        # 3. SEMANTIC gate over s2
+        label("semantic gate")
+        asg = assign_clusters(s2, centroids)
+        landed_ivf = read_state(spark_, ivf_d, batch_id, schema=asg.schema, pushdown="true")
+        label("probed clusters")
+        # single consumer (the manifest join): no checkpoint (see s2)
+        sem_dropped = semantic_gate(asg, landed_ivf, sem_threshold)
         bw.submit(
-            _overwrite_batch,
-            asg.repartitionByRange(STATE_FILES, "cluster_id", "id").sortWithinPartitions(
-                "cluster_id", "id"
-            ),
-            ivf_d,
-            batch_id,
-            max_files=None,
-            label=f"chain b{batch_id}: ivf store (write)",
+            overwrite_batch_atomic, cluster_sorted(asg), ivf_d, batch_id,
+            max_files=None, label=f"chain b{batch_id}: ivf store (write)",
         )
 
         # 4. manifest: first failing gate ----------------------------------------
@@ -478,9 +276,9 @@ def ingest_process_batch(
                 ),
             )
         )
-        _label("manifest")
-        _overwrite_batch(manifest, man_d, batch_id)
-        _label("idle")
+        label("manifest")
+        overwrite_batch_atomic(manifest, man_d, batch_id)
+        label("idle")
 
 
 def incremental_ingest_stream(
@@ -519,12 +317,7 @@ def incremental_ingest_stream(
             )
         ingest_process_batch(batch_df, batch_id, centroids, root, **kwargs)
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_stream(stream_df, checkpoint, sink)
 
 
 # ---------------------------------------------------------------------------
@@ -611,39 +404,23 @@ def stream_incremental_ingest_pipeline(spark: SparkSession, sf_dir: str) -> Data
     >= 0.4 among near-dup survivors with the replayed codebook) —
     the property that makes backfill and streaming ingest
     interchangeable for the WHOLE pipeline, not just each gate alone."""
-    from ..sources.vortex import register
-
-    register(spark)
     docs = load(spark, sf_dir, "documents")
     emb = load(spark, sf_dir, "embeddings")
     corpus = docs.join(
         emb.select(F.col("vec_id").alias("doc_id"), F.col("embedding").alias("vec")),
         "doc_id",
     )
-    # persist: ivf_assign's literal path collects this frame once per
+    # persist: ivf_assign's literal path collects the codebook once per
     # micro-batch — cache the 16-row sample instead of re-running the
     # sampling query each batch
     centroids = sample_centroids(emb, 16).persist()
-    batched = corpus.withColumn(
-        "__b", F.ntile(3).over(Window.orderBy("doc_id"))
-    ).persist()
-    root = tempfile.mkdtemp(prefix="dvs_ingest_")
-    try:
-        for i in (1, 2, 3):
-            ingest_process_batch(
-                batched.filter(F.col("__b") == i).drop("__b"), i, centroids, root
-            )
-        out = (
-            spark.read.format("vortex")
-            .option("paths", json.dumps(_batch_dirs(os.path.join(root, "man"), 10**9)))
-            .load()
-            .select("doc_id", "source", "stage", "is_kept")
-        )
-        # Land executor-side before the scratch dir disappears (the
-        # driver may collect lazily after this function returns) —
-        # never through a driver collect (VERDICT r8 wrong #1).
-        return land_session_dataset(out, "ingest-manifest")
-    finally:
-        batched.unpersist()
-        centroids.unpersist()
-        shutil.rmtree(root, ignore_errors=True)
+    return three_batch_manifest(
+        corpus,
+        "doc_id",
+        "ingest",
+        ("doc_id", "source", "stage", "is_kept"),
+        lambda batch_df, batch_id, root: ingest_process_batch(
+            batch_df, batch_id, centroids, root
+        ),
+        cached=(centroids,),
+    )

@@ -31,9 +31,10 @@ import threading as _threading
 import time as _time
 from concurrent.futures import Future as _Future
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
-from ..sources.vortex import FILE_SUFFIX
+from ..sources.vortex import FILE_SUFFIX, register
 
 # ---------------------------------------------------------------------------
 # overlapped per-batch store writes (r16, guide §2.6)
@@ -52,6 +53,28 @@ _WRITE_JOBS = None
 _WRITE_POOL_LOCK = _threading.Lock()
 _log = logging.getLogger(__name__)
 _SESSION_SETUP_WARNED = False
+_LABEL_WARNED = False
+
+
+def label_jobs(spark, description: str) -> None:
+    """Set the description Spark shows for the jobs the calling thread
+    starts next, so each chain stage's cost can be attributed in the UI
+    and the status store (lazy-checkpoint materializations inherit the
+    label of the action that triggers them). A session that cannot take
+    it (Spark Connect has no ``sparkContext``) does not stop the batch:
+    the first failure in a process is logged as a warning."""
+    global _LABEL_WARNED
+    try:
+        spark.sparkContext.setJobDescription(description)
+    except Exception:
+        if not _LABEL_WARNED:
+            _LABEL_WARNED = True
+            _log.warning(
+                "could not set the Spark job description %r; chain jobs "
+                "run unlabelled",
+                description,
+                exc_info=True,
+            )
 
 
 def _write_worker(jobs: _queue.SimpleQueue) -> None:
@@ -101,18 +124,12 @@ class overlapped_batch_writes:
     in-flight writes are still joined first (never left racing a
     retry), then the gate error propagates."""
 
-    def __init__(self, spark=None, label: str | None = None):
+    def __init__(self, spark=None):
         self._spark = spark
-        self._label = label
         self._futs: list = []
 
     def submit(self, fn, *args, label: str | None = None, **kwargs) -> None:
-        if os.environ.get("DVS_OVERLAP_WRITES", "1") == "0":
-            # kill switch (and the interleaved-A/B lever): run the
-            # write inline, exactly the pre-r16 sequential behavior
-            fn(*args, **kwargs)
-            return
-        spark, label = self._spark, label or self._label
+        spark = self._spark
 
         # What pyspark.InheritableThread does, captured at submit time on
         # the CALLING thread: under PYSPARK_PIN_THREAD each Python thread
@@ -127,7 +144,7 @@ class overlapped_batch_writes:
         props = None
         if spark is not None:
             try:
-                props = spark.sparkContext._jsc.sc().getLocalProperties().clone()
+                props = spark._jsc.sc().getLocalProperties().clone()
             except Exception:
                 props = None
 
@@ -135,7 +152,7 @@ class overlapped_batch_writes:
             global _SESSION_SETUP_WARNED
             if spark is not None:
                 try:
-                    jvm = spark.sparkContext._jvm
+                    jvm = spark._jvm
                     try:
                         jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
                             spark._jsparkSession
@@ -145,10 +162,7 @@ class overlapped_batch_writes:
                             spark._jsparkSession
                         )
                     if props is not None:
-                        spark.sparkContext._jsc.sc().setLocalProperties(props)
-                    if label is not None:
-                        # job descriptions are thread-local (guide §1.5/§2.6)
-                        spark.sparkContext.setJobDescription(label)
+                        spark._jsc.sc().setLocalProperties(props)
                 except Exception:
                     # the write still runs; if it reads or writes a
                     # Python data source it fails with a causeless
@@ -160,6 +174,8 @@ class overlapped_batch_writes:
                             "session or local properties on the write thread",
                             exc_info=True,
                         )
+                if label is not None:
+                    label_jobs(spark, label)  # job descriptions are thread-local
             return fn(*args, **kwargs)
 
         self._futs.append(_submit_write(_run))
@@ -178,6 +194,20 @@ class overlapped_batch_writes:
         if exc is None and first_err is not None:
             raise first_err
         return False
+
+
+def start_batch_stream(stream_df: DataFrame, checkpoint: str, process_batch):
+    """Run ``process_batch(batch_df, batch_id)`` on each micro-batch of
+    ``stream_df`` until its input is drained (``availableNow``); returns
+    the StreamingQuery (caller awaits). The checkpoint commits a batch
+    only after ``process_batch`` returned, and a batch that failed is
+    retried whole with the same id."""
+    return (
+        stream_df.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def write_stream_vortex(
@@ -863,17 +893,10 @@ def read_vortex_dataset_tiered(spark, path: str) -> DataFrame:
     plus the batch dirs newer than the compaction watermark (batches
     at/below it and superseded segments are consumed garbage, possibly
     not yet GC'd — reading them would double-count)."""
-    import json as _json
-
-    watermark = _compact_watermark(path)
-    parts = _live_segments(path) + [
-        d
-        for d in batch_dirs(path, 10**9)
-        if int(os.path.basename(d).split("-", 1)[1]) > watermark
-    ]
-    if not parts:
+    df = read_state(spark, path, 10**9)
+    if df is None:
         raise FileNotFoundError(f"no segments or batches under {path!r}")
-    return spark.read.format("vortex").option("paths", _json.dumps(parts)).load()
+    return df
 
 
 def read_vortex_as_of(
@@ -997,6 +1020,31 @@ def state_dirs(base: str, before: int) -> list[str]:
     ]
 
 
+def read_state(spark, base: str, before: int, schema=None, **options) -> DataFrame | None:
+    """The store at ``base`` as batch ``before`` sees it (`state_dirs`:
+    live compaction segments plus strictly-earlier batch dirs), or None
+    when nothing has landed yet. ``options`` go to the vortex reader.
+
+    ``schema`` is the schema the store was written with: passing it
+    skips the DataSource's bind step, a Python planning worker that
+    merges every part file's footer, on every per-batch state read.
+    Store reads return nullable columns, so its fields are read as
+    nullable."""
+    dirs = state_dirs(base, before)
+    if not dirs:
+        return None
+    r = spark.read.format("vortex").option("paths", _json.dumps(dirs))
+    if schema is not None:
+        from pyspark.sql.types import StructField, StructType
+
+        r = r.schema(
+            StructType([StructField(f.name, f.dataType, True) for f in schema.fields])
+        )
+    for k, v in options.items():
+        r = r.option(k, v)
+    return r.load()
+
+
 # Default file-count cap for per-batch STATE artifacts (fingerprints,
 # LSH/IVF index rows, manifests, landed micro-batch raws). Without a
 # cap each write emits one part file per shuffle partition (32 here),
@@ -1101,6 +1149,36 @@ def land_session_dataset(
         if g <= gen - 2:
             shutil.rmtree(d, ignore_errors=True)
     return spark.read.format("vortex").load(dest)
+
+
+def three_batch_manifest(
+    df: DataFrame, order_col: str, tag: str, cols, process_batch, cached=()
+) -> DataFrame:
+    """Driver of the ``stream_incremental_*`` catalog entries: ``df`` cut
+    into three ``order_col``-ordered micro-batches with ids 1-3, each
+    passed to ``process_batch(batch_df, batch_id, root)`` over one
+    scratch state root; returns the union of the batches' manifests
+    under ``root/man`` (columns ``cols``). The result is landed
+    executor-side before the root is deleted (the driver may collect
+    lazily after the entry returns), never through a driver collect.
+    ``cached`` frames are unpersisted at the end; it is iterated only
+    then, so ``process_batch`` may add a frame it loads once."""
+    import tempfile
+
+    spark = df.sparkSession
+    register(spark)
+    batched = df.withColumn("__b", F.ntile(3).over(Window.orderBy(order_col))).persist()
+    root = tempfile.mkdtemp(prefix=f"dvs_{tag}_")
+    try:
+        for i in (1, 2, 3):
+            process_batch(batched.filter(F.col("__b") == i).drop("__b"), i, root)
+        manifest = read_state(spark, os.path.join(root, "man"), 10**9).select(*cols)
+        return land_session_dataset(manifest, f"{tag}-manifest")
+    finally:
+        batched.unpersist()
+        for c in cached:
+            c.unpersist()
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def overwrite_batch_atomic(

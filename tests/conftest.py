@@ -125,6 +125,7 @@ _SLOW_TESTS = {
     "test_plan_contracts.py::test_plan_lint[stream_incremental_ingest_pipeline]",  # 28.0s
     "test_incremental_neardup.py::test_chopping_invariance",  # 27.5s
     "test_skew_aqe.py::test_window_counts_hot_isolated_matches_plain_window",  # 26.4s
+    "test_incremental_semdedup.py::test_reads_incrementally_compacted_state",  # 45.5s
     "test_incremental_semdedup.py::test_index_compaction_preserves_candidates",  # 24.4s
     "test_streaming_joins.py::test_stream_stream_join_equals_batch",  # 22.1s
     "test_incremental_semdedup.py::test_chopping_invariance",  # 21.9s
@@ -134,6 +135,7 @@ _SLOW_TESTS = {
     "test_incremental_pipeline.py::test_gate_order_first_failing_stage_wins",  # 20.0s
     "test_catalog_oracle.py::test_catalog_entry[pipeline_fuzzy_curation_manifest]",  # 18.2s
     "test_incremental_neardup.py::test_hot_bucket_cap_applies_uniformly",  # 18.0s
+    "test_incremental_neardup.py::test_reads_incrementally_compacted_state",  # 17.6s
     "test_incremental_neardup.py::test_retried_batch_is_idempotent",  # 16.9s
     "test_retrieval.py::test_ann_tuning_curve_ivf_recall_monotone_in_n_probe",  # 16.0s
     "test_similarity_ivf.py::test_lloyd_refine_deterministic_and_exact_means",  # 13.7s

@@ -15,10 +15,10 @@ from duckdb_vortex_spark.catalog import load
 from duckdb_vortex_spark.operators.dedup import minhash_lsh_pairs
 from duckdb_vortex_spark.sources.vortex import register
 from duckdb_vortex_spark.streaming.incremental_neardup import (
-    _batch_dirs,
     incremental_neardup_stream,
     neardup_process_batch,
 )
+from duckdb_vortex_spark.streaming.sinks import batch_dirs, compact_dataset_incremental
 
 from .conftest import SF_DIR
 
@@ -26,7 +26,7 @@ from .conftest import SF_DIR
 def _manifest(spark, man_d):
     return (
         spark.read.format("vortex")
-        .option("paths", json.dumps(_batch_dirs(man_d, 10**9)))
+        .option("paths", json.dumps(batch_dirs(man_d, 10**9)))
         .load()
     )
 
@@ -126,7 +126,7 @@ def test_retried_batch_is_idempotent(spark, tmp_path):
     # index holds ALL docs exactly once each (16 bands * 3 docs)
     idx = (
         spark.read.format("vortex")
-        .option("paths", json.dumps(_batch_dirs(dirs[1], 10**9)))
+        .option("paths", json.dumps(batch_dirs(dirs[1], 10**9)))
         .load()
     )
     assert idx.select("id").distinct().count() == 3
@@ -196,3 +196,29 @@ def test_hot_bucket_cap_applies_uniformly(spark, tmp_path):
     neardup_process_batch(mk([(3, t)]), 1, *dirs2)
     got2 = {r["doc_id"]: r["keep"] for r in _manifest(spark, dirs2[2]).collect()}
     assert got2 == {1: True, 2: False, 3: False}
+
+
+def test_reads_incrementally_compacted_state(spark, tmp_path):
+    """Compacting the raw and index stores between batches 1 and 2 (a
+    maintenance pass with ``before=2``, which folds batches 0-1 into a
+    segment and removes their dirs) leaves the manifest of batches 0-2
+    unchanged: batch 2 reads the segment as its prior state."""
+    register(spark)
+    docs = load(spark, SF_DIR, "documents").limit(120).persist()
+    ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
+    step = (len(ids) + 2) // 3
+    got = {}
+    for tag in ("plain", "compacted"):
+        raw_d, idx_d, man_d = (str(tmp_path / f"{tag}_{d}") for d in ("raw", "idx", "man"))
+        for b in range(3):
+            if tag == "compacted" and b == 2:
+                compact_dataset_incremental(spark, raw_d, ["id"], before=2)
+                compact_dataset_incremental(spark, idx_d, ["band", "h"], before=2)
+                assert not batch_dirs(raw_d, 2) and not batch_dirs(idx_d, 2)
+            chunk = ids[b * step : (b + 1) * step]
+            neardup_process_batch(
+                docs.filter(F.col("doc_id").isin(chunk)), b, raw_d, idx_d, man_d
+            )
+        got[tag] = {r["doc_id"]: r["keep"] for r in _manifest(spark, man_d).collect()}
+    assert got["compacted"] == got["plain"] == _batch_answer(docs)
+    docs.unpersist()

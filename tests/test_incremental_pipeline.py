@@ -673,14 +673,13 @@ def test_stream_restart_after_crashed_fold_under_lease(spark, tmp_path):
     corpus.unpersist()
 
 
-def test_overlapped_batch_writes_joins_and_propagates(monkeypatch):
+def test_overlapped_batch_writes_joins_and_propagates():
     """Focused r16 unit pins for `sinks.overlapped_batch_writes` (the
     §2.6 write-overlap machinery): (1) every submitted write completes
     before __exit__ returns — the exactly-once precondition; (2) a
     failed write surfaces as the batch's error even when the gate body
     succeeds; (3) a gate-body error still joins in-flight writes first
-    (no write left racing a retry) and wins over write errors;
-    (4) DVS_OVERLAP_WRITES=0 degrades to inline execution."""
+    (no write left racing a retry) and wins over write errors."""
     import time as _t
 
     from duckdb_vortex_spark.streaming.sinks import overlapped_batch_writes
@@ -708,15 +707,6 @@ def test_overlapped_batch_writes_joins_and_propagates(monkeypatch):
             raise ValueError("gate")
     assert joined == ["w"]
 
-    # (4) kill switch runs inline on the calling thread
-    import threading
-
-    monkeypatch.setenv("DVS_OVERLAP_WRITES", "0")
-    tids = []
-    with overlapped_batch_writes() as bw:
-        bw.submit(lambda: tids.append(threading.get_ident()))
-    assert tids == [threading.get_ident()]
-
 
 def test_overlapped_write_session_setup_failure_warns_once(monkeypatch, caplog):
     """A write thread that cannot take over the caller's session still
@@ -729,6 +719,9 @@ def test_overlapped_write_session_setup_failure_warns_once(monkeypatch, caplog):
         def sparkContext(self):  # noqa: N802
             raise RuntimeError("no JVM here")
 
+        def __getattr__(self, name):  # _jvm, _jsc, _jsparkSession
+            raise RuntimeError("no JVM here")
+
     monkeypatch.setattr(sinks, "_SESSION_SETUP_WARNED", False)
     ran = []
     with caplog.at_level("WARNING", logger=sinks.__name__):
@@ -738,6 +731,39 @@ def test_overlapped_write_session_setup_failure_warns_once(monkeypatch, caplog):
     assert ran == [1, 1]
     warned = [r for r in caplog.records if "active session" in r.getMessage()]
     assert len(warned) == 1 and "no JVM here" in caplog.text
+
+
+def test_unlabelled_session_still_runs_the_batch_and_warns_once(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """A session that cannot take job descriptions (its ``sparkContext``
+    raises, as on Spark Connect) still runs a chain batch, gate labels
+    and write-thread labels included, and the failure is logged once
+    per process rather than swallowed."""
+    from duckdb_vortex_spark.streaming import sinks
+    from duckdb_vortex_spark.streaming.incremental_dedup import process_batch
+
+    register(spark)
+    out, store = str(tmp_path / "out"), str(tmp_path / "store")
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id bigint, text string")
+    b0 = mk([(1, "alpha doc"), (2, "Alpha  doc")])
+    b1 = mk([(3, "alpha doc"), (4, "beta doc")])
+
+    class NoContextSession(type(spark)):
+        @property
+        def sparkContext(self):  # noqa: N802
+            raise RuntimeError("no SparkContext here")
+
+    monkeypatch.setattr(sinks, "_LABEL_WARNED", False)
+    with caplog.at_level("WARNING", logger=sinks.__name__):
+        monkeypatch.setattr(spark, "__class__", NoContextSession)
+        process_batch(b0, 0, out, store)
+        process_batch(b1, 1, out, store)
+        monkeypatch.undo()
+    got = spark.read.format("vortex").load(os.path.join(out, "batch-*"))
+    assert sorted(r["doc_id"] for r in got.collect()) == [1, 4]
+    warned = [r for r in caplog.records if "job description" in r.getMessage()]
+    assert len(warned) == 1 and "no SparkContext here" in caplog.text
 
 
 def test_hung_overlapped_write_does_not_block_exit(tmp_path):
@@ -758,10 +784,8 @@ def test_hung_overlapped_write_does_not_block_exit(tmp_path):
         bw.submit(open, {str(marker)!r}, "w")
         print("exiting", flush=True)
     """
-    env = dict(os.environ, DVS_OVERLAP_WRITES="1")
     out = subprocess.run(
         [sys.executable, "-c", textwrap.dedent(script)],
-        env=env,
         capture_output=True,
         text=True,
         timeout=120,

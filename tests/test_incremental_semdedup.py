@@ -18,11 +18,11 @@ from duckdb_vortex_spark.operators.similarity import (
     sample_centroids,
 )
 from duckdb_vortex_spark.sources.vortex import register
-from duckdb_vortex_spark.streaming.incremental_neardup import _batch_dirs
 from duckdb_vortex_spark.streaming.incremental_semdedup import (
     incremental_semdedup_stream,
     semdedup_process_batch,
 )
+from duckdb_vortex_spark.streaming.sinks import batch_dirs, compact_dataset_incremental
 
 from .conftest import SF_DIR
 
@@ -32,7 +32,7 @@ THRESH = 0.4
 def _manifest(spark, man_d):
     return (
         spark.read.format("vortex")
-        .option("paths", json.dumps(_batch_dirs(man_d, 10**9)))
+        .option("paths", json.dumps(batch_dirs(man_d, 10**9)))
         .load()
     )
 
@@ -114,7 +114,7 @@ def test_retried_batch_is_idempotent(spark, tmp_path):
     # index holds every vector exactly once
     idx = (
         spark.read.format("vortex")
-        .option("paths", json.dumps(_batch_dirs(dirs[0], 10**9)))
+        .option("paths", json.dumps(batch_dirs(dirs[0], 10**9)))
         .load()
     )
     assert idx.count() == emb.count()
@@ -184,7 +184,7 @@ def test_index_compaction_preserves_candidates(spark, tmp_path):
 
     _sh.rmtree(retired)
     assert read_vortex_dataset(spark, dirs[0]).count() == n_before
-    # compacted layout is flat part files; _batch_dirs finds no
+    # compacted layout is flat part files; batch_dirs finds no
     # batch-* dirs, so later batches must read it as "batch 0" state:
     # re-wrap the compacted dataset as a single committed batch dir
     flat = read_vortex_dataset(spark, dirs[0])
@@ -195,4 +195,30 @@ def test_index_compaction_preserves_candidates(spark, tmp_path):
     semdedup_process_batch(b[2], 2, centroids, rewrapped, dirs[1])
     got = {r["vec_id"]: r["keep"] for r in _manifest(spark, dirs[1]).collect()}
     assert got == want
+    emb.unpersist()
+
+
+def test_reads_incrementally_compacted_state(spark, tmp_path):
+    """Compacting the index between batches 1 and 2 (a maintenance pass
+    with ``before=2``, which folds batches 0-1 into a segment and
+    removes their dirs) leaves the manifest of batches 0-2 unchanged:
+    batch 2 reads the segment as its prior state."""
+    register(spark)
+    emb = load(spark, SF_DIR, "embeddings").persist()
+    centroids = sample_centroids(emb, 16)
+    ids = sorted(r["vec_id"] for r in emb.select("vec_id").collect())
+    step = (len(ids) + 2) // 3
+    got = {}
+    for tag in ("plain", "compacted"):
+        idx_d, man_d = (str(tmp_path / f"{tag}_{d}") for d in ("idx", "man"))
+        for b in range(3):
+            if tag == "compacted" and b == 2:
+                compact_dataset_incremental(spark, idx_d, ["cluster_id", "id"], before=2)
+                assert not batch_dirs(idx_d, 2)
+            chunk = ids[b * step : (b + 1) * step]
+            semdedup_process_batch(
+                emb.filter(F.col("vec_id").isin(chunk)), b, centroids, idx_d, man_d
+            )
+        got[tag] = {r["vec_id"]: r["keep"] for r in _manifest(spark, man_d).collect()}
+    assert got["compacted"] == got["plain"] == _batch_answer(emb, centroids)
     emb.unpersist()
