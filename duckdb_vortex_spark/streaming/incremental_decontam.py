@@ -186,23 +186,26 @@ def stream_incremental_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     chopping cannot change any row — unconditionally, with no
     id-ordered-ingest precondition (module docstring)."""
     docs = load(spark, sf_dir, "documents")
-    eval_index: list[DataFrame] = []  # loaded once, before batch 1
+    esig = None  # the static eval index: built and loaded once, in batch 1
 
     def process_batch(batch_df: DataFrame, batch_id: int, root: str) -> None:
+        nonlocal esig
         idx_d = os.path.join(root, "idx")
-        if not eval_index:
+        if batch_id == 1:
             build_eval_index(docs.filter(F.col("source") == "src0"), idx_d)
-            eval_index.append(load_eval_index(spark, idx_d))
+            esig = load_eval_index(spark, idx_d)
         decontam_process_batch(
-            batch_df, batch_id, idx_d, os.path.join(root, "man"),
-            eval_index_df=eval_index[0],
+            batch_df, batch_id, idx_d, os.path.join(root, "man"), eval_index_df=esig
         )
 
-    return three_batch_manifest(
-        docs.filter(F.col("source") != "src0"),
-        "doc_id",
-        "decontam",
-        ("doc_id", "source", "max_jaccard", "is_kept"),
-        process_batch,
-        cached=eval_index,
-    )
+    try:
+        return three_batch_manifest(
+            docs.filter(F.col("source") != "src0"),
+            "doc_id",
+            "decontam",
+            ("doc_id", "source", "max_jaccard", "is_kept"),
+            process_batch,
+        )
+    finally:
+        if esig is not None:
+            esig.unpersist()

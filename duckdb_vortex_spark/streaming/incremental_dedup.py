@@ -9,7 +9,7 @@ This module is a one-gate chain over `exact_gate`, the gate the
 integrated chain (`incremental_pipeline`) runs first. Per micro-batch:
 
 1. fingerprint rows (xxhash64 of normalized text); in-batch, the
-   smallest id of each fingerprint wins;
+   first row of each fingerprint wins;
 2. drop the rows whose fingerprint is in the persistent fingerprint
    store (a vortex dataset: tiny rows, one column);
 3. append survivors to the output dataset AND their fingerprints to
@@ -44,21 +44,24 @@ def fingerprint(text_col: str = "text"):
     return F.xxhash64(norm)
 
 
-def exact_gate(fp: DataFrame, seen: DataFrame | None) -> DataFrame:
-    """The exact gate. ``fp`` holds (id, __fp) for the rows reaching the
-    gate, ``seen`` the fingerprints of every earlier row (one ``__fp``
-    column; None before the first batch). Returns the dropped ids: each
-    row that is not the smallest id of its fingerprint, and each row
-    whose fingerprint is in ``seen``.
+def exact_gate(
+    fp: DataFrame, seen: DataFrame | None, order: tuple = ("id",)
+) -> DataFrame:
+    """The exact gate. ``fp`` holds a unique row key ``id``, the
+    fingerprint ``__fp`` and the ``order`` columns for the rows reaching
+    the gate, ``seen`` the fingerprints of every earlier row (one
+    ``__fp`` column; None before the first batch). Returns the dropped
+    ids: each row that is not the first of its fingerprint in ``order``,
+    and each row whose fingerprint is in ``seen``.
 
-    The first-wins window ranks ids only, so no payload column rides
-    its exchange. The batch side is bounded and the history is the
-    corpus, so the batch fingerprints are broadcast INTO the history
-    scan (map-side inner join) and only matched ids reach an exchange;
-    checkpointed frames carry no size stats, and without the hint the
-    planner sort-merged the batch against the whole store."""
+    The first-wins window ranks ``fp``'s columns only, so no other
+    payload rides its exchange. The batch side is bounded and the
+    history is the corpus, so the batch fingerprints are broadcast INTO
+    the history scan (map-side inner join) and only matched ids reach an
+    exchange; checkpointed frames carry no size stats, and without the
+    hint the planner sort-merged the batch against the whole store."""
     fp = fp.withColumn(
-        "__rn", F.row_number().over(Window.partitionBy("__fp").orderBy("id"))
+        "__rn", F.row_number().over(Window.partitionBy("__fp").orderBy(*order))
     ).localCheckpoint(eager=False)
     dropped = fp.filter(F.col("__rn") > 1).select("id")
     if seen is not None:
@@ -93,21 +96,32 @@ def process_batch(
     out_dir: str,
     store_dir: str,
     text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> None:
     """One micro-batch of the ingest pipeline — exposed as a plain
     function so retry semantics are directly testable: calling it twice
     with the same batch_id is idempotent (the replay reads exactly the
-    store state the first attempt read, then overwrites its own dirs)."""
+    store state the first attempt read, then overwrites its own dirs).
+
+    First-wins ranks whole rows (smallest by the batch's columns in
+    order), so the batch needs no id column, and a replayed record —
+    the same row twice in one batch — is emitted once. The gate's row
+    key is a per-row surrogate, fixed by the checkpoint."""
     spark_ = batch_df.sparkSession
     label_jobs(spark_, f"dedup b{batch_id}: exact gate")
-    rows = batch_df.withColumn("__fp", fingerprint(text_col)).localCheckpoint(eager=False)
+    rows = (
+        batch_df.withColumn("__fp", fingerprint(text_col))
+        .withColumn("__row", F.monotonically_increasing_id())
+        .localCheckpoint(eager=False)
+    )
     dropped = exact_gate(
-        rows.select(F.col(id_col).alias("id"), "__fp"),
+        rows.select(
+            F.col("__row").alias("id"), "__fp", F.struct(*batch_df.columns).alias("__doc")
+        ),
         read_state(spark_, store_dir, batch_id, schema=rows.select("__fp").schema),
+        order=("__doc",),
     )
     fresh = rows.join(
-        F.broadcast(dropped.withColumnRenamed("id", id_col)), id_col, "left_anti"
+        F.broadcast(dropped.withColumnRenamed("id", "__row")), "__row", "left_anti"
     )
     with overlapped_batch_writes(spark_) as bw:
         bw.submit(

@@ -414,13 +414,15 @@ def stream_incremental_ingest_pipeline(spark: SparkSession, sf_dir: str) -> Data
     # micro-batch — cache the 16-row sample instead of re-running the
     # sampling query each batch
     centroids = sample_centroids(emb, 16).persist()
-    return three_batch_manifest(
-        corpus,
-        "doc_id",
-        "ingest",
-        ("doc_id", "source", "stage", "is_kept"),
-        lambda batch_df, batch_id, root: ingest_process_batch(
-            batch_df, batch_id, centroids, root
-        ),
-        cached=(centroids,),
-    )
+    try:
+        return three_batch_manifest(
+            corpus,
+            "doc_id",
+            "ingest",
+            ("doc_id", "source", "stage", "is_kept"),
+            lambda batch_df, batch_id, root: ingest_process_batch(
+                batch_df, batch_id, centroids, root
+            ),
+        )
+    finally:
+        centroids.unpersist()

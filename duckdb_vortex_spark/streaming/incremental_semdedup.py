@@ -242,13 +242,15 @@ def stream_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batch — cache the 16-row sample instead of re-running the
     # sampling query each batch
     centroids = sample_centroids(emb, 16).persist()
-    return three_batch_manifest(
-        emb,
-        "vec_id",
-        "semdedup",
-        ("vec_id", "keep"),
-        lambda batch_df, batch_id, root: semdedup_process_batch(
-            batch_df, batch_id, centroids, *(os.path.join(root, d) for d in ("idx", "man"))
-        ),
-        cached=(centroids,),
-    )
+    try:
+        return three_batch_manifest(
+            emb,
+            "vec_id",
+            "semdedup",
+            ("vec_id", "keep"),
+            lambda batch_df, batch_id, root: semdedup_process_batch(
+                batch_df, batch_id, centroids, *(os.path.join(root, d) for d in ("idx", "man"))
+            ),
+        )
+    finally:
+        centroids.unpersist()

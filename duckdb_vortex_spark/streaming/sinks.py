@@ -144,7 +144,7 @@ class overlapped_batch_writes:
         props = None
         if spark is not None:
             try:
-                props = spark._jsc.sc().getLocalProperties().clone()
+                props = spark.sparkContext._jsc.sc().getLocalProperties().clone()
             except Exception:
                 props = None
 
@@ -152,7 +152,7 @@ class overlapped_batch_writes:
             global _SESSION_SETUP_WARNED
             if spark is not None:
                 try:
-                    jvm = spark._jvm
+                    jvm = spark.sparkContext._jvm
                     try:
                         jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
                             spark._jsparkSession
@@ -162,7 +162,7 @@ class overlapped_batch_writes:
                             spark._jsparkSession
                         )
                     if props is not None:
-                        spark._jsc.sc().setLocalProperties(props)
+                        spark.sparkContext._jsc.sc().setLocalProperties(props)
                 except Exception:
                     # the write still runs; if it reads or writes a
                     # Python data source it fails with a causeless
@@ -919,28 +919,22 @@ def read_vortex_as_of(
     raises ValueError listing the available points; compaction
     coarsens time travel to segment boundaries, it never silently
     approximates a snapshot."""
-    import json
-
     if granularity == "segment":
         ranges = _seg_ranges(path)
-        live = _live_segments(path)
-        watermark = _compact_watermark(path)
-        batches = {
-            int(os.path.basename(d).split("-", 1)[1]): d
-            for d in batch_dirs(path, 10**9)
-            if int(os.path.basename(d).split("-", 1)[1]) > watermark
+        dirs = state_dirs(path, 10**9)  # live segments, then batches past the watermark
+        upto = {
+            d: ranges[d][1] if d in ranges else int(os.path.basename(d).split("-", 1)[1])
+            for d in dirs
         }
-        points = sorted({ranges[s][1] for s in live} | set(batches))
+        points = sorted(set(upto.values()))
         if batch_id not in points:
             raise ValueError(
                 f"batch {batch_id} is not a surviving snapshot point of "
                 f"{path!r}: compaction folded it inside a segment. "
                 f"Available as-of points: {points}"
             )
-        keep = [s for s in live if ranges[s][1] <= batch_id] + [
-            d for b, d in sorted(batches.items()) if b <= batch_id
-        ]
-        return spark.read.format("vortex").option("paths", json.dumps(keep)).load()
+        keep = [d for d in dirs if upto[d] <= batch_id]
+        return spark.read.format("vortex").option("paths", _json.dumps(keep)).load()
 
     # batch granularity: as-of reads are only meaningful while every
     # batch dir still exists: incremental compaction folds batches
@@ -960,11 +954,10 @@ def read_vortex_as_of(
             "or keep a store as-of-readable by never running "
             "compact_dataset_incremental on it."
         )
-    dirs = sorted(globmod.glob(os.path.join(path, "batch-*")))
-    keep = [d for d in dirs if int(os.path.basename(d).split("-")[1]) <= batch_id]
+    keep = batch_dirs(path, batch_id + 1)
     if not keep:
         raise FileNotFoundError(f"no batches <= {batch_id} under {path!r}")
-    return spark.read.format("vortex").option("paths", json.dumps(keep)).load()
+    return spark.read.format("vortex").option("paths", _json.dumps(keep)).load()
 
 
 def batch_dirs(base: str, before: int) -> list[str]:
@@ -1152,7 +1145,7 @@ def land_session_dataset(
 
 
 def three_batch_manifest(
-    df: DataFrame, order_col: str, tag: str, cols, process_batch, cached=()
+    df: DataFrame, order_col: str, tag: str, cols, process_batch
 ) -> DataFrame:
     """Driver of the ``stream_incremental_*`` catalog entries: ``df`` cut
     into three ``order_col``-ordered micro-batches with ids 1-3, each
@@ -1160,9 +1153,7 @@ def three_batch_manifest(
     scratch state root; returns the union of the batches' manifests
     under ``root/man`` (columns ``cols``). The result is landed
     executor-side before the root is deleted (the driver may collect
-    lazily after the entry returns), never through a driver collect.
-    ``cached`` frames are unpersisted at the end; it is iterated only
-    then, so ``process_batch`` may add a frame it loads once."""
+    lazily after the entry returns), never through a driver collect."""
     import tempfile
 
     spark = df.sparkSession
@@ -1176,8 +1167,6 @@ def three_batch_manifest(
         return land_session_dataset(manifest, f"{tag}-manifest")
     finally:
         batched.unpersist()
-        for c in cached:
-            c.unpersist()
         shutil.rmtree(root, ignore_errors=True)
 
 

@@ -102,6 +102,66 @@ def test_retried_batch_does_not_lose_data(spark, tmp_path):
     assert store_fps.distinct().count() == 3
 
 
+def test_in_batch_first_wins_is_per_row(spark, tmp_path):
+    """In-batch first-wins ranks whole rows, not ids: a record replayed
+    twice in one batch (same id, same text) is emitted once and its
+    fingerprint stored once; one id on two different texts keeps both;
+    duplicates without an id still collapse to one row."""
+    register(spark)
+    out, store = str(tmp_path / "out"), str(tmp_path / "store")
+    batch0 = spark.createDataFrame(
+        [
+            (1, "alpha doc"), (1, "alpha doc"),  # replayed record
+            (2, "beta doc"), (2, "gamma doc"),  # one id, two texts
+            (None, "delta doc"), (None, "Delta  doc"),  # no id
+        ],
+        "doc_id bigint, text string",
+    )
+    process_batch(batch0, 0, out, store)
+    batch1 = spark.createDataFrame(
+        [(5, "alpha doc"), (None, "delta doc"), (6, "eps doc")],
+        "doc_id bigint, text string",
+    )
+    process_batch(batch1, 1, out, store)
+
+    got = spark.read.format("vortex").load(os.path.join(out, "batch-*"))
+    assert sorted((r["doc_id"] or 0, r["text"]) for r in got.collect()) == [
+        (0, "Delta  doc"), (1, "alpha doc"), (2, "beta doc"), (2, "gamma doc"),
+        (6, "eps doc"),
+    ]
+    store_fps = spark.read.format("vortex").load(os.path.join(store, "batch-*"))
+    assert store_fps.count() == store_fps.distinct().count() == 5
+
+
+def test_stream_without_an_id_column(spark, tmp_path):
+    """The stream needs a text column only: a schema with no id runs,
+    and a text seen in an earlier batch is dropped from a later one."""
+    register(spark)
+    src = str(tmp_path / "src")
+    texts = spark.createDataFrame([("one doc",), ("two doc",)], "text string")
+    texts.coalesce(1).write.parquet(os.path.join(src, "f1"))
+    texts.union(spark.createDataFrame([("three doc",)], "text string")).coalesce(
+        1
+    ).write.parquet(os.path.join(src, "f2"))
+    now = os.path.getmtime(glob.glob(os.path.join(src, "f1", "*.parquet"))[0])
+    for f in glob.glob(os.path.join(src, "f2", "*")):
+        os.utime(f, (now + 60, now + 60))
+    stream = (
+        spark.readStream.schema(texts.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(src, "*"))
+    )
+    out = str(tmp_path / "out")
+    q = incremental_dedup_stream(
+        spark, stream, out, str(tmp_path / "store"), str(tmp_path / "ck")
+    )
+    q.awaitTermination()
+    q.stop()
+    assert len(glob.glob(os.path.join(out, "batch-*"))) == 2
+    got = spark.read.format("vortex").load(os.path.join(out, "batch-*"))
+    assert sorted(r["text"] for r in got.collect()) == ["one doc", "three doc", "two doc"]
+
+
 def test_multi_path_option_handles_commas(spark, tmp_path):
     """The out-of-band `paths` JSON-list option reads several dataset
     dirs in one scan — including paths that legitimately contain a

@@ -719,9 +719,6 @@ def test_overlapped_write_session_setup_failure_warns_once(monkeypatch, caplog):
         def sparkContext(self):  # noqa: N802
             raise RuntimeError("no JVM here")
 
-        def __getattr__(self, name):  # _jvm, _jsc, _jsparkSession
-            raise RuntimeError("no JVM here")
-
     monkeypatch.setattr(sinks, "_SESSION_SETUP_WARNED", False)
     ran = []
     with caplog.at_level("WARNING", logger=sinks.__name__):
@@ -736,10 +733,11 @@ def test_overlapped_write_session_setup_failure_warns_once(monkeypatch, caplog):
 def test_unlabelled_session_still_runs_the_batch_and_warns_once(
     spark, tmp_path, monkeypatch, caplog
 ):
-    """A session that cannot take job descriptions (its ``sparkContext``
-    raises, as on Spark Connect) still runs a chain batch, gate labels
-    and write-thread labels included, and the failure is logged once
-    per process rather than swallowed."""
+    """A session that cannot take job descriptions still runs a chain
+    batch, gate labels and write-thread labels included, and the
+    failure is logged once per process rather than swallowed."""
+    from pyspark import SparkContext
+
     from duckdb_vortex_spark.streaming import sinks
     from duckdb_vortex_spark.streaming.incremental_dedup import process_batch
 
@@ -749,21 +747,19 @@ def test_unlabelled_session_still_runs_the_batch_and_warns_once(
     b0 = mk([(1, "alpha doc"), (2, "Alpha  doc")])
     b1 = mk([(3, "alpha doc"), (4, "beta doc")])
 
-    class NoContextSession(type(spark)):
-        @property
-        def sparkContext(self):  # noqa: N802
-            raise RuntimeError("no SparkContext here")
+    def no_description(self, value):
+        raise RuntimeError("no job descriptions here")
 
     monkeypatch.setattr(sinks, "_LABEL_WARNED", False)
+    monkeypatch.setattr(SparkContext, "setJobDescription", no_description)
     with caplog.at_level("WARNING", logger=sinks.__name__):
-        monkeypatch.setattr(spark, "__class__", NoContextSession)
         process_batch(b0, 0, out, store)
         process_batch(b1, 1, out, store)
-        monkeypatch.undo()
+    monkeypatch.undo()
     got = spark.read.format("vortex").load(os.path.join(out, "batch-*"))
     assert sorted(r["doc_id"] for r in got.collect()) == [1, 4]
     warned = [r for r in caplog.records if "job description" in r.getMessage()]
-    assert len(warned) == 1 and "no SparkContext here" in caplog.text
+    assert len(warned) == 1 and "no job descriptions here" in caplog.text
 
 
 def test_hung_overlapped_write_does_not_block_exit(tmp_path):
