@@ -119,19 +119,45 @@ def test_gate_order_first_failing_stage_wins(spark, tmp_path):
     also a near-dup; a reworded near-dup reads 'near_dup' even though
     its vector also collides; a same-cluster vector with different
     text reads 'semantic'; and a doc dropped at gate 1 must NOT poison
-    gate 2's index (its text never reaches the LSH index)."""
+    gate 2's index (its text never reaches the LSH index).
+
+    Each index holds exactly the docs that reached its gate, which three
+    more cases pin. A case variant is an exact dup (the fingerprint
+    lowercases) whose shingles differ from the original's (tokens keep
+    case), so a doc near only the variant stays kept. A near-dup landed
+    in batch 0 still feeds the exact gate, so its copy in batch 1 reads
+    'exact'. A near-dup never enters the IVF index, so a later doc whose
+    vector collides only with the near-dup's stays kept."""
     register(spark)
     t0 = "the quick brown fox jumps over the lazy dog again and again today"
     t0_near = "the quick brown fox jumps over the lazy dog again and again tomorrow"
     t2 = "an entirely different document about spark shuffle partitioning"
-    v_a = [1.0, 0.0, 0.0, 0.0]
-    v_b = [0.0, 1.0, 0.0, 0.0]
+    t_low = (
+        "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima "
+        "mike november oscar papa"
+    )
+    t_d = (
+        "one two three four five six seven eight nine ten eleven twelve "
+        "thirteen fourteen fifteen sixteen"
+    )
+
+    def e(i):  # orthogonal unit vectors: only equal vectors collide
+        return [1.0 if j == i else 0.0 for j in range(8)]
+
     rows = [
-        (1, "s", t0, v_a),
-        (2, "s", t0, v_a),        # exact dup of 1 (and near-dup, and cosine 1.0)
-        (3, "s", t0_near, v_b),   # near-dup of 1, different vector
-        (4, "s", t2, v_a),        # different text, same vector as 1 → semantic
-        (5, "s", t2 + " extra", v_b),  # near-dup of 4? no — J(t2, t2+extra) high
+        (1, "s", t0, e(0)),
+        (2, "s", t0, e(0)),        # exact dup of 1 (and near-dup, and cosine 1.0)
+        (6, "s", t_low.title(), e(2)),  # kept
+        (7, "s", t_low, e(3)),     # case variant of 6 → exact; other shingles
+        (8, "s", t_d, e(4)),       # kept
+        (9, "s", t_d.replace("sixteen", "seventeen"), e(5)),  # near-dup of 8
+        # batch 1
+        (10, "s", t0_near, e(1)),  # near-dup of 1, different vector
+        (11, "s", t2, e(0)),       # different text, same vector as 1 → semantic
+        (12, "s", t2 + " extra", e(1)),  # near-dup of 11? no — J(t2, t2+extra) high
+        (13, "s", t_low.replace("papa", "quebec"), e(6)),  # near only 7 → kept
+        (14, "s", t_d.replace("sixteen", "seventeen"), e(7)),  # copy of 9 → exact
+        (15, "s", "a third unrelated text about broadcast hash joins", e(5)),  # vec of 9
     ]
     corpus = _mk(spark, rows)
     centroids = sample_centroids(
@@ -140,23 +166,38 @@ def test_gate_order_first_failing_stage_wins(spark, tmp_path):
     )
     root = str(tmp_path / "g")
     # two batches so the exact dup crosses a batch boundary too
-    ingest_process_batch(corpus.filter(F.col("doc_id") <= 2), 0, centroids, root)
-    ingest_process_batch(corpus.filter(F.col("doc_id") > 2), 1, centroids, root)
+    ingest_process_batch(corpus.filter(F.col("doc_id") < 10), 0, centroids, root)
+    ingest_process_batch(corpus.filter(F.col("doc_id") >= 10), 1, centroids, root)
     got = {r["doc_id"]: r["stage"] for r in _manifest(spark, root).collect()}
-    assert got[1] == "kept"
-    assert got[2] == "exact"
-    assert got[3] == "near_dup"
-    assert got[4] == "semantic"
-    # doc 5 is a near-dup of doc 4 — and doc 4 DID reach the near-dup
-    # gate (it fell at the later semantic gate), so 5 drops as near_dup
-    assert got[5] == "near_dup"
-    # gate-1 victim never entered the LSH index
-    idx = (
-        spark.read.format("vortex")
-        .option("paths", json.dumps(batch_dirs(os.path.join(root, "lsh"), 10**9)))
-        .load()
-    )
-    assert 2 not in {r["id"] for r in idx.select("id").distinct().collect()}
+    assert got == {
+        1: "kept",
+        2: "exact",
+        6: "kept",
+        7: "exact",
+        8: "kept",
+        9: "near_dup",
+        10: "near_dup",
+        11: "semantic",
+        # doc 12 is a near-dup of doc 11 — and doc 11 DID reach the near-dup
+        # gate (it fell at the later semantic gate), so 12 drops as near_dup
+        12: "near_dup",
+        13: "kept",
+        14: "exact",
+        15: "kept",
+    }
+
+    def indexed(store):
+        idx = (
+            spark.read.format("vortex")
+            .option("paths", json.dumps(batch_dirs(os.path.join(root, store), 10**9)))
+            .load()
+        )
+        return {r["id"] for r in idx.select("id").distinct().collect()}
+
+    # gate-1 victims never entered the LSH index, gate-2 victims never
+    # entered the IVF index
+    assert indexed("lsh") == {1, 6, 8, 9, 10, 11, 12, 13, 15}
+    assert indexed("ivf") == {1, 6, 8, 11, 13, 15}
 
 
 def test_retried_batch_is_idempotent(spark, tmp_path):
