@@ -302,23 +302,28 @@ def minhash_signatures(
     if engine == "arrow":
         return _signatures_arrow(df, text_col, id_col, num_hashes, n)
     sh = shingle_table(df, text_col, id_col, n)
-    # One generated-SQL expression instead of a Python loop of Column
-    # calls: the loop form (F.array of num_hashes F.xxhash64 columns
-    # inside the fold lambda) cost ~250 py4j round trips per call —
-    # profiled at ~0.5 s of DRIVER time per minhash_signatures call,
-    # ~1/3 of contamination_neardup_eval's bench median (r8). The SQL
-    # string parses JVM-side in one round trip and produces the
-    # identical expression tree: integer literals `{i}` are
-    # IntegerType exactly like F.lit(i), so every xxhash64 value — and
-    # therefore every signature, band key, and candidate set — is
-    # bit-identical to the loop form (pinned by
-    # tests/test_operators_quality.py::test_minhash_expr_form_identical).
+    return sh.select("id", "sh", minhash("sh", num_hashes).alias("mh"))
+
+
+def minhash(sh: str, num_hashes: int = 32) -> Column:
+    """The k-minhash signature of the shingle-array column ``sh``.
+
+    One generated-SQL expression instead of a Python loop of Column
+    calls: the loop form (F.array of num_hashes F.xxhash64 columns
+    inside the fold lambda) cost ~250 py4j round trips per call —
+    profiled at ~0.5 s of DRIVER time per minhash_signatures call,
+    ~1/3 of contamination_neardup_eval's bench median (r8). The SQL
+    string parses JVM-side in one round trip and produces the
+    identical expression tree: integer literals `{i}` are
+    IntegerType exactly like F.lit(i), so every xxhash64 value — and
+    therefore every signature, band key, and candidate set — is
+    bit-identical to the loop form (pinned by
+    tests/test_operators_quality.py::test_minhash_expr_form_identical)."""
     hashes = ", ".join(f"xxhash64(s, {i})" for i in range(num_hashes))
-    minhashes = F.expr(
-        f"aggregate(sh, array_repeat(CAST(9223372036854775807 AS BIGINT), {num_hashes}), "
+    return F.expr(
+        f"aggregate(`{sh}`, array_repeat(CAST(9223372036854775807 AS BIGINT), {num_hashes}), "
         f"(acc, s) -> zip_with(acc, array({hashes}), (x, y) -> least(x, y)))"
     )
-    return sh.select("id", "sh", minhashes.alias("mh"))
 
 
 def band_buckets(
@@ -328,23 +333,32 @@ def band_buckets(
     ``rows_per_band`` consecutive minhashes into one bucket key.
     Candidate pairs are docs sharing any (band, h); per-row explode,
     no shuffle until the consumer joins on the key."""
+    return sig.select(
+        "id", F.posexplode(band_keys("mh", num_hashes, rows_per_band)).alias("band", "h")
+    )
+
+
+def band_keys(mh: str, num_hashes: int = 32, rows_per_band: int = 2) -> Column:
+    """The array of LSH band keys of the signature column ``mh``: key
+    ``b`` hashes minhashes ``b * rows_per_band`` onward, so a band's
+    position in the array is its band number.
+
+    Generated-SQL form for the same reason as `minhash`: the
+    Column-loop built n_bands * (rows_per_band + 1) py4j calls (~50
+    round trips, ~0.1 s driver time per call); one expr string parses
+    in one. element_at/xxhash64 arities and argument types are
+    unchanged, so band keys are bit-identical."""
     if num_hashes % rows_per_band:
         raise ValueError("num_hashes must be divisible by rows_per_band")
-    n_bands = num_hashes // rows_per_band
-    # Generated-SQL form for the same reason as minhash_signatures:
-    # the Column-loop built n_bands * (rows_per_band + 1) py4j calls
-    # (~50 round trips, ~0.1 s driver time per call); one expr string
-    # parses in one. element_at/xxhash64 arities and argument types
-    # are unchanged, so band keys are bit-identical.
     keys = ", ".join(
         "xxhash64("
         + ", ".join(
-            f"element_at(mh, {b * rows_per_band + j + 1})" for j in range(rows_per_band)
+            f"element_at(`{mh}`, {b * rows_per_band + j + 1})" for j in range(rows_per_band)
         )
         + ")"
-        for b in range(n_bands)
+        for b in range(num_hashes // rows_per_band)
     )
-    return sig.select("id", F.posexplode(F.expr(f"array({keys})")).alias("band", "h"))
+    return F.expr(f"array({keys})")
 
 
 def minhash_lsh_pairs(

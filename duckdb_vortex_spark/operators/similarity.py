@@ -595,16 +595,29 @@ def lloyd_refine(
     return centroids
 
 
+def codebook_rows(centroids: DataFrame) -> list[tuple[int, list[float]]]:
+    """The (cluster_id, centroid) rows of a codebook, sorted by
+    cluster_id: what `ivf_assign`'s literal path compiles into the plan."""
+    return sorted(
+        (r["cluster_id"], [float(x) for x in r["centroid"]])
+        for r in centroids.select("cluster_id", "centroid").collect()
+    )
+
+
 def ivf_assign(
     df: DataFrame,
     centroids: DataFrame,
     n_probe: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    rows: list | None = None,
 ) -> DataFrame:
     """Assign each vector to its ``n_probe`` nearest centroids by
     cosine. Centroids are broadcast (|C| is small by construction), so
     assignment is a map-side-only pass — no shuffle of the vectors.
+    ``rows`` is `codebook_rows` of ``centroids`` when the caller already
+    holds them (a static codebook collected once); otherwise they are
+    collected here, one Spark job per call.
 
     Precondition (ADVICE r15): ``id_col`` values are expected UNIQUE.
     The literal paths emit probe rows per INPUT row, while the
@@ -632,10 +645,7 @@ def ivf_assign(
         # r15: repr'd 'nan'/'inf' literals do not parse as Spark SQL
         # doubles, so the literal route would raise where the join
         # form computes through).
-        crows = sorted(
-            (r["cluster_id"], [float(x) for x in r["centroid"]])
-            for r in centroids.select("cluster_id", "centroid").collect()
-        )
+        crows = codebook_rows(centroids) if rows is None else rows
         dims = {len(v) for _, v in crows}
         if (
             crows

@@ -24,12 +24,11 @@ batch side is one micro-batch (bounded).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .sinks import (
-    label_jobs,
-    overlapped_batch_writes,
+    job_label,
     overwrite_batch_atomic,
     read_state,
     start_batch_stream,
@@ -51,22 +50,36 @@ def exact_gate(
     fingerprint ``__fp`` and the ``order`` columns for the rows reaching
     the gate, ``seen`` the fingerprints of every earlier row (one
     ``__fp`` column; None before the first batch). Returns the dropped
-    ids: each row that is not the first of its fingerprint in ``order``,
-    and each row whose fingerprint is in ``seen``.
+    ids, each once: each row with an earlier row of its fingerprint in
+    ``(order, id)`` order, and each row whose fingerprint is in
+    ``seen``. The result is a lineage cut whose broadcast build has run,
+    so ``fp``'s own cut is materialized when it returns.
 
-    The first-wins window ranks ``fp``'s columns only, so no other
-    payload rides its exchange. The batch side is bounded and the
-    history is the corpus, so the batch fingerprints are broadcast INTO
-    the history scan (map-side inner join) and only matched ids reach an
-    exchange; checkpointed frames carry no size stats, and without the
-    hint the planner sort-merged the batch against the whole store."""
-    fp = fp.withColumn(
-        "__rn", F.row_number().over(Window.partitionBy("__fp").orderBy(*order))
-    ).localCheckpoint(eager=False)
-    dropped = fp.filter(F.col("__rn") > 1).select("id")
+    The batch side is bounded and the history is the corpus, so ONE
+    broadcast of the batch fingerprints serves both checks: the
+    in-batch first-wins is a semi self-join against it, and it is
+    broadcast INTO the history scan (map-side inner join), so only
+    matched ids reach the one exchange, the distinct. Checkpointed
+    frames carry no size stats; without the hint the planner
+    sort-merged the batch against the whole store."""
+    rank = (*order, "id")
+    fpb = F.broadcast(fp.select("__fp", *dict.fromkeys(rank)))
+
+    def at(side: str):
+        return F.struct(*(F.col(f"{side}.{c}") for c in rank))
+
+    dropped = (
+        fp.alias("b")
+        .join(
+            fpb.alias("a"),
+            (F.col("a.__fp") == F.col("b.__fp")) & (at("a") < at("b")),
+            "left_semi",
+        )
+        .select("id")
+    )
     if seen is not None:
-        hist = seen.join(F.broadcast(fp.select("id", "__fp")), "__fp").select("id")
-        dropped = dropped.unionByName(hist.distinct()).distinct()
+        hist = seen.join(fpb, "__fp").select("id")
+        dropped = dropped.unionByName(hist).distinct()
     return dropped.localCheckpoint(eager=False)
 
 
@@ -107,25 +120,26 @@ def process_batch(
     the same row twice in one batch — is emitted once. The gate's row
     key is a per-row surrogate, fixed by the checkpoint."""
     spark_ = batch_df.sparkSession
-    label_jobs(spark_, f"dedup b{batch_id}: exact gate")
-    rows = (
-        batch_df.withColumn("__fp", fingerprint(text_col))
-        .withColumn("__row", F.monotonically_increasing_id())
-        .localCheckpoint(eager=False)
-    )
-    dropped = exact_gate(
-        rows.select(
-            F.col("__row").alias("id"), "__fp", F.struct(*batch_df.columns).alias("__doc")
-        ),
-        read_state(spark_, store_dir, batch_id, schema=rows.select("__fp").schema),
-        order=("__doc",),
-    )
-    fresh = rows.join(
-        F.broadcast(dropped.withColumnRenamed("id", "__row")), "__row", "left_anti"
-    )
-    with overlapped_batch_writes(spark_) as bw:
-        bw.submit(
-            overwrite_batch_atomic, fresh.select("__fp"), store_dir, batch_id,
-            label=f"dedup b{batch_id}: fp store (write)",
+    with job_label(spark_, f"dedup b{batch_id}: exact gate") as label:
+        rows = (
+            batch_df.withColumn("__fp", fingerprint(text_col))
+            .withColumn("__row", F.monotonically_increasing_id())
+            .localCheckpoint(eager=False)
         )
+        dropped = exact_gate(
+            rows.select(
+                F.col("__row").alias("id"), "__fp", F.struct(*batch_df.columns).alias("__doc")
+            ),
+            read_state(spark_, store_dir, batch_id, schema=rows.select("__fp").schema),
+            order=("__doc",),
+        )
+        fresh = rows.join(
+            F.broadcast(dropped.withColumnRenamed("id", "__row")), "__row", "left_anti"
+        )
+        # both writes read the cut ``dropped``, which only a job of its
+        # own materializes: written one after the other, never two
+        # threads materialize it at once
+        label(f"dedup b{batch_id}: output (write)")
         overwrite_batch_atomic(fresh.select(*batch_df.columns), out_dir, batch_id)
+        label(f"dedup b{batch_id}: fp store (write)")
+        overwrite_batch_atomic(fresh.select("__fp"), store_dir, batch_id)

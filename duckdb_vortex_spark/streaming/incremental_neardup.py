@@ -16,9 +16,9 @@ integrated chain (`incremental_pipeline`) runs second. Per micro-batch:
    buckets, never the corpus;
 3. exact shingle-Jaccard verification: the NEW side's shingles are
    in-plan; the OLD side re-shingles only the candidate documents,
-   fetched from the landed raw batches by a doc-id semi join (the
-   raw store is written id-sorted per batch → zone-map point reads,
-   O(candidates) chunks, not a corpus scan);
+   fetched from the landed raw batches by a doc-id join against the
+   broadcast candidate pairs (the raw store is written id-sorted per
+   batch, so its id zone maps bound the candidate chunks);
 4. emit a keep/drop manifest row per new document and append the
    batch's bucket rows to the index — ALL documents are indexed
    (dropped ones too), so the drop rule is a pure function of
@@ -74,13 +74,14 @@ from ..operators.dedup import (
     _DUCK_TOKS,
     _duck_shingles,
     _with_jaccard,
-    band_buckets,
-    minhash_signatures,
-    shingle_table,
+    band_keys,
+    minhash,
+    shingles_from_tokens,
 )
+from ..operators.text import tokens
 from .sinks import (
     STATE_FILES,
-    label_jobs,
+    job_label,
     overlapped_batch_writes,
     overwrite_batch_atomic,
     read_state,
@@ -91,104 +92,125 @@ from .sinks import (
 
 def lsh_signatures(
     docs: DataFrame, num_hashes: int = 32, n: int = 3, rows_per_band: int = 2
-) -> tuple[DataFrame, DataFrame]:
-    """What the near-dup gate reads of the (id, text) rows reaching it:
-    MinHash signatures (id, sh, mh) and LSH band buckets (id, band, h).
-    Both are lineage cuts (`localCheckpoint`), since several gate frames
-    and a store write consume each."""
-    sig = minhash_signatures(docs, "text", "id", num_hashes, n, engine="jvm")
-    sig = sig.localCheckpoint(eager=False)
-    return sig, band_buckets(sig, num_hashes, rows_per_band).localCheckpoint(eager=False)
+) -> DataFrame:
+    """What the near-dup gate reads of a row: ``docs`` with its token
+    array ``__toks`` replaced by the shingle set ``sh`` and the array
+    ``bk`` of LSH band keys (band ``b`` at position ``b``). Per-row
+    work, no exchange. ``__toks`` should be bound below an exchange (the
+    raw store's range partitioning), so the per-shingle lambda slices a
+    column instead of re-tokenizing (see `shingle_table`); each step is
+    its own projection, since every later step reads its input several
+    times."""
+    cols = [c for c in docs.columns if c != "__toks"]
+    sig = docs.select(*cols, shingles_from_tokens("__toks", n).alias("sh"))
+    sig = sig.select(*cols, "sh", minhash("sh", num_hashes).alias("__mh"))
+    return sig.select(*cols, "sh", band_keys("__mh", num_hashes, rows_per_band).alias("bk"))
+
+
+def lsh_buckets(sig: DataFrame) -> DataFrame:
+    """The LSH index rows (band, h, id) of `lsh_signatures` rows."""
+    return sig.select(F.posexplode("bk").alias("band", "h"), "id")
 
 
 def neardup_gate(
     sig: DataFrame,
-    buckets: DataFrame,
     index: DataFrame | None,
     landed: DataFrame | None,
     threshold: float = 0.8,
     n: int = 3,
     max_bucket: int = 1000,
 ) -> DataFrame:
-    """The near-dup gate. ``sig`` and ``buckets`` are `lsh_signatures` of
-    the rows reaching the gate; ``index`` is the prior LSH index (band,
-    h, id) and ``landed`` the prior landed documents (id, text), each
-    None before the first batch. Returns the dropped ids: rows with an
-    earlier row (a prior batch, or a smaller id in this batch) whose
-    shingle Jaccard reaches ``threshold``.
+    """The near-dup gate. ``sig`` is `lsh_signatures` (id, sh, bk) of the
+    rows reaching the gate; ``index`` is the prior LSH index (band, h,
+    id) and ``landed`` the prior landed documents (id, text), each None
+    before the first batch. Returns the ids of rows with an earlier row
+    (a prior batch, or a smaller id in this batch) whose shingle Jaccard
+    reaches ``threshold``; an id may repeat. The result is a lineage cut
+    whose exchanges have run, so ``sig``'s cut is materialized when it
+    returns.
 
     Hot buckets: a (band, h) with more than ``max_bucket`` rows in the
     index plus this batch is excluded from BOTH candidate joins. Only
     the batch's bucket keys are counted (the index scan is semi-joined
     to them map-side first), so the aggregate's exchange is bounded by
-    the batch, not by every key ever landed."""
-    bkeys = buckets.select("band", "h")
-    counted = bkeys
+    the batch, not by every key ever landed.
+
+    Lineage cuts split the gate into three plans: the capped buckets,
+    the candidate pairs, the verify. Within a plan, a broadcast that
+    several joins read is built once: the capped buckets (the earlier
+    side of in-batch pairs, and what the index streams against), the
+    batch's shingle sets (both sides of an in-batch pair, the new side
+    of an index pair). The index pairs are broadcast into the landed
+    store's scan, so only candidate docs are re-shingled. Candidate
+    pairs are deduplicated before the verify, so a pair sharing several
+    buckets is verified once."""
+    bkt = lsh_buckets(sig)
+    counted = bkt.select("band", "h")
     if index is not None:
         counted = index.select("band", "h").join(
-            F.broadcast(bkeys), ["band", "h"], "left_semi"
-        ).unionByName(bkeys)
+            F.broadcast(counted), ["band", "h"], "left_semi"
+        ).unionByName(counted)
     ok = (
         counted.groupBy("band", "h")
         .agg(F.count("*").alias("bn"))
         .filter(F.col("bn") <= max_bucket)
         .select("band", "h")
     )
-    # three consumers, and each F.broadcast build is its own query
-    # execution: without the cut every build re-computes the subtree,
-    # hot-bucket aggregate included
-    buck_ok = buckets.join(F.broadcast(ok), ["band", "h"]).localCheckpoint(eager=False)
-    a = buck_ok.select("band", "h", F.col("id").alias("doc_a"))
-    b = buck_ok.select("band", "h", F.col("id").alias("doc_b"))
+    # cut, like the pairs below: three joins read the capped buckets,
+    # and without the cut the planner pushes each consumer's filters
+    # into its own copy of the subtree, and every copy re-runs the
+    # hot-bucket aggregate's exchanges
+    buck_ok = bkt.join(F.broadcast(ok), ["band", "h"]).localCheckpoint(eager=False)
+    earlier = F.broadcast(buck_ok)
     cand = (
-        a.join(F.broadcast(b), ["band", "h"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+        buck_ok.withColumnRenamed("id", "doc_b")
+        .join(earlier, ["band", "h"])
+        .filter(F.col("id") < F.col("doc_b"))
+        .select(F.col("id").alias("doc_a"), "doc_b", F.lit(False).alias("old"))
     )
     if index is not None:
         # the index streams map-side; the bounded batch buckets broadcast
-        cross = (
-            index.withColumnRenamed("id", "doc_a")
-            .join(F.broadcast(buck_ok), ["band", "h"])
-            .select("doc_a", F.col("id").alias("doc_b"))
+        cross = index.withColumnRenamed("id", "doc_a").join(earlier, ["band", "h"])
+        cand = cand.unionByName(
+            cross.select("doc_a", F.col("id").alias("doc_b"), F.lit(True).alias("old"))
         )
-        cand = cand.unionByName(cross)
+    # cut: both verify branches read the pairs
     cand = cand.distinct().localCheckpoint(eager=False)
-    # exact verify: old-side shingles of landed docs are re-built only
-    # for candidate ids, pruned BEFORE re-shingling (semi join on the
-    # landed store's sort key: zone-map point reads at scale)
-    new_sh = sig.select(F.col("id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    old_sh = sig.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
+    shs = F.broadcast(sig.select("id", "sh"))
+    pairs = (
+        cand.filter(~F.col("old"))
+        .join(shs.alias("a"), F.col("doc_a") == F.col("a.id"))
+        .select("doc_a", "doc_b", F.col("a.sh").alias("sh_a"))
+    )
     if landed is not None:
-        old_docs = landed.join(
-            F.broadcast(cand.select(F.col("doc_a").alias("id")).distinct()),
-            "id",
-            "left_semi",
+        # old-side shingles are re-built for candidate docs only: the
+        # landed store streams map-side against the broadcast pairs
+        old = landed.join(
+            F.broadcast(cand.filter(F.col("old"))), F.col("id") == F.col("doc_a")
+        ).select("doc_a", "doc_b", tokens("text").alias("__toks"))
+        pairs = pairs.unionByName(
+            old.select("doc_a", "doc_b", shingles_from_tokens("__toks", n).alias("sh_a"))
         )
-        old_sh = (
-            shingle_table(old_docs, "text", "id", n)
-            .select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
-            .unionByName(old_sh)
-        )
+    pairs = pairs.join(shs.alias("b"), F.col("doc_b") == F.col("b.id")).select(
+        "doc_a", "doc_b", "sh_a", F.col("b.sh").alias("sh_b")
+    )
     return (
-        _with_jaccard(
-            old_sh.join(F.broadcast(cand), "doc_a").join(F.broadcast(new_sh), "doc_b")
-        )
+        _with_jaccard(pairs)
         .filter(F.col("jaccard") >= threshold)
         .select(F.col("doc_b").alias("id"))
-        .distinct()
         .localCheckpoint(eager=False)
     )
 
 
 def keep_manifest(ids: DataFrame, dropped: DataFrame, id_name: str) -> DataFrame:
     """(``id_name``, keep) for each ``id`` of ``ids``: keep is false for
-    the ``dropped`` ids."""
-    return ids.join(
-        F.broadcast(dropped.withColumn("__dup", F.lit(True))), "id", "left"
-    ).select(
-        F.col("id").alias(id_name),
-        F.coalesce(~F.col("__dup"), F.lit(True)).alias("keep"),
+    the ``dropped`` ids (which may repeat). Both joins read one
+    broadcast of ``dropped``."""
+    d = F.broadcast(dropped.select("id"))
+    return ids.join(d, "id", "left_anti").select(
+        F.col("id").alias(id_name), F.lit(True).alias("keep")
+    ).unionByName(
+        ids.join(d, "id", "left_semi").select(F.col("id").alias(id_name), F.lit(False).alias("keep"))
     )
 
 
@@ -211,28 +233,39 @@ def neardup_process_batch(
     the LSH index rows (band, h, id — all docs), and the manifest
     (doc_id, keep)."""
     spark_ = batch_df.sparkSession
-    with overlapped_batch_writes(spark_) as bw:
-        docs = batch_df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-        raw = docs.repartitionByRange(STATE_FILES, "id").sortWithinPartitions("id")
-        bw.submit(
-            overwrite_batch_atomic, raw, raw_dir, batch_id, max_files=None,
-            label=f"neardup b{batch_id}: raw (write)",
-        )
-        label_jobs(spark_, f"neardup b{batch_id}: neardup gate")
-        sig, buckets = lsh_signatures(docs, num_hashes, n, rows_per_band)
-        rows = buckets.select("band", "h", "id")
-        bw.submit(
-            overwrite_batch_atomic, rows, index_dir, batch_id,
-            label=f"neardup b{batch_id}: index (write)",
-        )
+    with overlapped_batch_writes(spark_) as bw, job_label(
+        spark_, f"neardup b{batch_id}: neardup gate"
+    ):
+        sig = lsh_signatures(
+            batch_df.select(
+                F.col(id_col).alias("id"),
+                F.col(text_col).alias("text"),
+                tokens(text_col).alias("__toks"),
+            )
+            .repartitionByRange(STATE_FILES, "id")
+            .sortWithinPartitions("id"),
+            num_hashes,
+            n,
+            rows_per_band,
+        ).localCheckpoint(eager=False)
+        raw = sig.select("id", "text")
+        rows = lsh_buckets(sig)
         dropped = neardup_gate(
             sig,
-            buckets,
             read_state(spark_, index_dir, batch_id, schema=rows.schema),
             read_state(spark_, raw_dir, batch_id, schema=raw.schema),
             threshold,
             n,
             max_bucket,
+        )
+        # the gate's broadcast builds have materialized sig's cut
+        bw.submit(
+            overwrite_batch_atomic, raw, raw_dir, batch_id, max_files=None,
+            label=f"neardup b{batch_id}: raw (write)",
+        )
+        bw.submit(
+            overwrite_batch_atomic, rows, index_dir, batch_id,
+            label=f"neardup b{batch_id}: index (write)",
         )
         manifest = keep_manifest(sig.select("id"), dropped, "doc_id")
         overwrite_batch_atomic(manifest, manifest_dir, batch_id)

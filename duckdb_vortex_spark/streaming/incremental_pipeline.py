@@ -13,7 +13,10 @@ composition of the standalone modules' gate functions:
 
 0. land the raw batch (id, fp, text, vec) id-sorted into the SHARED
    raw store — the one corpus artifact every gate reads back (fp =
-   the exact-gate fingerprint, a column of the raw store);
+   the exact-gate fingerprint, a column of the raw store). The same
+   projection computes what the near-dup gate reads of a row (its
+   shingles and LSH band keys, `incremental_neardup.lsh_signatures`),
+   so the batch is cut once for both gates;
 1. EXACT gate (`incremental_dedup.exact_gate`): in-batch first-wins
    by id, then drop ids whose fingerprint is in the landed history
    (the raw store's fp column, column-pruned — 8 B/doc read).
@@ -26,11 +29,41 @@ composition of the standalone modules' gate functions:
 3. SEMANTIC gate over s2 (`incremental_semdedup.semantic_gate`):
    1-probe assignment against the static codebook (offline-trained,
    `sample_centroids` over the full embeddings table so the oracle
-   can replay the pick); the persistent IVF index holds every doc
-   that reached this gate (prior s2 sets). Survivors s3; ALL s2
-   assignments append cluster-sorted;
+   can replay the pick; collected once per chain); the persistent IVF
+   index holds every doc that reached this gate (prior s2 sets).
+   Survivors s3; ALL s2 assignments append cluster-sorted;
 4. manifest row per batch document: first failing gate
    (stage ∈ exact | near_dup | semantic | kept).
+
+Spark jobs per batch. A job costs driver planning, AQE and scheduling
+whatever the batch size, and at micro-batch sizes the job count, not
+the row count, sets a batch's cost. Measured at sf0.01 on 4 cores (the
+benchmark's chain part, second pass, the 334-document batch that reads
+history; the first batch, with no history, runs 27 → 20):
+
+  stage            before  after  what runs now
+  land raw            3      3    range sampling and exchange, write
+  exact gate          5      2    one broadcast of the batch
+                                  fingerprints (in-batch semi self-join
+                                  and history join), distinct
+  near-dup gate      13      8    exact-dropped broadcast (s1 cut),
+                                  batch keys, hot-bucket aggregate and
+                                  broadcast, capped-bucket broadcast,
+                                  pair distinct, shingle broadcast,
+                                  index-pair broadcast
+  lsh write           1      1
+  semantic gate       2      1    near-dropped broadcast (the codebook
+                                  is no longer collected per batch)
+  probed clusters     2      1    one collect, deduplicated on the driver
+  ivf write           3      3    range sampling and exchange, write
+  manifest            6      4    semantic new-side broadcast, one
+                                  broadcast of the stage-tagged dropped
+                                  ids, aggregate, write
+  total              35     23
+
+Store writes run on the write pool, each submitted only after a
+main-thread job has materialized the lineage cut it reads, so two
+threads never race to materialize one lazy cut.
 
 Chain semantics (what the DuckDB oracle replays): with gates indexing
 exactly the docs that reach them,
@@ -84,13 +117,14 @@ from pyspark.sql import functions as F
 from ..catalog import load, query
 from ..operators.dedup import _DUCK_TOKS, _duck_shingles
 from ..operators.similarity import _sql_cos, sample_centroids
+from ..operators.text import tokens
 from .incremental_dedup import exact_gate, fingerprint
-from .incremental_neardup import lsh_signatures, neardup_gate
+from .incremental_neardup import lsh_buckets, lsh_signatures, neardup_gate
 from .incremental_semdedup import assign_clusters, cluster_sorted, semantic_gate
 from .sinks import (
     STATE_FILES,
     compact_dataset_incremental,
-    label_jobs,
+    job_label,
     overlapped_batch_writes,
     overwrite_batch_atomic,
     read_state,
@@ -152,15 +186,16 @@ def compact_chain_stores(
     for store, cols in CHAIN_STORE_SORT.items():
         p = os.path.join(root, store)
         if os.path.isdir(p):
-            out[store] = compact_dataset_incremental(
-                spark,
-                p,
-                cols,
-                max_files=max_files,
-                max_segments=max_segments,
-                before=before,
-                level_ratio=level_ratio,
-            )
+            with job_label(spark, f"compact {store}"):
+                out[store] = compact_dataset_incremental(
+                    spark,
+                    p,
+                    cols,
+                    max_files=max_files,
+                    max_segments=max_segments,
+                    before=before,
+                    level_ratio=level_ratio,
+                )
     return out
 
 
@@ -185,100 +220,96 @@ def ingest_process_batch(
     raw_d, lsh_d, ivf_d, man_d = (
         os.path.join(root, s) for s in ("raw", "lsh", "ivf", "man")
     )
+    stage = f"chain b{batch_id}: {{}}".format
 
-    def label(stage: str) -> None:
-        label_jobs(spark_, f"chain b{batch_id}: {stage}")
-
-    # Every store write is submitted to the write pool as soon as its
-    # frame exists and joined before the batch returns: this batch's
-    # state reads list strictly-earlier batch dirs only, so no gate
-    # waits on a write (`overlapped_batch_writes`).
-    with overlapped_batch_writes(spark_) as bw:
-        # 0. land the raw batch, id-sorted, with the exact-gate
-        # fingerprint as a column (the exact gate's history read
-        # column-prunes it)
-        label("land raw")
-        rows = (
+    # Every store write is submitted to the write pool as soon as a
+    # main-thread job has materialized the lineage cut it reads (so the
+    # two threads never race to materialize one cut), and joined before
+    # the batch returns: this batch's state reads list strictly-earlier
+    # batch dirs only, so no gate waits on a write
+    # (`overlapped_batch_writes`).
+    with overlapped_batch_writes(spark_) as bw, job_label(spark_, stage("land raw")) as label:
+        # 0. the raw batch, id-sorted, with what every gate reads of a
+        # row: the exact-gate fingerprint and the near-dup gate's
+        # shingles and band keys (tokens bound below the range exchange)
+        rows = lsh_signatures(
             batch_df.select(
                 F.col("doc_id").alias("id"), fingerprint("text").alias("fp"),
-                "text", "vec",
+                "source", "text", "vec", tokens("text").alias("__toks"),
             )
             .repartitionByRange(STATE_FILES, "id")
-            .sortWithinPartitions("id")
-            .localCheckpoint(eager=False)
-        )
-        bw.submit(
-            overwrite_batch_atomic, rows, raw_d, batch_id, max_files=None,
-            label=f"chain b{batch_id}: land raw (write)",
-        )
+            .sortWithinPartitions("id"),
+            num_hashes, n, rows_per_band,
+        ).localCheckpoint(eager=False)
+        raw = rows.select("id", "fp", "text", "vec")
 
-        # 1. EXACT gate
-        label("exact gate")
-        landed = read_state(spark_, raw_d, batch_id, schema=rows.schema)
+        # 1. EXACT gate (its broadcast build materializes ``rows``)
+        label(stage("exact gate"))
+        landed = read_state(spark_, raw_d, batch_id, schema=raw.schema)
         exact_dropped = exact_gate(
             rows.select("id", F.col("fp").alias("__fp")),
             None if landed is None else landed.select(F.col("fp").alias("__fp")),
         )
-        s1 = rows.join(
-            F.broadcast(exact_dropped), "id", "left_anti"
-        ).localCheckpoint(eager=False)
+        bw.submit(
+            overwrite_batch_atomic, raw, raw_d, batch_id, max_files=None,
+            label=stage("land raw (write)"),
+        )
 
-        # 2. NEAR-DUP gate over s1
-        label("neardup gate")
-        sig, buckets = lsh_signatures(s1, num_hashes, n, rows_per_band)
-        lsh_rows = buckets.select("band", "h", "id")
+        # 2. NEAR-DUP gate over s1 (its broadcast builds materialize s1)
+        label(stage("neardup gate"))
+        s1 = rows.join(F.broadcast(exact_dropped), "id", "left_anti").localCheckpoint(
+            eager=False
+        )
+        lsh_rows = lsh_buckets(s1)
         near_dropped = neardup_gate(
-            sig,
-            buckets,
+            s1,
             read_state(spark_, lsh_d, batch_id, schema=lsh_rows.schema),
             landed,
             near_threshold,
             n,
             max_bucket,
         )
-        # single consumer (asg, checkpointed): no checkpoint — each
-        # localCheckpoint call costs ~0.4 s of driver-side planning/AQE
-        # stage execution per batch
-        s2 = s1.join(F.broadcast(near_dropped), "id", "left_anti")
         bw.submit(
             overwrite_batch_atomic, lsh_rows, lsh_d, batch_id,
-            label=f"chain b{batch_id}: lsh store (write)",
+            label=stage("lsh store (write)"),
         )
 
-        # 3. SEMANTIC gate over s2
-        label("semantic gate")
-        asg = assign_clusters(s2, centroids)
+        # 3. SEMANTIC gate over s2 (the probed-cluster collect
+        # materializes asg)
+        label(stage("semantic gate"))
+        asg = assign_clusters(
+            s1.join(F.broadcast(near_dropped), "id", "left_anti"), centroids
+        )
         landed_ivf = read_state(spark_, ivf_d, batch_id, schema=asg.schema, pushdown="true")
-        label("probed clusters")
-        # single consumer (the manifest join): no checkpoint (see s2)
         sem_dropped = semantic_gate(asg, landed_ivf, sem_threshold)
         bw.submit(
             overwrite_batch_atomic, cluster_sorted(asg), ivf_d, batch_id,
-            max_files=None, label=f"chain b{batch_id}: ivf store (write)",
+            max_files=None, label=stage("ivf store (write)"),
         )
 
-        # 4. manifest: first failing gate ----------------------------------------
+        # 4. manifest: first failing gate. The dropped sets are disjoint
+        # (each gate reads the previous one's survivors), so one
+        # broadcast of their stage-tagged union labels every row; an id
+        # repeats only within one set, and the aggregate folds it.
+        label(stage("manifest"))
+        dropped = (
+            exact_dropped.withColumn("stage", F.lit("exact"))
+            .unionByName(near_dropped.withColumn("stage", F.lit("near_dup")))
+            .unionByName(sem_dropped.withColumn("stage", F.lit("semantic")))
+        )
         manifest = (
-            batch_df.select(F.col("doc_id").alias("id"), "source")
-            .join(F.broadcast(exact_dropped.withColumn("__e", F.lit(True))), "id", "left")
-            .join(F.broadcast(near_dropped.withColumn("__n", F.lit(True))), "id", "left")
-            .join(F.broadcast(sem_dropped.withColumn("__s", F.lit(True))), "id", "left")
+            rows.select("id", "source")
+            .join(F.broadcast(dropped), "id", "left")
+            .groupBy("id", "source")
+            .agg(F.coalesce(F.min("stage"), F.lit("kept")).alias("stage"))
             .select(
                 F.col("id").alias("doc_id"),
                 "source",
-                F.when(F.col("__e"), F.lit("exact"))
-                .when(F.col("__n"), F.lit("near_dup"))
-                .when(F.col("__s"), F.lit("semantic"))
-                .otherwise(F.lit("kept"))
-                .alias("stage"),
-                (F.col("__e").isNull() & F.col("__n").isNull() & F.col("__s").isNull()).alias(
-                    "is_kept"
-                ),
+                "stage",
+                (F.col("stage") == "kept").alias("is_kept"),
             )
         )
-        label("manifest")
         overwrite_batch_atomic(manifest, man_d, batch_id)
-        label("idle")
 
 
 def incremental_ingest_stream(
@@ -410,19 +441,14 @@ def stream_incremental_ingest_pipeline(spark: SparkSession, sf_dir: str) -> Data
         emb.select(F.col("vec_id").alias("doc_id"), F.col("embedding").alias("vec")),
         "doc_id",
     )
-    # persist: ivf_assign's literal path collects the codebook once per
-    # micro-batch — cache the 16-row sample instead of re-running the
-    # sampling query each batch
-    centroids = sample_centroids(emb, 16).persist()
-    try:
-        return three_batch_manifest(
-            corpus,
-            "doc_id",
-            "ingest",
-            ("doc_id", "source", "stage", "is_kept"),
-            lambda batch_df, batch_id, root: ingest_process_batch(
-                batch_df, batch_id, centroids, root
-            ),
-        )
-    finally:
-        centroids.unpersist()
+    # the chain collects the codebook once, on its first batch
+    centroids = sample_centroids(emb, 16)
+    return three_batch_manifest(
+        corpus,
+        "doc_id",
+        "ingest",
+        ("doc_id", "source", "stage", "is_kept"),
+        lambda batch_df, batch_id, root: ingest_process_batch(
+            batch_df, batch_id, centroids, root
+        ),
+    )

@@ -44,6 +44,7 @@ would test nothing, same reasoning as `dedup_semantic_cluster`'s 0.30.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,13 +53,14 @@ from ..catalog import load, query
 from ..operators.similarity import (
     _dot,
     _sql_cos,
+    codebook_rows,
     ivf_assign,
     sample_centroids,
 )
 from .incremental_neardup import keep_manifest
 from .sinks import (
     STATE_FILES,
-    label_jobs,
+    job_label,
     overlapped_batch_writes,
     overwrite_batch_atomic,
     read_state,
@@ -67,13 +69,22 @@ from .sinks import (
 )
 
 
+# A chain's codebook is static for its life: its rows are collected
+# once per centroids frame, not once per micro-batch.
+_CODEBOOKS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def assign_clusters(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     """What the semantic gate reads of the (id, vec) rows reaching it:
     (cluster_id, id, vec, vnorm), a 1-probe assignment against the
     static codebook (map-side only), cut from its lineage
-    (`localCheckpoint`)."""
+    (`localCheckpoint`). The codebook's rows are collected on the first
+    call for a ``centroids`` frame and reused by later calls with it."""
+    rows = _CODEBOOKS.get(centroids)
+    if rows is None:
+        rows = _CODEBOOKS[centroids] = codebook_rows(centroids)
     return (
-        ivf_assign(vecs.select("id", "vec"), centroids, 1, "id", "vec")
+        ivf_assign(vecs.select("id", "vec"), centroids, 1, "id", "vec", rows=rows)
         .select("cluster_id", "id", "vec", "vnorm")
         .localCheckpoint(eager=False)
     )
@@ -85,15 +96,16 @@ def semantic_gate(
     """The semantic gate. ``asg`` is `assign_clusters` of the rows
     reaching the gate; ``landed`` is the prior cluster-sorted index
     (cluster_id, id, vec, vnorm), None before the first batch, read
-    fresh with pushdown on. Returns the dropped ids: rows with an
-    earlier row in the same cluster (a prior batch, or a smaller id in
-    this batch) whose cosine reaches ``threshold``.
+    fresh with pushdown on. Returns the ids of rows with an earlier row
+    in the same cluster (a prior batch, or a smaller id in this batch)
+    whose cosine reaches ``threshold``; an id may repeat.
 
-    The batch's probed clusters are collected (at most the codebook
-    size) and applied to ``landed`` as a literal filter, so the index
-    scan zone-map-prunes to those clusters' chunks. The id guard
-    ``id_a < id_b`` is right for landed rows too, since ids are unique
-    across the stream."""
+    The batch's probed clusters are collected (one cluster id per row,
+    deduplicated on the driver; the collect materializes ``asg``'s cut)
+    and applied to ``landed`` as a literal filter, so the index scan
+    zone-map-prunes to those clusters' chunks. The id guard ``id_a <
+    id_b`` is right for landed rows too, since ids are unique across the
+    stream."""
 
     def side(df: DataFrame, s: str) -> DataFrame:
         return df.select(
@@ -103,9 +115,7 @@ def semantic_gate(
             F.col("vnorm").alias(f"n_{s}"),
         )
 
-    probed = sorted(
-        r["cluster_id"] for r in asg.select("cluster_id").distinct().collect()
-    )
+    probed = sorted({r["cluster_id"] for r in asg.select("cluster_id").collect()})
     new_side, old_side = side(asg, "b"), side(asg, "a")
     if landed is not None:
         landed = landed.filter(F.col("cluster_id").isin(probed))
@@ -119,7 +129,6 @@ def semantic_gate(
             >= threshold
         )
         .select(F.col("id_b").alias("id"))
-        .distinct()
     )
 
 
@@ -147,8 +156,9 @@ def semdedup_process_batch(
     (cluster_id, id, vec, vnorm — ALL vectors) and the manifest
     (vec_id, keep)."""
     spark_ = batch_df.sparkSession
-    with overlapped_batch_writes(spark_) as bw:
-        label_jobs(spark_, f"semdedup b{batch_id}: semantic gate")
+    with overlapped_batch_writes(spark_) as bw, job_label(
+        spark_, f"semdedup b{batch_id}: semantic gate"
+    ):
         asg = assign_clusters(
             batch_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
             centroids,
@@ -238,19 +248,14 @@ def stream_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays (codebook pick, 1-probe assignment with the same
     tie-break, pairwise cosine), independent of batch chopping."""
     emb = load(spark, sf_dir, "embeddings")
-    # persist: ivf_assign's literal path collects the codebook once per
-    # micro-batch — cache the 16-row sample instead of re-running the
-    # sampling query each batch
-    centroids = sample_centroids(emb, 16).persist()
-    try:
-        return three_batch_manifest(
-            emb,
-            "vec_id",
-            "semdedup",
-            ("vec_id", "keep"),
-            lambda batch_df, batch_id, root: semdedup_process_batch(
-                batch_df, batch_id, centroids, *(os.path.join(root, d) for d in ("idx", "man"))
-            ),
-        )
-    finally:
-        centroids.unpersist()
+    # the chain collects the codebook once, on its first batch
+    centroids = sample_centroids(emb, 16)
+    return three_batch_manifest(
+        emb,
+        "vec_id",
+        "semdedup",
+        ("vec_id", "keep"),
+        lambda batch_df, batch_id, root: semdedup_process_batch(
+            batch_df, batch_id, centroids, *(os.path.join(root, d) for d in ("idx", "man"))
+        ),
+    )

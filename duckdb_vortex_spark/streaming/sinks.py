@@ -56,17 +56,24 @@ _SESSION_SETUP_WARNED = False
 _LABEL_WARNED = False
 
 
-def label_jobs(spark, description: str) -> None:
-    """Set the description Spark shows for the jobs the calling thread
-    starts next, so each chain stage's cost can be attributed in the UI
-    and the status store (lazy-checkpoint materializations inherit the
-    label of the action that triggers them). A session that cannot take
-    it (Spark Connect has no ``sparkContext``) does not stop the batch:
-    the first failure in a process is logged as a warning."""
+@contextlib.contextmanager
+def job_label(spark, description: str):
+    """Scope in which the jobs the calling thread starts carry
+    ``description`` in the UI and the status store, so each chain
+    stage's cost can be attributed (lazy-checkpoint materializations
+    inherit the label of the action that triggers them). It yields a
+    function that relabels the rest of the scope, and on exit restores
+    the description the thread had before, so no label outlives its
+    scope. A session that cannot take a label (Spark Connect has no
+    ``sparkContext``) does not stop the batch: the first failure in a
+    process is logged as a warning."""
     global _LABEL_WARNED
     try:
-        spark.sparkContext.setJobDescription(description)
+        sc = spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(description)
     except Exception:
+        sc = None
         if not _LABEL_WARNED:
             _LABEL_WARNED = True
             _log.warning(
@@ -75,6 +82,11 @@ def label_jobs(spark, description: str) -> None:
                 description,
                 exc_info=True,
             )
+    try:
+        yield sc.setJobDescription if sc is not None else (lambda d: None)
+    finally:
+        if sc is not None:
+            sc.setJobDescription(prev)
 
 
 def _write_worker(jobs: _queue.SimpleQueue) -> None:
@@ -174,8 +186,9 @@ class overlapped_batch_writes:
                             "session or local properties on the write thread",
                             exc_info=True,
                         )
-                if label is not None:
-                    label_jobs(spark, label)  # job descriptions are thread-local
+                if label is not None:  # job descriptions are thread-local
+                    with job_label(spark, label):
+                        return fn(*args, **kwargs)
             return fn(*args, **kwargs)
 
         self._futs.append(_submit_write(_run))

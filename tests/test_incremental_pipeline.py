@@ -23,6 +23,7 @@ from duckdb_vortex_spark.operators.similarity import sample_centroids
 from duckdb_vortex_spark.sources.vortex import register
 from duckdb_vortex_spark.streaming.incremental_pipeline import (
     INGEST_PIPELINE_ORACLE,
+    compact_chain_stores,
     incremental_ingest_stream,
     ingest_process_batch,
 )
@@ -78,9 +79,16 @@ def test_two_batch_chain_matches_oracle(spark, oracle, tmp_path):
     """The default tier's chain check: the whole corpus in two
     id-ordered `ingest_process_batch` batches; the union of the batch
     manifests equals the batch-mode chain DuckDB replays. Measured
-    25.8 s in a default-tier run on a 4-core machine (52 s when it is
-    the session's first chain). It stays out of `_SLOW_TESTS`: it is
-    the default tier's only check of the integrated chain."""
+    TIMING_TBD s in a default-tier run on a 4-core machine. It stays out
+    of `_SLOW_TESTS`: it is the default tier's only check of the
+    integrated chain.
+
+    It also pins each batch's Spark job budget, counted from the
+    status tracker under a job group per batch (store writes included:
+    the write pool carries the caller's group). Each job costs driver
+    planning and scheduling whatever the batch size, so a change that
+    adds jobs to a batch must raise these counts on purpose. The first
+    batch also collects the codebook."""
     register(spark)
     docs = load(spark, SF_DIR, "documents")
     emb = load(spark, SF_DIR, "embeddings")
@@ -93,10 +101,20 @@ def test_two_batch_chain_matches_oracle(spark, oracle, tmp_path):
         "__b", F.ntile(2).over(Window.orderBy("doc_id"))
     ).persist()
     root = str(tmp_path / "chain")
+    sc = spark.sparkContext
+    jobs = {}
     for b in (1, 2):
-        ingest_process_batch(
-            batched.filter(F.col("__b") == b).drop("__b"), b, centroids, root
-        )
+        group = f"two-batch-chain-{os.getpid()}-{b}"
+        sc.setJobGroup(group, group)
+        try:
+            ingest_process_batch(
+                batched.filter(F.col("__b") == b).drop("__b"), b, centroids, root
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[b] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[1] <= 24 and jobs[2] <= 24, jobs
     assert_matches_oracle(
         _manifest(spark, root).select("doc_id", "source", "stage", "is_kept"),
         oracle,
@@ -198,6 +216,98 @@ def test_gate_order_first_failing_stage_wins(spark, tmp_path):
     # entered the IVF index
     assert indexed("lsh") == {1, 6, 8, 9, 10, 11, 12, 13, 15}
     assert indexed("ivf") == {1, 6, 8, 11, 13, 15}
+
+
+def _tiny_chain_corpus(spark):
+    t0 = "the quick brown fox jumps over the lazy dog again and again"
+    t1 = "an entirely different document about spark shuffle partitioning"
+    rows = _mk(
+        spark,
+        [
+            (1, "s", t0, [1.0, 0.0]),
+            (2, "s", t1, [0.0, 1.0]),
+            (3, "s", t0, [1.0, 0.0]),
+            (4, "s", t1 + " again", [0.0, 1.0]),
+            (5, "s", "a third text about broadcast hash joins", [1.0, 1.0]),
+        ],
+    )
+    centroids = sample_centroids(
+        rows.select(F.col("doc_id").alias("vec_id"), F.col("vec").alias("embedding")), 2
+    )
+    return rows, centroids
+
+
+def test_store_writes_read_only_materialized_cuts(spark, tmp_path, monkeypatch):
+    """The write pool never races the main thread to materialize a
+    lineage cut: at every store-write submit of a two-batch chain run,
+    each `localCheckpoint` cut under the submitted frame is already
+    checkpointed (a main-thread job materialized it). Two threads
+    first-materializing one lazy cut can fail a batch when the cut's
+    partitions are swapped under a running job."""
+    from duckdb_vortex_spark.streaming import sinks
+
+    register(spark)
+    corpus, centroids = _tiny_chain_corpus(spark)
+    seen = []
+    submit = sinks.overlapped_batch_writes.submit
+
+    def checked_submit(self, fn, df, *args, label=None, **kwargs):
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        cuts = [
+            leaf.rdd()
+            for leaf in (leaves.apply(i) for i in range(leaves.size()))
+            if leaf.getClass().getSimpleName() == "LogicalRDD"
+            and leaf.rdd().checkpointData().isDefined()
+        ]
+        seen.append((label, [c.isCheckpointed() for c in cuts]))
+        return submit(self, fn, df, *args, label=label, **kwargs)
+
+    monkeypatch.setattr(sinks.overlapped_batch_writes, "submit", checked_submit)
+    root = str(tmp_path / "w")
+    ingest_process_batch(corpus.filter(F.col("doc_id") <= 2), 0, centroids, root)
+    ingest_process_batch(corpus.filter(F.col("doc_id") > 2), 1, centroids, root)
+    assert len(seen) == 6, seen  # raw, lsh and ivf writes per batch
+    assert all(cuts and all(cuts) for _, cuts in seen), seen
+
+
+def test_chain_job_labels_are_scoped(spark, tmp_path):
+    """A chain batch labels its jobs per stage and restores the
+    caller's job description on return, so no later job carries a
+    batch's label; `compact_chain_stores` labels its jobs per store."""
+    register(spark)
+    corpus, centroids = _tiny_chain_corpus(spark)
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    root = str(tmp_path / "l")
+
+    def descriptions(group):
+        out = []
+        for j in sc.statusTracker().getJobIdsForGroup(group):
+            d = store.job(j).description()
+            out.append(d.get() if d.isDefined() else None)
+        return out
+
+    tag = f"labels-{os.getpid()}"
+    try:
+        sc.setJobGroup(f"{tag}-b0", "caller")
+        ingest_process_batch(corpus.filter(F.col("doc_id") <= 2), 0, centroids, root)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        sc.setJobGroup(f"{tag}-compact", "caller")
+        compact_chain_stores(spark, root, before=1)
+        sc.setJobGroup(f"{tag}-b1", "caller")
+        ingest_process_batch(corpus.filter(F.col("doc_id") > 2), 1, centroids, root)
+        sc.setJobGroup(f"{tag}-after", "caller")
+        assert _manifest(spark, root).count() == 5
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    b0 = descriptions(f"{tag}-b0")
+    assert b0 and all(d.startswith("chain b0: ") for d in b0), b0
+    compact = descriptions(f"{tag}-compact")
+    assert compact and {d.split()[0] for d in compact} == {"compact"}, compact
+    assert {d.split()[1] for d in compact} == {"raw", "lsh", "ivf"}, compact
+    after = descriptions(f"{tag}-after")
+    assert after and set(after) == {"caller"}, after
 
 
 def test_retried_batch_is_idempotent(spark, tmp_path):
