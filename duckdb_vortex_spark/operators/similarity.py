@@ -443,16 +443,24 @@ def _centroid_csim_sqls(
     """One SQL cosine expression PER centroid in ``rows`` order, each
     computed per-row from CENTROID LITERALS — no join, no shuffle. The
     fold order and casts mirror _dot/_norm exactly (A/B'd bit-identical
-    to the crossJoin+groupBy argmin on the driver corpus), and the
-    literal cnorm constant-folds to the same double the row-wise form
-    computes."""
+    to the crossJoin+groupBy argmin on the driver corpus). Each
+    centroid's norm is one literal, folded here in _norm's order (a
+    sequential sum of squares from 0.0, then a correctly rounded sqrt),
+    so it is the double the row-wise form computes, and a plan parses
+    and analyses one literal array per centroid, not two."""
     return [
         f"(aggregate(zip_with({vec_col}, {_arr_sql(v)}, "
         f"(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, x) -> acc + x) "
-        f"/ ({vnorm_col} * sqrt(aggregate(transform({_arr_sql(v)}, x -> x * x), "
-        f"0.0D, (acc, x) -> acc + x))))"
+        f"/ ({vnorm_col} * {_literal_norm(v)!r}D))"
         for _, v in rows
     ]
+
+
+def _literal_norm(vals: list[float]) -> float:
+    acc = 0.0
+    for x in vals:
+        acc += x * x
+    return _math.sqrt(acc)
 
 
 def _centroid_literal_argmin(
