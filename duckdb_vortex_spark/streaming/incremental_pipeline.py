@@ -215,12 +215,16 @@ def ingest_process_batch(
     (doc_id, source, text, vec). Writes batch-id-scoped artifacts under
     ``root``: raw/ (shared corpus, fingerprint column included — the
     exact store, fused r16), lsh/ (near-dup index), ivf/ (semantic
-    index), man/ (the manifest)."""
+    index), man/ (the manifest). ``centroids`` is the static codebook:
+    its rows are collected by the first batch that passes the frame and
+    reused by the later ones."""
     spark_ = batch_df.sparkSession
     raw_d, lsh_d, ivf_d, man_d = (
         os.path.join(root, s) for s in ("raw", "lsh", "ivf", "man")
     )
-    stage = f"chain b{batch_id}: {{}}".format
+
+    def stage(name: str) -> str:
+        return f"chain b{batch_id}: {name}"
 
     # Every store write is submitted to the write pool as soon as a
     # main-thread job has materialized the lineage cut it reads (so the

@@ -134,7 +134,12 @@ class overlapped_batch_writes:
     dirs only, so write ORDER within a batch never mattered for
     correctness, only for latency. If the gate body itself raises,
     in-flight writes are still joined first (never left racing a
-    retry), then the gate error propagates."""
+    retry), then the gate error propagates.
+
+    Submit a frame only once a job on the calling thread has
+    materialized every lazy lineage cut (`localCheckpoint(eager=False)`)
+    it reads: two threads first-materializing one cut race to swap its
+    partitions under each other's jobs."""
 
     def __init__(self, spark=None):
         self._spark = spark
