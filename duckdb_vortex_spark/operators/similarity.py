@@ -19,7 +19,7 @@ Scale design:
 from __future__ import annotations
 
 import math as _math
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
@@ -372,15 +372,15 @@ def sample_centroids(
     )
 
 
-# Plan-size guard for lloyd_refine's literal-embedded assignment
-# expression (VERDICT r14 wrong #2): the expression holds k*(dim+1)
-# literal doubles (k centroid arrays + k folded norms). The binding
-# limit is Catalyst plan/codegen size, not data: 65_536 literals keeps
-# the expression tree in the regime this repo has measured (k<=64,
-# dim<=128 is ~4k literals; a k=4096 x dim=768 production coarse
-# quantizer would be ~3.1M — refuse and route to the join-based
-# assignment instead). Same trade as pq_encode's codebook literals,
-# which documents it; this one enforces it.
+# Plan-size guard for the literal IVF assignment kernel (VERDICT r14
+# wrong #2): the expression holds k*(dim+1) literal doubles (k centroid
+# arrays + k folded norms). The binding limit is Catalyst plan/codegen
+# size, not data: 65_536 literals keeps the expression tree in the
+# regime this repo has measured (k<=64, dim<=128 is ~4k literals; a
+# k=4096 x dim=768 production coarse quantizer would be ~3.1M). Past
+# it every assigner computes through the join fallback instead. Same
+# trade as pq_encode's codebook literals, which documents it; this one
+# enforces it.
 LLOYD_LITERAL_BUDGET = 65_536
 
 # Guard bound for the r15 probe-side broadcasts (ADVICE r15, medium):
@@ -424,11 +424,21 @@ def _probe_bounded_count(df: DataFrame, bound: int) -> int:
     return n
 
 
-def _probe_broadcast_ok(queries_df: DataFrame, n_probe: int, row_bytes: int) -> bool:
-    """True when the probe side's estimated broadcast footprint
-    (|Q| · n_probe rows × row_bytes) fits PROBE_BROADCAST_MAX_BYTES."""
+def _probe_side(
+    qry: DataFrame,
+    queries_df: DataFrame,
+    n_probe: int,
+    row_bytes: int,
+    fallback: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The query side of an ANN probe join: ``qry`` broadcast when its
+    estimated footprint (|Q| · n_probe rows × row_bytes) fits
+    PROBE_BROADCAST_MAX_BYTES, else ``fallback(qry)`` — the guard
+    changes the join strategy, never the rows."""
     max_rows = max(1, PROBE_BROADCAST_MAX_BYTES // max(1, n_probe * row_bytes))
-    return _probe_bounded_count(queries_df, max_rows) <= max_rows
+    if _probe_bounded_count(queries_df, max_rows) <= max_rows:
+        return F.broadcast(qry)
+    return fallback(qry)
 
 
 def _arr_sql(vals: list[float]) -> str:
@@ -442,12 +452,12 @@ def _centroid_csim_sqls(
 ) -> list[str]:
     """One SQL cosine expression PER centroid in ``rows`` order, each
     computed per-row from CENTROID LITERALS — no join, no shuffle. The
-    fold order and casts mirror _dot/_norm exactly (A/B'd bit-identical
-    to the crossJoin+groupBy argmin on the driver corpus). Each
-    centroid's norm is one literal, folded here in _norm's order (a
-    sequential sum of squares from 0.0, then a correctly rounded sqrt),
-    so it is the double the row-wise form computes, and a plan parses
-    and analyses one literal array per centroid, not two."""
+    fold order and casts mirror _dot/_norm exactly (pinned bit-identical
+    to the join fallback on the driver corpus). Each centroid's norm is
+    one literal, folded here in _norm's order (a sequential sum of
+    squares from 0.0, then a correctly rounded sqrt), so it is the
+    double the row-wise form computes, and a plan parses and analyses
+    one literal array per centroid, not two."""
     return [
         f"(aggregate(zip_with({vec_col}, {_arr_sql(v)}, "
         f"(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, x) -> acc + x) "
@@ -463,23 +473,92 @@ def _literal_norm(vals: list[float]) -> float:
     return _math.sqrt(acc)
 
 
-def _centroid_literal_argmin(
-    rows: list[tuple[int, list[float]]], vec_col: str, vnorm_col: str
-) -> str:
-    """SQL expression: 0-based index (in ``rows`` order) of the
-    nearest centroid by cosine — per-row from centroid literals via
-    :func:`_centroid_csim_sqls`.
-
-    Argmin key is -s, NOT 1 - s (ADVICE r14): negation is exact and
-    order-reversing for EVERY double, while 1 - s is only exact on
-    [0.5, 2] (Sterbenz) — distinct near-zero/negative cosines could
-    round 1-s equal and silently hand the tie-break to cluster index,
-    breaking the "csim desc, cluster_id asc" rule."""
-    csims = _centroid_csim_sqls(rows, vec_col, vnorm_col)
+def _literal_ok(rows: list[tuple[int, list[float]]]) -> bool:
+    """Whether centroid ``rows`` compile into a plan as literals: at
+    least one, one dimension, k*(dim+1) literal doubles within
+    :data:`LLOYD_LITERAL_BUDGET`, and every value finite and not null
+    (ADVICE r15: repr'd 'nan'/'inf' do not parse as Spark SQL doubles,
+    and a null has no double literal). Rows that fail it assign
+    through the join fallback, which computes through."""
     return (
-        f"array_min(zip_with(array({','.join(csims)}), "
-        f"sequence(0, {len(rows) - 1}), "
-        f"(s, i) -> struct(-s AS d, i AS i))).i"
+        bool(rows)
+        and len({len(v) for _, v in rows}) == 1
+        and len(rows) * (len(rows[0][1]) + 1) <= LLOYD_LITERAL_BUDGET
+        and all(x is not None and _math.isfinite(x) for _, v in rows for x in v)
+    )
+
+
+def _literal_structs(
+    rows: list[tuple[int, list[float]]],
+    vec_col: str,
+    vnorm_col: str,
+    ids: list[str] | None = None,
+) -> str:
+    """SQL array of one struct(d, i) per centroid in ``rows``: i is
+    ``ids[j]`` (default the 0-based index j) and d = coalesce(-csim,
+    +Inf), the kernel's sort key. Negation is the exact order-reversing
+    key (ADVICE r14: 1 - s is only exact on [0.5, 2], Sterbenz), and the
+    coalesce sorts a null csim last, as the join fallback's window does.
+    csims null per row all-or-nothing (a null, short or null-element
+    vector nulls every centroid's csim), and the all-null tie falls to
+    i ascending."""
+    ids = ids or [str(j) for j in range(len(rows))]
+    return "array(" + ",".join(
+        f"struct(coalesce(-({s}), CAST('Infinity' AS DOUBLE)) AS d, {i} AS i)"
+        for i, s in zip(ids, _centroid_csim_sqls(rows, vec_col, vnorm_col))
+    ) + ")"
+
+
+def _literal_topn(
+    rows: list[tuple[int, list[float]]],
+    vec_col: str,
+    vnorm_col: str,
+    n: int,
+    pick: str = "{}",
+) -> str:
+    """The literal assignment kernel: a SQL expression over ``vec_col``
+    for each row's ``n`` nearest centroids of ``rows`` by cosine (csim
+    desc, index asc), each 0-based index mapped through ``pick``. n=1
+    is a scalar argmin, array_min over struct(-csim, index); n>1 an
+    array, nearest first, cut from the sorted :func:`_literal_structs`."""
+    if n == 1:
+        csims = _centroid_csim_sqls(rows, vec_col, vnorm_col)
+        return pick.format(
+            f"(array_min(zip_with(array({','.join(csims)}), "
+            f"sequence(0, {len(rows) - 1}), "
+            f"(s, i) -> struct(-s AS d, i AS i))).i)"
+        )
+    return (
+        f"transform(slice(array_sort({_literal_structs(rows, vec_col, vnorm_col)}), "
+        f"1, {n}), pp -> {pick.format('pp.i')})"
+    )
+
+
+def _join_topn(
+    v: DataFrame,
+    c: DataFrame,
+    n: int,
+    id_col: str,
+    vec_col: str,
+    on: str | None = None,
+) -> DataFrame:
+    """The join fallback of the literal kernel: ``v`` (id, vec, vnorm)
+    scored against the broadcast centroids ``c`` (cluster_id, centroid)
+    — a cross join, or an equi-join on ``on`` — keeping each id's ``n``
+    best by a ``row_number`` window ordered by the kernel's own key,
+    coalesce(-csim, +Inf) then cluster_id. Returns (id, vec, vnorm,
+    cluster_id). Serves every n, so a vector's 1-probe cell is always
+    its first multi-probe cell, NaN csims included."""
+    c = c.withColumn("__cn", _norm(F.col("centroid")))
+    scored = v.join(F.broadcast(c), on) if on else v.crossJoin(F.broadcast(c))
+    d = -(_dot(F.col(vec_col), F.col("centroid")) / (F.col("vnorm") * F.col("__cn")))
+    w = W.partitionBy(id_col).orderBy(
+        F.coalesce(d, F.lit(float("inf"))), F.col("cluster_id")
+    )
+    return (
+        scored.withColumn("__r", F.row_number().over(w))
+        .filter(F.col("__r") <= n)
+        .select(id_col, vec_col, "vnorm", "cluster_id")
     )
 
 
@@ -497,17 +576,14 @@ def lloyd_refine(
 
     Hash-sampled centroids are the recall floor of the whole IVF
     family; one refine pass moves them toward the data's actual
-    density at the cost of one aggregate pass per iteration — and that
-    pass is genuinely map-side (r14 review: the first cut assigned via
-    ``ivf_assign``, whose argmin groupBy exchanges one (id, embedding,
-    norm) row PER CORPUS VECTOR — a full corpus shuffle per iteration,
-    exactly the cost the docstring denied). The assignment is instead
-    computed per-row from CENTROID LITERALS (the pq_encode pattern —
-    the k centroids are already collected here; each row evaluates k
-    literal dots + a struct-min, no join, no per-id aggregation),
-    pinned bit-identical to ``ivf_assign``'s rule (csim desc,
-    cluster_id asc) in tests. The only exchange per iteration is the
-    groupBy(cluster) of k×(dim+1) algebraic partials.
+    density at the cost of one aggregate pass per iteration. The
+    assignment is :func:`ivf_assign` on the rows collected here: within
+    :data:`LLOYD_LITERAL_BUDGET` it is computed per-row from centroid
+    literals (no join, no per-id aggregation), so the only exchange per
+    iteration is the groupBy(cluster) of k×(dim+1) algebraic partials.
+    Past the budget it computes through the join fallback, one corpus
+    shuffle per iteration, instead of failing (the budget bounds plan
+    size, not data — see SCALE.md).
 
     Determinism: element sums run in quantized BIGINT arithmetic
     (floor(x·10^6 + 0.5), exact long addition — order-independent,
@@ -519,83 +595,52 @@ def lloyd_refine(
     their exact cast, keeping iteration N+1 consistent with what a
     written/reloaded index would hold).
 
-    Bounds (r15): the literal-embedded assignment is refused loudly
-    when k*(dim+1) exceeds :data:`LLOYD_LITERAL_BUDGET` (plan/codegen
-    size is the binding limit, not data — see SCALE.md). Rows whose
-    embedding is null, dim-mismatched, or carries null elements assign
-    to no cluster and are skipped (they previously crashed the build
-    with a null group, an array-index overflow, or — for null
-    elements — silently biased cluster 0's mean).
+    Rows whose embedding is null, dim-mismatched, or carries null
+    elements are skipped (they previously crashed the build with a
+    null group, an array-index overflow, or — for null elements —
+    silently biased cluster 0's mean). ``id_col`` values are expected
+    unique (see :func:`ivf_assign`).
     """
     Q = 1_000_000
     vec_t = dict(centroids.dtypes)["centroid"]
 
     for _ in range(iters):
-        rows = sorted(
-            ((r["cluster_id"], [float(x) for x in r["centroid"]])
-             for r in centroids.collect()),
-        )
+        rows = codebook_rows(centroids)
         if not rows:
             raise ValueError("lloyd_refine needs a non-empty centroid table")
         dim = len(rows[0][1])
-        if len(rows) * (dim + 1) > LLOYD_LITERAL_BUDGET:
-            # VERDICT r14 wrong #2: the assignment expression embeds
-            # ALL k centroid arrays as plan literals — k aggregate-HOFs
-            # per row. Fine at this repo's k <= 64; at a production
-            # coarse quantizer (k in the thousands, dim 768) the single
-            # expression blows past codegen/plan-size limits long
-            # before the data does, failing obscurely deep in Catalyst.
-            # Refuse loudly at a named bound instead.
-            raise ValueError(
-                f"lloyd_refine: k*(dim+1) = {len(rows)}*({dim}+1) = "
-                f"{len(rows) * (dim + 1)} literal doubles in one "
-                f"assignment expression exceeds LLOYD_LITERAL_BUDGET="
-                f"{LLOYD_LITERAL_BUDGET} (plan/codegen size, not data "
-                "size, is the binding limit — see SCALE.md). Use fewer "
-                "clusters per refine call, or assign via ivf_assign "
-                "(join-based; costs one corpus shuffle per iteration) "
-                "for coarse quantizers this large."
-            )
-        idx_to_cid = [cid for cid, _ in rows]
-        assign = _centroid_literal_argmin(rows, vec_col, "__vn")
-        asg = (
-            # Invalid embeddings crash or bias the build (ADVICE r14 +
-            # r15 self-review): a null vector nulls the assignment
-            # (idx_to_cid[None] TypeError); a SHORT vector nulls every
-            # csim and the sums loop's vec[i] throws
-            # INVALID_ARRAY_INDEX; a vector with a null ELEMENT also
-            # nulls every csim, and the struct-argmin then FORCE-PICKS
-            # cluster index 0 (a struct whose d field is NULL compares
-            # SMALLEST, so array_min returns it — the __ci-null filter
-            # alone never fires), inflating cluster 0's count while
-            # the element sums skip nulls: a silently biased mean.
-            # Participation therefore requires exactly the centroids'
-            # dim AND no null elements; the residual __ci filter is
-            # belt-and-suspenders only.
-            df.filter(
-                F.col(vec_col).isNotNull()
-                & (F.size(F.col(vec_col)) == dim)
-                & ~F.exists(F.col(vec_col), lambda x: x.isNull())
-            )
-            .select(F.col(vec_col), _norm(F.col(vec_col)).alias("__vn"))
-            .withColumn("__ci", F.expr(assign))
-            .filter(F.col("__ci").isNotNull())
+        # Invalid embeddings crash or bias the build (ADVICE r14 + r15
+        # self-review): a short vector makes the sums loop's vec[i]
+        # throw INVALID_ARRAY_INDEX, and a null or null-element vector
+        # nulls every csim, which ties it to the lowest cluster_id —
+        # inflating that cluster's count while the element sums skip
+        # nulls: a silently biased mean. Participation therefore
+        # requires exactly the centroids' dim AND no null elements.
+        valid = df.filter(
+            F.col(vec_col).isNotNull()
+            & (F.size(F.col(vec_col)) == dim)
+            & ~F.exists(F.col(vec_col), lambda x: x.isNull())
         )
-        sums = asg.groupBy("__ci").agg(
-            F.count("*").alias("__n"),
-            *[
-                F.sum(
-                    F.floor(F.col(vec_col)[i].cast("double") * Q + F.lit(0.5)).cast(
-                        "bigint"
-                    )
-                ).alias(f"__s{i}")
-                for i in range(dim)
-            ],
-        ).collect()
+        sums = (
+            ivf_assign(valid, centroids, 1, id_col, vec_col, rows=rows)
+            .groupBy("cluster_id")
+            .agg(
+                F.count("*").alias("__n"),
+                *[
+                    F.sum(
+                        F.floor(F.col(vec_col)[i].cast("double") * Q + F.lit(0.5)).cast(
+                            "bigint"
+                        )
+                    ).alias(f"__s{i}")
+                    for i in range(dim)
+                ],
+            )
+            .collect()
+        )
         new = dict(rows)  # empty clusters keep their old centroid
         for r in sums:
             n = r["__n"]
-            new[idx_to_cid[r["__ci"]]] = [r[f"__s{i}"] / (Q * n) for i in range(dim)]
+            new[r["cluster_id"]] = [r[f"__s{i}"] / (Q * n) for i in range(dim)]
         centroids = df.sparkSession.createDataFrame(
             [(cid, new[cid]) for cid in sorted(new)],
             f"cluster_id int, centroid {vec_t}",
@@ -605,9 +650,11 @@ def lloyd_refine(
 
 def codebook_rows(centroids: DataFrame) -> list[tuple[int, list[float]]]:
     """The (cluster_id, centroid) rows of a codebook, sorted by
-    cluster_id: what `ivf_assign`'s literal path compiles into the plan."""
+    cluster_id: what `ivf_assign`'s literal path compiles into the plan.
+    A null element stays None, so such a codebook fails
+    :func:`_literal_ok` and assigns through the join fallback."""
     return sorted(
-        (r["cluster_id"], [float(x) for x in r["centroid"]])
+        (r["cluster_id"], [None if x is None else float(x) for x in r["centroid"]])
         for r in centroids.select("cluster_id", "centroid").collect()
     )
 
@@ -621,118 +668,37 @@ def ivf_assign(
     rows: list | None = None,
 ) -> DataFrame:
     """Assign each vector to its ``n_probe`` nearest centroids by
-    cosine. Centroids are broadcast (|C| is small by construction), so
-    assignment is a map-side-only pass — no shuffle of the vectors.
-    ``rows`` is `codebook_rows` of ``centroids`` when the caller already
-    holds them (a static codebook collected once); otherwise they are
-    collected here, one Spark job per call.
+    cosine (csim desc, cluster_id asc). Centroids are broadcast (|C| is
+    small by construction), so assignment is a map-side-only pass — no
+    shuffle of the vectors. ``rows`` is `codebook_rows` of
+    ``centroids`` when the caller already holds them (a static codebook
+    collected once); otherwise they are collected here, one Spark job
+    per call.
+
+    Within :func:`_literal_ok` the cells are computed per row from
+    centroid literals (:func:`_literal_topn`): n_probe=1 is an argmin
+    projection, n_probe>1 a sorted slice exploded to one row per cell —
+    no crossJoin, no exchange. Otherwise (past the plan-size budget, or
+    a non-finite or null centroid value) the join fallback
+    (:func:`_join_topn`) computes the same rows.
 
     Precondition (ADVICE r15): ``id_col`` values are expected UNIQUE.
-    The literal paths emit probe rows per INPUT row, while the
-    over-budget n_probe=1 fallback's groupBy(id) argmin collapses
-    duplicate ids to a single row — with duplicate ids the two forms
-    return different row counts. Every in-repo caller passes unique
-    ids (corpus vec_ids / doc_ids); dedup upstream if yours are not."""
-    if n_probe >= 1:
-        # r15/r16 optimization (guide §2.4, remove shuffles outright):
-        # the probe assignment is computed per-row from CENTROID
-        # LITERALS (the lloyd_refine machinery, pinned bit-identical
-        # to the join forms in tests/test_similarity_ivf) — no |C|-way
-        # crossJoin row explosion, no exchange. n_probe=1 (r15) is a
-        # pure map-side argmin projection replacing a groupBy
-        # min(struct) that exchanged one (id, vec, norm, struct) row
-        # per corpus vector at every index build. n_probe>1 (r16,
-        # VERDICT r15 next #4) keeps the top-n_probe cells per row via
-        # slice(array_sort(struct(d, i))) — the exact machinery the
-        # two-level assigner pinned in r15 — and explodes them: a
-        # map-side Generate instead of the crossJoin + per-id
-        # row_number window (one Exchange of |rows|·|C| scored pairs)
-        # it replaces. The join forms below remain the fallback for
-        # centroid tables past the literal plan-size budget (same
-        # bound as lloyd_refine) or with non-finite values (ADVICE
-        # r15: repr'd 'nan'/'inf' literals do not parse as Spark SQL
-        # doubles, so the literal route would raise where the join
-        # form computes through).
-        crows = codebook_rows(centroids) if rows is None else rows
-        dims = {len(v) for _, v in crows}
-        if (
-            crows
-            and len(dims) == 1
-            and len(crows) * (len(crows[0][1]) + 1) <= LLOYD_LITERAL_BUDGET
-            and all(_math.isfinite(x) for _, v in crows for x in v)
-        ):
-            cid_t = dict(centroids.dtypes)["cluster_id"]
-            idx_arr = "array(" + ",".join(
-                f"CAST({cid} AS {cid_t})" for cid, _ in crows
-            ) + ")"
-            base = df.select(
-                F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("vnorm")
-            )
-            if n_probe == 1:
-                assign = _centroid_literal_argmin(crows, vec_col, "vnorm")
-                return base.withColumn(
-                    "cluster_id", F.expr(f"element_at({idx_arr}, ({assign}) + 1)")
-                )
-            # top-n_probe cells, map-side. Sort key d = coalesce(-s,
-            # +Inf): negation is the exact order-reversing argmin key
-            # (see _centroid_literal_argmin), and the coalesce maps a
-            # NULL csim to +Infinity = the window form's `csim DESC`
-            # NULLS LAST placement (a bare struct sort would put a
-            # null-d struct FIRST). In practice csims null per-row
-            # all-or-nothing (null/short/null-element vectors null
-            # EVERY centroid's csim; a per-centroid null would need a
-            # zero-norm centroid, whose division THROWS identically in
-            # both forms under Spark 4's default ANSI mode), and the
-            # all-null tie falls through to i asc = the window's
-            # cluster_id asc secondary key either way.
-            csims = _centroid_csim_sqls(crows, vec_col, "vnorm")
-            structs = ",".join(
-                f"struct(coalesce(-({s}), CAST('Infinity' AS DOUBLE)) AS d, "
-                f"{i} AS i)"
-                for i, s in enumerate(csims)
-            )
-            probed = (
-                f"transform(slice(array_sort(array({structs})), 1, {n_probe}), "
-                f"pp -> element_at({idx_arr}, pp.i + 1))"
-            )
-            return base.withColumn("cluster_id", F.explode(F.expr(probed)))
-    c = centroids.select(
-        F.col("cluster_id"), F.col("centroid"), _norm(F.col("centroid")).alias("cnorm")
+    The literal kernel emits cells per INPUT row, while the fallback's
+    ``row_number`` window per id keeps ``n_probe`` rows per id — with
+    duplicate ids the two forms return different row counts. Every
+    in-repo caller passes unique ids (corpus vec_ids / doc_ids); dedup
+    upstream if yours are not."""
+    crows = codebook_rows(centroids) if rows is None else rows
+    v = df.select(F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("vnorm"))
+    if n_probe < 1 or not _literal_ok(crows):
+        c = centroids.select("cluster_id", "centroid")
+        return _join_topn(v, c, n_probe, id_col, vec_col)
+    cid_t = dict(centroids.dtypes)["cluster_id"]
+    idx_arr = "array(" + ",".join(f"CAST({cid} AS {cid_t})" for cid, _ in crows) + ")"
+    cells = F.expr(
+        _literal_topn(crows, vec_col, "vnorm", n_probe, f"element_at({idx_arr}, {{}} + 1)")
     )
-    v = df.select(
-        F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("vnorm")
-    )
-    scored = v.join(F.broadcast(c), how="cross").select(
-        id_col,
-        vec_col,
-        "vnorm",
-        "cluster_id",
-        (
-            _dot(F.col(vec_col), F.col("centroid")) / (F.col("vnorm") * F.col("cnorm"))
-        ).alias("csim"),
-    )
-    if n_probe == 1:
-        # argmin via groupBy min-of-struct: partial aggregation happens
-        # map-side (each task reduces its |C| candidate rows per vector
-        # before any shuffle), unlike a window which must sort. Key is
-        # -csim, not 1 - csim (r15, generalizing ADVICE r14's
-        # lloyd_refine finding): negation is exact and order-reversing
-        # for every double, while 1 - csim is only exact on [0.5, 2]
-        # (Sterbenz) — distinct near-zero/negative cosines could round
-        # equal and silently switch the tie-break to cluster index,
-        # diverging from the window form's csim desc, cluster_id asc.
-        best = scored.groupBy(id_col).agg(
-            F.min(F.struct((-F.col("csim")).alias("d"), F.col("cluster_id"))).alias("b"),
-            F.first(vec_col).alias(vec_col),
-            F.first("vnorm").alias("vnorm"),
-        )
-        return best.select(id_col, vec_col, "vnorm", F.col("b.cluster_id").alias("cluster_id"))
-    w = W.partitionBy(id_col).orderBy(F.col("csim").desc(), F.col("cluster_id"))
-    return (
-        scored.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= n_probe)
-        .drop("__r", "csim")
-    )
+    return v.withColumn("cluster_id", cells if n_probe == 1 else F.explode(cells))
 
 
 class IvfIndex(NamedTuple):
@@ -814,7 +780,8 @@ def ivf_probe(
     """Probe a built IVF index: queries probe their ``n_probe``
     nearest clusters → exact cosine re-rank within probed clusters."""
     centroids, cand = index.centroids, index.cand
-    qry = ivf_assign(queries_df, centroids, n_probe, id_col, vec_col).select(
+    rows = codebook_rows(centroids)
+    qry = ivf_assign(queries_df, centroids, n_probe, id_col, vec_col, rows=rows).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
         F.col("vnorm").alias("qn"), "cluster_id",
     )
@@ -831,12 +798,9 @@ def ivf_probe(
     # GUARDED — a query batch whose estimated footprint exceeds
     # PROBE_BROADCAST_MAX_BYTES falls back to the unhinted join
     # (graceful sort-merge) instead of failing on the broadcast cap.
-    first_q = queries_df.select(F.size(F.col(vec_col)).alias("d")).first()
-    row_bytes = 8 * int(first_q["d"] or 1) + 48 if first_q else 56
-    if _probe_broadcast_ok(queries_df, n_probe, row_bytes):
-        probe_side = F.broadcast(qry)
-    else:
-        probe_side = qry
+    # A query row holds the codebook's dim doubles.
+    row_bytes = 8 * len(rows[0][1]) + 48 if rows else 56
+    probe_side = _probe_side(qry, queries_df, n_probe, row_bytes, lambda q: q)
     scored = (
         probe_side.join(cand, "cluster_id")
         .filter(F.col("query_id") != F.col("cand_id"))
@@ -1093,6 +1057,25 @@ def similarity_label_centroid_matrix(spark: SparkSession, sf_dir: str) -> DataFr
 # --- Arrow-vectorized exact top-k -----------------------------------------
 
 
+def _local_topk(q_ids, sims, c_ids, k: int):
+    """The numpy local top-k of one (candidates × queries) similarity
+    block: each query's k+1 best candidates (+1 absorbs a self-match),
+    unordered, as a pandas frame (query_id, cand_id, cos_sim) for the
+    caller's global window to rank."""
+    import numpy as np
+    import pandas as pd
+
+    kk = min(k + 1, len(c_ids))
+    top = np.argpartition(-sims, kk - 1, axis=0)[:kk]
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(q_ids, kk),
+            "cand_id": c_ids[top].T.ravel(),
+            "cos_sim": np.take_along_axis(sims, top, axis=0).T.ravel(),
+        }
+    )
+
+
 def topk_vectorized(
     queries_df: DataFrame,
     candidates_df: DataFrame,
@@ -1120,7 +1103,6 @@ def topk_vectorized(
     while this path does one dgemm per Arrow batch. Candidates stream
     — nothing but the current query block is ever resident."""
     import numpy as np
-    import pandas as pd
 
     spark = queries_df.sparkSession
     cand = candidates_df.select(F.col(id_col), F.col(vec_col))
@@ -1138,15 +1120,7 @@ def topk_vectorized(
                 c_ids = pdf[id_col].to_numpy(dtype=np.int64)
                 c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
                 c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-                sims = c_mat @ mat.T  # (batch, n_queries)
-                kk = min(k + 1, len(c_ids))  # +1 absorbs self-matches
-                top = np.argpartition(-sims, kk - 1, axis=0)[:kk]
-                out = {
-                    "query_id": np.repeat(ids, kk),
-                    "cand_id": c_ids[top].T.ravel(),
-                    "cos_sim": np.take_along_axis(sims, top, axis=0).T.ravel(),
-                }
-                yield pd.DataFrame(out)
+                yield _local_topk(ids, c_mat @ mat.T, c_ids, k)
 
         return cand.mapInPandas(local_topk, schema)
 
@@ -1261,15 +1235,8 @@ def ivf_topk_vectorized(
         cm = np.array(list(c["cv"]), dtype=np.float64)
         qm /= np.linalg.norm(qm, axis=1, keepdims=True)
         cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-        sims = cm @ qm.T  # (|C_c|, |Q_c|)
-        kk = min(k + 1, len(c))  # +1 absorbs self-matches
-        top = np.argpartition(-sims, kk - 1, axis=0)[:kk]
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(q["query_id"].to_numpy(), kk),
-                "cand_id": c["cand_id"].to_numpy()[top].T.ravel(),
-                "cos_sim": np.take_along_axis(sims, top, axis=0).T.ravel(),
-            }
+        return _local_topk(
+            q["query_id"].to_numpy(), cm @ qm.T, c["cand_id"].to_numpy(), k
         )
 
     local = (
@@ -1299,7 +1266,15 @@ def ivf_assign_vectorized(
     """Arrow/numpy twin of ivf_assign: centroids collect to a numpy
     matrix (broadcast via closure capture — they are tiny) and each
     Arrow batch assigns with one matmul + argsort. Ordering matches
-    the HOF form: cosine descending, cluster_id ascending on ties."""
+    the HOF form: cosine descending, cluster_id ascending on ties.
+
+    A second kernel beside :func:`ivf_assign`, sharing no logic with
+    it; the caller chooses. It stays because it is faster behind
+    :func:`ivf_topk_vectorized`: with ``ivf_assign`` in its place
+    (identical output rows; sf0.1, 4 cores, 7 interleaved pairs, wall
+    time under a load of about 2) ``similarity_ivf_ann`` went from
+    1.16 to 2.03 s and ``similarity_knn_join_cogrouped`` from 1.05 to
+    1.68 s (medians)."""
     import numpy as np
     import pandas as pd
 
@@ -1842,10 +1817,7 @@ def ivfpq_probe(
     # r5 persist barrier restored (the barrier the broadcast replaced),
     # degrading gracefully instead of failing on the 8 GiB cap.
     dtab_bytes = m * len(books[0]) * 8 + 48
-    if _probe_broadcast_ok(queries_df, n_probe, dtab_bytes):
-        probe_side = F.broadcast(qry)
-    else:
-        probe_side = _pq_barrier(qry)
+    probe_side = _probe_side(qry, queries_df, n_probe, dtab_bytes, _pq_barrier)
     scored = (
         probe_side.join(cand, "cluster_id")
         .filter(F.col("query_id") != F.col("cand_id"))
@@ -2163,10 +2135,15 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB with √n clusters this is the linear-ish pass that makes
     semantic dedup feasible at all."""
     emb = load(spark, sf_dir, "embeddings")
-    centroids = sample_centroids(emb, 16)
-    cl = ivf_assign(emb, centroids, 1).select(
-        "vec_id", "embedding", "vnorm", "cluster_id"
-    )
+    return _semdedup_prune(ivf_assign(emb, sample_centroids(emb, 16), 1))
+
+
+def _semdedup_prune(cl: DataFrame) -> DataFrame:
+    """SemDeDup's greedy prune over a 1-probe assignment ``cl``
+    (vec_id, embedding, vnorm, cluster_id): a row is removed when a
+    lower-id member of its own cluster reaches cosine 0.30. Returns
+    (vec_id, cluster_id BIGINT, is_kept); the pair join is
+    hash-partitioned on cluster_id."""
     a = cl.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"),
         F.col("vnorm").alias("na"), "cluster_id",
@@ -2195,74 +2172,6 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- ADC search over a STORED codes artifact (VERDICT r6 #7c) -------------
 
 
-def adc_topk_over_codes(
-    queries_df: DataFrame,
-    codes_df: DataFrame,
-    codebooks: list[list[list[float]]],
-    centroids: list,
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-ADC search against a PRE-BUILT codes table — the decoupled
-    form of ivfpq_topk for when the index artifact already exists.
-    ``codes_df`` must carry (cand_id, cluster_id, codes): exactly what
-    ``pq_encode(ivf_assign(...), passthrough=("cluster_id",))``
-    produces and what a production deployment stores once and searches
-    many times (the 100 TB regime: the index build is one corpus pass,
-    amortized over every query batch that follows; codes are 4 bytes a
-    vector, so the stored artifact is the only corpus-sized thing a
-    query ever touches).
-
-    Same kernel as ivfpq_topk's tail: codebooks/centroids broadcast
-    as literals, queries build m×k distance tables row-local, the join
-    is hash-partitioned on cluster_id (probed clusters only), top-k is
-    a per-query window (WindowGroupLimit, no global sort)."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    dtab_cols = [
-        F.expr(_d2_vec_sql(vec_col, codebooks[s], s, dsub)).alias(f"__dtab{s}")
-        for s in range(m)
-    ]
-    # no probe-side persist: the broadcast is the barrier (see
-    # ivfpq_probe — same r15 change, same A/B)
-    qry = (
-        ivf_assign(queries_df, centroids, n_probe, id_col, vec_col)
-        .select(F.col(id_col).alias("query_id"), "cluster_id", F.col(vec_col))
-        .select("query_id", "cluster_id", *dtab_cols)
-    )
-    cand = _pq_barrier(
-        codes_df.select("cand_id", "cluster_id", "codes"), corpus=True
-    )
-    ad2 = None
-    for s in range(m):
-        term = F.element_at(f"__dtab{s}", F.col("codes")[s] + 1)
-        ad2 = term if ad2 is None else ad2 + term
-    # broadcast the bounded probe side (same r15 optimization as
-    # ivfpq_probe — see the comment there): the stored codes frame is
-    # the corpus-sized side and must not be exchanged/sorted on the
-    # low-cardinality cluster_id key. r16 (ADVICE r15): guarded — past
-    # PROBE_BROADCAST_MAX_BYTES the join falls back unhinted with the
-    # persist barrier restored (see ivfpq_probe).
-    dtab_bytes = m * len(codebooks[0]) * 8 + 48
-    if _probe_broadcast_ok(queries_df, n_probe, dtab_bytes):
-        probe_side = F.broadcast(qry)
-    else:
-        probe_side = _pq_barrier(qry)
-    scored = (
-        probe_side.join(cand, "cluster_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", ad2.alias("approx_d2"))
-    )
-    w = W.partitionBy("query_id").orderBy("approx_d2", "cand_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "cand_id", "approx_d2")
-    )
-
-
 @query(
     "similarity_adc_stored_codes",
     oracle=IVFPQ_ORACLE,
@@ -2277,7 +2186,9 @@ def similarity_adc_stored_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity_ivfpq_ann (same oracle): the store/load hop must be
     value-neutral for bigint ids and int-list codes (A14 list
     layouts), which is precisely what makes codes a durable index
-    artifact rather than a per-session computation."""
+    artifact rather than a per-session computation. The search is
+    :func:`ivfpq_probe` over an :class:`IvfPqIndex` whose codes are the
+    stored copy, behind the corpus persist barrier."""
     import os
     import tempfile
 
@@ -2310,10 +2221,11 @@ def similarity_adc_stored_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fresh single-consumption load → opt-in chunk pruning is safe and
     # gives the probed-cluster point reads this layout exists for
     stored = spark.read.format("vortex").option("pushdown", "true").load(path)
-    return adc_topk_over_codes(
-        emb.filter(F.col("vec_id") % 20 == 0), stored, books, centroids,
-        k=10, n_probe=4,
+    index = IvfPqIndex(
+        centroids, books,
+        _pq_barrier(stored.select("cand_id", "cluster_id", "codes"), corpus=True),
     )
+    return ivfpq_probe(index, emb.filter(F.col("vec_id") % 20 == 0), k=10, n_probe=4)
 
 
 # --- two-level IVF assignment (r7: the semdedup assignment-wall fix) ------
@@ -2346,12 +2258,21 @@ def ivf_assign_two_level(
        this is a deterministic subsample);
     2. every fine centroid maps to its nearest coarse representative
        (driver-side k·n_coarse cosines, exact);
-    3. phase 1: each vector scores the ``n_coarse`` broadcast reps and
-       keeps its ``n_probe_coarse`` best cells (map-side, no shuffle);
-    4. phase 2: an EQUI join on coarse_id against the broadcast fine
-       centroids (not a cross join — each vector only ever sees the
-       probed cells' fine members), then argmin via the same
-       map-side min-of-struct as ivf_assign.
+    3. phase 1: each vector scores the ``n_coarse`` reps and keeps its
+       ``n_probe_coarse`` best cells;
+    4. phase 2: each vector scores only the probed cells' fine
+       members and keeps the best.
+
+    Both phases run on the literal kernel of :func:`ivf_assign` (one
+    map-side projection, no exchange): phase 1 is
+    :func:`_literal_topn` over the reps, and phase 2 CASE-dispatches
+    each probed cell id to that cell's :func:`_literal_structs` and
+    takes the array_min. The evaluated work per row stays n_coarse +
+    Σ|probed cells|. Past the literal budget, for a degenerate probe
+    count, or if a duplicate rep leaves a coarse cell EMPTY (the
+    literal dispatch needs every cell), both phases run on the join
+    fallback (:func:`_join_topn`): phase 2 is an EQUI join on coarse_id
+    against the broadcast fine centroids, never a cross join.
 
     Exactness: with ``n_probe_coarse = n_coarse`` the result is
     IDENTICAL to ``ivf_assign(df, centroids, 1)`` (every fine centroid
@@ -2376,12 +2297,12 @@ def ivf_assign_two_level(
     summation), this map — and the catalog hash — would flag it."""
     import math
 
-    crows = centroids.select("cluster_id", "centroid").orderBy("cluster_id").collect()
-    k = len(crows)
+    crows = codebook_rows(centroids)
     if n_coarse is None:
-        n_coarse = max(1, int(math.isqrt(k)))
+        n_coarse = max(1, int(math.isqrt(len(crows))))
     n_probe_coarse = min(n_probe_coarse, n_coarse)
-    reps = crows[:n_coarse]
+    # coarse ids are the reps' 0-based indexes
+    reps = [(j, v) for j, (_, v) in enumerate(crows[:n_coarse])]
 
     def _cos(a, b):
         num = sum(x * y for x, y in zip(a, b))
@@ -2391,106 +2312,43 @@ def ivf_assign_two_level(
 
     # fine centroid -> nearest coarse rep (ties: lowest coarse id)
     fine_rows = []
+    members: dict[int, list[tuple[int, list[float]]]] = {j: [] for j in range(n_coarse)}
     for cid, cvec in crows:
-        best = max(
-            range(n_coarse), key=lambda j: (_cos(cvec, reps[j][1]), -j)
-        )
-        fine_rows.append((int(cid), int(best), list(cvec)))
+        best = max(range(n_coarse), key=lambda j: (_cos(cvec, reps[j][1]), -j))
+        fine_rows.append((int(cid), int(best), cvec))
+        members[best].append((cid, cvec))
 
-    # r15 optimization (guide §2.4, OPTIMIZATION_r15 deferred item #1):
-    # BOTH phases as one map-side projection from CENTROID LITERALS —
-    # the join form below paid TWO corpus exchanges (phase 1's
-    # row_number window partitioned by id over the |corpus|·n_coarse
-    # crossJoin, then phase 2's groupBy argmin over the probed-cell
-    # fan-out). Per row: score the n_coarse reps (literal csims, the
-    # _centroid_csim_sqls machinery already pinned bit-identical to
-    # the join arithmetic), keep the n_probe_coarse best cells by the
-    # window's exact order (csim desc → -s asc, coarse id asc), then
-    # CASE-dispatch on each probed cell id to THAT cell's literal
-    # member-csim structs only — the evaluated work per row stays
-    # n_coarse + Σ|probed cells|, the same n·√k·(1+probe) the join
-    # form does, with zero exchange. array_min over the flattened
-    # (d=-csim, fine_id) structs is the same lexicographic rule as
-    # the groupBy min(struct). The join form remains the fallback
-    # past the literal budget, for a degenerate probe count, or if a
-    # duplicate rep leaves a coarse cell EMPTY (the inner join drops
-    # pairings there; the literal form cannot).
-    members: dict[int, list[tuple[int, list[float]]]] = {
-        j: [] for j in range(n_coarse)
-    }
-    for cid, cj, cvec in fine_rows:
-        members[cj].append((cid, cvec))
-    dims = {len(v) for _, v in crows}
+    v = df.select(F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("vnorm"))
     if (
-        crows
-        and n_probe_coarse >= 1
-        and len(dims) == 1
-        and all(members[j] for j in range(n_coarse))
-        and (len(crows) + n_coarse) * (len(crows[0][1]) + 1)
-        <= LLOYD_LITERAL_BUDGET
-        # ADVICE r15: repr'd non-finite doubles ('nan'/'inf' + 'D') do
-        # not parse as Spark SQL literals — fall back to the join form,
-        # which computes through, instead of raising in Catalyst
-        and all(_math.isfinite(x) for _, v in crows for x in v)
+        n_probe_coarse >= 1
+        and all(members.values())
+        # reps and fine centroids are both compiled in: k + n_coarse rows
+        and _literal_ok(crows + reps)
     ):
-        rep_csims = _centroid_csim_sqls(
-            [(j, list(reps[j][1])) for j in range(n_coarse)], vec_col, "vnorm"
-        )
-        rep_structs = ",".join(
-            f"struct(-({s}) AS d, {j} AS i)" for j, s in enumerate(rep_csims)
-        )
-        probed = (
-            f"transform(slice(array_sort(array({rep_structs})), "
-            f"1, {n_probe_coarse}), pp -> pp.i)"
-        )
-        cells = []
-        for j in range(n_coarse):
-            mem_csims = _centroid_csim_sqls(members[j], vec_col, "vnorm")
-            cells.append(
-                "array(" + ",".join(
-                    f"struct(-({s}) AS d, CAST({cid} AS INT) AS i)"
-                    for (cid, _), s in zip(members[j], mem_csims)
-                ) + ")"
-            )
+        probed = _literal_topn(reps, vec_col, "vnorm", n_probe_coarse)
+        if n_probe_coarse == 1:
+            probed = f"array({probed})"
         dispatch = "CASE p " + " ".join(
-            f"WHEN {j} THEN {cells[j]}" for j in range(n_coarse)
+            f"WHEN {j} THEN "
+            + _literal_structs(
+                cells, vec_col, "vnorm", [f"CAST({cid} AS INT)" for cid, _ in cells]
+            )
+            for j, cells in members.items()
         ) + " END"
         best_s = f"array_min(flatten(transform({probed}, p -> {dispatch})))"
-        return df.select(
-            F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("vnorm")
-        ).withColumn("cluster_id", F.expr(f"({best_s}).i"))
+        return v.withColumn("cluster_id", F.expr(f"({best_s}).i"))
 
     spark = df.sparkSession
     elem = dict(df.dtypes)[vec_col].split("<")[1]
+    coarse = spark.createDataFrame(reps, f"cluster_id int, centroid array<{elem}")
     fine = spark.createDataFrame(
         fine_rows, f"cluster_id int, coarse_id int, centroid array<{elem}"
     )
-    coarse = spark.createDataFrame(
-        [(int(j), list(reps[j][1])) for j in range(n_coarse)],
-        f"cluster_id int, centroid array<{elem}",
+    probed = ivf_assign(df, coarse, n_probe_coarse, id_col, vec_col, rows=reps)
+    return _join_topn(
+        probed.withColumnRenamed("cluster_id", "coarse_id"),
+        fine, 1, id_col, vec_col, on="coarse_id",
     )
-
-    probed = ivf_assign(df, coarse, n_probe_coarse, id_col, vec_col).select(
-        F.col(id_col), F.col(vec_col), F.col("vnorm"),
-        F.col("cluster_id").alias("coarse_id"),
-    )
-    fc = fine.select(
-        "coarse_id", F.col("cluster_id").alias("fine_id"), "centroid",
-        _norm(F.col("centroid")).alias("cnorm"),
-    )
-    scored = probed.join(F.broadcast(fc), "coarse_id").select(
-        id_col, vec_col, "vnorm", "fine_id",
-        (
-            _dot(F.col(vec_col), F.col("centroid")) / (F.col("vnorm") * F.col("cnorm"))
-        ).alias("csim"),
-    )
-    best = scored.groupBy(id_col).agg(
-        # -csim, not 1 - csim: exact argmin key (see ivf_assign)
-        F.min(F.struct((-F.col("csim")).alias("d"), F.col("fine_id"))).alias("b"),
-        F.first(vec_col).alias(vec_col),
-        F.first("vnorm").alias("vnorm"),
-    )
-    return best.select(id_col, vec_col, "vnorm", F.col("b.fine_id").alias("cluster_id"))
 
 
 TWO_LEVEL_ASSIGN_ORACLE = f"""
@@ -2631,27 +2489,6 @@ def dedup_semantic_cluster_two_level(spark: SparkSession, sf_dir: str) -> DataFr
     so the approximation is hash-checked, not just recall-tested."""
     emb = load(spark, sf_dir, "embeddings")
     cents = sample_centroids(emb, 16)
-    cl = ivf_assign_two_level(emb, cents, n_coarse=4, n_probe_coarse=2)
-    a = cl.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"),
-        F.col("vnorm").alias("na"), "cluster_id",
-    )
-    b = cl.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"),
-        F.col("vnorm").alias("nb"), "cluster_id",
-    )
-    rm = (
-        a.join(b, "cluster_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))) >= 0.30
-        )
-        .select(F.col("id_b").alias("vec_id"))
-        .distinct()
-        .withColumn("__rm", F.lit(1))
-    )
-    return cl.join(rm, "vec_id", "left").select(
-        "vec_id",
-        F.col("cluster_id").cast("bigint").alias("cluster_id"),
-        F.col("__rm").isNull().alias("is_kept"),
+    return _semdedup_prune(
+        ivf_assign_two_level(emb, cents, n_coarse=4, n_probe_coarse=2)
     )

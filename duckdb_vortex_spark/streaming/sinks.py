@@ -1210,6 +1210,9 @@ def overwrite_batch_atomic(
     if os.path.isdir(staging):
         shutil.rmtree(staging)  # crashed attempt's partial output
     df.write.format("vortex").mode("append").save(staging)
+    # a frame with no rows writes no files and creates no staging dir;
+    # its batch still commits, as an empty one
+    os.makedirs(staging, exist_ok=True)
     if os.path.isdir(bdir):
         shutil.rmtree(bdir)  # retried batch: replace previous attempt
     os.rename(staging, bdir)  # the commit point

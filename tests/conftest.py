@@ -133,6 +133,7 @@ _SLOW_TESTS = {
     "test_similarity_ivf.py::test_ivfpq_rerank_sidecar_partition_prunes",  # 21.4s
     "test_catalog_plan_lint.py::test_catalog_entry_plan_clean[stream_incremental_ingest_pipeline]",  # 20.4s
     "test_incremental_pipeline.py::test_gate_order_first_failing_stage_wins",  # 20.0s
+    "test_incremental_pipeline.py::test_all_duplicate_batch_commits_empty_stores",  # 12.5s
     "test_catalog_oracle.py::test_catalog_entry[pipeline_fuzzy_curation_manifest]",  # 18.2s
     "test_incremental_neardup.py::test_hot_bucket_cap_applies_uniformly",  # 18.0s
     "test_incremental_neardup.py::test_reads_incrementally_compacted_state",  # 17.6s

@@ -311,6 +311,23 @@ def test_chain_job_labels_are_scoped(spark, tmp_path):
     assert after and set(after) == {"caller"}, after
 
 
+def test_all_duplicate_batch_commits_empty_stores(spark, tmp_path):
+    """A batch whose every doc is an exact or near duplicate of earlier
+    ones leaves the semantic gate nothing to index: its empty store
+    writes commit, compaction folds them, and later batches still run."""
+    register(spark)
+    corpus, centroids = _tiny_chain_corpus(spark)
+    root = str(tmp_path / "e")
+    ingest_process_batch(corpus.filter(F.col("doc_id") <= 2), 0, centroids, root)
+    ingest_process_batch(corpus.filter(F.col("doc_id").isin(3, 4)), 1, centroids, root)
+    compact_chain_stores(spark, root, before=2)
+    # doc 5 with a vector far from every landed one: nothing drops it
+    fresh = corpus.filter(F.col("doc_id") == 5).withColumn("vec", F.array(F.lit(-1.0), F.lit(-1.0)))
+    ingest_process_batch(fresh, 2, centroids, root)
+    got = {r["doc_id"]: r["stage"] for r in _manifest(spark, root).collect()}
+    assert got == {1: "kept", 2: "kept", 3: "exact", 4: "near_dup", 5: "kept"}, got
+
+
 def test_retried_batch_is_idempotent(spark, tmp_path):
     """Replaying a middle batch reads only strictly-earlier state for
     every store (lsh, ivf, raw — the raw store carries the exact

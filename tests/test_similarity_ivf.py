@@ -377,10 +377,9 @@ def test_lloyd_refine_null_embeddings_and_literal_budget(spark):
     ``idx_to_cid[None]``, short vectors crashed the sums loop's
     vec[i], and null elements silently biased cluster 0's mean; the
     refined means must equal a refine over only the valid rows;
-    (b) the literal-embedded assignment refuses loudly when
-    k*(dim+1) exceeds LLOYD_LITERAL_BUDGET, naming the bound."""
-    import pytest as _pytest
-
+    (b) when k*(dim+1) exceeds LLOYD_LITERAL_BUDGET the assignment
+    falls back to the join form and the refined centroids are the
+    same."""
     from duckdb_vortex_spark.operators import similarity as sim
 
     rows = [
@@ -412,14 +411,18 @@ def test_lloyd_refine_null_embeddings_and_literal_budget(spark):
     )
     assert got == want, "null/mismatched rows must not shift any mean"
 
-    # (b) the plan-size guard: k*(dim+1)=2*5=10 > patched budget of 8
-    with _pytest.raises(ValueError, match="LLOYD_LITERAL_BUDGET"):
-        orig = sim.LLOYD_LITERAL_BUDGET
-        sim.LLOYD_LITERAL_BUDGET = 8
-        try:
-            sim.lloyd_refine(df, cents, 1)
-        finally:
-            sim.LLOYD_LITERAL_BUDGET = orig
+    # (b) past the plan-size budget (k*(dim+1)=2*5=10 > a patched 8)
+    # the assignment runs on the join fallback: same centroids
+    orig = sim.LLOYD_LITERAL_BUDGET
+    sim.LLOYD_LITERAL_BUDGET = 8
+    try:
+        over = sorted(
+            (r["cluster_id"], tuple(r["centroid"]))
+            for r in sim.lloyd_refine(df, cents, 1).collect()
+        )
+    finally:
+        sim.LLOYD_LITERAL_BUDGET = orig
+    assert over == got
     # real constant untouched and generous enough for the repo's sizes
     assert sim.LLOYD_LITERAL_BUDGET == 65_536
 
@@ -428,12 +431,11 @@ def test_ivf_assign_literal_path_equals_join_form(spark):
     """r15 optimization pin: the map-side centroid-literal 1-probe
     assignment (no crossJoin, no groupBy exchange) is ROW-IDENTICAL —
     every column, including vnorm bits and the cluster_id tie rule —
-    to the crossJoin+groupBy argmin it replaced (which remains in
-    place as the over-budget fallback), on the real corpus AND on
-    degenerate rows (null vector, short vector, null element): both
-    forms assign every degenerate row to the lowest cluster_id, since
-    all csims go null and the struct argmin falls through to the
-    index/cluster tie-break."""
+    to the join fallback (crossJoin + row_number window, the
+    over-budget path), on the real corpus AND on degenerate rows (null
+    vector, short vector, null element): both forms assign every
+    degenerate row to the lowest cluster_id, since all csims go null
+    and the order falls through to the index/cluster tie-break."""
     from duckdb_vortex_spark.operators import similarity
     from duckdb_vortex_spark.operators.similarity import (
         LLOYD_LITERAL_BUDGET,
@@ -454,7 +456,7 @@ def test_ivf_assign_literal_path_equals_join_form(spark):
     cents = sample_centroids(emb, 8)
 
     lit = ivf_assign(corpus, cents, n_probe=1)
-    # force the fallback (join+groupBy) form by shrinking the budget
+    # force the join fallback by shrinking the budget
     orig = similarity.LLOYD_LITERAL_BUDGET
     similarity.LLOYD_LITERAL_BUDGET = 0
     try:
@@ -485,8 +487,8 @@ def test_ivf_assign_multiprobe_literal_equals_window_form(spark):
     n_probe>1 assignment (literal csims → slice(array_sort) top-cells
     → explode; no crossJoin, no per-id row_number window exchange) is
     ROW-IDENTICAL — every column, vnorm bits, the (csim desc,
-    cluster_id asc) order rule — to the crossJoin+window form it
-    replaces (which stays as the over-budget fallback). Degenerate
+    cluster_id asc) order rule — to the crossJoin+window join
+    fallback (the over-budget path). Degenerate
     coverage: null vector, short vector, null-element vector — all
     csims go null TOGETHER (per-row, every centroid), and both forms
     fall through to the lowest cluster_ids. A per-centroid null (only
@@ -544,38 +546,46 @@ def test_ivf_assign_multiprobe_literal_equals_window_form(spark):
 
 def test_ivf_assign_nonfinite_centroid_falls_back(spark):
     """ADVICE r15: repr'd non-finite doubles ('nanD'/'infD') are not
-    parseable Spark SQL literals, so a NaN/Inf centroid value must
-    route BOTH literal paths (1-probe argmin, multi-probe slice) to
-    the join/window fallback — computing through, same rows as a
-    budget-forced fallback — instead of raising an AnalysisException
-    mid-Catalyst."""
+    parseable Spark SQL literals, and a null element has no literal,
+    so a NaN/Inf/null centroid value must route BOTH literal paths
+    (1-probe argmin, multi-probe slice) to the join fallback —
+    computing through, same rows as a budget-forced fallback —
+    instead of raising. The fallback orders every n_probe by one key,
+    so each vector's 1-probe cell is among its 2-probe cells."""
     from duckdb_vortex_spark.operators import similarity
     from duckdb_vortex_spark.operators.similarity import ivf_assign
 
     emb = load(spark, SF_DIR, "embeddings").limit(50)
-    cents = spark.createDataFrame(
-        [
+    tables = {
+        "nonfinite": [
             (0, [1.0] * 64),
             (1, [float("nan")] * 64),
             (2, [float("inf")] + [0.5] * 63),
         ],
-        "cluster_id int, centroid array<double>",
-    )
-    for n_probe in (1, 2):
-        got = ivf_assign(emb, cents, n_probe=n_probe)  # must not raise
-        orig = similarity.LLOYD_LITERAL_BUDGET
-        similarity.LLOYD_LITERAL_BUDGET = 0
-        try:
-            want = ivf_assign(emb, cents, n_probe=n_probe)
-        finally:
-            similarity.LLOYD_LITERAL_BUDGET = orig
+        "null_element": [
+            (0, [1.0] * 64),
+            (1, [None] + [0.5] * 63),
+            (2, [0.5] * 63 + [-1.0]),
+        ],
+    }
 
-        def rows(df):
-            return sorted(
-                (r["vec_id"], r["cluster_id"]) for r in df.collect()
-            )
+    def rows(df):
+        return sorted((r["vec_id"], r["cluster_id"]) for r in df.collect())
 
-        assert rows(got) == rows(want)
+    for name, table in tables.items():
+        cents = spark.createDataFrame(table, "cluster_id int, centroid array<double>")
+        got = {}
+        for n_probe in (1, 2):
+            got[n_probe] = rows(ivf_assign(emb, cents, n_probe=n_probe))  # no raise
+            orig = similarity.LLOYD_LITERAL_BUDGET
+            similarity.LLOYD_LITERAL_BUDGET = 0
+            try:
+                want = ivf_assign(emb, cents, n_probe=n_probe)
+            finally:
+                similarity.LLOYD_LITERAL_BUDGET = orig
+            assert got[n_probe] == rows(want), (name, n_probe)
+        assert len(got[1]) == 50, name
+        assert set(got[1]) <= set(got[2]), name
 
 
 def test_two_level_literal_path_equals_join_form(spark):
@@ -584,8 +594,8 @@ def test_two_level_literal_path_equals_join_form(spark):
     both from centroid literals — no crossJoin window, no equi-join,
     no groupBy exchange) is ROW-IDENTICAL — every column, vnorm bits,
     and the (csim desc, id asc) tie rules of BOTH phases — to the
-    join+window+groupBy form it replaced (which remains in place as
-    the over-budget fallback), on the real corpus AND on degenerate
+    join fallback (crossJoin window, then equi-join window: the
+    over-budget path), on the real corpus AND on degenerate
     rows (null vector, short vector, null element: all csims go null,
     both forms fall through to the lowest probed-cell fine id)."""
     from duckdb_vortex_spark.operators import similarity
@@ -608,7 +618,7 @@ def test_two_level_literal_path_equals_join_form(spark):
     cents = sample_centroids(emb, 16)
 
     lit = ivf_assign_two_level(corpus, cents, n_coarse=4, n_probe_coarse=2)
-    # force the fallback (window + equi-join + groupBy) form
+    # force the join fallback (window, then equi-join + window)
     orig = similarity.LLOYD_LITERAL_BUDGET
     similarity.LLOYD_LITERAL_BUDGET = 0
     try:

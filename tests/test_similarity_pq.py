@@ -198,15 +198,14 @@ def test_pq_code_budget_breaks_the_recall_plateau(spark):
 
 def test_probe_broadcast_guard_falls_back_row_identical(spark):
     """r16 (ADVICE r15, medium): the probe-side F.broadcast in
-    ivf_probe / ivfpq_probe / adc_topk_over_codes is gated on an
-    estimated broadcast footprint. Past PROBE_BROADCAST_MAX_BYTES the
+    ivf_probe / ivfpq_probe is gated on an estimated broadcast
+    footprint. Past PROBE_BROADCAST_MAX_BYTES the
     join runs unhinted (PQ paths restore the r5 persist barrier) and
     must return EXACTLY the same rows — the guard changes strategy,
     never results. The guard's count is LIMIT-bounded, so it never
     pays a full scan of a huge query set."""
     from duckdb_vortex_spark.operators import similarity as sim
     from duckdb_vortex_spark.operators.similarity import (
-        adc_topk_over_codes,
         ivf_index,
         ivf_probe,
         ivfpq_index,
@@ -224,9 +223,6 @@ def test_probe_broadcast_guard_falls_back_row_identical(spark):
     got = {
         "ivf": rows(ivf_probe(iidx, qry, k=5, n_probe=2)),
         "ivfpq": rows(ivfpq_probe(pidx, qry, k=5, n_probe=2)),
-        "adc": rows(
-            adc_topk_over_codes(qry, pidx.cand, pidx.books, pidx.centroids, k=5, n_probe=2)
-        ),
     }
     orig = sim.PROBE_BROADCAST_MAX_BYTES
     sim.PROBE_BROADCAST_MAX_BYTES = 1  # force every guard to fall back
@@ -234,11 +230,6 @@ def test_probe_broadcast_guard_falls_back_row_identical(spark):
         fb = {
             "ivf": rows(ivf_probe(iidx, qry, k=5, n_probe=2)),
             "ivfpq": rows(ivfpq_probe(pidx, qry, k=5, n_probe=2)),
-            "adc": rows(
-                adc_topk_over_codes(
-                    qry, pidx.cand, pidx.books, pidx.centroids, k=5, n_probe=2
-                )
-            ),
         }
     finally:
         sim.PROBE_BROADCAST_MAX_BYTES = orig
