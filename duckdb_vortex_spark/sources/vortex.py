@@ -735,7 +735,7 @@ class VortexDataSource(DataSource):
                         f"vortex dataset type conflict on {fld.name!r}: "
                         f"{seen} vs {fld.type} (in {f!r}) — additive "
                         "evolution only; changing a column's type needs "
-                        "a rewrite (compact_dataset)"
+                        "a rewrite into a new dataset (write_sorted)"
                     )
         arrow_schema = pa.schema([pa.field(n, t) for n, t in merged.items()])
         bound = from_arrow_schema(arrow_schema, prefer_timestamp_ntz=True)

@@ -150,30 +150,23 @@ CHAIN_STORE_SORT = {
 def compact_chain_stores(
     spark: SparkSession,
     root: str,
-    max_segments: int | str = "auto",
     max_files: int = STATE_FILES,
     before: int | None = None,
-    level_ratio: float = 2.0,
 ) -> dict[str, str | None]:
     """Maintenance pass over the chain's state stores: one
     incremental (tiered) compaction each, bounded to ``max_files``
-    part files per segment and a leveled live-segment cap
-    (run fold past it — see `sinks.compact_dataset_incremental`).
-    The default cap is ``"auto"`` (r11, ADVICE r10): it grows as
-    max(4, ceil(log_ratio(history))), which is what keeps per-row
-    rewrite cost O(log n) on an UNBOUNDED 24/7 stream — a constant
-    cap forces polynomial tail refolds (Θ(n^(1+1/K)) total work,
-    ~74×/row by 20k batches at K=4). Pass a constant int only for
-    bounded-history stores where a hard listing bound matters more.
-    Run BETWEEN micro-batches on checkpoint-committed batches only;
-    with it interleaved every N batches, a per-batch state read opens
-    at most ``cap + N`` dirs / ``(cap + N) * max_files`` files —
-    constant for int caps, O(log batches) for ``"auto"`` — the bound
-    the r9 flatness harness and `test_chain_state_file_count_bounded`
-    pin.
+    part files per segment, folding a tail run of segments once the
+    live count would pass the history-scaled cap
+    max(4, ceil(log2(history))) — see
+    `sinks.compact_dataset_incremental`. That cap is what keeps per-row
+    rewrite cost O(log n) on an UNBOUNDED 24/7 stream. Run BETWEEN
+    micro-batches on checkpoint-committed batches only; with it
+    interleaved every N batches, a per-batch state read opens at most
+    ``cap + N`` dirs / ``(cap + N) * max_files`` files, O(log batches)
+    — the bound `test_chain_state_file_count_bounded` pins.
 
-    ``before`` (ADVICE r9 — REQUIRED when called from inside a
-    stream's foreachBatch): the current batch id. A crash mid-batch-N
+    ``before`` (REQUIRED when called from inside a stream's
+    foreachBatch): the current batch id. A crash mid-batch-N
     leaves partial per-store state for N (the chain lands raw/ first),
     and an unbounded maintenance pass on restart would fold those dirs
     into a segment with upto = N — after which every retry of batch N
@@ -188,13 +181,7 @@ def compact_chain_stores(
         if os.path.isdir(p):
             with job_label(spark, f"compact {store}"):
                 out[store] = compact_dataset_incremental(
-                    spark,
-                    p,
-                    cols,
-                    max_files=max_files,
-                    max_segments=max_segments,
-                    before=before,
-                    level_ratio=level_ratio,
+                    spark, p, cols, max_files=max_files, before=before
                 )
     return out
 
@@ -323,7 +310,6 @@ def incremental_ingest_stream(
     root: str,
     checkpoint: str,
     maintain_every: int | None = None,
-    maintain_max_segments: int | str = "auto",
     **kwargs,
 ):
     """Start the integrated chain on a streaming DataFrame of
@@ -331,25 +317,22 @@ def incremental_ingest_stream(
     returns the StreamingQuery. Whole-history manifest = the
     batch-mode chain under id-ordered ingest (module docstring).
 
-    ``maintain_every`` (r10) builds the 24/7 posture in: every N-th
+    ``maintain_every`` builds the 24/7 posture in: every N-th
     micro-batch, `compact_chain_stores` runs INSIDE the sink BEFORE
     the batch is processed — the one point in a stream's life where
     maintenance is safe by construction (the processor is the only
     reader, no plan spans the pass, and ``before=batch_id`` keeps a
-    crashed predecessor attempt's partial state foldable-proof, the
-    ADVICE r9 wedge). With it set, a batch's state read opens at most
-    (cap + maintain_every) dirs per store — cap is constant for an
-    int ``maintain_max_segments``, O(log batches-ever-landed) for the
-    default ``"auto"`` (which is also what keeps per-row rewrite cost
-    O(log n) on an unbounded stream — see `compact_chain_stores`);
+    crashed predecessor attempt's partial state out of every fold).
+    With it set, a batch's state read opens at most
+    (cap + maintain_every) dirs per store, the cap growing as
+    O(log batches-ever-landed) — the growth that keeps per-row rewrite
+    cost O(log n) on an unbounded stream (see `compact_chain_stores`);
     without it, callers own maintenance (between sessions, or their
     own in-sink wiring)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if maintain_every and batch_id >= 1 and batch_id % maintain_every == 0:
-            compact_chain_stores(
-                spark, root, max_segments=maintain_max_segments, before=batch_id
-            )
+            compact_chain_stores(spark, root, before=batch_id)
         ingest_process_batch(batch_df, batch_id, centroids, root, **kwargs)
 
     return start_batch_stream(stream_df, checkpoint, sink)

@@ -13,8 +13,9 @@ vortex dataset and prune chunks/columns as usual.
 Scale: each micro-batch writes through the same per-task encoder as
 the batch sink (one file per task, chunk_rows-sized chunks), so sink
 parallelism = stream partition count, and file count grows with
-batches — compact with a periodic batch rewrite (write_sorted) when
-chunk zone maps matter more than ingest latency.
+batches — fold them into sorted segments between batches with
+`compact_dataset_incremental` and read the store with
+`read_vortex_dataset_tiered`.
 """
 
 from __future__ import annotations
@@ -23,8 +24,8 @@ import contextlib
 import glob as globmod
 import json as _json
 import logging
-import math as _math
 import os
+import re
 import queue as _queue
 import shutil
 import threading as _threading
@@ -34,7 +35,7 @@ from concurrent.futures import Future as _Future
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..sources.vortex import FILE_SUFFIX, register
+from ..sources.vortex import register
 
 # ---------------------------------------------------------------------------
 # overlapped per-batch store writes (r16, guide §2.6)
@@ -294,115 +295,53 @@ def write_stream_vortex(
     return writer.start()
 
 
-def read_vortex_dataset(spark, path: str) -> DataFrame:
-    """Read a (possibly streamed) vortex dataset: batch dirs are just
-    nested datasets, one glob away."""
-    if globmod.glob(os.path.join(path, f"part-*{FILE_SUFFIX}")):
-        return spark.read.format("vortex").load(path)
-    return spark.read.format("vortex").load(os.path.join(path, "batch-*"))
+_SEGMENT_NAME = re.compile(r"compact-(\d+)-from-(\d+)-upto-(\d+)")
 
 
-def compact_dataset(spark, path: str, sort_cols: list[str], chunk_rows: int = 65536) -> str:
-    """Rewrite an ingest-shaped dataset (many small streamed files)
-    into a sorted, zone-map-tight layout and atomically swap it in.
+def _seg_ranges(path: str) -> dict[str, tuple[int, int]]:
+    """(lo, hi) folded batch-id range of every committed compaction
+    segment on disk, keyed by segment path in seg-id order (the
+    zero-padded id is the first name component, so lexical order is id
+    order). A segment is named ``compact-<seg>-from-<lo>-upto-<hi>``.
+    Includes superseded segments a crash left behind; readers use
+    `_live_segments`.
 
-    Streaming appends optimize for latency: file count grows per
-    batch and chunk key ranges overlap, so zone maps prune nothing.
-    Periodic compaction is the standard counterpart (same trade as
-    log-structured storage): read everything, range-partition + sort
-    on the query key (write_sorted), swap directories. Returns the
-    path to the retired pre-compaction data (caller deletes after
-    downstream readers drain).
-
-    Holds the same `_maintenance_lease` as the incremental path
-    (VERDICT r10 wrong #1: this was the one unguarded maintenance
-    writer — a cron-style full rewrite racing an in-stream
-    ``maintain_every`` pass could interleave the directory swap with
-    a run fold's commit/GC). The dataset-dir swap carries the lock
-    dir into the retired copy, which is exactly right: from the swap
-    onward the new layout is fully committed and safe for the next
-    maintenance pass, and the pid-guarded release skips a lock this
-    process no longer owns."""
-    from ..sources.vortex import write_sorted
-
-    with _maintenance_lease(path):
-        df = read_vortex_dataset(spark, path)
-        staged = f"{path}.compacting"
-        shutil.rmtree(staged, ignore_errors=True)
-        write_sorted(df, staged, sort_cols=sort_cols, chunk_rows=chunk_rows)
-        retired = f"{path}.pre-compact-{int(_time.time())}"
-        os.rename(path, retired)
-        os.rename(staged, path)
-    # the retired copy carries the (now-dead) lock dir; drop it so a
-    # later inspection of the retired data never mistakes it for held
-    shutil.rmtree(os.path.join(retired, ".maintenance-lock"), ignore_errors=True)
-    return retired
+    A store on disk is input from outside the program: a ``compact-*``
+    entry whose name does not parse has no known range, so no listing
+    could take or supersede its rows correctly. It raises, naming the
+    entry, before any caller reads, renames or deletes anything."""
+    out: dict[str, tuple[int, int]] = {}
+    for s in sorted(globmod.glob(os.path.join(path, "compact-*"))):
+        m = _SEGMENT_NAME.fullmatch(os.path.basename(s))
+        if m is None:
+            raise ValueError(
+                f"{s!r} is not a compaction segment name "
+                "(compact-<seg>-from-<lo>-upto-<hi>): its folded batch range "
+                "is unknown, so reading or compacting the store would drop "
+                "or double-read its rows. Rename it to the explicit-range "
+                "form or move it out of the store."
+            )
+        out[s] = (int(m[2]), int(m[3]))
+    return out
 
 
 def _segments(path: str) -> list[str]:
-    """ALL committed compaction segments on disk, in seg-id order
-    (zero-padded id is the first name component, so lexical order is
-    id order). Three name generations, all matched by the one glob:
-    ``compact-<seg>-from-<lo>-upto-<hi>`` (r10 — explicit folded
-    batch-id range), and the legacy r9 forms
-    ``compact-<seg>-upto-<hi>`` (minor) /
-    ``compact-<seg>-all-upto-<hi>`` (major), whose ranges `_seg_ranges`
-    derives. Includes superseded segments a crash left behind; readers
-    use `_live_segments`."""
-    return sorted(globmod.glob(os.path.join(path, "compact-*-upto-*")))
+    """ALL committed compaction segments on disk, in seg-id order,
+    superseded crash leftovers included (see `_seg_ranges`)."""
+    return list(_seg_ranges(path))
 
 
 def _seg_id(path: str) -> int:
     return int(os.path.basename(path).split("-", 2)[1])
 
 
-def _is_major(path: str) -> bool:
-    """A segment that folds the FULL history prefix (lo == 0)."""
-    name = os.path.basename(path)
-    return "-all-upto-" in name or "-from-00000000-" in name
-
-
-def _seg_ranges(path: str) -> dict[str, tuple[int, int]]:
-    """(lo, hi) folded batch-id range of every committed segment on
-    disk, keyed by segment path.
-
-    r10 names carry both bounds. Legacy r9 names derive: an all-major
-    folded everything → lo = 0; a legacy minor folded exactly the
-    batches strictly above the watermark at its creation, and that
-    watermark is recoverable as the max ``upto`` over segments with a
-    SMALLER seg id (ids are allocated monotonically, and under the r9
-    rules GC only ever removed segments whose upto was dominated by a
-    surviving newer one, so the running max is stable under GC). That
-    derivation is UNSOUND once a run fold exists — a run fold can
-    delete the mid-range predecessor that held the max — which is why
-    `compact_dataset_incremental` migrates legacy names to explicit
-    from-lo names before its first run fold ever commits: legacy names
-    and run folds never coexist on disk."""
-    out: dict[str, tuple[int, int]] = {}
-    max_upto = -1
-    for s in _segments(path):  # seg-id order — the derivation needs it
-        name = os.path.basename(s)
-        hi = int(name.rsplit("-", 1)[1])
-        if "-from-" in name:
-            lo = int(name.split("-from-", 1)[1].split("-", 1)[0])
-        elif "-all-upto-" in name:
-            lo = 0
-        else:
-            lo = max_upto + 1
-        out[s] = (lo, hi)
-        max_upto = max(max_upto, hi)
-    return out
-
-
 def _live_segments(path: str) -> list[str]:
     """Segments a reader must take, sorted by RANGE (lo, then seg id —
     with run folds, id order is NOT range order). Supersession is by
     CONTAINMENT: S is dead iff some segment M with a larger seg id
-    folds a range that contains S's (range(M) ⊇ range(S)). This
-    subsumes the r9 newest-major rule (an all-fold has range
-    [0, max] ⊇ every earlier segment) and extends it to run folds (a
-    fold of segments S_i..S_j has range [lo_i, hi_j] ⊇ each member,
-    and is disjoint from every non-member because live ranges tile).
+    folds a range that contains S's (range(M) ⊇ range(S)). A fold of
+    segments S_i..S_j has range [lo_i, hi_j] ⊇ each member, and is
+    disjoint from every non-member because live ranges tile.
     Superseded segments stay on disk only until GC and are ignored
     here by the containment rule rather than by their absence — the
     commit rename of the fold is the single instant its inputs stop
@@ -426,10 +365,7 @@ def _compact_watermark(path: str) -> int:
     Batch dirs at or below the watermark are compacted garbage — still
     on disk only until the idempotent GC pass removes them — and every
     tiered reader ignores them."""
-    segs = _segments(path)
-    if not segs:
-        return -1
-    return max(int(os.path.basename(s).rsplit("-", 1)[1]) for s in segs)
+    return max((hi for _, hi in _seg_ranges(path).values()), default=-1)
 
 
 def _pid_alive(pid: int) -> bool:
@@ -560,62 +496,31 @@ def _maintenance_lease(path: str, stale_after: float = LEASE_STALE_AFTER):
                 os.rmdir(lock)
 
 
-def _migrate_legacy_segment_names(path: str) -> None:
-    """One-time, idempotent rename of r9-era segment names to the
-    explicit-range form ``compact-<seg>-from-<lo>-upto-<hi>``, with
-    (lo, hi) exactly as `_seg_ranges` derives them. The derivation is
-    only sound while no run fold exists (see `_seg_ranges`), so
-    `compact_dataset_incremental` calls this FIRST in every pass,
-    before any fold commits — legacy names and run folds never coexist
-    on disk. Each rename is one atomic os.rename preserving seg id and
-    upto (the only fields other segments' derivations read), so a
-    crash mid-migration leaves a mixed layout that still reads
-    correctly and the next pass finishes the job.
-
-    Only LIVE segments are renamed: for a superseded crash leftover
-    the derivation can widen lo (its true predecessor may have been
-    GC'd), which is harmless — a widened dead segment can only
-    "contain" other already-dead segments, never a live one — but
-    recording a wrong range is sloppier than leaving the dir for the
-    GC sweep that precedes this call in every maintenance pass."""
-    ranges = _seg_ranges(path)
-    for s in _live_segments(path):
-        if "-from-" in os.path.basename(s):
-            continue
-        lo, hi = ranges[s]
-        os.rename(
-            s,
-            os.path.join(path, f"compact-{_seg_id(s):08d}-from-{lo:08d}-upto-{hi:08d}"),
-        )
-
-
 def compact_dataset_incremental(
     spark,
     path: str,
     sort_cols: list[str],
     chunk_rows: int = 65536,
     max_files: int | None = None,
-    max_segments: int | str | None = None,
     before: int | None = None,
-    level_ratio: float = 2.0,
 ) -> str | None:
-    """INCREMENTAL (tiered) compaction of a streamed dataset: rewrite
-    ONLY the batch dirs that landed since the previous compaction into
-    one new sorted segment — `compact_dataset` above rewrites the
-    whole dataset every time, which at 100 TB re-reads and re-writes
-    unchanged history per pass (VERDICT r7 next-round #8a). This is
-    the log-structured-merge shape: each pass costs O(new data), the
-    dataset is always the union of sorted segments + not-yet-compacted
-    batches, and per-segment zone maps stay tight on ``sort_cols``.
+    """INCREMENTAL (tiered) compaction of a streamed dataset, the one
+    compactor of a streamed store: rewrite ONLY the batch dirs that
+    landed since the previous compaction into one new sorted segment,
+    instead of re-reading and re-writing unchanged history per pass.
+    This is the log-structured-merge shape: each pass costs O(new
+    data), the dataset is always the union of sorted segments +
+    not-yet-compacted batches (`read_vortex_dataset_tiered`), and
+    per-segment zone maps stay tight on ``sort_cols``.
 
     Crash safety is the watermark, not the GC: a segment commits via
-    one atomic rename to ``compact-<seg>-from-<lo>-upto-<hi>``, and tiered
-    readers (`read_vortex_dataset_tiered`) take segments + batches
-    with id STRICTLY ABOVE the highest committed watermark — so a
-    crash after the segment commit but before the consumed batch dirs
-    are removed double-stores rows but never double-READS them, and
-    the delete pass is pure idempotent garbage collection (re-runnable
-    anytime; here it runs inline at the end).
+    one atomic rename to ``compact-<seg>-from-<lo>-upto-<hi>``, and
+    tiered readers take segments + batches with id STRICTLY ABOVE the
+    highest committed watermark — so a crash after the segment commit
+    but before the consumed batch dirs are removed double-stores rows
+    but never double-READS them, and the delete pass is pure idempotent
+    garbage collection (re-runnable anytime; here it runs at entry and
+    at the end).
 
     Change detection is structural — in an append-only batch layout
     "changed since last compaction" IS "batch id > watermark"; the
@@ -627,76 +532,43 @@ def compact_dataset_incremental(
     unbounded segment re-opens shuffle-partition-many tiny files per
     state read, the same failure STATE_FILES caps for batch dirs).
 
-    ``max_segments`` enables the LEVELED tier (r10, replacing the r9
-    all-fold major): when the live segment count would exceed it, the
-    pass folds a contiguous TAIL RUN of live segments together with
-    the new batches into one ``compact-<seg>-from-<lo>-upto-<hi>``
-    segment, instead of folding everything. The run is grown backward
-    from the newest segment while the predecessor's span (hi-lo+1, the
-    batch-count size proxy — micro-batches are ~equal) is at most
-    ``level_ratio`` × the span accumulated so far, and at least far
-    enough that the post-pass live count is <= the effective cap
-    (below). That is classic size-tiered merging: spans end up
-    geometrically spaced (each level ~``level_ratio`` × the sum below
-    it) and — unlike the r9 major, which re-wrote ALL of history every
-    ``max_segments`` passes (measured growing 4.6 → 6.7 s over a ~7×
-    window, CHANGES_r9 §11) — the typical fold touches only the
-    recent small segments; the oldest giant is re-folded only when the
-    accumulated tail reaches span(giant)/level_ratio, i.e.
-    geometrically rarely.
+    LEVELING: when the live segment count would exceed the cap
+    max(AUTO_SEGMENT_FLOOR, ceil(log2(total span))) — span = hi-lo+1,
+    the batch-count size proxy (micro-batches are ~equal) — the pass
+    folds a contiguous TAIL RUN of live segments together with the new
+    batches into one segment (`_pick_fold_run`). The run grows backward
+    from the newest segment while the predecessor's span is at most
+    twice the span accumulated so far, and at least far enough that
+    the post-pass live count is within the cap. Spans end up
+    geometrically spaced, the typical fold touches only the recent
+    small segments, and the oldest giant is re-folded only when the
+    tail has caught up with half its span. Because the cap grows with
+    history, the forced rule never outpaces the geometric one: a row is
+    rewritten O(log history) times in total (~9× at 100k unit batches)
+    and the live listing grows logarithmically (~18 segments at 100k
+    unit batches), property-pinned in
+    tests/test_tiered_listing_property.py. A constant cap K would
+    instead force tail refolds costing Θ(n^(1+1/K)) total work.
 
-    THE CAP AND ITS TRUE COST (ADVICE r10): write amplification
-    depends on what ``max_segments`` is —
+    Supersession is by CONTAINMENT (`_live_segments`): the committed
+    fold contains each of its inputs' ranges and is disjoint from every
+    other live segment, so a crash between its commit and the GC of the
+    inputs never double-reads. Returns the new segment path, or None if
+    nothing new landed (and no fold was due).
 
-    - ``"auto"`` (RECOMMENDED for unbounded 24/7 history; the
-      `compact_chain_stores` default): the effective cap grows with
-      history as max(4, ceil(log(total span)/log(level_ratio))), so
-      the forced-inclusion rule never outpaces the geometric rule and
-      a row really is rewritten O(log(history)/log(level_ratio))
-      times total — property-pinned over thousands of simulated
-      passes (test_leveled_policy_asymptotics_auto: ~9×/row at 100k
-      unit batches, ratio 2). The price is a live listing that grows
-      logarithmically (~18 segments at 100k unit batches, ratio 2)
-      instead of staying constant.
-    - a constant int K: the live listing is HARD-capped at K (and
-      K=1 forces a full merge every pass — the explicit
-      "compact everything now" intent), but an O(log n)-rewrites
-      guarantee is mathematically unachievable under ANY constant
-      cap: once the geometric ladder fills K levels, every overflow
-      forces a tail refold regardless of spans, and total work is
-      Θ(n^(1+1/K)) — at K=4 that is ~74×/row by 20k unit batches and
-      ~344×/row by 100k (simulated). Right for bounded-history
-      stores; wrong for an unbounded stream — use ``"auto"``.
-    - ``None``: no leveling; each pass folds only the new batches
-      into one minor segment and the live listing grows linearly.
+    ``before``: upper bound (exclusive) on the batch ids this pass may
+    fold. The 24/7 shape runs maintenance inside foreachBatch BEFORE
+    processing batch N — but a crash mid-batch-N can leave batch N's
+    dirs partially landed across stores (the chain writes raw/ first),
+    and an unbounded pass on restart would fold those into a segment
+    with upto = N, after which every retry of batch N hits
+    `state_dirs`' "still retryable" guard forever — a permanently
+    wedged stream. Passing ``before=N`` makes batch N's dirs invisible
+    to the fold, so the retry's atomic overwrite replaces them as
+    designed. Always pass the current batch id when calling from
+    inside a stream.
 
-    Supersession generalizes from "newest major
-    wins" to CONTAINMENT (`_live_segments`): the committed fold
-    contains each of its inputs' ranges and is disjoint from every
-    other live segment, so a crash between its commit and the GC of
-    the inputs never double-reads. Returns the new segment path, or
-    None if nothing new landed (and no fold was due).
-
-    ``before`` (ADVICE r9): upper bound (exclusive) on the batch ids
-    this pass may fold. The 24/7 shape runs maintenance inside
-    foreachBatch BEFORE processing batch N — but a crash mid-batch-N
-    can leave batch N's dirs partially landed across stores (the chain
-    writes raw/ first), and an unbounded pass on restart would fold
-    those into a segment with upto = N, after which every retry of
-    batch N hits `state_dirs`' "still retryable" guard forever — a
-    permanently wedged stream. Passing ``before=N`` makes batch N's
-    dirs invisible to the fold, so the retry's atomic overwrite
-    replaces them as designed. Always pass the current batch id when
-    calling from inside a stream.
-
-    Legacy r9 stores migrate transparently: the pass renames
-    ``compact-<seg>[-all]-upto-<hi>`` segments to their explicit
-    from-lo forms (one atomic rename each) before anything else, so
-    the range math above never depends on positional derivation once
-    run folds exist (`_migrate_legacy_segment_names`).
-
-    CONCURRENCY CONTRACT — now enforced, not prose (VERDICT r9 wrong
-    #5): the pass holds an atomic-mkdir lease
+    CONCURRENCY CONTRACT: the pass holds an atomic-mkdir lease
     (``<path>/.maintenance-lock``) for its duration and fails loudly
     if another live pass holds it (`_maintenance_lease`; stale leases
     from crashed passes are detected by dead pid and stolen). Readers:
@@ -706,211 +578,135 @@ def compact_dataset_incremental(
     maintenance INSIDE the stream's own foreachBatch loop between
     batches (as in `incremental_pipeline.compact_chain_stores` and the
     live-stream test), where the processor is the only reader and
-    plans never span a pass. Decoupled readers need a snapshot layer
-    (the full-rewrite `compact_dataset` models it: it returns the
-    retired path and lets the caller delete after readers drain)."""
-    if isinstance(max_segments, str) and max_segments != "auto":
-        raise ValueError(
-            f"max_segments must be an int, None, or 'auto' (got "
-            f"{max_segments!r})"
-        )
-    if isinstance(max_segments, int) and max_segments < 1:
-        # max_segments=0 would make EVERY pass — including no-new-data
-        # ones — fold the entire live history into a fresh segment
-        # forever (live count 1 can never satisfy a cap of 0): a silent
-        # full-store rewrite loop, the exact pathology this function
-        # exists to avoid. Refuse the config instead.
-        raise ValueError(
-            f"max_segments must be >= 1 (got {max_segments}): a cap of 0 "
-            "is unsatisfiable and would re-fold the whole store on every "
-            "maintenance pass"
-        )
-    if max_segments is not None and level_ratio <= 1.0:
-        # the geometric rule degenerates at ratio <= 1 (every span is
-        # > ratio × an equal accumulation, so nothing ever folds past
-        # the forced rule) and "auto"'s log base would be <= 0
-        raise ValueError(
-            f"level_ratio must be > 1.0 when leveling (got {level_ratio})"
-        )
+    plans never span a pass."""
     with _maintenance_lease(path):
-        return _compact_incremental_locked(
-            spark, path, sort_cols, chunk_rows, max_files, max_segments,
-            before, level_ratio,
+        # validates every segment name before anything is touched
+        ranges = _seg_ranges(path)
+        watermark = _compact_watermark(path)
+        live = _live_segments(path)
+
+        # GC FIRST, every pass (including the no-op path): consumed
+        # batch dirs (id <= watermark), superseded segments (contained
+        # in a newer fold), and orphaned .staging-* dirs (a pass that
+        # crashed between write_sorted and its commit rename computes a
+        # different seg id/range next time, so its own pre-write sweep
+        # never matches the leftover name) are garbage a crash between
+        # a prior pass's commit and its delete loop can leave behind.
+        # Sweeping to the watermark at entry makes GC idempotent across
+        # passes, so watermark-unaware readers (plain batch-* globs)
+        # never double-count leftovers. Staging sweeps are safe under
+        # the lease: no other writer can have one in flight, and
+        # batch-writer staging (.staging-batch-*) only exists
+        # mid-crash, where the retry rewrites it from scratch anyway.
+        for d in globmod.glob(os.path.join(path, ".staging-*")):
+            shutil.rmtree(d, ignore_errors=True)
+        # steal carcasses a stealer crashed on (between its rename-aside
+        # and its rmtree) would otherwise leak forever. Age-gated so the
+        # milliseconds-wide wrongful-steal hand-back window in
+        # `_maintenance_lease` is never swept out from under a victim.
+        for d in globmod.glob(os.path.join(path, ".dead-lock-*")):
+            with contextlib.suppress(OSError):
+                if _time.time() - os.path.getmtime(d) > LEASE_STALE_AFTER:
+                    shutil.rmtree(d, ignore_errors=True)
+        for s in ranges:
+            if s not in live:
+                shutil.rmtree(s, ignore_errors=True)
+        for d in batch_dirs(path, 10**9):
+            if int(os.path.basename(d).split("-", 1)[1]) <= watermark:
+                shutil.rmtree(d, ignore_errors=True)
+
+        limit = 10**9 if before is None else before
+        new_batches = [
+            d
+            for d in batch_dirs(path, limit)
+            if int(os.path.basename(d).split("-", 1)[1]) > watermark
+        ]
+        new_span = (
+            int(os.path.basename(new_batches[-1]).split("-", 1)[1]) - watermark
+            if new_batches
+            else 0
         )
+        run = _pick_fold_run([ranges[s][1] - ranges[s][0] + 1 for s in live], new_span)
+        if not new_batches and not run:
+            return None
+        from ..sources.vortex import write_sorted
+
+        folded = live[len(live) - run :]
+        lo = ranges[folded[0]][0] if folded else watermark + 1
+        hi = watermark + new_span if new_batches else ranges[folded[-1]][1]
+        inputs = folded + new_batches
+        seg_id = max(map(_seg_id, ranges), default=-1) + 1
+        final = os.path.join(path, f"compact-{seg_id:08d}-from-{lo:08d}-upto-{hi:08d}")
+        df = spark.read.format("vortex").option("paths", _json.dumps(inputs)).load()
+        staging = os.path.join(path, f".staging-{os.path.basename(final)}")
+        shutil.rmtree(staging, ignore_errors=True)
+        write_sorted(
+            df, staging, sort_cols=sort_cols, chunk_rows=chunk_rows, num_files=max_files
+        )
+        os.rename(staging, final)  # the commit point
+        for d in inputs:  # idempotent GC of consumed batch dirs / segments
+            shutil.rmtree(d, ignore_errors=True)
+        return final
 
 
+# The live-segment cap never drops below this many segments. Tests lower
+# it to reach folds within a few batches.
 AUTO_SEGMENT_FLOOR = 4
 
 
-def _effective_cap(
-    max_segments: int | str | None,
-    total_span: int,
-    level_ratio: float,
-) -> int | None:
-    """Resolve the live-segment cap for one pass. ``"auto"`` scales
-    it with history — max(AUTO_SEGMENT_FLOOR, ceil(log_ratio(total
-    span))) — which is exactly the level count a pure geometric
-    ladder needs, so the forced-inclusion rule in `_pick_fold_run`
-    never fires ahead of the geometric rule and per-row rewrites stay
-    O(log(history)) (ADVICE r10: under any CONSTANT cap that bound is
-    unachievable — total work is Θ(n^(1+1/K))). Constant ints pass
-    through as hard caps; None disables leveling."""
-    if max_segments is None or isinstance(max_segments, int):
-        return max_segments
-    return max(
-        AUTO_SEGMENT_FLOOR,
-        _math.ceil(_math.log(max(total_span, 2)) / _math.log(level_ratio)),
-    )
+def _fold_cap(total_span: int) -> int:
+    """The live-segment cap of a pass over ``total_span`` batch ids:
+    max(AUTO_SEGMENT_FLOOR, ceil(log2(total span))), exactly the level
+    count a ratio-2 geometric ladder needs, so the forced-inclusion
+    rule in `_pick_fold_run` never fires ahead of the geometric rule
+    and per-row rewrites stay O(log history). Integer arithmetic:
+    ceil(log2(n)) is (n - 1).bit_length() for n >= 1."""
+    return max(AUTO_SEGMENT_FLOOR, (max(total_span, 2) - 1).bit_length())
 
 
-def _pick_fold_run(
-    spans: list[int],
-    new_span: int,
-    max_segments: int | str,
-    level_ratio: float,
-) -> int:
+def _pick_fold_run(spans: list[int], new_span: int) -> int:
     """The leveled fold policy, as a PURE function of the live layout
     (so its asymptotics are property-testable over thousands of
     simulated passes without a SparkSession —
-    tests/test_tiered_listing_property.py::test_leveled_policy_asymptotics_auto
-    and ::test_leveled_policy_hard_cap_bounds).
+    tests/test_tiered_listing_property.py).
 
-    Given the live segments' spans in RANGE order (oldest first), the
-    span of the new batches (0 if none), and the cap, return how many
-    TAIL segments to fold together with the new batches. Two rules
-    compose:
+    Given the live segments' spans in RANGE order (oldest first) and
+    the span of the new batches (0 if none), return how many TAIL
+    segments to fold together with the new batches; 0 when the pass
+    fits under the cap (`_fold_cap`) and only the new batches become a
+    segment. Past the cap, two rules compose:
 
     - forced inclusions: the fold output is one segment, so folding
-      ``run`` existing segments must leave (k - run) + 1 <= the
-      effective cap → run >= k + 1 - cap (`_effective_cap`: constant
-      ints are hard caps, ``"auto"`` grows the cap as
-      ceil(log_ratio(total span)));
+      ``run`` existing segments must leave (k - run) + 1 <= cap →
+      run >= k + 1 - cap;
     - geometric extension: keep including the predecessor while its
-      span is <= level_ratio × the span accumulated so far — the
-      size-tiered rule. Spans stay geometrically spaced (each level
-      >~ level_ratio × the sum below it), so the oldest giant is
-      re-folded only when the tail has genuinely caught up
-      (accumulated >= span(giant)/level_ratio), which happens
-      geometrically rarely.
-
-    Asymptotics (corrected per ADVICE r10): with ``"auto"`` the
-    forced rule never outpaces the geometric rule, so a row is
-    rewritten O(log(history)/log(level_ratio)) times total
-    (property-pinned: test_leveled_policy_asymptotics_auto). With a
-    CONSTANT cap K that bound is impossible — cap-forced tail refolds
-    make total work Θ(n^(1+1/K))
-    (test_leveled_policy_hard_cap_bounds pins the polynomial
-    envelope); constant caps are for bounded-history stores only."""
+      span is <= 2 × the span accumulated so far — the size-tiered
+      rule. Spans stay geometrically spaced, so the oldest giant is
+      re-folded only when the tail has genuinely caught up, which
+      happens geometrically rarely: a row is rewritten O(log history)
+      times in total."""
     k = len(spans)
-    cap = _effective_cap(max_segments, sum(spans) + new_span, level_ratio)
+    cap = _fold_cap(sum(spans) + new_span)
+    if k + (1 if new_span else 0) <= cap:
+        return 0
     need = k + 1 - cap
     acc = new_span
     run = 0
-    while run < k and (run < need or spans[k - run - 1] <= level_ratio * acc):
+    while run < k and (run < need or spans[k - run - 1] <= 2 * acc):
         acc += spans[k - run - 1]
         run += 1
     return run
 
 
-def _compact_incremental_locked(
-    spark,
-    path: str,
-    sort_cols: list[str],
-    chunk_rows: int,
-    max_files: int | None,
-    max_segments: int | None,
-    before: int | None,
-    level_ratio: float,
-) -> str | None:
-    watermark = _compact_watermark(path)
-
-    # GC FIRST, every pass (including the no-op path): consumed batch
-    # dirs (id <= watermark), superseded segments (contained in a newer
-    # fold), and orphaned .staging-* dirs (a pass that crashed between
-    # write_sorted and its commit rename computes a different seg
-    # id/range next time, so its own pre-write sweep never matches the
-    # leftover name — ADVICE r9) are garbage a crash between a prior
-    # pass's commit and its delete loop can leave behind. Only sweeping
-    # one's own inputs (the pre-r9 shape) never removed them, so the
-    # leftovers lingered forever and watermark-UNAWARE readers (plain
-    # batch-* globs) double-counted their rows (ADVICE r8). Sweeping to
-    # the watermark at entry makes GC genuinely idempotent across
-    # passes. Staging sweeps are safe under the lease: no other writer
-    # can have one in flight, and batch-writer staging
-    # (.staging-batch-*) only exists mid-crash, where the retry
-    # rewrites it from scratch anyway.
-    for d in globmod.glob(os.path.join(path, ".staging-*")):
-        shutil.rmtree(d, ignore_errors=True)
-    # steal carcasses a stealer crashed on (between its rename-aside
-    # and its rmtree) would otherwise leak forever. Age-gated so the
-    # milliseconds-wide wrongful-steal hand-back window in
-    # `_maintenance_lease` is never swept out from under a victim.
-    for d in globmod.glob(os.path.join(path, ".dead-lock-*")):
-        with contextlib.suppress(OSError):
-            if _time.time() - os.path.getmtime(d) > LEASE_STALE_AFTER:
-                shutil.rmtree(d, ignore_errors=True)
-    live = _live_segments(path)
-    for s in _segments(path):
-        if s not in live:
-            shutil.rmtree(s, ignore_errors=True)
-    for d in batch_dirs(path, 10**9):
-        if int(os.path.basename(d).split("-", 1)[1]) <= watermark:
-            shutil.rmtree(d, ignore_errors=True)
-
-    # migrate legacy r9 names BEFORE any run fold can commit — the
-    # positional range derivation for legacy minors is only sound
-    # while no run fold exists (`_seg_ranges`)
-    _migrate_legacy_segment_names(path)
-    live = _live_segments(path)  # re-list: migration renamed paths
-    ranges = _seg_ranges(path)
-
-    limit = 10**9 if before is None else before
-    new_batches = [
-        d
-        for d in batch_dirs(path, limit)
-        if int(os.path.basename(d).split("-", 1)[1]) > watermark
-    ]
-    k = len(live)
-    if not new_batches and not live:
-        return None
-    if new_batches:
-        hi = max(int(os.path.basename(d).split("-", 1)[1]) for d in new_batches)
-        new_span = hi - watermark  # span of the new pseudo-segment
-    else:
-        hi = ranges[live[-1]][1]
-        new_span = 0
-    spans = [ranges[s][1] - ranges[s][0] + 1 for s in live]
-    cap = _effective_cap(max_segments, sum(spans) + new_span, level_ratio)
-    over = cap is not None and (k + (1 if new_batches else 0)) > cap
-    if not new_batches and not over:
-        return None
-    from ..sources.vortex import write_sorted
-
-    run = _pick_fold_run(spans, new_span, max_segments, level_ratio) if over else 0
-    folded = live[k - run :] if run else []
-    lo = ranges[folded[0]][0] if folded else watermark + 1
-    inputs = folded + new_batches
-    seg_id = max((_seg_id(s) for s in _segments(path)), default=-1) + 1
-    final = os.path.join(path, f"compact-{seg_id:08d}-from-{lo:08d}-upto-{hi:08d}")
-    df = spark.read.format("vortex").option("paths", _json.dumps(inputs)).load()
-    staging = os.path.join(path, f".staging-{os.path.basename(final)}")
-    shutil.rmtree(staging, ignore_errors=True)
-    write_sorted(
-        df, staging, sort_cols=sort_cols, chunk_rows=chunk_rows, num_files=max_files
-    )
-    os.rename(staging, final)  # the commit point
-    for d in inputs:  # idempotent GC of consumed batch dirs / segments
-        shutil.rmtree(d, ignore_errors=True)
-    return final
-
-
 def read_vortex_dataset_tiered(spark, path: str) -> DataFrame:
-    """Read a dataset maintained by `compact_dataset_incremental`:
-    the LIVE segments (a newer fold supersedes every segment whose
-    range it contains — see `_live_segments`; listed in range order)
-    plus the batch dirs newer than the compaction watermark (batches
-    at/below it and superseded segments are consumed garbage, possibly
-    not yet GC'd — reading them would double-count)."""
+    """Read a streamed dataset — the batch dirs `write_stream_vortex`
+    or `overwrite_batch_atomic` committed, as maintained by
+    `compact_dataset_incremental`: the LIVE segments (a newer fold
+    supersedes every segment whose range it contains — see
+    `_live_segments`; listed in range order) plus the batch dirs newer
+    than the compaction watermark (batches at/below it and superseded
+    segments are consumed garbage, possibly not yet GC'd — reading
+    them would double-count)."""
     df = read_state(spark, path, 10**9)
     if df is None:
         raise FileNotFoundError(f"no segments or batches under {path!r}")

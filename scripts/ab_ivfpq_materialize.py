@@ -25,6 +25,7 @@ from duckdb_vortex_spark.catalog import load  # noqa: E402
 from duckdb_vortex_spark.operators.similarity import (  # noqa: E402
     PQ_COMPACT,
     IvfPqIndex,
+    codebook_rows,
     ivf_assign,
     ivfpq_index,
     ivfpq_probe,
@@ -44,11 +45,12 @@ def build_nopersist(emb, n_clusters, m, k_codes):
         emb, m=m, k=k_codes,
         centroids=centroids if k_codes == n_clusters else None,
     )
+    rows = codebook_rows(centroids)
     cand = pq_encode(
-        ivf_assign(emb, centroids, 1),
+        ivf_assign(emb, centroids, 1, rows=rows),
         books, passthrough=("cluster_id",),
     ).select(F.col("vec_id").alias("cand_id"), "cluster_id", "codes")
-    return IvfPqIndex(centroids, books, cand)
+    return IvfPqIndex(centroids, books, cand, rows)
 
 
 def main() -> None:

@@ -16,15 +16,17 @@ Expected slope sources that are NOT failures (documented):
     near-dups the corpus actually contains.
 
 r9: the integrated-chain run is extended to ~20 batches with
-`compact_chain_stores` interleaved every COMPACT_EVERY batches (all
-four state stores, max_segments-bounded major merges), recording BOTH
+`compact_chain_stores` interleaved every COMPACT_EVERY batches (every
+chain state store, leveled run folds under the history-scaled segment
+cap), recording BOTH
 per-batch wall seconds and the per-state-read file count — the r8 bug's
 signature was file-count growth, and with compaction in the loop both
 curves must stay flat ACROSS compaction points, not just within the
 first few batches. The 24/7 posture this certifies: state reads open
-at most (max_segments + compact_every) dirs per store forever.
+at most (cap + compact_every) dirs per store, with the cap
+max(4, ceil(log2(batches))) growing only logarithmically.
 
-Usage: python scripts/breakdown_incremental_flatness.py [n_batches] [chain_batches] [compact_every] [max_segments]
+Usage: python scripts/breakdown_incremental_flatness.py [n_batches] [chain_batches] [compact_every]
 Prints one JSON line per operator.
 """
 
@@ -71,7 +73,6 @@ def main() -> None:
     n_batches = int(sys.argv[1]) if len(sys.argv) > 1 else 6
     chain_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 20
     compact_every = int(sys.argv[3]) if len(sys.argv) > 3 else 4
-    max_segments = int(sys.argv[4]) if len(sys.argv) > 4 else 4
     spark = get_spark("dvs-incremental-flatness")
     register(spark)
     docs = load(spark, SF_DIR, "documents").persist()
@@ -112,9 +113,7 @@ def main() -> None:
         ctimes.append(round(time.monotonic() - t0, 2))
         if b % compact_every == 0:
             t0 = time.monotonic()
-            res = compact_chain_stores(
-                spark, root, max_segments=max_segments, before=b + 1
-            )
+            res = compact_chain_stores(spark, root, before=b + 1)
             # classify the pass by the widest fold it committed: a
             # from-0 fold rewrote the full prefix ("major"); any other
             # run fold left the giant alone — with the r10 leveled
@@ -134,7 +133,6 @@ def main() -> None:
     out["chain_state_files_before_batch"] = cfiles
     out["chain_compactions_at_s"] = compactions
     out["compact_every"] = compact_every
-    out["max_segments"] = max_segments
     out["chain_last_over_first"] = round(ctimes[-1] / ctimes[0], 2)
     # flatness across compaction points: mean of last quarter vs mean
     # of second quarter (first quarter excluded — empty-state batches)

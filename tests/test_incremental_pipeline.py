@@ -366,16 +366,20 @@ def test_retried_batch_is_idempotent(spark, tmp_path):
     assert fps[1] == fps[3] and fps[1] != fps[2]
 
 
-def test_chain_state_file_count_bounded(spark, tmp_path):
+def test_chain_state_file_count_bounded(spark, tmp_path, monkeypatch):
     """The 24/7 posture: with `compact_chain_stores` interleaved every
-    K batches (max_segments-bounded, max_files-bounded segments), a
-    batch's state read opens at most
-    (max_segments + K) dirs * max-files-per-dir per store NO MATTER how
-    many batches have ever landed — file-count growth was the exact
-    signature of the r8 +2 s/batch bug, so the bound is pinned
-    structurally (cheap, no timing). Also asserts the manifest equals
-    the never-compacted run: repeated compaction — including major
-    merges — must not change a single row."""
+    K batches (cap-bounded live segments, max_files-bounded segments),
+    a batch's state read opens at most (cap + K) dirs *
+    max-files-per-dir per store, the cap growing only as
+    ceil(log2(history)) — file-count growth was the exact signature of
+    the r8 +2 s/batch bug, so the bound is pinned structurally (cheap,
+    no timing). The floor is lowered to 1 so run folds start within the
+    run. Also asserts the manifest equals the never-compacted run:
+    repeated compaction — including run folds — must not change a
+    single row."""
+    import math
+
+    from duckdb_vortex_spark.streaming import sinks
     from duckdb_vortex_spark.streaming.incremental_pipeline import (
         CHAIN_STORE_SORT,
         compact_chain_stores,
@@ -383,11 +387,12 @@ def test_chain_state_file_count_bounded(spark, tmp_path):
     from duckdb_vortex_spark.streaming.sinks import STATE_FILES, state_dirs
 
     register(spark)
+    monkeypatch.setattr(sinks, "AUTO_SEGMENT_FLOOR", 1)
     corpus = _corpus(spark, limit=135).persist()
     emb = load(spark, SF_DIR, "embeddings")
     centroids = sample_centroids(emb, 16)
     ids = sorted(r["doc_id"] for r in corpus.select("doc_id").collect())
-    n_batches, every, max_segments = 9, 3, 2
+    n_batches, every = 9, 1
     step = (len(ids) + n_batches - 1) // n_batches
     chunks = [ids[i * step : (i + 1) * step] for i in range(n_batches)]
 
@@ -402,7 +407,8 @@ def test_chain_state_file_count_bounded(spark, tmp_path):
     }
 
     root = str(tmp_path / "maintained")
-    bound_dirs = max_segments + every
+    # the last pass folds batch ids 0..n_batches: the largest cap of the run
+    bound_dirs = math.ceil(math.log2(n_batches + 1)) + every
     bound_files = bound_dirs * STATE_FILES
     counts: list[int] = []
     for b, chunk in enumerate(chunks, start=1):
@@ -420,8 +426,11 @@ def test_chain_state_file_count_bounded(spark, tmp_path):
             corpus.filter(F.col("doc_id").isin(chunk)), b, centroids, root
         )
         if b % every == 0:
-            compact_chain_stores(spark, root, max_segments=max_segments)
-    # content: repeated compaction (incl. majors) changed nothing
+            compact_chain_stores(spark, root)
+    # one segment per pass unless run folds merged them
+    for store in CHAIN_STORE_SORT:
+        assert len(sinks._live_segments(os.path.join(root, store))) < n_batches, store
+    # content: repeated compaction (incl. run folds) changed nothing
     got = {
         r["doc_id"]: (r["stage"], r["is_kept"])
         for r in _manifest(spark, root).collect()
@@ -490,19 +499,22 @@ def _replay_files(spark, corpus, src, n_files, order_col="doc_id"):
             os.utime(f, (base_t + 60 * i, base_t + 60 * i))
 
 
-def test_live_stream_with_interleaved_compaction(spark, tmp_path):
+def test_live_stream_with_interleaved_compaction(spark, tmp_path, monkeypatch):
     """Maintenance against a LIVE StreamingQuery (VERDICT r8 #6): a
     foreachBatch sink that runs `compact_chain_stores` on the
     checkpoint-committed batches before processing each new one — the
-    24/7 deployment shape — must produce exactly the batch-mode
+    24/7 deployment shape, here with the floor lowered to 1 so a run
+    fold lands mid-stream — must produce exactly the batch-mode
     manifest; and a fold that swallows a still-retryable batch must
     fail LOUDLY on the mid-stream retry, surfacing through the
     StreamingQueryException, not silently self-join."""
+    from duckdb_vortex_spark.streaming import sinks
     from duckdb_vortex_spark.streaming.incremental_pipeline import (
         compact_chain_stores,
     )
 
     register(spark)
+    monkeypatch.setattr(sinks, "AUTO_SEGMENT_FLOOR", 1)
     corpus = (
         _corpus(spark, limit=80).select("doc_id", "source", "text", "vec").persist()
     )
@@ -521,16 +533,21 @@ def test_live_stream_with_interleaved_compaction(spark, tmp_path):
     _replay_files(spark, corpus, src, n_files=4)
     root, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
     compacted_at: list[int] = []
+    run_folded_at: list[int] = []
 
     def sink(batch_df, batch_id):
         if batch_id >= 1:
+            raw = os.path.join(root, "raw")
+            watermark = sinks._compact_watermark(raw)
             # before=batch_id (ADVICE r9): even if a previous attempt
             # of THIS batch crashed mid-chain and left partial state
             # dirs, the maintenance pass must not fold them — only
             # strictly earlier, checkpoint-committed batches
-            res = compact_chain_stores(spark, root, max_segments=2, before=batch_id)
+            res = compact_chain_stores(spark, root, before=batch_id)
             if any(v is not None for v in res.values()):
                 compacted_at.append(batch_id)
+            if res["raw"] and sinks._seg_ranges(raw)[res["raw"]][0] <= watermark:
+                run_folded_at.append(batch_id)  # took a live segment along
         ingest_process_batch(batch_df, batch_id, centroids, root)
 
     stream = (
@@ -547,6 +564,7 @@ def test_live_stream_with_interleaved_compaction(spark, tmp_path):
     q.awaitTermination()
     q.stop()
     assert len(compacted_at) >= 2, "compaction never ran mid-stream"
+    assert run_folded_at, "no run fold ran mid-stream"
     got = {
         r["doc_id"]: (r["stage"], r["is_kept"])
         for r in _manifest(spark, root).collect()
@@ -654,7 +672,7 @@ def test_stream_restart_resumes_batch_ids_across_compaction(spark, tmp_path):
     run_session()
     assert len(batch_dirs(os.path.join(root, "man"), 10**9)) == 2
     # maintenance while the stream is DOWN: fold batches 0-1
-    res = compact_chain_stores(spark, root, max_segments=2)
+    res = compact_chain_stores(spark, root)
     assert any(v is not None for v in res.values())
     assert _segments(os.path.join(root, "lsh")), "lsh store not compacted"
 
@@ -799,13 +817,16 @@ def test_stream_restart_after_crashed_fold_under_lease(spark, tmp_path):
 
     # crash a maintenance pass mid-fold: fold commits on every store,
     # ALL GC skipped, and the raw store's lease is left held by a pid
-    # that no longer exists (the pass died before releasing)
-    orig = sinks.shutil.rmtree
+    # that no longer exists (the pass died before releasing). Floor 1
+    # puts the two live segments + batch 2 over the cap, so the pass
+    # run-folds them
+    orig = sinks.shutil.rmtree, sinks.AUTO_SEGMENT_FLOOR
     try:
         sinks.shutil.rmtree = lambda *a, **kw: None
-        compact_chain_stores(spark, root, max_segments=1, before=3)
+        sinks.AUTO_SEGMENT_FLOOR = 1
+        compact_chain_stores(spark, root, before=3)
     finally:
-        sinks.shutil.rmtree = orig
+        sinks.shutil.rmtree, sinks.AUTO_SEGMENT_FLOOR = orig
     # the lease releases via os.rmdir (decoupled from the disabled GC
     # machinery by design), so re-create it as the crashed pass left
     # it: held by a pid that no longer exists

@@ -154,11 +154,13 @@ def test_real_stream_drive(spark, tmp_path):
 
 def test_index_compaction_preserves_candidates(spark, tmp_path):
     """Lifecycle: after many small streamed batches, compact the
-    semantic index back to one cluster-sorted dataset — future batches
-    read the compacted layout and produce identical manifests."""
+    semantic index into one cluster-sorted segment — the next batch
+    reads the compacted layout through `state_dirs` and produces an
+    identical manifest."""
     from duckdb_vortex_spark.streaming.sinks import (
-        compact_dataset,
-        read_vortex_dataset,
+        compact_dataset_incremental,
+        read_vortex_dataset_tiered,
+        state_dirs,
     )
 
     register(spark)
@@ -178,21 +180,12 @@ def test_index_compaction_preserves_candidates(spark, tmp_path):
     ]
     semdedup_process_batch(b[0], 0, centroids, *dirs)
     semdedup_process_batch(b[1], 1, centroids, *dirs)
-    n_before = read_vortex_dataset(spark, dirs[0]).count()
-    retired = compact_dataset(spark, dirs[0], sort_cols=["cluster_id", "id"])
-    import shutil as _sh
-
-    _sh.rmtree(retired)
-    assert read_vortex_dataset(spark, dirs[0]).count() == n_before
-    # compacted layout is flat part files; batch_dirs finds no
-    # batch-* dirs, so later batches must read it as "batch 0" state:
-    # re-wrap the compacted dataset as a single committed batch dir
-    flat = read_vortex_dataset(spark, dirs[0])
-    rewrapped = str(tmp_path / "idx2")
-    from duckdb_vortex_spark.streaming.sinks import overwrite_batch_atomic
-
-    overwrite_batch_atomic(flat, rewrapped, 1)
-    semdedup_process_batch(b[2], 2, centroids, rewrapped, dirs[1])
+    n_before = read_vortex_dataset_tiered(spark, dirs[0]).count()
+    seg = compact_dataset_incremental(spark, dirs[0], ["cluster_id", "id"], before=2)
+    # batch 2's prior state is exactly the one compacted segment
+    assert state_dirs(dirs[0], 2) == [seg]
+    assert read_vortex_dataset_tiered(spark, dirs[0]).count() == n_before
+    semdedup_process_batch(b[2], 2, centroids, *dirs)
     got = {r["vec_id"]: r["keep"] for r in _manifest(spark, dirs[1]).collect()}
     assert got == want
     emb.unpersist()

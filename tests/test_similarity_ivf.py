@@ -153,12 +153,30 @@ def test_two_level_assignment_probe2_recall_and_plan(spark):
     assert "Exchange" not in plan, plan
 
 
+def _second_probe_jobs(spark, probe, index, q) -> int:
+    """Spark jobs submitted while building a second probe of ``index``
+    on ``q``: none, because a built or loaded index holds its collected
+    codebook rows."""
+    import os
+
+    probe(index, q, k=5, n_probe=2)
+    sc = spark.sparkContext
+    group = f"second-probe-{os.getpid()}-{id(index)}"
+    sc.setJobGroup(group, group)
+    try:
+        probe(index, q, k=5, n_probe=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_ivf_index_roundtrip_probe_identical(spark, tmp_path):
     """r13 stored-index artifact: write_ivf_index partitions the
     assigned corpus by cluster_id; a reloaded index must probe
     IDENTICALLY to the in-memory one, and the cand scan must be
     partition-pruned on cluster_id (the bucketed-by-cluster layout's
-    whole point)."""
+    whole point). Neither index collects its codebook again per probe."""
     from duckdb_vortex_spark.catalog import load
     from duckdb_vortex_spark.operators.similarity import (
         ivf_index,
@@ -179,6 +197,9 @@ def test_ivf_index_roundtrip_probe_identical(spark, tmp_path):
     assert sorted(map(tuple, got_df.collect())) == want
     plan = got_df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan, plan[:1500]
+    assert idx2.rows == idx.rows
+    assert _second_probe_jobs(spark, ivf_probe, idx, q) == 0
+    assert _second_probe_jobs(spark, ivf_probe, idx2, q) == 0
 
 
 def test_ivfpq_index_roundtrip_probe_identical(spark, tmp_path):
@@ -200,7 +221,9 @@ def test_ivfpq_index_roundtrip_probe_identical(spark, tmp_path):
     want = sorted(map(tuple, ivfpq_probe(idx, q, k=5, n_probe=2).collect()))
     write_ivfpq_index(idx, str(tmp_path / "pq"))
     idx2 = read_ivfpq_index(spark, str(tmp_path / "pq"))
-    assert idx2.books == idx.books
+    assert idx2.books == idx.books and idx2.rows == idx.rows
+    assert _second_probe_jobs(spark, ivfpq_probe, idx, q) == 0
+    assert _second_probe_jobs(spark, ivfpq_probe, idx2, q) == 0
     got = sorted(map(tuple, ivfpq_probe(idx2, q, k=5, n_probe=2).collect()))
     assert got == want
     # r14: the rerank path over the RELOADED index — the stored-artifact
@@ -551,9 +574,14 @@ def test_ivf_assign_nonfinite_centroid_falls_back(spark):
     (1-probe argmin, multi-probe slice) to the join fallback —
     computing through, same rows as a budget-forced fallback —
     instead of raising. The fallback orders every n_probe by one key,
-    so each vector's 1-probe cell is among its 2-probe cells."""
+    so each vector's 1-probe cell is among its 2-probe cells. The
+    two-level assignment's driver-side fine→coarse map falls back the
+    same way on a null element: same cells as ivf_assign."""
     from duckdb_vortex_spark.operators import similarity
-    from duckdb_vortex_spark.operators.similarity import ivf_assign
+    from duckdb_vortex_spark.operators.similarity import (
+        ivf_assign,
+        ivf_assign_two_level,
+    )
 
     emb = load(spark, SF_DIR, "embeddings").limit(50)
     tables = {
@@ -586,6 +614,12 @@ def test_ivf_assign_nonfinite_centroid_falls_back(spark):
             assert got[n_probe] == rows(want), (name, n_probe)
         assert len(got[1]) == 50, name
         assert set(got[1]) <= set(got[2]), name
+
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [None, 1.0])], "cluster_id int, centroid array<double>"
+    )
+    emb2 = emb.select("vec_id", F.slice("embedding", 1, 2).alias("embedding"))
+    assert rows(ivf_assign_two_level(emb2, cents)) == rows(ivf_assign(emb2, cents, 1))
 
 
 def test_two_level_literal_path_equals_join_form(spark):

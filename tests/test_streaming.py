@@ -128,7 +128,7 @@ def test_stream_to_vortex_sink(spark, event_stream_dir, tmp_path):
     container encoders, with per-batch idempotent directories."""
     from duckdb_vortex_spark.sources.vortex import register
     from duckdb_vortex_spark.streaming.sinks import (
-        read_vortex_dataset,
+        read_vortex_dataset_tiered,
         write_stream_vortex,
     )
 
@@ -151,7 +151,7 @@ def test_stream_to_vortex_sink(spark, event_stream_dir, tmp_path):
 
     batch_dirs = sorted(g.glob(os.path.join(out, "batch-*")))
     assert len(batch_dirs) >= 2  # maxFilesPerTrigger split the input
-    back = read_vortex_dataset(spark, out)
+    back = read_vortex_dataset_tiered(spark, out)
     assert back.count() == base.count()
     assert _rows(back.select("event_id", "user_id")) == _rows(
         base.select("event_id", "user_id")
@@ -200,16 +200,17 @@ def test_vortex_streaming_source(spark, tmp_path):
 
 
 def test_compact_streamed_dataset(spark, event_stream_dir, tmp_path):
-    """Many small streamed batch files compact into one sorted layout:
-    same rows, fewer files, tight zone maps on the sort key."""
+    """Many small streamed batch files compact into one sorted segment:
+    same rows through the one store reader, fewer files, tight zone
+    maps on the sort key."""
     import glob as g
 
     from pyspark.sql import functions as F
 
     from duckdb_vortex_spark.sources.vortex import FILE_SUFFIX, register
     from duckdb_vortex_spark.streaming.sinks import (
-        compact_dataset,
-        read_vortex_dataset,
+        compact_dataset_incremental,
+        read_vortex_dataset_tiered,
         write_stream_vortex,
     )
 
@@ -227,22 +228,25 @@ def test_compact_streamed_dataset(spark, event_stream_dir, tmp_path):
     )
     q.awaitTermination()
     q.stop()
-    n_files_before = len(g.glob(os.path.join(out, "**", f"*{FILE_SUFFIX}"), recursive=True))
-    before = {r.event_id for r in read_vortex_dataset(spark, out).collect()}
 
-    retired = compact_dataset(spark, out, sort_cols=["event_id"], chunk_rows=4096)
-    n_files_after = len(g.glob(os.path.join(out, f"part-*{FILE_SUFFIX}")))
-    after_df = spark.read.format("vortex").load(out)
+    def n_files():
+        return len(g.glob(os.path.join(out, "**", f"*{FILE_SUFFIX}"), recursive=True))
+
+    n_files_before = n_files()
+    before = {r.event_id for r in read_vortex_dataset_tiered(spark, out).collect()}
+
+    seg = compact_dataset_incremental(spark, out, sort_cols=["event_id"], chunk_rows=4096)
+    assert seg is not None and not g.glob(os.path.join(out, "batch-*"))
+    after_df = read_vortex_dataset_tiered(spark, out)
     assert {r.event_id for r in after_df.collect()} == before
-    assert n_files_after < n_files_before
-    assert os.path.isdir(retired)
+    assert n_files() < n_files_before
     # compacted layout prunes on the sort key
     from pyspark.sql.datasource import GreaterThan
 
     from duckdb_vortex_spark.sources.vortex import VortexReader
 
     mx = after_df.agg(F.max("event_id")).collect()[0][0]
-    r = VortexReader({"path": out}, after_df.schema)
+    r = VortexReader({"path": seg}, after_df.schema)
     n_all = len(r.partitions())
     r.pushed = [GreaterThan(("event_id",), int(mx))]
     assert len(r.partitions()) <= max(1, n_all // 2)
@@ -254,7 +258,7 @@ def test_read_vortex_as_of_batches(spark, tmp_path):
     from duckdb_vortex_spark.sources.vortex import register
     from duckdb_vortex_spark.streaming.sinks import (
         read_vortex_as_of,
-        read_vortex_dataset,
+        read_vortex_dataset_tiered,
         write_stream_vortex,
     )
 
@@ -277,7 +281,7 @@ def test_read_vortex_as_of_batches(spark, tmp_path):
 
     n_batches = len(_g.glob(_os.path.join(out, "batch-*")))
     assert n_batches >= 2
-    total = read_vortex_dataset(spark, out).count()
+    total = read_vortex_dataset_tiered(spark, out).count()
     as_of_last = read_vortex_as_of(spark, out, n_batches - 1).count()
     as_of_first = read_vortex_as_of(spark, out, 0).count()
     assert as_of_last == total == ev.count()
@@ -339,11 +343,11 @@ def test_sink_exactly_once_replay_and_staging_invisibility(spark, tmp_path):
     # first attempt commits batch 0
     sink_fn(df, 0)
     assert os.path.isdir(os.path.join(out, "batch-00000000"))
-    assert S.read_vortex_dataset(spark, out).count() == 100
+    assert S.read_vortex_dataset_tiered(spark, out).count() == 100
 
     # checkpoint replay of the SAME batch id: must not duplicate
     sink_fn(df, 0)
-    assert S.read_vortex_dataset(spark, out).count() == 100
+    assert S.read_vortex_dataset_tiered(spark, out).count() == 100
 
     # crashed attempt for batch 1: stale staging dir with junk inside,
     # invisible to readers, cleaned and committed by the retry
@@ -351,10 +355,10 @@ def test_sink_exactly_once_replay_and_staging_invisibility(spark, tmp_path):
     os.makedirs(staging)
     with open(os.path.join(staging, "part-junk.vortex"), "wb") as f:
         f.write(b"not a real vortex file")
-    assert S.read_vortex_dataset(spark, out).count() == 100
+    assert S.read_vortex_dataset_tiered(spark, out).count() == 100
     sink_fn(df.limit(10), 1)
     assert not os.path.exists(staging)
-    assert S.read_vortex_dataset(spark, out).count() == 110
+    assert S.read_vortex_dataset_tiered(spark, out).count() == 110
 
 
 def test_sink_rejects_fresh_checkpoint_over_existing_batches(spark, tmp_path):
@@ -490,69 +494,79 @@ def test_incremental_compaction_crash_before_gc_never_double_reads(spark, tmp_pa
     assert sinks.read_vortex_dataset_tiered(spark, path).count() == 500
 
 
-def test_major_compaction_bounds_live_segments(spark, tmp_path):
-    """max_segments triggers the MAJOR tier: live segments + new
-    batches fold into one compact-<seg>-all-upto-<hi> segment, old
-    segments are superseded by seg id (crash-safe even before GC),
-    content is preserved exactly, and the live listing stays bounded
-    no matter how many batches ever landed."""
-    import glob as g
-
+def test_major_compaction_bounds_live_segments(spark, tmp_path, monkeypatch):
+    """Leveling keeps the live listing within the history-scaled cap:
+    past it, live segments + new batches fold into one
+    compact-<seg>-from-<lo>-upto-<hi> segment, folded segments are
+    superseded by containment (crash-safe even before GC), content is
+    preserved exactly. The floor is lowered to 1 so folds start within
+    a few batches."""
     import duckdb_vortex_spark.streaming.sinks as sinks
     from duckdb_vortex_spark.operators.pipeline import snapshot_diff
     from duckdb_vortex_spark.sources.vortex import register
 
     register(spark)
+    monkeypatch.setattr(sinks, "AUTO_SEGMENT_FLOOR", 1)
     path = str(tmp_path / "lsm")
-    rows = spark.range(0, 2400).select(
+    rows = spark.range(0, 3600).select(
         F.col("id").alias("k"), (F.col("id") * 13 % 997).alias("v")
     )
-    for b in range(6):
+
+    def land(b):
         sinks.overwrite_batch_atomic(
             rows.filter((F.col("k") >= b * 400) & (F.col("k") < (b + 1) * 400)), path, b
         )
-        seg = sinks.compact_dataset_incremental(
-            spark, path, sort_cols=["k"], max_files=2, max_segments=2
-        )
+
+    for b in range(6):
+        land(b)
+        seg = sinks.compact_dataset_incremental(spark, path, sort_cols=["k"], max_files=2)
         assert seg is not None
         live = sinks._live_segments(path)
-        assert len(live) <= 2, f"live segments unbounded: {live}"
+        assert len(live) <= sinks._fold_cap(b + 1), f"live segments past the cap: {live}"
         # every live segment respects the max_files bound
         for s in live:
             assert len([f for f in os.listdir(s) if not f.startswith(".")]) <= 2
-    # 6 passes with max_segments=2 must have gone major at least once
-    assert any(sinks._is_major(s) for s in sinks._live_segments(path))
+    # each pass brought one batch, so a segment spanning several folded
+    # earlier segments: the leveled fold ran
+    assert any(hi > lo for lo, hi in sinks._seg_ranges(path).values())
     # superseded segments were GC'd; content is exact
     assert set(sinks._segments(path)) == set(sinks._live_segments(path))
     back = sinks.read_vortex_dataset_tiered(spark, path)
     assert back.count() == 2400
-    assert snapshot_diff(rows, back, "k", ["v"]).count() == 0
+    assert snapshot_diff(rows.filter(F.col("k") < 2400), back, "k", ["v"]).count() == 0
 
-    # crash-safety: commit a pure-maintenance major (no new batches —
-    # max_segments=1 forces the merge) but skip GC: the tiered read
-    # must ignore the superseded segments by seg id alone
+    # crash-safety: three minor-only passes (a floor no history reaches)
+    # push the live count past the cap, then a pure-maintenance fold (no
+    # new batches) commits with GC skipped: the tiered read must ignore
+    # the superseded segments by containment alone
+    monkeypatch.setattr(sinks, "AUTO_SEGMENT_FLOOR", 10**6)
+    for b in range(6, 9):
+        land(b)
+        assert sinks.compact_dataset_incremental(spark, path, sort_cols=["k"], max_files=2)
+    monkeypatch.setattr(sinks, "AUTO_SEGMENT_FLOOR", 1)
     orig = sinks.shutil.rmtree
     try:
         sinks.shutil.rmtree = lambda *a, **kw: None
-        sinks.compact_dataset_incremental(
-            spark, path, sort_cols=["k"], max_files=2, max_segments=1
-        )
+        seg = sinks.compact_dataset_incremental(spark, path, sort_cols=["k"], max_files=2)
     finally:
         sinks.shutil.rmtree = orig
+    assert seg is not None, "the pure-maintenance fold must run"
     assert len(sinks._segments(path)) > len(sinks._live_segments(path))
-    assert sinks.read_vortex_dataset_tiered(spark, path).count() == 2400
+    assert sinks.read_vortex_dataset_tiered(spark, path).count() == 3600
 
 
-def test_compaction_random_interleaving_content_exact(spark, tmp_path):
+def test_compaction_random_interleaving_content_exact(spark, tmp_path, monkeypatch):
     """REAL-DATA twin of the tiered-listing property test: the
     hypothesis sweep checks the directory MATH over hundreds of
     histories; this drives actual vortex data through seeded random
-    append / minor / major / crash-GC interleavings and asserts after
+    append / minor / leveled / crash-GC interleavings and asserts after
     EVERY op that the tiered read returns exactly the appended content
     (count + full row-level snapshot_diff at the end of each history).
     Catches implementation divergence the simulated layouts can't —
     e.g. a fold that wrote the wrong rows while the dir names tiled
-    perfectly."""
+    perfectly. A minor pass runs under a floor no history reaches (it
+    folds only the new batches); a leveled pass under floor 1, so run
+    folds start within a few batches."""
     import random
 
     import duckdb_vortex_spark.streaming.sinks as sinks
@@ -565,11 +579,12 @@ def test_compaction_random_interleaving_content_exact(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") * 31 % 613).alias("v")
     ).persist()
 
+    run_folds = crash_leftovers = 0
     for h in range(4):
         path = str(tmp_path / f"soak{h}")
         next_batch, n_appended = 0, 0
         ops = rng.choices(
-            ["batch", "batch", "minor", "major", "leveled", "minor_crash",
+            ["batch", "batch", "minor", "leveled", "leveled", "minor_crash",
              "leveled_crash"],
             k=10,
         )
@@ -581,40 +596,33 @@ def test_compaction_random_interleaving_content_exact(spark, tmp_path):
                 sinks.overwrite_batch_atomic(chunk, path, next_batch)
                 next_batch += 1
                 n_appended += 150
-            elif n_appended == 0:
+                continue
+            if n_appended == 0:
                 continue  # nothing to fold yet
-            elif op == "minor":
-                sinks.compact_dataset_incremental(
+            floor = 1 if op.startswith("leveled") else 10**6
+            monkeypatch.setattr(sinks, "AUTO_SEGMENT_FLOOR", floor)
+            watermark = sinks._compact_watermark(path)
+            orig = sinks.shutil.rmtree
+            try:
+                if op.endswith("_crash"):  # segment commits, ALL GC skipped
+                    sinks.shutil.rmtree = lambda *a, **kw: None
+                seg = sinks.compact_dataset_incremental(
                     spark, path, sort_cols=["k"], max_files=2
                 )
-            elif op == "major":
-                sinks.compact_dataset_incremental(
-                    spark, path, sort_cols=["k"], max_files=2, max_segments=1
-                )
-            elif op == "leveled":
-                # r10: bounded live count via tail RUN folds (spares
-                # the giant when the tail is small — see the leveled
-                # trigger), interleaved with the full-fold majors above
-                sinks.compact_dataset_incremental(
-                    spark, path, sort_cols=["k"], max_files=2, max_segments=2
-                )
-            else:  # *_crash: segment commits, ALL GC skipped
-                orig = sinks.shutil.rmtree
-                try:
-                    sinks.shutil.rmtree = lambda *a, **kw: None
-                    sinks.compact_dataset_incremental(
-                        spark, path, sort_cols=["k"], max_files=2,
-                        max_segments=2 if op == "leveled_crash" else None,
-                    )
-                finally:
-                    sinks.shutil.rmtree = orig
-            if n_appended:
-                got = sinks.read_vortex_dataset_tiered(spark, path).count()
-                assert got == n_appended, (h, op, ops)
+            finally:
+                sinks.shutil.rmtree = orig
+            if seg is not None and sinks._seg_ranges(path)[seg][0] <= watermark:
+                run_folds += 1  # the fold took existing segments along
+            if op.endswith("_crash") and seg is not None:
+                crash_leftovers += 1
+            got = sinks.read_vortex_dataset_tiered(spark, path).count()
+            assert got == n_appended, (h, op, ops)
         if n_appended:
             want = base_rows.filter(F.col("k") < n_appended)
             back = sinks.read_vortex_dataset_tiered(spark, path)
             assert snapshot_diff(want, back, "k", ["v"]).count() == 0, (h, ops)
+    # both paths the interleavings exist for actually ran
+    assert run_folds >= 1 and crash_leftovers >= 1, (run_folds, crash_leftovers)
     base_rows.unpersist()
 
 
@@ -754,11 +762,14 @@ def test_maintenance_before_bound_unwedges_batch_retry(spark, tmp_path):
 
 
 def test_leveled_runfold_spares_the_giant(spark, tmp_path):
-    """The r10 leveled trigger kills the O(history)-every-major curve
-    (CHANGES_r9 §11, measured 4.6→6.7 s): with max_segments=4 and one
-    batch per pass, the oldest (giant) segment must be re-folded only
+    """The leveled trigger kills the O(history)-every-major curve
+    (measured 4.6→6.7 s under the old all-fold policy): with one batch
+    per pass, the oldest (giant) segment must be re-folded only
     geometrically rarely — most folds touch only the small recent tail
-    — while the live count stays bounded and content stays exact."""
+    — while every pass keeps the live count within the history-scaled
+    cap max(4, ceil(log2(history))) and content stays exact."""
+    import math
+
     import duckdb_vortex_spark.streaming.sinks as sinks
     from duckdb_vortex_spark.operators.pipeline import snapshot_diff
     from duckdb_vortex_spark.sources.vortex import register
@@ -776,73 +787,55 @@ def test_leveled_runfold_spares_the_giant(spark, tmp_path):
             path,
             b,
         )
-        seg = sinks.compact_dataset_incremental(
-            spark, path, sort_cols=["k"], max_files=2, max_segments=4
-        )
+        seg = sinks.compact_dataset_incremental(spark, path, sort_cols=["k"], max_files=2)
         assert seg is not None
         lo, hi = sinks._seg_ranges(path)[seg]
         fold_spans.append(hi - lo + 1)
         if lo == 0 and b > 0:
             giant_folds += 1
-        assert len(sinks._live_segments(path)) <= 4
+        assert len(sinks._live_segments(path)) <= max(4, math.ceil(math.log2(b + 1)))
     # geometric rarity: the full-prefix fold happened, but only
-    # O(log n) times — r9's all-fold policy would have done it every
+    # O(log n) times — an all-fold policy would have done it every
     # pass past the bound (~20 times here)
     assert 1 <= giant_folds <= 6, (giant_folds, fold_spans)
     # most passes are cheap: at least half the folds touch <= 1/3 of history
     small = sum(1 for i, s in enumerate(fold_spans) if s <= max(2, (i + 1) // 3))
     assert small >= n // 2, fold_spans
-    # write amplification stays O(n log n), not r9's O(n^2 / max_segments)
+    # write amplification stays O(n log n), not an all-fold's O(n^2 / cap)
     assert sum(fold_spans) <= n * 8, fold_spans
     back = sinks.read_vortex_dataset_tiered(spark, path)
     assert back.count() == n * per
     assert snapshot_diff(rows, back, "k", ["v"]).count() == 0
 
 
-def test_legacy_name_migration_preserves_ranges(tmp_path):
-    """An r9-era store (legacy minor + all-major names, including a
-    crash-leftover superseded segment) migrates to explicit from-lo
-    names with exactly the ranges the r9 rules implied, idempotently;
-    live/watermark math is unchanged across the rename."""
+def test_unparseable_segment_name_fails_loudly(spark, tmp_path):
+    """A store on disk is input from outside the program: a compact-*
+    dir whose name does not parse as compact-<seg>-from-<lo>-upto-<hi>
+    (here an old compact-<seg>-all-upto-<hi> name) has no known batch
+    range, so skipping it would drop its rows. The listing, the tiered
+    read and a compaction pass all raise naming it, and the failed pass
+    renames and deletes nothing — not even the consumed batch dir or
+    the orphaned staging dir its GC would otherwise sweep."""
     import duckdb_vortex_spark.streaming.sinks as sinks
 
-    base = str(tmp_path / "legacy")
-    os.makedirs(base)
-    # r9 history: minor [0,2] (seg 0), minor [3,5] (seg 1),
-    # all-major [0,7] (seg 2, supersedes 0-1; GC crashed so seg 1
-    # remains on disk), then minor [8,9] (seg 3)
+    base = str(tmp_path / "odd")
     for name in (
-        "compact-00000001-upto-00000005",  # superseded leftover
+        "compact-00000001-from-00000000-upto-00000005",
         "compact-00000002-all-upto-00000007",
-        "compact-00000003-upto-00000009",
+        "batch-00000003",  # consumed by the valid segment: GC fodder
+        "batch-00000009",
+        ".staging-compact-00000003-from-00000008-upto-00000009",
     ):
         os.makedirs(os.path.join(base, name))
-    before_live = [os.path.basename(s) for s in sinks._live_segments(base)]
-    assert before_live == [
-        "compact-00000002-all-upto-00000007",
-        "compact-00000003-upto-00000009",
-    ]
-    sinks._migrate_legacy_segment_names(base)
-    ranges = sinks._seg_ranges(base)
-    # live segments renamed with exact ranges; the superseded leftover
-    # keeps its legacy name (it is the GC sweep's job, and deriving its
-    # lo after its predecessor was GC'd could widen the range — dead
-    # segments must not record ranges they never folded)
-    assert {os.path.basename(s): r for s, r in ranges.items()} == {
-        "compact-00000001-upto-00000005": (0, 5),
-        "compact-00000002-from-00000000-upto-00000007": (0, 7),
-        "compact-00000003-from-00000008-upto-00000009": (8, 9),
-    }
-    assert sinks._compact_watermark(base) == 9
-    assert [os.path.basename(s) for s in sinks._live_segments(base)] == [
-        "compact-00000002-from-00000000-upto-00000007",
-        "compact-00000003-from-00000008-upto-00000009",
-    ]
-    # idempotent: a second migration is a no-op
-    sinks._migrate_legacy_segment_names(base)
-    assert {os.path.basename(s) for s in sinks._segments(base)} == {
-        os.path.basename(s) for s in ranges
-    }
+    listing = sorted(os.listdir(base))
+    bad = "compact-00000002-all-upto-00000007"
+    with pytest.raises(ValueError, match=bad):
+        sinks.state_dirs(base, 10)
+    with pytest.raises(ValueError, match=bad):
+        sinks.read_vortex_dataset_tiered(spark, base)
+    with pytest.raises(ValueError, match=bad):
+        sinks.compact_dataset_incremental(spark, base, sort_cols=["k"])
+    assert sorted(os.listdir(base)) == listing
 
 
 def test_maintenance_lease_unreadable_owner_paths(tmp_path):
@@ -880,106 +873,6 @@ def test_maintenance_lease_unreadable_owner_paths(tmp_path):
         with _maintenance_lease(store):
             raise ValueError("boom")
     assert not os.path.isdir(lock)
-
-
-def test_compaction_rejects_unsatisfiable_cap(spark, tmp_path):
-    """max_segments=0 can never be satisfied (a fold leaves one live
-    segment), so every pass — including no-new-data ones — would
-    re-fold the entire store forever; the config is refused loudly."""
-    import duckdb_vortex_spark.streaming.sinks as sinks
-
-    with pytest.raises(ValueError, match="max_segments must be >= 1"):
-        sinks.compact_dataset_incremental(
-            spark, str(tmp_path / "x"), sort_cols=["k"], max_segments=0
-        )
-
-
-def test_compaction_rejects_bad_cap_string_and_ratio(spark, tmp_path):
-    """Config validation for the r11 cap modes: only "auto" is a legal
-    string cap, and leveling with level_ratio <= 1 degenerates (the
-    geometric rule never extends and "auto"'s log base collapses)."""
-    import duckdb_vortex_spark.streaming.sinks as sinks
-
-    with pytest.raises(ValueError, match="'auto'"):
-        sinks.compact_dataset_incremental(
-            spark, str(tmp_path / "x"), sort_cols=["k"], max_segments="bogus"
-        )
-    with pytest.raises(ValueError, match="level_ratio must be > 1.0"):
-        sinks.compact_dataset_incremental(
-            spark, str(tmp_path / "x"), sort_cols=["k"],
-            max_segments=2, level_ratio=1.0,
-        )
-
-
-def test_auto_cap_leveling_end_to_end(spark, tmp_path):
-    """max_segments="auto" (ADVICE r10): the live-segment cap grows as
-    max(4, ceil(log_ratio(total))) — the mode whose per-row rewrite
-    cost really is O(log n) — while content stays exact and every pass
-    keeps the live count within the effective cap."""
-    import math
-
-    import duckdb_vortex_spark.streaming.sinks as sinks
-    from duckdb_vortex_spark.operators.pipeline import snapshot_diff
-    from duckdb_vortex_spark.sources.vortex import register
-
-    register(spark)
-    path = str(tmp_path / "auto")
-    n, per = 14, 40
-    rows = spark.range(0, n * per).select(
-        F.col("id").alias("k"), (F.col("id") * 29 % 211).alias("v")
-    )
-    for b in range(n):
-        sinks.overwrite_batch_atomic(
-            rows.filter((F.col("k") >= b * per) & (F.col("k") < (b + 1) * per)),
-            path,
-            b,
-        )
-        seg = sinks.compact_dataset_incremental(
-            spark, path, sort_cols=["k"], max_files=2, max_segments="auto"
-        )
-        assert seg is not None
-        cap = max(4, math.ceil(math.log(max(b + 1, 2), 2.0)))
-        assert len(sinks._live_segments(path)) <= cap
-    back = sinks.read_vortex_dataset_tiered(spark, path)
-    assert back.count() == n * per
-    assert snapshot_diff(rows, back, "k", ["v"]).count() == 0
-
-
-def test_full_rewrite_takes_the_maintenance_lease(spark, tmp_path):
-    """VERDICT r10 wrong #1: `compact_dataset` (the FULL rewrite) was
-    the one maintenance writer outside the lease. Now: it fails loudly
-    against a live-held lease, and a clean run releases everything —
-    the retired copy carries no lock dir and the new layout is
-    immediately maintainable."""
-    import json
-
-    import duckdb_vortex_spark.streaming.sinks as sinks
-    from duckdb_vortex_spark.sources.vortex import register
-
-    register(spark)
-    path = str(tmp_path / "full")
-    rows = spark.range(0, 200).select(F.col("id").alias("k"))
-    sinks.overwrite_batch_atomic(rows.filter(F.col("k") < 100), path, 0)
-    sinks.overwrite_batch_atomic(rows.filter(F.col("k") >= 100), path, 1)
-
-    lock = os.path.join(path, ".maintenance-lock")
-    os.mkdir(lock)
-    with open(os.path.join(lock, "owner.json"), "w") as f:
-        json.dump({"pid": os.getpid(), "ts": 0.0}, f)  # live pid: us
-    with pytest.raises(RuntimeError, match="single-writer"):
-        sinks.compact_dataset(spark, path, sort_cols=["k"])
-    assert os.path.isdir(lock), "contention must not clobber the live lease"
-    os.remove(os.path.join(lock, "owner.json"))
-    os.rmdir(lock)
-
-    retired = sinks.compact_dataset(spark, path, sort_cols=["k"])
-    assert os.path.isdir(retired)
-    assert not os.path.isdir(os.path.join(retired, ".maintenance-lock"))
-    assert not os.path.isdir(os.path.join(path, ".maintenance-lock"))
-    assert sinks.read_vortex_dataset(spark, path).count() == 200
-    # the new layout is immediately maintainable (lease acquirable)
-    with sinks._maintenance_lease(path):
-        pass
 
 
 def test_lease_steal_revalidates_and_hands_back(tmp_path):

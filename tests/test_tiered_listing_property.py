@@ -1,19 +1,14 @@
 """Property test for the tiered state-store listing (sinks.state_dirs /
 read path math): under ANY valid interleaving of batch appends and
-incremental compactions — r9-era legacy folds, r10 leveled RUN folds
-(contiguous, possibly mid-list), full majors, and crash variants that
-commit a fold but skip all GC — the listing must cover every committed
-batch id strictly below the reader's batch EXACTLY once (inside one
-live segment's folded range or as a live batch dir) and never expose a
+incremental compactions — minor folds, leveled RUN folds (contiguous,
+possibly mid-list), full majors, and crash variants that commit a fold
+but skip all GC — the listing must cover every committed batch id
+strictly below the reader's batch EXACTLY once (inside one live
+segment's folded range or as a live batch dir) and never expose a
 consumed batch dir, a superseded segment, or a same/future batch. Pure
 directory math, no SparkSession needed, so hypothesis can sweep
-hundreds of histories cheaply.
-
-Histories have two phases, mirroring production: a LEGACY prefix using
-r9 names (``compact-<seg>[-all]-upto-<hi>``), then the name migration
-(exactly what `compact_dataset_incremental` performs first in every
-pass — run folds never coexist with legacy names), then r10 ops using
-explicit-range names (``compact-<seg>-from-<lo>-upto-<hi>``)."""
+hundreds of histories cheaply. Segments carry explicit-range names
+(``compact-<seg>-from-<lo>-upto-<hi>``)."""
 
 from __future__ import annotations
 
@@ -25,7 +20,6 @@ from hypothesis import strategies as st
 from duckdb_vortex_spark.streaming.sinks import (
     _compact_watermark,
     _live_segments,
-    _migrate_legacy_segment_names,
     _seg_ranges,
     batch_dirs,
     state_dirs,
@@ -76,27 +70,7 @@ class _Layout:
             self.live_batches.clear()  # consumed either way (crash leaves garbage)
         self.seg += 1
 
-    # -- legacy (r9-named) ops ----------------------------------------------
-    def legacy_minor(self, crash: bool):
-        if not self.live_batches:
-            return
-        hi = max(self.live_batches)
-        lo = self._watermark() + 1
-        self._commit_fold(
-            f"compact-{self.seg:08d}-upto-{hi:08d}", lo, hi,
-            len(self.live), 0, True, crash,
-        )
-
-    def legacy_major(self, crash: bool):
-        if not (self.live or self.live_batches):
-            return
-        hi = max([h for _, _l, h in self.live] + self.live_batches)
-        self._commit_fold(
-            f"compact-{self.seg:08d}-all-upto-{hi:08d}", 0, hi,
-            0, len(self.live), True, crash,
-        )
-
-    # -- r10 (explicit-range) ops --------------------------------------------
+    # -- ops ---------------------------------------------------------------
     def _from_name(self, lo: int, hi: int) -> str:
         return f"compact-{self.seg:08d}-from-{lo:08d}-upto-{hi:08d}"
 
@@ -140,68 +114,26 @@ class _Layout:
         self._commit_fold(self._from_name(0, hi), 0, hi,
                           0, len(self.live), True, crash)
 
-    def migrate(self):
-        """The production rename, tracked against OUR ranges: every
-        LIVE legacy dir moves to the from-form with the (lo, hi) this
-        builder recorded at its creation — asserting en passant that
-        `_migrate_legacy_segment_names` derives the same. Superseded
-        crash leftovers keep their legacy names (GC's job, not
-        migration's)."""
-        _migrate_legacy_segment_names(self.base)
-        live_names = {name for name, _lo, _hi in self.live}
-        renamed: dict[str, tuple[int, int]] = {}
-        for name, (lo, hi) in self.on_disk.items():
-            if "-from-" in name or name not in live_names:
-                renamed[name] = (lo, hi)
-                continue
-            sid = int(name.split("-", 2)[1])
-            want = f"compact-{sid:08d}-from-{lo:08d}-upto-{hi:08d}"
-            assert os.path.isdir(os.path.join(self.base, want)), (
-                f"migration of {name} produced a different range than the "
-                f"ground truth ({lo},{hi})"
-            )
-            renamed[want] = (lo, hi)
-        self.on_disk = renamed
-        self.live = [
-            (
-                f"compact-{name.split('-', 2)[1]}-from-{lo:08d}-upto-{hi:08d}"
-                if "-from-" not in name
-                else name,
-                lo,
-                hi,
-            )
-            for name, lo, hi in self.live
-        ]
 
-
-LEGACY_OPS = ["batch", "minor", "major", "minor_crash", "major_crash"]
-NEW_OPS = LEGACY_OPS + ["tailfold", "tailfold_crash", "runfold", "runfold_crash"]
+OPS = [
+    "batch", "minor", "major", "minor_crash", "major_crash",
+    "tailfold", "tailfold_crash", "runfold", "runfold_crash",
+]
 
 
 @settings(max_examples=300, deadline=None)
 @given(
-    legacy=st.lists(st.sampled_from(LEGACY_OPS), max_size=10),
     history=st.lists(
-        st.tuples(st.sampled_from(NEW_OPS), st.integers(0, 7), st.integers(0, 7)),
+        st.tuples(st.sampled_from(OPS), st.integers(0, 7), st.integers(0, 7)),
         min_size=1,
-        max_size=20,
+        max_size=30,
     ),
 )
 def test_state_listing_covers_every_earlier_batch_exactly_once(
-    tmp_path_factory, legacy, history
+    tmp_path_factory, history
 ):
     base = str(tmp_path_factory.mktemp("tiered"))
     lay = _Layout(base)
-    for op in legacy:
-        crash = op.endswith("_crash")
-        kind = op.removesuffix("_crash")
-        if kind == "batch":
-            lay.batch()
-        elif kind == "minor":
-            lay.legacy_minor(crash)
-        else:
-            lay.legacy_major(crash)
-    lay.migrate()
     for op, i, n in history:
         crash = op.endswith("_crash")
         kind = op.removesuffix("_crash")
@@ -271,36 +203,23 @@ def test_state_listing_covers_every_earlier_batch_exactly_once(
 
 
 def test_segment_over_retryable_batch_fails_loudly(tmp_path):
-    # legacy name form
     base = str(tmp_path / "bad")
-    os.makedirs(os.path.join(base, "compact-00000000-upto-00000003"))
+    os.makedirs(os.path.join(base, "compact-00000000-from-00000000-upto-00000003"))
     try:
         state_dirs(base, 3)
     except ValueError as e:
         assert "still retryable" in str(e)
     else:
         raise AssertionError("expected ValueError for upto >= before")
-    # explicit-range name form
-    base2 = str(tmp_path / "bad2")
-    os.makedirs(os.path.join(base2, "compact-00000000-from-00000000-upto-00000003"))
-    try:
-        state_dirs(base2, 3)
-    except ValueError as e:
-        assert "still retryable" in str(e)
-    else:
-        raise AssertionError("expected ValueError for upto >= before")
 
 
-def _simulate_policy(batch_spans, max_segments, level_ratio):
-    """Drive `_pick_fold_run` exactly as `_compact_incremental_locked`
-    does (one new pseudo-segment per pass, fold when the post-pass
-    count would exceed the EFFECTIVE cap), tracking the live spans,
+def _simulate_policy(batch_spans):
+    """Drive `_pick_fold_run` exactly as `compact_dataset_incremental`
+    does (one new pseudo-segment per pass, folded with a tail run once
+    the post-pass count would exceed the cap), tracking the live spans,
     the full-prefix ("giant") fold count, and total spans rewritten
     (the write amplification)."""
-    from duckdb_vortex_spark.streaming.sinks import (
-        _effective_cap,
-        _pick_fold_run,
-    )
+    from duckdb_vortex_spark.streaming.sinks import _fold_cap, _pick_fold_run
 
     spans: list[int] = []  # live segment spans, range order
     total = 0
@@ -309,10 +228,8 @@ def _simulate_policy(batch_spans, max_segments, level_ratio):
     max_live = 0
     for b in batch_spans:
         total += b
-        cap = _effective_cap(max_segments, total, level_ratio)
-        if len(spans) + 1 > cap:
-            run = _pick_fold_run(spans, b, max_segments, level_ratio)
-            assert run >= 1, "over the cap, the fold must reduce the count"
+        run = _pick_fold_run(spans, b)
+        if run:
             folded = sum(spans[len(spans) - run :]) + b
             rewritten += folded
             if run == len(spans):
@@ -321,79 +238,45 @@ def _simulate_policy(batch_spans, max_segments, level_ratio):
         else:
             rewritten += b  # the new minor's own write
             spans.append(b)
-        assert len(spans) <= cap, (spans, cap)
+        assert len(spans) <= _fold_cap(total), (spans, total)
         assert sum(spans) == total  # coverage: every batch in exactly one segment
         max_live = max(max_live, len(spans))
     return total, giant_folds, rewritten, max_live
 
 
 @settings(max_examples=60, deadline=None)
-@given(
-    batch_spans=st.lists(st.integers(1, 3), min_size=50, max_size=400),
-    level_ratio=st.sampled_from([1.5, 2.0, 3.0]),
-)
-def test_leveled_policy_asymptotics_auto(batch_spans, level_ratio):
-    """The documented O(log n) guarantee, which only ``"auto"`` can
-    deliver (ADVICE r10: under any CONSTANT cap it is mathematically
-    unachievable — cap-forced tail refolds make total work
-    Θ(n^(1+1/K))). With the history-scaled cap the policy must (a)
-    keep the live count <= max(4, ceil(log_ratio(total))) after EVERY
-    pass, (b) re-fold the full prefix only O(log total) times — the
-    r9 all-fold did it every pass past the cap — and (c) keep total
-    spans rewritten (the write amplification) within
-    O(total · log total), not r9's O(total²/max_segments)."""
+@given(batch_spans=st.lists(st.integers(1, 3), min_size=50, max_size=400))
+def test_leveled_policy_asymptotics_auto(batch_spans):
+    """The documented O(log n) guarantee, which only a cap that grows
+    with history can deliver (under any CONSTANT cap K, cap-forced tail
+    refolds make total work Θ(n^(1+1/K))). With the cap
+    max(4, ceil(log2(total))) the policy must (a) keep the live count
+    within it after EVERY pass, (b) re-fold the full prefix only
+    O(log total) times — an all-fold policy does it every pass past the
+    cap — and (c) keep total spans rewritten (the write amplification)
+    within O(total · log total), not an all-fold's O(total²/cap)."""
     import math
 
-    total, giant_folds, rewritten, _ = _simulate_policy(
-        batch_spans, "auto", level_ratio
-    )
+    total, giant_folds, rewritten, _ = _simulate_policy(batch_spans)
     # (b) full-prefix folds are geometrically rare: each one grows the
-    # giant by >= (1 + 1/level_ratio - epsilon), so their count is
-    # logarithmic in total span (+ slack for the warm-up)
-    log_bound = math.log(max(total, 2), 1 + 1 / (level_ratio + 1)) + 4
+    # giant by >= (1 + 1/2 - epsilon), so their count is logarithmic
+    # in total span (+ slack for the warm-up)
+    log_bound = math.log(max(total, 2), 1 + 1 / 3) + 4
     assert giant_folds <= log_bound, (giant_folds, log_bound, total)
     # (c) write amplification is O(total · log total): every row sits
-    # in at most ~log_{level_ratio}(total) levels over its lifetime
+    # in at most ~log2(total) levels over its lifetime
     # (measured headroom ~3× at the worst hypothesis point)
     amp_bound = total * (math.log(max(total, 2), 1.5) + 4)
     assert rewritten <= amp_bound, (rewritten, amp_bound, total)
 
 
-@settings(max_examples=60, deadline=None)
-@given(
-    batch_spans=st.lists(st.integers(1, 3), min_size=50, max_size=400),
-    max_segments=st.integers(2, 8),
-    level_ratio=st.sampled_from([1.5, 2.0, 3.0]),
-)
-def test_leveled_policy_hard_cap_bounds(batch_spans, max_segments, level_ratio):
-    """A CONSTANT cap K trades write amplification for a hard listing
-    bound: the live count never exceeds K, and total work stays within
-    the true k-capped tiered envelope Θ(n^(1+1/K)) (ADVICE r10 — the
-    former O(n log n) assertion here was false for constant caps; the
-    calibrated constant leaves ~2× headroom at the worst simulated
-    point, e.g. ms=2/ratio=1.5/unit spans)."""
-    total, _, rewritten, max_live = _simulate_policy(
-        batch_spans, max_segments, level_ratio
-    )
-    assert max_live <= max_segments, (max_live, max_segments)
-    amp_bound = 3 * total ** (1 + 1 / max_segments) + 4 * total
-    assert rewritten <= amp_bound, (rewritten, amp_bound, total)
-
-
 def test_policy_amplification_contrast_at_depth():
     """Deterministic large-scale pin of the numbers the docstrings
-    quote (ADVICE r10): at 20k/100k unit batches, the constant default
-    cap (4) rewrites each row ~74×/~344× — polynomial — while "auto"
-    stays ~7×/~9× and its live listing grows only to ~log2(total).
-    Pure simulation, O(n·levels) Python, no Spark."""
-    for n, hard_lo, auto_hi, live_hi in ((20_000, 50, 8, 16), (100_000, 200, 10, 18)):
-        spans = [1] * n
-        _, _, rw_hard, live_hard = _simulate_policy(spans, 4, 2.0)
-        _, _, rw_auto, live_auto = _simulate_policy(spans, "auto", 2.0)
-        assert live_hard <= 4
-        assert rw_hard / n >= hard_lo, (n, rw_hard / n)
-        assert rw_auto / n <= auto_hi, (n, rw_auto / n)
-        assert live_auto <= live_hi, (n, live_auto)
-        # the whole point: auto beats the constant cap by an order of
-        # magnitude at depth, and the gap WIDENS with history
-        assert rw_hard > 5 * rw_auto, (n, rw_hard, rw_auto)
+    quote: at 20k/100k unit batches each row is rewritten ~7×/~9× and
+    the live listing grows only to ~log2(total) — where a constant cap
+    of 4 would rewrite each row ~74×/~344×. Pure simulation,
+    O(n·levels) Python, no Spark."""
+    for n, rw_hi, live_hi in ((20_000, 8, 16), (100_000, 10, 18)):
+        _, _, rewritten, max_live = _simulate_policy([1] * n)
+        assert rewritten / n <= rw_hi, (n, rewritten / n)
+        assert max_live <= live_hi, (n, max_live)
