@@ -241,7 +241,7 @@ def neardup_decontaminate(
     # sessions (ADVICE r8); the index is eval-set-sized, so the eager
     # materialization job is trivial.
     esig = minhash_signatures(
-        eval_df, text_col, id_col, num_hashes, n, engine="jvm"
+        eval_df, text_col, id_col, num_hashes, n
     ).localCheckpoint(eager=True)
     return decontaminate_against_index(
         train,
@@ -274,7 +274,7 @@ def decontaminate_against_index(
     ebuck = band_buckets(esig, num_hashes, rows_per_band).withColumnRenamed(
         "id", "doc_b"
     )
-    tsig = minhash_signatures(train, text_col, id_col, num_hashes, n, engine="jvm")
+    tsig = minhash_signatures(train, text_col, id_col, num_hashes, n)
     tbuck = band_buckets(tsig.select("id", "mh"), num_hashes, rows_per_band)
     cand = (
         tbuck.join(F.broadcast(ebuck.select("band", "h", "doc_b")), ["band", "h"])

@@ -11,7 +11,7 @@ algebra (no Python UDFs in any hot path). Scale design per operator:
   bucket — cost is Σ bucket² , controlled by shingling (rarer keys) and
   a bucket-size cap (hot-bucket guard) rather than O(n²) brute force.
 - **SimHash**: per-row 64-bit signature; near-dup candidates via
-  band-exact match on signature prefixes (same join shape as LSH).
+  exact match on block-pair keys (same join shape as LSH).
 - **n-gram Jaccard**: exact pairwise verification used on candidate
   pairs; brute-force variant only for oracle-sized data.
 """
@@ -221,86 +221,21 @@ def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- MinHash + LSH -------------------------------------------------------
 
 
-def _signatures_arrow(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int, n: int
-) -> DataFrame:
-    """Shingles + minhash signatures via Arrow-batched vectorized
-    Python: ~2.5× the JVM expression path (interpreted higher-order
-    functions are the bottleneck there). The hash family is
-    blake2b-base × splitmix-style per-seed mixing — any uniform
-    family preserves LSH recall, and the downstream exact-Jaccard
-    verify (JVM, on the shingle arrays) fixes precision, so the
-    engine's results are independent of the hash implementation.
-    Whitespace split is ASCII-explicit to match the JVM/RE2/DuckDB
-    ``\\s`` class on unicode whitespace."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("id", df.schema[id_col].dataType),
-            T.StructField("sh", T.ArrayType(T.StringType())),
-            T.StructField("mh", T.ArrayType(T.LongType())),
-        ]
-    )
-    K = num_hashes
-
-    def batches(it):
-        import hashlib
-        import re
-
-        import numpy as np
-        import pandas as pd
-
-        MULT = np.uint64(0x9E3779B97F4A7C15)
-        SEEDS = np.arange(1, K + 1, dtype=np.uint64) * np.uint64(0xBF58476D1CE4E5B9)
-        ws = re.compile(r"\s+", re.ASCII)
-        for pdf in it:
-            ids, shs, mhs = [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [t for t in ws.split(text) if t]
-                if len(toks) >= n:
-                    sh = list(
-                        dict.fromkeys(
-                            " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-                        )
-                    )
-                else:
-                    sh = [" ".join(toks)]
-                base = np.frombuffer(
-                    b"".join(
-                        hashlib.blake2b(s.encode(), digest_size=8).digest() for s in sh
-                    ),
-                    dtype=np.uint64,
-                )
-                h = base[:, None] * MULT + SEEDS[None, :]
-                h ^= h >> np.uint64(31)
-                h *= MULT
-                ids.append(doc_id)
-                shs.append(sh)
-                mhs.append(h.min(axis=0).astype(np.int64).tolist())
-            yield pd.DataFrame({"id": ids, "sh": shs, "mh": mhs})
-
-    return df.select(id_col, text_col).mapInPandas(batches, schema)
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 32,
     n: int = 3,
-    engine: str = "arrow",
 ) -> DataFrame:
     """(id, sh, mh): shingle set + k-minhash signature per document.
 
     The per-row stage of MinHash — zero shuffle, so it composes into
     both the batch pair-finder (`minhash_lsh_pairs`) and the
-    incremental/streaming index builder
-    (`streaming.incremental_neardup`). ``engine="arrow"`` vectorizes
-    in Python batches; ``engine="jvm"`` stays in column expressions
-    (one aggregate pass so shingling runs once, not k times)."""
-    if engine == "arrow":
-        return _signatures_arrow(df, text_col, id_col, num_hashes, n)
+    decontamination index builders. Column expressions only: the
+    shingles are bound behind `shingle_table`'s exchange and one
+    aggregate pass hashes them (`minhash`), the same hash family as the
+    streaming LSH index (`streaming.incremental_neardup.lsh_signatures`)."""
     sh = shingle_table(df, text_col, id_col, n)
     return sh.select("id", "sh", minhash("sh", num_hashes).alias("mh"))
 
@@ -369,7 +304,6 @@ def minhash_lsh_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     max_bucket: int = 1000,
-    engine: str = "arrow",
     rows_per_band: int = 2,
 ) -> DataFrame:
     """Near-dup pairs via MinHash+LSH with exact-Jaccard verification.
@@ -384,19 +318,15 @@ def minhash_lsh_pairs(
     artifact, not a dup cluster) → exact shingle-Jaccard verification
     ≥ threshold, so the output has NO false positives; recall is the
     LSH catch probability above.
-
-    ``engine="arrow"`` (default) computes signatures in vectorized
-    Python batches; ``engine="jvm"`` keeps everything in column
-    expressions — same outputs either way (the verify step is exact).
     """
     if num_hashes % rows_per_band:
         raise ValueError("num_hashes must be divisible by rows_per_band")
     # All k minhashes in ONE pass that references the shingle array
-    # exactly once (jvm engine). The naive per-hash form (k ×
+    # exactly once. The naive per-hash form (k ×
     # array_min(transform(sh, …))) is 10× slower: CollapseProject
     # inlines the whole shingling expression into each of the k
     # minhash expressions, so tokenize+shingle work runs k times/row.
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, n, engine)
+    sig = minhash_signatures(df, text_col, id_col, num_hashes, n)
     # The signature table feeds three consumers (bucketing, and both
     # sides of the verify join); persist it so shingling+hashing runs
     # once — at 100 TB this is the classic two-phase layout where the
@@ -469,6 +399,11 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- cluster + keep-canonical (the full dedup pipeline) -------------------
 
+# Label-propagation rounds `connected_components` may run before it
+# raises: O(log diameter) rounds converge any corpus-sized path well
+# inside it. A module constant, not a parameter; tests lower it.
+CC_MAX_ROUNDS = 50
+
 
 def connected_components(edges: DataFrame, node_col_a: str = "doc_a", node_col_b: str = "doc_b") -> DataFrame:
     """Connected components over an undirected pair list by iterative
@@ -485,7 +420,9 @@ def connected_components(edges: DataFrame, node_col_a: str = "doc_a", node_col_b
     minimum travels per round, so convergence is O(log diameter):
     ~9 rounds for that 300-chain, ~30 for a corpus-sized path. Lineage
     is truncated per round (localCheckpoint), the same guard
-    plans/recursive.py uses.
+    plans/recursive.py uses. Raises ``RuntimeError`` if labels still
+    change in round ``CC_MAX_ROUNDS``: unconverged labels would split
+    components silently.
     """
     sym = edges.select(
         F.col(node_col_a).alias("a"), F.col(node_col_b).alias("b")
@@ -495,7 +432,7 @@ def connected_components(edges: DataFrame, node_col_a: str = "doc_a", node_col_b
     nodes = sym.select(F.col("a").alias("node")).distinct()
     labels = nodes.withColumn("component", F.col("node")).localCheckpoint(eager=True)
     sym = sym.localCheckpoint(eager=True)
-    for _ in range(50):
+    for _ in range(CC_MAX_ROUNDS):
         neighbor_min = (
             sym.join(labels, sym.b == labels.node)
             .groupBy(sym.a.alias("node2"))
@@ -527,16 +464,19 @@ def connected_components(edges: DataFrame, node_col_a: str = "doc_a", node_col_b
             )
             .localCheckpoint(eager=True)
         )
-        changed = (
+        stable = (
             new_labels.alias("n")
             .join(labels.alias("o"), "node")
             .filter(F.col("n.component") != F.col("o.component"))
             .isEmpty()
         )
         labels = new_labels
-        if changed:
-            break
-    return labels
+        if stable:
+            return labels
+    raise RuntimeError(
+        f"connected_components: labels still changing after "
+        f"CC_MAX_ROUNDS={CC_MAX_ROUNDS} rounds"
+    )
 
 
 def minhash_dedup_keep(df: DataFrame, threshold: float = 0.8, **kwargs) -> DataFrame:
@@ -646,21 +586,32 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash over distinct tokens (xxhash64 fast path).
-    Near-dups have small Hamming distance between signatures.
+    """(id_col, simhash): 64-bit SimHash over distinct tokens, as a
+    bigint. Near-dups have small Hamming distance between signatures.
 
-    Shape (round 4, same fix as ``_portable_simhash_frame``): explode
-    distinct tokens, hash each token ONCE, and take the 64 bit-sums as
-    integer SUM aggregates over one doc-key shuffle — whole-stage
-    codegen end to end. The previous column form ran 64 interpreted
+    Bit source: md5, a hash primitive Spark and DuckDB share, so an
+    external engine reproduces the signature bit for bit
+    (`dedup_simhash_signatures`). A token's 64 bits are md5's first 16
+    hex digits read as one signed long: bit k is bit k % 4 of hex digit
+    15 - k // 4, so the signature's 16-digit hex rendering is the
+    per-digit construction the DuckDB oracle builds.
+
+    Shape (round 4): explode distinct tokens, hash each token ONCE, and
+    take the 64 bit-sums as integer SUM aggregates over one doc-key
+    shuffle — whole-stage codegen end to end, and the shape that
+    survives 100 TB (one shuffle keyed by doc, constant 64-column
+    state). The previous column form ran 64 interpreted
     ``F.aggregate`` passes per row, each re-running tokenization and
-    xxhash64 over every token. Zero-token documents rejoin with
-    signature 0 (every bit-sum empty ⇒ no bit set), matching the old
-    form's empty-aggregate result."""
+    the hash over every token. Zero-token documents (explode drops
+    them) rejoin with signature 0, the all-zero signature DuckDB gives
+    an empty token list."""
     toks = F.array_distinct(tokens(text_col))
     t = df.select(F.col(id_col).alias("__id"), F.explode(toks).alias("tok")).withColumn(
-        "__h", F.xxhash64("tok")
+        "__h", F.expr("CAST(conv(substr(md5(tok), 1, 16), 16, -10) AS BIGINT)")
     )
+    # expressions as SQL strings: building 64 aggregates through the
+    # Column API costs ~500 py4j round trips (~1.5 s of driver-side
+    # plan construction per query); F.expr is one call per aggregate
     aggs = [
         F.expr(f"CAST(SUM(((__h >> {j}) & 1) * 2 - 1) AS BIGINT)").alias(f"__s{j}")
         for j in range(64)
@@ -687,58 +638,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     )
 
 
-def _portable_simhash_frame(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, sig) SimHash signatures whose hash primitive is md5
-    (identical in Spark and DuckDB), as a 16-hex-digit string —
-    cross-engine-checkable. Bit source: hex digit d of md5(token)
-    contributes 4 bits.
-
-    Shape (round 4): explode distinct tokens, md5 each token ONCE,
-    then the 64 bit-sums are plain integer SUM aggregates over one
-    doc-key shuffle — all whole-stage codegen. The previous column
-    form ran 64 interpreted ``F.aggregate`` HOF passes per row, each
-    re-evaluating tokenization AND md5 for every token (64 ×
-    n_tokens md5 calls per document — measured 6–8 s for 500 docs at
-    sf0.01; this form is ~10×+ faster and is the shape that survives
-    100 TB: one shuffle keyed by doc, constant 64-column state).
-    Zero-token documents (explode drops them) rejoin with the same
-    all-zero signature both engines produce for an empty token list."""
-    toks = F.array_distinct(tokens(text_col))
-    # expressions as SQL strings: building 64 aggregates through the
-    # Column API costs ~500 py4j round trips (~1.5 s of driver-side
-    # plan construction per query); F.expr is one call per aggregate
-    t = df.select(F.col(id_col).alias("id"), F.explode(toks).alias("tok")).withColumn(
-        "hx", F.md5("tok")
-    )
-    aggs = [
-        F.expr(
-            f"CAST(SUM(((position(substring(hx, {d + 1}, 1) IN '0123456789abcdef')"
-            f" - 1 >> {j}) & 1) * 2 - 1) AS BIGINT)"
-        ).alias(f"__b{d}_{j}")
-        for d in range(16)
-        for j in range(4)
-    ]
-    g = t.groupBy("id").agg(*aggs)
-    digits = [
-        "substring('0123456789abcdef', CAST(("
-        + " + ".join(
-            f"CAST(__b{d}_{j} > 0 AS BIGINT) * {2**j}" for j in range(4)
-        )
-        + ") + 1 AS INT), 1)"
-        for d in range(16)
-    ]
-    sigs = g.select("id", F.expr("concat(" + ", ".join(digits) + ")").alias("sig"))
-    ids = df.select(F.col(id_col).alias("id"))
-    # corpus ⋈ corpus zero-token rejoin — same shuffle_hash pin as the
-    # xxhash64 frame (the aggregated side scales with the corpus)
-    return ids.join(sigs.hint("shuffle_hash"), "id", "left").select(
-        "id", F.coalesce("sig", F.lit("0" * 16)).alias("sig")
-    )
-
-
-def _portable_simhash_duck() -> str:
+def _simhash_hex_duck() -> str:
     toks = f"list_distinct({_DUCK_TOKS})"
     digits = []
     for d in range(16):
@@ -755,20 +655,18 @@ def _portable_simhash_duck() -> str:
 
 
 SIMHASH_ORACLE = f"""
-SELECT doc_id, {_portable_simhash_duck()} AS simhash_hex
+SELECT doc_id, {_simhash_hex_duck()} AS simhash_hex
 FROM documents
 """
 
 
 @query("dedup_simhash_signatures", oracle=SIMHASH_ORACLE, tags=("dedup", "llm", "hash"))
 def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable (md5-bit) SimHash signatures, hex-string form, verified
-    bit-for-bit against the same construction in DuckDB. The fast path
-    for production is simhash() above (xxhash64, single 64-bit column).
-    """
-    d = load(spark, sf_dir, "documents")
-    return _portable_simhash_frame(d, "text", "doc_id").select(
-        F.col("id").alias("doc_id"), F.col("sig").alias("simhash_hex")
+    """SimHash signatures (`simhash`) rendered as 16 lowercase hex
+    digits, verified bit-for-bit against the same md5-bit construction
+    in DuckDB."""
+    return simhash(load(spark, sf_dir, "documents")).select(
+        "doc_id", F.expr("lower(lpad(hex(simhash), 16, '0'))").alias("simhash_hex")
     )
 
 
@@ -777,75 +675,44 @@ def simhash_neardup_pairs(
     max_hamming: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_bands: int | None = None,
-    banding: str = "block_pair",
 ) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``.
-    ``n_bands`` applies only to ``banding="contiguous"`` (default 4
-    there); passing it with block-pair banding is an error, not a
-    silent ignore.
+    """(doc_a, doc_b, hamming) for every pair whose SimHash signatures
+    differ in at most ``max_hamming`` bits.
 
-    Candidate generation by Hamming-band pigeonhole, exact
-    ``bit_count(xor)`` verify on the two 64-bit signatures — so the
-    RESULT set is identical under any complete banding with recall
-    1.0; only the candidate volume differs. Same shuffle shape as
-    MinHash LSH: per-row signatures, band-bucket equi-join, cheap
-    exact verify (two longs per pair, no arrays shipped).
-
-    Banding (r13, ported from the portable twin's r12 fix): the
-    default is BLOCK-PAIR keying (Manku, Jain & Das Sarma, WWW 2007
+    Candidates by BLOCK-PAIR keying (Manku, Jain & Das Sarma, WWW 2007
     §3): split the 64-bit signature into 6 blocks (11,11,11,11,10,10
     bits via shift/mask) and key each of the C(6,2)=15 tables on the
     CONCATENATION of two blocks (20–22-bit keys). Pigeonhole: ≤4 bit
-    errors damage ≤4 blocks, so ≥2 blocks survive intact and some
-    PAIR of intact blocks agrees — recall 1.0 for
-    max_hamming ≤ n_blocks−2 = 4. The old contiguous 4×16-bit scheme
-    (``banding="contiguous"``) keys on a FIXED ≤65k-value space per
-    table, so bucket occupancy — and the Σ bucket² candidate mass
-    behind the verify join — grows QUADRATICALLY with the corpus:
-    r12 measured 18× wall for 8× docs on the portable twin before
-    fixing only that twin; this port closes the same trap on the
-    native 64-bit path (VERDICT r12 #1). 15 exploded rows/doc
-    instead of 4 is the linear price for the quadratic collapse.
-    """
-    if banding == "contiguous":
-        n_bands = 4 if n_bands is None else n_bands
-        if max_hamming >= n_bands:
-            raise ValueError(
-                f"pigeonhole guarantee needs max_hamming < n_bands "
-                f"(got {max_hamming} >= {n_bands})"
-            )
-        width = 64 // n_bands
-        mask = (1 << width) - 1
-        band_vals = F.array(
-            *[
-                F.shiftrightunsigned("simhash", b * width).bitwiseAND(F.lit(mask))
-                for b in range(n_bands)
-            ]
-        )
-    elif banding == "block_pair":
-        if n_bands is not None:
-            raise ValueError("n_bands only applies to banding='contiguous'")
-        # (offset, width) in bits, LSB-first; widths sum to 64
-        blocks = [(0, 11), (11, 11), (22, 11), (33, 11), (44, 10), (54, 10)]
-        if max_hamming > len(blocks) - 2:
-            raise ValueError("block-pair pigeonhole needs max_hamming <= n_blocks - 2")
-        from itertools import combinations
+    errors damage ≤4 blocks, so ≥2 blocks survive intact and some PAIR
+    of intact blocks agrees — recall 1.0 for
+    max_hamming ≤ n_blocks−2 = 4. Then an exact ``bit_count(xor)``
+    verify on the two signatures, so the output has no false positives.
+    Same shuffle shape as MinHash LSH: per-row signatures, band-bucket
+    equi-join, cheap exact verify (two longs per pair, no arrays
+    shipped).
 
-        def _blk(off: int, w: int) -> Column:
-            return F.shiftrightunsigned("simhash", off).bitwiseAND(
-                F.lit((1 << w) - 1)
-            )
+    Why block pairs: contiguous 4×16-bit bands key on a FIXED
+    ≤65k-value space per table, so bucket occupancy — and the
+    Σ bucket² candidate mass behind the verify join — grows
+    QUADRATICALLY with the corpus (r12 measured 18× wall for 8× docs).
+    The block-pair keys' larger key space holds it ~linear (SCALE.md);
+    15 exploded rows/doc instead of 4 is the linear price."""
+    # (offset, width) in bits, LSB-first; widths sum to 64
+    blocks = [(0, 11), (11, 11), (22, 11), (33, 11), (44, 10), (54, 10)]
+    if max_hamming > len(blocks) - 2:
+        raise ValueError("block-pair pigeonhole needs max_hamming <= n_blocks - 2")
+    from itertools import combinations
 
-        # concatenate two blocks into one ≤22-bit long: hi << w_lo | lo
-        band_vals = F.array(
-            *[
-                F.shiftleft(_blk(oi, wi), wj).bitwiseOR(_blk(oj, wj))
-                for (oi, wi), (oj, wj) in combinations(blocks, 2)
-            ]
-        )
-    else:
-        raise ValueError(f"unknown banding {banding!r}")
+    def _blk(off: int, w: int) -> Column:
+        return F.shiftrightunsigned("simhash", off).bitwiseAND(F.lit((1 << w) - 1))
+
+    # concatenate two blocks into one ≤22-bit long: hi << w_lo | lo
+    band_vals = F.array(
+        *[
+            F.shiftleft(_blk(oi, wi), wj).bitwiseOR(_blk(oj, wj))
+            for (oi, wi), (oj, wj) in combinations(blocks, 2)
+        ]
+    )
     # persist AFTER argument validation: an error path must not leave
     # a registered cache entry behind (r13 review)
     sig = scoped_persist(simhash(df, text_col, id_col).withColumnRenamed(id_col, "id"))
@@ -875,100 +742,9 @@ def simhash_neardup_pairs(
     )
 
 
-def simhash_neardup_pairs_portable(
-    df: DataFrame,
-    max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bands: int | None = None,
-    banding: str = "block_pair",
-) -> DataFrame:
-    """Near-dup pairs over the PORTABLE (md5-bit) simhash — the same
-    Hamming-band pigeonhole shape as simhash_neardup_pairs, but with a
-    signature an external SQL engine reproduces bit-for-bit, so the
-    whole pair set is oracle-checkable. The verify stage recomputes
-    the exact Hamming distance from the two hex strings (4 bits per
-    digit position), so RESULTS are identical under any banding with
-    recall 1.0 — only the candidate volume differs.
-
-    Banding (r12): the default is BLOCK-PAIR keying (Manku, Jain &
-    Das Sarma, WWW 2007 §3 — the production simhash design): split
-    the 16 hex digits into 6 blocks (3,3,3,3,2,2 digits) and key each
-    of the C(6,2)=15 tables on the CONCATENATION of two blocks
-    (20–24-bit keys). Pigeonhole: ≤3 bit errors damage ≤3 blocks, so
-    ≥3 blocks match exactly and some PAIR of intact blocks agrees —
-    recall stays 1.0 for max_hamming ≤ n_blocks−2 = 4. The old
-    contiguous 4×16-bit banding (``banding="contiguous"``) keys on a
-    FIXED 65k-value space per table, so bucket occupancy — and the
-    Σ bucket² candidate mass — grows QUADRATICALLY with the corpus:
-    measured 4.5 s → 81 s (18× for 8× docs) at the ×8 sf0.1 replica,
-    where block-pair keys' 16–256× larger key space holds the same
-    run to ~linear (SCALE.md r12). 15 exploded rows/doc instead of 4
-    is the linear price for the quadratic term's collapse."""
-    if banding == "contiguous":
-        n_bands = 4 if n_bands is None else n_bands
-        if max_hamming >= n_bands:
-            raise ValueError("pigeonhole guarantee needs max_hamming < n_bands")
-        width = 16 // n_bands  # hex digits per band
-        band_vals = F.array(
-            *[F.substring("sig", b * width + 1, width) for b in range(n_bands)]
-        )
-    elif banding == "block_pair":
-        if n_bands is not None:
-            raise ValueError("n_bands only applies to banding='contiguous'")
-        blocks = [(0, 3), (3, 3), (6, 3), (9, 3), (12, 2), (14, 2)]
-        if max_hamming > len(blocks) - 2:
-            raise ValueError("block-pair pigeonhole needs max_hamming <= n_blocks - 2")
-        from itertools import combinations
-
-        band_vals = F.array(
-            *[
-                F.concat(
-                    F.substring("sig", si + 1, li), F.substring("sig", sj + 1, lj)
-                )
-                for (si, li), (sj, lj) in combinations(blocks, 2)
-            ]
-        )
-    else:
-        raise ValueError(f"unknown banding {banding!r}")
-    # three consumers (bucketing + both verify sides): persist so the
-    # 64-aggregate md5 signature pass runs once, same as the fast path
-    sig = scoped_persist(_portable_simhash_frame(df, text_col, id_col))
-    buckets = sig.select("id", F.posexplode(band_vals).alias("band", "h"))
-    a = buckets.select("band", "h", F.col("id").alias("doc_a"))
-    b = buckets.select("band", "h", F.col("id").alias("doc_b"))
-    # banded table is corpus-sized: bucket self-join shuffles on the
-    # bucket key (r12 path-scoped lint finding — see
-    # simhash_neardup_pairs / minhash_lsh_pairs)
-    cand = (
-        a.join(b.hint("shuffle_hash"), ["band", "h"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    hexchars = F.lit("0123456789abcdef")
-
-    def _digit(col: str, i: int) -> Column:
-        return F.position(F.substring(F.col(col), i, 1), hexchars).cast("int") - 1
-
-    ham = None
-    for i in range(1, 17):
-        term = F.bit_count(_digit("sig_a", i).bitwiseXOR(_digit("sig_b", i)))
-        ham = term if ham is None else ham + term
-    sa = sig.select(F.col("id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    return (
-        cand.hint("shuffle_hash").join(sa, "doc_a")
-        .hint("shuffle_hash").join(sb, "doc_b")
-        .withColumn("hamming", ham.cast("bigint"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
 def _simhash_pairs_oracle(max_hamming: int = 3, n_bands: int = 4) -> str:
     width = 16 // n_bands
-    sig_expr = _portable_simhash_duck()
+    sig_expr = _simhash_hex_duck()
     band_exprs = ", ".join(
         f"substr(sig, {b * width + 1}, {width})" for b in range(n_bands)
     )
@@ -1001,13 +777,12 @@ WHERE {ham} <= {max_hamming}
     tags=("dedup", "llm", "hash"),
 )
 def dedup_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (Hamming ≤ 3 over 4 bands): exact recall
-    by pigeonhole, bit-count verify. FULLY oracle-checked (upgraded
-    from rows-only) by running the identical band→verify pipeline over
-    the portable md5-bit signature in DuckDB; the xxhash64 fast path
-    (simhash_neardup_pairs) keeps its property pins in
-    tests/test_operators_quality.py."""
-    return simhash_neardup_pairs_portable(load(spark, sf_dir, "documents"))
+    """SimHash near-dup pairs (Hamming ≤ 3, block-pair keys): exact
+    recall by pigeonhole, bit-count verify. Fully oracle-checked: DuckDB
+    builds the same md5-bit signatures and finds candidates with a
+    DIFFERENT complete generator (contiguous 4×16-bit bands), so equal
+    results pin both the signatures and the recall."""
+    return simhash_neardup_pairs(load(spark, sf_dir, "documents"))
 
 
 # --- asymmetric containment (quote / subset detection) --------------------

@@ -14,7 +14,9 @@ only (not the accumulated result); accumulated results are unioned
 lazily and the lineage is truncated with ``localCheckpoint`` every
 ``checkpoint_every`` iterations — unbounded lineage is the classic
 iterative-Spark failure mode (plan grows linearly, stack overflows at
-~100 iterations). Termination: empty frontier or ``max_iterations``.
+~100 iterations). Termination: an empty frontier; a frontier still
+non-empty after ``max_iterations`` rounds raises ``RuntimeError``
+rather than return a truncated result.
 """
 
 from __future__ import annotations
@@ -40,6 +42,8 @@ def recursive_cte(
     next set of rows (same schema). With ``distinct=True``, rows
     already produced are removed from the frontier each round
     (UNION-distinct fixpoint; guarantees termination on cyclic data).
+    Raises ``RuntimeError`` if round ``max_iterations`` still produces
+    rows.
     """
     acc = seed
     frontier = seed.localCheckpoint(eager=True)
@@ -51,9 +55,12 @@ def recursive_cte(
         # lineage so the per-iteration plan stays O(1), not O(i).
         nxt = nxt.localCheckpoint(eager=True)
         if nxt.isEmpty():
-            break
+            return acc.distinct() if distinct else acc
         acc = acc.union(nxt)
         frontier = nxt
         if (i + 1) % checkpoint_every == 0:
             acc = acc.localCheckpoint(eager=True)
-    return acc.distinct() if distinct else acc
+    raise RuntimeError(
+        f"recursive_cte: frontier still non-empty after "
+        f"max_iterations={max_iterations} rounds"
+    )

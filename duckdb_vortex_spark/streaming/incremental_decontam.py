@@ -74,7 +74,7 @@ def build_eval_index(
     dataset — the build-once/search-many artifact every micro-batch
     reloads. Written id-sorted (deterministic layout; the index is
     eval-set-sized, so sorting is trivial)."""
-    esig = minhash_signatures(eval_df, text_col, id_col, num_hashes, n, engine="jvm")
+    esig = minhash_signatures(eval_df, text_col, id_col, num_hashes, n)
     overwrite_batch_atomic(
         esig.repartitionByRange(STATE_FILES, "id").sortWithinPartitions("id"),
         index_dir,

@@ -49,9 +49,9 @@ def stages(spark):
     train = d.filter(F.col("source") != "src0")
     eval_df = d.filter(F.col("source") == "src0")
 
-    esig = minhash_signatures(eval_df, "text", "doc_id", 32, 3, engine="jvm")
+    esig = minhash_signatures(eval_df, "text", "doc_id", 32, 3)
     ebuck = band_buckets(esig, 32, 2).withColumnRenamed("id", "doc_b")
-    tsig = minhash_signatures(train, "text", "doc_id", 32, 3, engine="jvm")
+    tsig = minhash_signatures(train, "text", "doc_id", 32, 3)
     tbuck = band_buckets(tsig.select("id", "mh"), 32, 2)
     cand = (
         tbuck.join(F.broadcast(ebuck.select("band", "h", "doc_b")), ["band", "h"])

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import ast
 import io
+import os
 import sys
 import tokenize
 
@@ -85,4 +86,10 @@ def main(paths: list[str]) -> None:
 
 
 if __name__ == "__main__":
-    main(sys.argv[1:])
+    try:
+        main(sys.argv[1:])
+    except BrokenPipeError:
+        # stdout closed early (piped into head): point it at devnull so
+        # the interpreter's exit flush does not raise again, and stop
+        os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())
+        sys.exit(1)

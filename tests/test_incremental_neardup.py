@@ -12,10 +12,17 @@ import os
 from pyspark.sql import functions as F
 
 from duckdb_vortex_spark.catalog import load
-from duckdb_vortex_spark.operators.dedup import minhash_lsh_pairs
+from duckdb_vortex_spark.operators.dedup import (
+    band_buckets,
+    minhash_lsh_pairs,
+    minhash_signatures,
+)
+from duckdb_vortex_spark.operators.text import tokens
 from duckdb_vortex_spark.sources.vortex import register
 from duckdb_vortex_spark.streaming.incremental_neardup import (
     incremental_neardup_stream,
+    lsh_buckets,
+    lsh_signatures,
     neardup_process_batch,
 )
 from duckdb_vortex_spark.streaming.sinks import batch_dirs, compact_dataset_incremental
@@ -36,6 +43,28 @@ def _batch_answer(docs):
     pairs = minhash_lsh_pairs(docs, threshold=0.8)
     dropped = {r["doc_b"] for r in pairs.collect()}
     return {r["doc_id"]: r["doc_id"] not in dropped for r in docs.select("doc_id").collect()}
+
+
+def test_batch_and_stream_share_one_hash_family(spark):
+    """Batch pair-finding and the streaming LSH index bucket a doc
+    alike: `band_buckets(minhash_signatures(docs))` and the chain's
+    `lsh_buckets(lsh_signatures(...))` give the same (id, band, h)
+    rows, so a batch-built index and a streamed one are
+    interchangeable."""
+    docs = load(spark, SF_DIR, "documents")
+    batch = band_buckets(minhash_signatures(docs, "text", "doc_id", 32, 3), 32, 2)
+    stream = lsh_buckets(
+        lsh_signatures(
+            docs.select(F.col("doc_id").alias("id"), tokens("text").alias("__toks")),
+            32,
+            3,
+            2,
+        )
+    )
+    got = sorted(map(tuple, batch.select("id", "band", "h").collect()))
+    want = sorted(map(tuple, stream.select("id", "band", "h").collect()))
+    assert got == want
+    assert len(got) == 16 * docs.count()
 
 
 def test_chopping_invariance(spark, tmp_path):

@@ -129,70 +129,13 @@ def test_asof_forward_and_edges(spark):
     assert fwd[(2, 5)] == 500.0
 
 
-def test_simhash_block_pair_banding_equals_contiguous(spark):
-    """r12: the portable path's default banding is Manku-style
-    block-pair keying (C(6,2)=15 tables on 20-24-bit keys — the
-    corpus-scalable key space). Both it and the old contiguous 4x16-bit
-    banding guarantee recall 1.0 for hamming <= 3 by pigeonhole, so
-    with the exact verify they MUST emit identical pair sets — this is
-    the local twin of the driver's oracle check (the DuckDB oracle
-    still uses the contiguous scheme on purpose: result equality
-    across different candidate generators is the strongest check)."""
-    from duckdb_vortex_spark.catalog import load
-    from duckdb_vortex_spark.operators.dedup import simhash_neardup_pairs_portable
-    from pyspark.sql import functions as F
-
-    from .conftest import SF_DIR
-
-    docs = load(spark, SF_DIR, "documents").select("doc_id", "text").limit(150)
-    dup = docs.limit(1).select((F.col("doc_id") + 10_000_000).alias("doc_id"), "text")
-    corpus = docs.union(dup)
-    bp = simhash_neardup_pairs_portable(corpus, banding="block_pair")
-    ct = simhash_neardup_pairs_portable(corpus, banding="contiguous")
-    rows_bp = sorted(tuple(r) for r in bp.collect())
-    rows_ct = sorted(tuple(r) for r in ct.collect())
-    assert rows_bp == rows_ct
-    assert any(h == 0 for _, _, h in rows_bp), "planted dup must surface"
-
-
-def test_simhash_native_block_pair_banding_equals_contiguous(spark):
-    """r13 (VERDICT r12 #1): the NATIVE 64-bit path now defaults to
-    Manku block-pair keying (6 shift/mask blocks, C(6,2)=15
-    concatenated ≤22-bit keys) — same port as the portable twin's r12
-    fix. Both bandings guarantee recall 1.0 for hamming ≤ 3 by
-    pigeonhole and share the exact bit_count(xor) verify, so the pair
-    sets MUST be identical; and max_hamming=4 (legal only under
-    block-pair, n_blocks−2=4) must be a superset of the ≤3 set."""
-    from duckdb_vortex_spark.catalog import load
-    from duckdb_vortex_spark.operators.dedup import simhash_neardup_pairs
-    from pyspark.sql import functions as F
-
-    from .conftest import SF_DIR
-
-    docs = load(spark, SF_DIR, "documents").select("doc_id", "text").limit(150)
-    dup = docs.limit(1).select((F.col("doc_id") + 10_000_000).alias("doc_id"), "text")
-    corpus = docs.union(dup)
-    bp = sorted(tuple(r) for r in simhash_neardup_pairs(corpus, banding="block_pair").collect())
-    ct = sorted(tuple(r) for r in simhash_neardup_pairs(corpus, banding="contiguous").collect())
-    assert bp == ct
-    assert any(h == 0 for _, _, h in bp), "planted dup must surface"
-    h4 = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_neardup_pairs(corpus, max_hamming=4).collect()
-    }
-    assert {(a, b) for a, b, _ in bp} <= h4
-    import pytest
-
-    with pytest.raises(ValueError):
-        simhash_neardup_pairs(corpus, max_hamming=4, banding="contiguous")
-    with pytest.raises(ValueError):
-        simhash_neardup_pairs(corpus, max_hamming=5)
-
-
 def test_simhash_neardup_pigeonhole_complete(spark):
     """Band join must find EVERY pair with Hamming ≤ 3 (pigeonhole is
     a guarantee, not a probability): compare against the brute-force
-    pair set on a corpus slice, and identical docs sit at distance 0."""
+    pair set on a corpus slice, and identical docs sit at distance 0.
+    Block-pair keys over 6 blocks stay complete up to Hamming 4, so
+    the ≤ 4 pair set is a superset of the ≤ 3 one; Hamming 5 is
+    refused."""
     from duckdb_vortex_spark.catalog import load
     from duckdb_vortex_spark.operators.dedup import simhash, simhash_neardup_pairs
     from pyspark.sql import functions as F
@@ -219,6 +162,13 @@ def test_simhash_neardup_pigeonhole_complete(spark):
     assert got == want
     orig_id = dup.collect()[0].doc_id - 10_000_000
     assert got.get((orig_id, orig_id + 10_000_000)) == 0
+    h4 = {
+        (r.doc_a, r.doc_b)
+        for r in simhash_neardup_pairs(corpus, max_hamming=4).collect()
+    }
+    assert set(got) <= h4
+    with pytest.raises(ValueError):
+        simhash_neardup_pairs(corpus, max_hamming=5)
 
 
 def test_approx_percentile_error_bound(spark):
@@ -262,21 +212,37 @@ def test_span_trim_invariants(spark):
         assert full == 1, f"dup group kept {full} full copies"
 
 
-def test_connected_components_long_path_converges(spark):
-    """Pointer jumping (r6): a 120-node PATH has diameter 119 — plain
-    1-hop min-propagation would need 119 rounds and silently return
-    WRONG labels under the 50-iteration cap; label-of-label halving
-    converges in O(log d). Every node must label to node 0, and a
-    disjoint 3-clique must keep its own minimum."""
-    from duckdb_vortex_spark.operators.dedup import connected_components
-
+def _path_and_clique(spark):
     path = [(i, i + 1) for i in range(119)]  # 0-1-2-...-119
     clique = [(1000, 1001), (1001, 1002), (1000, 1002)]
-    edges = spark.createDataFrame(path + clique, ["doc_a", "doc_b"])
-    got = {r.node: r.component for r in connected_components(edges).collect()}
+    return spark.createDataFrame(path + clique, ["doc_a", "doc_b"])
+
+
+def test_connected_components_long_path_converges(spark):
+    """Pointer jumping (r6): a 120-node PATH has diameter 119 — plain
+    1-hop min-propagation would need 119 rounds, past the 50-round cap;
+    label-of-label halving converges in O(log d). Every node must label
+    to node 0, and a disjoint 3-clique must keep its own minimum."""
+    from duckdb_vortex_spark.operators.dedup import connected_components
+
+    got = {
+        r.node: r.component
+        for r in connected_components(_path_and_clique(spark)).collect()
+    }
     assert all(got[i] == 0 for i in range(120))
     assert all(got[i] == 1000 for i in (1000, 1001, 1002))
     assert len(got) == 123
+
+
+def test_connected_components_raises_at_cap(spark, monkeypatch):
+    """Labels still changing in the last allowed round are an
+    unconverged result: the kernel raises, naming itself and its cap,
+    instead of returning split components."""
+    from duckdb_vortex_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="connected_components.*CC_MAX_ROUNDS=1"):
+        dedup.connected_components(_path_and_clique(spark))
 
 
 def test_minhash_expr_form_identical(spark):
@@ -293,7 +259,7 @@ def test_minhash_expr_form_identical(spark):
     )
 
     d = load(spark, SF_DIR, "documents").limit(200)
-    new_sig = minhash_signatures(d, "text", "doc_id", 32, 3, engine="jvm")
+    new_sig = minhash_signatures(d, "text", "doc_id", 32, 3)
 
     sh = shingle_table(d, "text", "doc_id", 3)
     init = F.array(*[F.lit(2**63 - 1).cast("bigint") for _ in range(32)])

@@ -132,9 +132,8 @@ def test_salted_broadcast_left_rejects_unhonorable_how(spark):
             salted_broadcast_left(big, small, "k", n_salts=4, how=how)
 
 
-def test_recursive_distinct_terminates_on_cycle(spark):
-    """UNION-distinct recursion must reach a fixpoint on cyclic edges
-    (a→b→c→a) instead of looping to max_iterations."""
+def _cycle(spark):
+    """(seed, step) walking the cyclic edges a→b→c→a from a."""
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a")], ["src", "dst"]
     )
@@ -145,8 +144,23 @@ def test_recursive_distinct_terminates_on_cycle(spark):
             F.col("dst").alias("node")
         )
 
-    out = recursive_cte(seed, step, distinct=True, max_iterations=10)
+    return seed, step
+
+
+def test_recursive_distinct_terminates_on_cycle(spark):
+    """UNION-distinct recursion must reach a fixpoint on cyclic edges
+    (a→b→c→a) instead of looping to max_iterations."""
+    out = recursive_cte(*_cycle(spark), distinct=True, max_iterations=10)
     assert _rows(out) == [("a",), ("b",), ("c",)]
+
+
+def test_recursive_raises_when_frontier_outlives_cap(spark):
+    """UNION ALL recursion over the same cycle never empties its
+    frontier: the last allowed round still produces rows, so the loop
+    raises, naming itself and its cap, instead of returning a
+    truncated result."""
+    with pytest.raises(RuntimeError, match="recursive_cte.*max_iterations=5"):
+        recursive_cte(*_cycle(spark), distinct=False, max_iterations=5)
 
 
 def test_recursive_union_all_depth(spark):

@@ -142,9 +142,9 @@ def test_minhash_lsh_10x(spark):
     t10, n10 = _timed(lambda: minhash_lsh_pairs(d10, threshold=0.8).count())
     # skew: band-bucket sizes of the 10x run (pre-cap), the Σ bucket²
     # bound the module docstring claims
-    from duckdb_vortex_spark.operators.dedup import _signatures_arrow
+    from duckdb_vortex_spark.operators.dedup import minhash_signatures
 
-    sig = _signatures_arrow(d10, "text", "doc_id", 32, 3)
+    sig = minhash_signatures(d10, "text", "doc_id", 32, 3)
     buckets = sig.select(
         F.posexplode(
             F.array(
@@ -180,70 +180,17 @@ def test_minhash_lsh_10x(spark):
 
 
 def test_simhash_block_pair_candidate_mass_linear(spark):
-    """r12: contiguous 4×16-bit SimHash bands key the corpus into a
-    FIXED ≤65k-bucket space per table, so Σ bucket² candidate mass —
-    and the verify join behind it — grows quadratically with docs
-    (measured 18.5× wall for 8× docs before the fix). The shipped
-    block-pair banding (6 blocks, C(6,2)=15 tables, 20–24-bit keys)
-    must keep the candidate mass ~linear in the corpus. Asserted on
-    the MASS, not the wall (deterministic on a noisy box), at 6×
-    replicas — the regime where the old scheme was already blowing
-    up; the wall factor is recorded for SCALE.md alongside."""
-    from itertools import combinations
-
-    from duckdb_vortex_spark.operators.dedup import (
-        _portable_simhash_frame,
-        simhash_neardup_pairs_portable,
-    )
-
-    K = 6
-    blocks = [(0, 3), (3, 3), (6, 3), (9, 3), (12, 2), (14, 2)]
-    band_vals = F.array(
-        *[
-            F.concat(F.substring("sig", si + 1, li), F.substring("sig", sj + 1, lj))
-            for (si, li), (sj, lj) in combinations(blocks, 2)
-        ]
-    )
-
-    def cand_mass(docs) -> int:
-        sig = _portable_simhash_frame(docs)
-        row = (
-            sig.select(F.posexplode(band_vals).alias("band", "h"))
-            .groupBy("band", "h")
-            .agg(F.count("*").alias("bn"))
-            .agg(F.sum(F.col("bn") * (F.col("bn") - 1) / 2).alias("m"))
-            .first()
-        )
-        return int(row.m or 0)
-
-    d1, _ = _replicate_docs(spark, 1)
-    dk, _ = _replicate_docs(spark, K)
-    m1, mk = cand_mass(d1), cand_mass(dk)
-    t1, n1 = _timed(lambda: simhash_neardup_pairs_portable(d1).count())
-    tk, nk = _timed(lambda: simhash_neardup_pairs_portable(dk).count())
-    print(
-        f"\nSCALE-STRESS simhash_block_pair: mass 1x={m1} {K}x={mk} "
-        f"(bound {K * SLACK:.0f}x+floor) wall 1x={t1:.2f}s {K}x={tk:.2f}s "
-        f"factor={tk / max(t1, 1e-9):.1f}x pairs {n1}->{nk}"
-    )
-    assert mk <= m1 * K * SLACK + 1000, (
-        f"block-pair candidate mass superlinear: {m1} -> {mk} at {K}x"
-    )
-    assert tk / max(t1, 1e-9) <= K * SLACK
-
-
-def test_simhash_native_block_pair_candidate_mass_linear(spark):
-    """r13 (VERDICT r12 #1): the NATIVE 64-bit simhash_neardup_pairs
-    carried the same fixed-key-space trap r12 fixed only in the
-    portable twin — contiguous 4×16-bit bands key into ≤65k buckets
-    per table, so Σ C(bucket,2) candidate mass grows quadratically
-    with the corpus. The ported block-pair default (6 shift/mask
-    blocks of the 64-bit long, C(6,2)=15 concatenated ≤22-bit keys)
-    must hold the candidate mass ~linear. Same mass-not-wall
-    assertion discipline as the portable pin above; the contiguous
-    mass is printed alongside so the gap the port buys is recorded,
-    not asserted (it only diverges at corpus sizes slow-tier won't
-    pay for)."""
+    """Contiguous 4×16-bit SimHash bands key the corpus into a FIXED
+    ≤65k-bucket space per table, so Σ C(bucket,2) candidate mass — and
+    the verify join behind it — grows quadratically with docs
+    (r12 measured 18.5× wall for 8× docs). The block-pair keys of
+    `simhash_neardup_pairs` (6 shift/mask blocks of the 64-bit
+    signature, C(6,2)=15 concatenated ≤22-bit keys) must hold both the
+    candidate mass and the wall ~linear in the corpus, at 6× replicas —
+    the regime where the old scheme was already blowing up. The mass
+    bound is the deterministic one on a noisy box; the contiguous mass
+    is printed alongside so the gap is recorded, not asserted (it only
+    diverges at corpus sizes this tier won't pay for)."""
     from itertools import combinations
 
     from duckdb_vortex_spark.operators.dedup import (
@@ -288,12 +235,12 @@ def test_simhash_native_block_pair_candidate_mass_linear(spark):
     t1, n1 = _timed(lambda: simhash_neardup_pairs(d1).count())
     tk, nk = _timed(lambda: simhash_neardup_pairs(dk).count())
     print(
-        f"\nSCALE-STRESS simhash_native_block_pair: mass 1x={m1} {K}x={mk} "
+        f"\nSCALE-STRESS simhash_block_pair: mass 1x={m1} {K}x={mk} "
         f"(contiguous {c1}->{ck}) wall 1x={t1:.2f}s {K}x={tk:.2f}s "
         f"factor={tk / max(t1, 1e-9):.1f}x pairs {n1}->{nk}"
     )
     assert mk <= m1 * K * SLACK + 1000, (
-        f"native block-pair candidate mass superlinear: {m1} -> {mk} at {K}x"
+        f"block-pair candidate mass superlinear: {m1} -> {mk} at {K}x"
     )
     assert tk / max(t1, 1e-9) <= K * SLACK
 
