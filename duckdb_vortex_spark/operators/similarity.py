@@ -2,10 +2,11 @@
 brute-force cosine top-k as the exact baseline, plus an LSH-bucketed
 approximate variant as the scale path.
 
-Embeddings are ``array<float>`` columns. All dot products are computed
-with ``F.zip_with`` + ``F.aggregate`` over doubles — JVM-side, and
-(verified) bit-identical to DuckDB's sequential ``list_sum`` reduction,
-which is what makes the brute-force entry oracle-checkable.
+Embeddings are ``array<float>`` columns. Dot products are computed
+either with ``F.zip_with`` + ``F.aggregate`` over doubles (JVM-side) or
+by the numpy cosine kernel (``_fold``), which folds in the same order;
+both are (verified) bit-identical to DuckDB's sequential ``list_sum``
+reduction, which is what makes the entries oracle-checkable.
 
 Scale design:
 - brute force is O(|Q|·|C|) — exact, used for small query sets and as
@@ -18,13 +19,14 @@ Scale design:
 
 from __future__ import annotations
 
-import math as _math
-from typing import Callable, NamedTuple
+from typing import NamedTuple
 
 from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..catalog import load, query
 from ..session import scoped_persist
@@ -32,21 +34,16 @@ from ..session import scoped_persist
 # Storage levels for the PQ interpreted-HOF persist barriers (the
 # distance-table / codes subtrees that MUST cache — a repartition
 # barrier does not survive RepartitionByExpression projection
-# pushdown, see pq_adc_topk). Module-level so
-# scripts/retime_ivfpq_ab.py can A/B levels in ONE session.
+# pushdown, see pq_adc_topk).
 #
 # Split by what the barrier holds (VERDICT r5 #4): the CODES side
 # grows ∝ corpus — SCALE.md's standing rule is that pinning executor
 # heap ∝ corpus is a tax at 100 TB — so it caches DISK_ONLY
-# (serialized, off the GC heap). The r6 A/B run set a nonexistent
-# attribute and measured nothing (ADVICE r6); the FIXED script
-# (r7, 2×7 interleaved runs, sf0.1, each arm actually driving
-# PQ_CODES_STORAGE) measured DISK_ONLY median 2.649 s vs
-# MEMORY_AND_DISK 2.700 s — the scale-safe level is locally free,
-# now for real. The QUERY side is bounded (|queries| × m·k doubles)
-# and stays on the default level. The r5 11 s GC-tail outlier has
-# not reproduced in any A/B session — box noise, not a plan
-# property.
+# (serialized, off the GC heap). An interleaved A/B (r7, 2×7 runs,
+# sf0.1, each arm driving PQ_CODES_STORAGE) measured DISK_ONLY median
+# 2.649 s vs MEMORY_AND_DISK 2.700 s: the scale-safe level is locally
+# free. The QUERY side is bounded (|queries| × m·k doubles) and stays
+# on the default level.
 PQ_CODES_STORAGE = StorageLevel.DISK_ONLY
 PQ_QUERY_STORAGE = StorageLevel.MEMORY_AND_DISK
 
@@ -74,7 +71,19 @@ def _norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    """Null for a zero norm, as DuckDB's division gives."""
+    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best of ``scored`` (query_id, cand_id,
+    cos_sim): cos_sim desc, ties by cand_id, ranked as a bigint."""
+    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "cand_id", "cos_sim", F.col("rnk").cast("bigint").alias("rnk"))
+    )
 
 
 def _sql_cos(a: str, b: str) -> str:
@@ -126,15 +135,12 @@ def topk_bruteforce(
         .select(
             "query_id",
             "cand_id",
-            (_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("cos_sim"),
+            F.try_divide(
+                _dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn")
+            ).alias("cos_sim"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "cos_sim", F.col("rnk").cast("bigint").alias("rnk"))
-    )
+    return _rank_topk(scored, k)
 
 
 TOPK_ORACLE = """
@@ -263,12 +269,7 @@ def lsh_topk(
     scored = cand.select(
         "query_id", "cand_id", cosine(F.col("qv"), F.col("cv")).alias("cos_sim")
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "cos_sim", F.col("rnk").cast("bigint").alias("rnk"))
-    )
+    return _rank_topk(scored, k)
 
 
 def _lsh_ann_oracle(n_planes: int = 8, n_tables: int = 4, dim: int = 64, k: int = 10) -> str:
@@ -372,19 +373,8 @@ def sample_centroids(
     )
 
 
-# Plan-size guard for the literal IVF assignment kernel (VERDICT r14
-# wrong #2): the expression holds k*(dim+1) literal doubles (k centroid
-# arrays + k folded norms). The binding limit is Catalyst plan/codegen
-# size, not data: 65_536 literals keeps the expression tree in the
-# regime this repo has measured (k<=64, dim<=128 is ~4k literals; a
-# k=4096 x dim=768 production coarse quantizer would be ~3.1M). Past
-# it every assigner computes through the join fallback instead. Same
-# trade as pq_encode's codebook literals, which documents it; this one
-# enforces it.
-LLOYD_LITERAL_BUDGET = 65_536
-
-# Guard bound for the r15 probe-side broadcasts (ADVICE r15, medium):
-# the query side of the ANN probe joins is bounded *by convention*
+# Guard bound for the r15 probe-side broadcast (ADVICE r15, medium):
+# the query side of the IVF-PQ probe join is bounded *by convention*
 # (|Q|·n_probe rows of m·k-double distance tables), but nothing
 # validated it — a caller probing a huge query batch would hit Spark's
 # 8 GiB / 512M-row broadcast hard cap and FAIL outright where the
@@ -424,142 +414,195 @@ def _probe_bounded_count(df: DataFrame, bound: int) -> int:
     return n
 
 
-def _probe_side(
-    qry: DataFrame,
-    queries_df: DataFrame,
-    n_probe: int,
-    row_bytes: int,
-    fallback: Callable[[DataFrame], DataFrame],
-) -> DataFrame:
-    """The query side of an ANN probe join: ``qry`` broadcast when its
-    estimated footprint (|Q| · n_probe rows × row_bytes) fits
-    PROBE_BROADCAST_MAX_BYTES, else ``fallback(qry)`` — the guard
-    changes the join strategy, never the rows."""
+def _probe_side(qry: DataFrame, queries_df: DataFrame, n_probe: int, row_bytes: int) -> DataFrame:
+    """The query side of the IVF-PQ probe join: ``qry`` broadcast when
+    its estimated footprint (|Q| · n_probe rows × row_bytes) fits
+    PROBE_BROADCAST_MAX_BYTES, else behind the PQ persist barrier — the
+    guard changes the join strategy, never the rows."""
     max_rows = max(1, PROBE_BROADCAST_MAX_BYTES // max(1, n_probe * row_bytes))
     if _probe_bounded_count(queries_df, max_rows) <= max_rows:
         return F.broadcast(qry)
-    return fallback(qry)
+    return _pq_barrier(qry)
 
 
-def _arr_sql(vals: list[float]) -> str:
-    """One SQL array literal of doubles. repr doubles: shortest exact
-    round-trip decimal, so SQL-text construction is value-exact."""
-    return "array(" + ",".join(f"{float(x)!r}D" for x in vals) + ")"
+# --- the cosine kernel -----------------------------------------------------
+#
+# One numpy cosine serves IVF assignment (flat and two-level), the IVF
+# rerank and the exact block top-k, in Arrow-batched Python workers
+# (numpy and pyarrow only). It is vectorized over rows and sequential
+# over dimensions: ``acc = acc + a[i] * b[i]`` from 0.0 is the order of
+# _dot's and _norm's aggregate, and numpy's float64 multiply, add,
+# divide and sqrt are each correctly rounded, so every csim is the
+# double ``_dot(a, b) / (_norm(a) * _norm(b))`` gives. A zero
+# denominator gives a null csim, as the HOF divisions' try_divide does.
+
+_BLOCK_CELLS = 1 << 18  # rows × columns of one kernel block
 
 
-def _centroid_csim_sqls(
-    rows: list[tuple[int, list[float]]], vec_col: str, vnorm_col: str
-) -> list[str]:
-    """One SQL cosine expression PER centroid in ``rows`` order, each
-    computed per-row from CENTROID LITERALS — no join, no shuffle. The
-    fold order and casts mirror _dot/_norm exactly (pinned bit-identical
-    to the join fallback on the driver corpus). Each centroid's norm is
-    one literal, folded here in _norm's order (a sequential sum of
-    squares from 0.0, then a correctly rounded sqrt), so it is the
-    double the row-wise form computes, and a plan parses and analyses
-    one literal array per centroid, not two."""
-    return [
-        f"(aggregate(zip_with({vec_col}, {_arr_sql(v)}, "
-        f"(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, x) -> acc + x) "
-        f"/ ({vnorm_col} * {_literal_norm(v)!r}D))"
-        for _, v in rows
-    ]
+def _fold(a, b):
+    """Σ a[i] * b[i] over the leading (dimension) axis, a left fold from
+    0.0; the trailing axes broadcast."""
+    import numpy as np
+
+    acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
 
 
-def _literal_norm(vals: list[float]) -> float:
-    acc = 0.0
-    for x in vals:
-        acc += x * x
-    return _math.sqrt(acc)
+class _Vecs(NamedTuple):
+    """Vectors as the kernel reads them. ``x`` is (dim, rows) float64,
+    dimension-major for the fold. ``ok`` marks the rows whose cosine is
+    defined: not null, ``dim`` long (``zip_with`` pads a length mismatch
+    with null) and no null element. ``norm`` is each row's own _norm,
+    whatever its length, and ``null`` marks where that is null: a null
+    vector or a null element."""
+
+    x: object
+    ok: object
+    norm: object
+    null: object
+
+    def take(self, r) -> "_Vecs":
+        return _Vecs(self.x[:, r], self.ok[r], self.norm[r], self.null[r])
 
 
-def _literal_ok(rows: list[tuple[int, list[float]]]) -> bool:
-    """Whether centroid ``rows`` compile into a plan as literals: at
-    least one, one dimension, k*(dim+1) literal doubles within
-    :data:`LLOYD_LITERAL_BUDGET`, and every value finite and not null
-    (ADVICE r15: repr'd 'nan'/'inf' do not parse as Spark SQL doubles,
-    and a null has no double literal). Rows that fail it assign
-    through the join fallback, which computes through."""
-    return (
-        bool(rows)
-        and len({len(v) for _, v in rows}) == 1
-        and len(rows) * (len(rows[0][1]) + 1) <= LLOYD_LITERAL_BUDGET
-        and all(x is not None and _math.isfinite(x) for _, v in rows for x in v)
+def _vectors(arr, dim: int) -> _Vecs:
+    """The :class:`_Vecs` of an Arrow list array."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = len(arr)
+    lens = pc.list_value_length(arr).fill_null(-1).to_numpy()
+    offs = arr.offsets.to_numpy()[:n]  # positions in arr.values
+    vals = arr.values.to_numpy(zero_copy_only=False).astype(np.float64)
+    enull = arr.values.is_null().to_numpy(zero_copy_only=False)
+    x = np.zeros((dim, n))
+    norm = np.full(n, np.nan)
+    null = lens < 0
+    ok = np.zeros(n, bool)
+    for length in np.unique(lens[lens >= 0]):
+        r = np.nonzero(lens == length)[0]
+        g = offs[r][:, None] + np.arange(length)
+        xl = vals[g].T
+        norm[r] = np.sqrt(_fold(xl, xl))
+        null[r] = enull[g].any(axis=1)
+        if length == dim:
+            x[:, r] = xl
+            ok[r] = ~null[r]
+    return _Vecs(x, ok, norm, null)
+
+
+def _book(rows: list[tuple[int, list[float]]]):
+    """A codebook's cluster ids (ascending, as `codebook_rows` sorts
+    them), its :class:`_Vecs` and its one dimension."""
+    import numpy as np
+    import pyarrow as pa
+
+    dims = {len(v) for _, v in rows}
+    if len(dims) > 1:
+        raise ValueError(f"centroids of different dimensions: {sorted(dims)}")
+    dim = dims.pop() if dims else 0
+    vecs = pa.array([v for _, v in rows], pa.list_(pa.float64()))
+    return np.array([cid for cid, _ in rows], dtype=np.int64), _vectors(vecs, dim), dim
+
+
+def _csim(a: _Vecs, b: _Vecs):
+    """(csim, null): every row of ``a`` against every row of ``b``. A
+    csim is null where either side's cosine is undefined or the
+    denominator is zero."""
+    import numpy as np
+
+    with np.errstate(all="ignore"):
+        den = a.norm[:, None] * b.norm
+        csim = _fold(a.x[:, :, None], b.x[:, None, :]) / den
+    return csim, ~(a.ok[:, None] & b.ok) | (den == 0)
+
+
+def _key(csim, null):
+    """The assignment's sort key, coalesce(-csim, +Inf). Negation is the
+    exact order-reversing map (1 - csim is not)."""
+    import numpy as np
+
+    with np.errstate(all="ignore"):
+        return np.where(null, np.inf, -csim)
+
+
+def _nearest(key, n: int):
+    """Each row's ``n`` best columns by ``key`` ascending, NaN last as
+    Spark sorts it, ties to the lower column. With the columns in
+    cluster_id order that is (csim desc, cluster_id asc), so a row's
+    1-probe cell is always its first multi-probe cell."""
+    import numpy as np
+
+    return np.argsort(key, axis=1, kind="stable")[:, : max(n, 0)]
+
+
+def _topk(q_ids, c_ids, csim, null, k: int):
+    """(row, column) of each query row's ``k`` best candidate columns in
+    `_rank_topk`'s order: cos_sim desc with NaN first (Spark sorts NaN
+    above every value) and null last, then cand_id asc. Self-matches
+    are dropped."""
+    import numpy as np
+
+    cls = np.where(null, 2, np.where(np.isnan(csim), 0, 1))
+    cls[q_ids[:, None] == c_ids] = 3
+    with np.errstate(all="ignore"):
+        val = np.where(cls == 1, -csim, 0.0)
+    order = np.lexsort((np.broadcast_to(c_ids, csim.shape), val, cls), axis=-1)[:, :k]
+    rows = np.repeat(np.arange(len(q_ids)), order.shape[1])
+    cols = order.ravel()
+    keep = cls[rows, cols] < 3
+    return rows[keep], cols[keep]
+
+
+def _assign_pass(df, centroids, id_col, vec_col, dim, width, pick) -> DataFrame:
+    """One map-side ``mapInArrow`` pass over (id, vec): each row with its
+    vnorm, once per cluster id that ``pick`` gives it. pick(block) →
+    (row indexes, cluster ids) for a :class:`_Vecs` block of at most
+    _BLOCK_CELLS / ``width`` rows."""
+    cid = centroids.schema["cluster_id"]
+    cid_type = to_arrow_type(cid.dataType)
+    schema = StructType(
+        [df.schema[id_col], df.schema[vec_col], StructField("vnorm", DoubleType()), cid]
     )
+    step = max(1, _BLOCK_CELLS // max(1, width))
+
+    def assign(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            v = _vectors(batch.column(1), dim)
+            for s in range(0, batch.num_rows, step):
+                at, cids = pick(v.take(slice(s, s + step)))
+                at = at + s
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        batch.column(0).take(at),
+                        batch.column(1).take(at),
+                        pa.array(v.norm[at], mask=v.null[at]),
+                        pa.array(cids, cid_type),
+                    ],
+                    names=[*batch.schema.names, "vnorm", "cluster_id"],
+                )
+
+    return df.select(id_col, vec_col).mapInArrow(assign, schema)
 
 
-def _literal_structs(
-    rows: list[tuple[int, list[float]]],
-    vec_col: str,
-    vnorm_col: str,
-    ids: list[str] | None = None,
-) -> str:
-    """SQL array of one struct(d, i) per centroid in ``rows``: i is
-    ``ids[j]`` (default the 0-based index j) and d = coalesce(-csim,
-    +Inf), the kernel's sort key. Negation is the exact order-reversing
-    key (ADVICE r14: 1 - s is only exact on [0.5, 2], Sterbenz), and the
-    coalesce sorts a null csim last, as the join fallback's window does.
-    csims null per row all-or-nothing (a null, short or null-element
-    vector nulls every centroid's csim), and the all-null tie falls to
-    i ascending."""
-    ids = ids or [str(j) for j in range(len(rows))]
-    return "array(" + ",".join(
-        f"struct(coalesce(-({s}), CAST('Infinity' AS DOUBLE)) AS d, {i} AS i)"
-        for i, s in zip(ids, _centroid_csim_sqls(rows, vec_col, vnorm_col))
-    ) + ")"
+def _scored_topk(q_ids, qv: _Vecs, c_ids, cv: _Vecs, k: int):
+    """Record batches (query_id, cand_id, cos_sim) of each query's local
+    top ``k`` candidates (:func:`_topk`), scored in query-row blocks."""
+    import pyarrow as pa
 
-
-def _literal_topn(
-    rows: list[tuple[int, list[float]]],
-    vec_col: str,
-    vnorm_col: str,
-    n: int,
-    pick: str = "{}",
-) -> str:
-    """The literal assignment kernel: a SQL expression over ``vec_col``
-    for each row's ``n`` nearest centroids of ``rows`` by cosine (csim
-    desc, index asc), each 0-based index mapped through ``pick``. n=1
-    is a scalar argmin, array_min over struct(-csim, index); n>1 an
-    array, nearest first, cut from the sorted :func:`_literal_structs`."""
-    if n == 1:
-        csims = _centroid_csim_sqls(rows, vec_col, vnorm_col)
-        return pick.format(
-            f"(array_min(zip_with(array({','.join(csims)}), "
-            f"sequence(0, {len(rows) - 1}), "
-            f"(s, i) -> struct(-s AS d, i AS i))).i)"
+    step = max(1, _BLOCK_CELLS // max(1, len(c_ids)))
+    for s in range(0, len(q_ids), step):
+        blk = slice(s, s + step)
+        csim, null = _csim(qv.take(blk), cv)
+        r, col = _topk(q_ids[blk], c_ids, csim, null, k)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(q_ids[blk][r]), pa.array(c_ids[col]), pa.array(csim[r, col], mask=null[r, col])],
+            names=["query_id", "cand_id", "cos_sim"],
         )
-    return (
-        f"transform(slice(array_sort({_literal_structs(rows, vec_col, vnorm_col)}), "
-        f"1, {n}), pp -> {pick.format('pp.i')})"
-    )
-
-
-def _join_topn(
-    v: DataFrame,
-    c: DataFrame,
-    n: int,
-    id_col: str,
-    vec_col: str,
-    on: str | None = None,
-) -> DataFrame:
-    """The join fallback of the literal kernel: ``v`` (id, vec, vnorm)
-    scored against the broadcast centroids ``c`` (cluster_id, centroid)
-    — a cross join, or an equi-join on ``on`` — keeping each id's ``n``
-    best by a ``row_number`` window ordered by the kernel's own key,
-    coalesce(-csim, +Inf) then cluster_id. Returns (id, vec, vnorm,
-    cluster_id). Serves every n, so a vector's 1-probe cell is always
-    its first multi-probe cell, NaN csims included."""
-    c = c.withColumn("__cn", _norm(F.col("centroid")))
-    scored = v.join(F.broadcast(c), on) if on else v.crossJoin(F.broadcast(c))
-    d = -(_dot(F.col(vec_col), F.col("centroid")) / (F.col("vnorm") * F.col("__cn")))
-    w = W.partitionBy(id_col).orderBy(
-        F.coalesce(d, F.lit(float("inf"))), F.col("cluster_id")
-    )
-    return (
-        scored.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= n)
-        .select(id_col, vec_col, "vnorm", "cluster_id")
-    )
 
 
 def lloyd_refine(
@@ -571,28 +614,25 @@ def lloyd_refine(
 ) -> DataFrame:
     """Deterministic Lloyd iteration(s) over a centroid table
     (VERDICT r13 next #3): assign every vector to its nearest centroid
-    (map-side, centroids broadcast), replace each centroid with its
-    cluster's mean, keep the old centroid for empty clusters.
+    (map-side), replace each centroid with its cluster's mean, keep the
+    old centroid for empty clusters.
 
     Hash-sampled centroids are the recall floor of the whole IVF
     family; one refine pass moves them toward the data's actual
     density at the cost of one aggregate pass per iteration. The
-    assignment is :func:`ivf_assign` on the rows collected here: within
-    :data:`LLOYD_LITERAL_BUDGET` it is computed per-row from centroid
-    literals (no join, no per-id aggregation), so the only exchange per
+    assignment is :func:`ivf_assign` on the rows collected here, one
+    map-side pass with the centroids in the kernel's closure (no join,
+    no per-id aggregation, at any k × dim), so the only exchange per
     iteration is the groupBy(cluster) of k×(dim+1) algebraic partials.
-    Past the budget it computes through the join fallback, one corpus
-    shuffle per iteration, instead of failing (the budget bounds plan
-    size, not data — see SCALE.md).
 
     Determinism: element sums run in quantized BIGINT arithmetic
     (floor(x·10^6 + 0.5), exact long addition — order-independent,
     unlike a distributed double sum), divided back once per element.
     Same inputs → bit-identical centroids on any partitioning, so a
     refined index is as replayable as the hash-sampled one. Between
-    iterations the centroid frame is re-collected so literals always
-    reproduce the STORED values (float32 columns round-trip through
-    their exact cast, keeping iteration N+1 consistent with what a
+    iterations the centroid frame is re-collected so the kernel always
+    reads the STORED values (float32 columns round-trip through their
+    exact cast, keeping iteration N+1 consistent with what a
     written/reloaded index would hold).
 
     Rows whose embedding is null, dim-mismatched, or carries null
@@ -650,9 +690,8 @@ def lloyd_refine(
 
 def codebook_rows(centroids: DataFrame) -> list[tuple[int, list[float]]]:
     """The (cluster_id, centroid) rows of a codebook, sorted by
-    cluster_id: what `ivf_assign`'s literal path compiles into the plan.
-    A null element stays None, so such a codebook fails
-    :func:`_literal_ok` and assigns through the join fallback."""
+    cluster_id: what `ivf_assign`'s kernel carries in its closure. A
+    null element stays None, and gives that centroid a null csim."""
     return sorted(
         (r["cluster_id"], [None if x is None else float(x) for x in r["centroid"]])
         for r in centroids.select("cluster_id", "centroid").collect()
@@ -668,55 +707,45 @@ def ivf_assign(
     rows: list | None = None,
 ) -> DataFrame:
     """Assign each vector to its ``n_probe`` nearest centroids by
-    cosine (csim desc, cluster_id asc). Centroids are broadcast (|C| is
-    small by construction), so assignment is a map-side-only pass — no
-    shuffle of the vectors. ``rows`` is `codebook_rows` of
-    ``centroids`` when the caller already holds them (a static codebook
-    collected once); otherwise they are collected here, one Spark job
-    per call.
+    cosine (csim desc, cluster_id asc): (id, vec, vnorm, cluster_id),
+    one row per cell. ``rows`` is `codebook_rows` of ``centroids`` when
+    the caller already holds them (a static codebook collected once);
+    otherwise they are collected here, one Spark job per call.
 
-    Within :func:`_literal_ok` the cells are computed per row from
-    centroid literals (:func:`_literal_topn`): n_probe=1 is an argmin
-    projection, n_probe>1 a sorted slice exploded to one row per cell —
-    no crossJoin, no exchange. Otherwise (past the plan-size budget, or
-    a non-finite or null centroid value) the join fallback
-    (:func:`_join_topn`) computes the same rows.
+    One map-side ``mapInArrow`` pass, no join and no exchange: the
+    centroids ride in the cosine kernel's closure (:func:`_fold`), which
+    computes every csim as the HOF ``_dot / (_norm · _norm)`` does. A
+    csim is null for a null vector, one whose length differs from the
+    centroids', one with a null element, against a centroid with a null
+    element, or for a zero norm on either side; the sort key
+    coalesce(-csim, +Inf) puts a null after every number and a NaN
+    last. vnorm is the row's own _norm."""
+    import numpy as np
 
-    Precondition (ADVICE r15): ``id_col`` values are expected UNIQUE.
-    The literal kernel emits cells per INPUT row, while the fallback's
-    ``row_number`` window per id keeps ``n_probe`` rows per id — with
-    duplicate ids the two forms return different row counts. Every
-    in-repo caller passes unique ids (corpus vec_ids / doc_ids); dedup
-    upstream if yours are not."""
-    crows = codebook_rows(centroids) if rows is None else rows
-    v = df.select(F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("vnorm"))
-    if n_probe < 1 or not _literal_ok(crows):
-        c = centroids.select("cluster_id", "centroid")
-        return _join_topn(v, c, n_probe, id_col, vec_col)
-    cid_t = dict(centroids.dtypes)["cluster_id"]
-    idx_arr = "array(" + ",".join(f"CAST({cid} AS {cid_t})" for cid, _ in crows) + ")"
-    cells = F.expr(
-        _literal_topn(crows, vec_col, "vnorm", n_probe, f"element_at({idx_arr}, {{}} + 1)")
-    )
-    return v.withColumn("cluster_id", cells if n_probe == 1 else F.explode(cells))
+    cids, book, dim = _book(codebook_rows(centroids) if rows is None else rows)
+
+    def pick(v: _Vecs):
+        top = _nearest(_key(*_csim(v, book)), n_probe)
+        return np.repeat(np.arange(top.shape[0]), top.shape[1]), cids[top].ravel()
+
+    return _assign_pass(df, centroids, id_col, vec_col, dim, len(cids), pick)
 
 
 class IvfIndex(NamedTuple):
     """A built IVF index: the small centroid TABLE (a DataFrame of
-    (cluster_id, centroid), broadcast at every use — ADVICE r13: this
-    is a frame, not a Python list; write_ivf_index writes it as the
-    parquet sidecar) + the corpus assigned to its nearest cluster
-    (norms precomputed) + the centroid rows collected once, which every
-    probe compiles into its plan without a Spark job. Build ONCE with
-    :func:`ivf_index`, probe many times with :func:`ivf_probe` —
-    sweeping ``n_probe``/``k`` must not re-train centroids or re-assign
-    the corpus (at 100 TB the assigned frame is a persisted
-    bucketed-by-cluster table; re-deriving it per tuning point is the
-    recompute this split exists to forbid — r13, measured 45 s → ~17 s
-    on the driver-gate tuning-curve entry)."""
+    (cluster_id, centroid) — ADVICE r13: this is a frame, not a Python
+    list; write_ivf_index writes it as the parquet sidecar) + the
+    corpus assigned to its nearest cluster + the centroid rows
+    collected once, which every probe hands its kernel without a Spark
+    job. Build ONCE with :func:`ivf_index`, probe many times with
+    :func:`ivf_probe` — sweeping ``n_probe``/``k`` must not re-train
+    centroids or re-assign the corpus (at 100 TB the assigned frame is a
+    persisted bucketed-by-cluster table; re-deriving it per tuning point
+    is the recompute this split exists to forbid — r13, measured 45 s →
+    ~17 s on the driver-gate tuning-curve entry)."""
 
-    centroids: DataFrame  # (cluster_id, centroid) — k rows, broadcast-sized
-    cand: DataFrame  # (cand_id, cv, cn, cluster_id)
+    centroids: DataFrame  # (cluster_id, centroid) — k rows
+    cand: DataFrame  # (cand_id, cv, cluster_id)
     rows: list  # codebook_rows(centroids), collected once at build or load
 
 
@@ -728,7 +757,7 @@ def ivf_index(
     refine_iters: int = 0,
 ) -> IvfIndex:
     """Build the IVF index: deterministic centroid sample → nearest-
-    centroid partition of the corpus (1 probe), norms riding along.
+    centroid partition of the corpus (1 probe).
 
     ``refine_iters=N`` runs N deterministic Lloyd passes over the
     sampled centroids before assignment (:func:`lloyd_refine`) —
@@ -742,11 +771,8 @@ def ivf_index(
             candidates_df, centroids, refine_iters, id_col, vec_col
         )
     rows = codebook_rows(centroids)
-    # Norms ride along from assignment (computed once per vector);
-    # each probed pair then costs ONE array fold (the dot), not three.
     cand = ivf_assign(candidates_df, centroids, 1, id_col, vec_col, rows=rows).select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"),
-        F.col("vnorm").alias("cn"), "cluster_id",
+        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"), "cluster_id"
     )
     return IvfIndex(centroids, cand, rows)
 
@@ -763,10 +789,11 @@ def ivf_topk(
     """IVF approximate top-k: :func:`ivf_index` + :func:`ivf_probe`
     in one call (build-per-call form for one-shot queries).
 
-    The 100 TB shape: centroids broadcast; the corpus shuffles ONCE on
-    cluster_id (and would be written bucketed-by-cluster for reuse);
-    each query touches n_probe/n_clusters of the data instead of all
-    of it. Recall vs brute force asserted in tests."""
+    The 100 TB shape: centroids in the kernel's closure; the corpus
+    shuffles ONCE on cluster_id (and would be written
+    bucketed-by-cluster for reuse); each query touches
+    n_probe/n_clusters of the data instead of all of it. Recall vs
+    brute force asserted in tests."""
     return ivf_probe(
         ivf_index(candidates_df, n_clusters, id_col, vec_col),
         queries_df, k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col,
@@ -782,43 +809,54 @@ def ivf_probe(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe a built IVF index: queries probe their ``n_probe``
-    nearest clusters → exact cosine re-rank within probed clusters."""
-    centroids, cand, rows = index.centroids, index.cand, index.rows
-    qry = ivf_assign(queries_df, centroids, n_probe, id_col, vec_col, rows=rows).select(
+    nearest clusters → exact cosine re-rank within probed clusters.
+
+    The rerank is a per-cluster cogroup: each group scores one cluster's
+    queries against its candidates on the cosine kernel and keeps each
+    query's local top ``k``; the global window then ranks the
+    n_probe·k survivors per query. Candidates live in exactly one
+    cluster and a query probes distinct clusters, so no pair is scored
+    twice. The cogroup exchanges the candidate frame on cluster_id,
+    which a broadcast of the query side would avoid; it was still the
+    cheaper plan on every shape measured (SCALE.md)."""
+    qry = ivf_assign(
+        queries_df, index.centroids, n_probe, id_col, vec_col, rows=index.rows
+    ).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.col("vnorm").alias("qn"), "cluster_id",
+        F.col("cluster_id").cast("bigint").alias("cluster_id"),
     )
-    # No distinct(): candidates live in exactly one cluster (1-probe
-    # partition) and a query probes n_probe DISTINCT clusters, so each
-    # (query, cand) pair appears at most once — a dedup here would be
-    # a second full shuffle of the scored pairs for nothing.
-    # r15: broadcast the query side (|Q|*n_probe rows) so the
-    # corpus-sized cand frame is never exchanged/sorted on the
-    # low-cardinality cluster_id key (guide §3.1/§2.4 — same fix as
-    # ivfpq_probe; the before-plan showed the planner falling to
-    # sort-merge when cand comes from a reloaded/persisted artifact
-    # with no usable size estimate). r16 (ADVICE r15): the hint is
-    # GUARDED — a query batch whose estimated footprint exceeds
-    # PROBE_BROADCAST_MAX_BYTES falls back to the unhinted join
-    # (graceful sort-merge) instead of failing on the broadcast cap.
-    # A query row holds the codebook's dim doubles.
-    row_bytes = 8 * len(rows[0][1]) + 48 if rows else 56
-    probe_side = _probe_side(qry, queries_df, n_probe, row_bytes, lambda q: q)
-    scored = (
-        probe_side.join(cand, "cluster_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("cos_sim"),
+    cand = index.cand.select(
+        "cand_id", "cv", F.col("cluster_id").cast("bigint").alias("cluster_id")
+    )
+    schema = StructType(
+        [qry.schema["query_id"], cand.schema["cand_id"], StructField("cos_sim", DoubleType())]
+    )
+    dim = len(index.rows[0][1]) if index.rows else 0
+    local = (
+        qry.groupBy("cluster_id")
+        .cogroup(cand.groupBy("cluster_id"))
+        .applyInArrow(_rerank(k, dim), schema)
+    )
+    return _rank_topk(local, k)
+
+
+def _rerank(k: int, dim: int):
+    """The cogroup function of :func:`ivf_probe`: one cluster's queries
+    (query_id, qv, cluster_id) against its candidates (cand_id, cv,
+    cluster_id), each query's local top ``k`` by the kernel's csim."""
+
+    def score(q, c):
+        import pyarrow as pa
+
+        q_ids = q.column("query_id").combine_chunks()
+        c_ids = c.column("cand_id").combine_chunks()
+        schema = pa.schema([("query_id", q_ids.type), ("cand_id", c_ids.type), ("cos_sim", pa.float64())])
+        qv, cv = (_vectors(t.column(v).combine_chunks(), dim) for t, v in ((q, "qv"), (c, "cv")))
+        return pa.Table.from_batches(
+            list(_scored_topk(q_ids.to_numpy(), qv, c_ids.to_numpy(), cv, k)), schema
         )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "cos_sim", F.col("rnk").cast("bigint").alias("rnk"))
-    )
+
+    return score
 
 
 IVF_ANN_ORACLE = f"""
@@ -866,21 +904,16 @@ WHERE rnk <= 10
 )
 def similarity_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-partitioned approximate top-10 (the bucketed-corpus scale
-    path, complementing the LSH variant). Runs the per-cluster-BLAS
-    probe stage (ivf_topk_vectorized) — result-equal to the HOF form
-    ivf_topk, pinned in tests.
+    path, complementing the LSH variant): :func:`ivf_topk`, whose
+    per-cluster rerank runs on the cosine kernel.
 
     FULLY oracle-checked (upgraded from rows-only): centroid selection
     is a portable multiplicative hash and every later step (1-probe
     assignment, 4-probe query fan-out, in-cluster exact cosine, global
     top-10) is deterministic, so DuckDB runs the IDENTICAL algorithm.
-    Output is the pair SET (query_id, cand_id) — the BLAS probe stage
-    accumulates in a different order than a sequential SQL fold, so
-    raw cos_sim can differ by ulps while the selected set is identical
-    (no ulp-scale ties at the k boundary in this corpus, same contract
-    as similarity_topk_vectorized)."""
+    Output is the pair set (query_id, cand_id)."""
     emb = load(spark, sf_dir, "embeddings")
-    return ivf_topk_vectorized(emb.filter(F.col("vec_id") % 20 == 0), emb, k=10).select(
+    return ivf_topk(emb.filter(F.col("vec_id") % 20 == 0), emb, k=10).select(
         "query_id", "cand_id"
     )
 
@@ -931,19 +964,18 @@ def similarity_knn_join_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame
     """IVF kNN-JOIN: every corpus vector is a query (|Q| == corpus —
     the self-join shape a SemDeDup-style pipeline runs, and the
     documented intended tool once |Q| stops being a small probe set;
-    VERDICT r5 #6 promoted it to a driver entry). Each cogroup task
-    scores ONE cluster's queries against that cluster's candidates in
-    a single BLAS matmul, so resident memory per task is
-    (corpus/|clusters|)² at worst and clusters run in parallel —
+    VERDICT r5 #6 promoted it to a driver entry). :func:`ivf_topk`'s
+    cogroup task scores ONE cluster's queries against that cluster's
+    candidates on the cosine kernel, in row blocks, so resident memory
+    per task is bounded by the cluster and clusters run in parallel —
     nothing global is quadratic and nothing collects to the driver.
 
     FULLY oracle-checked like similarity_ivf_ann: portable
     multiplicative-hash centroids, deterministic 1-probe assignment /
     4-probe fan-out / exact in-cluster cosine / global top-5, so
-    DuckDB replays the identical algorithm; output is the pair SET
-    (ulp contract as similarity_topk_vectorized)."""
+    DuckDB replays the identical algorithm; output is the pair set."""
     emb = load(spark, sf_dir, "embeddings")
-    return ivf_topk_vectorized(emb, emb, k=5).select("query_id", "cand_id")
+    return ivf_topk(emb, emb, k=5).select("query_id", "cand_id")
 
 
 PAIRS_ORACLE = """
@@ -1060,25 +1092,6 @@ def similarity_label_centroid_matrix(spark: SparkSession, sf_dir: str) -> DataFr
 # --- Arrow-vectorized exact top-k -----------------------------------------
 
 
-def _local_topk(q_ids, sims, c_ids, k: int):
-    """The numpy local top-k of one (candidates × queries) similarity
-    block: each query's k+1 best candidates (+1 absorbs a self-match),
-    unordered, as a pandas frame (query_id, cand_id, cos_sim) for the
-    caller's global window to rank."""
-    import numpy as np
-    import pandas as pd
-
-    kk = min(k + 1, len(c_ids))
-    top = np.argpartition(-sims, kk - 1, axis=0)[:kk]
-    return pd.DataFrame(
-        {
-            "query_id": np.repeat(q_ids, kk),
-            "cand_id": c_ids[top].T.ravel(),
-            "cos_sim": np.take_along_axis(sims, top, axis=0).T.ravel(),
-        }
-    )
-
-
 def topk_vectorized(
     queries_df: DataFrame,
     candidates_df: DataFrame,
@@ -1088,24 +1101,27 @@ def topk_vectorized(
     max_query_block: int = 65536,
 ) -> DataFrame:
     """Exact cosine top-k, Arrow/numpy path: the query block is
-    broadcast to every task, and each candidate partition computes a
-    (batch × queries) similarity matrix with one BLAS matmul, keeping
-    only its local top-k per query. The global top-k then aggregates
-    |partitions|·k rows per query — the standard two-phase top-k.
+    broadcast to every task, and each candidate partition scores its
+    Arrow batches against it on the cosine kernel (:func:`_fold`),
+    keeping only its local top-k per query. The global top-k then
+    aggregates |partitions|·k rows per query — the standard two-phase
+    top-k.
 
     Driver memory is BOUNDED: queries are streamed off the cluster via
     ``toLocalIterator`` in blocks of at most ``max_query_block`` rows
     (64k × 64 dims × 8 B ≈ 32 MB per broadcast), one candidate pass per
     block, results unioned. Only one block is resident on the driver at
     a time, so |Q| can grow without a driver OOM; for |Q| approaching
-    |corpus| the cogrouped IVF path (ivf_topk_vectorized) is the right
+    |corpus| the cogrouped IVF path (:func:`ivf_topk`) is the right
     tool and this function is the lookup-side primitive.
 
-    Same results as topk_bruteforce (pinned by tests) at a fraction of
-    the cost: the JVM HOF path folds 64-element lambdas per pair,
-    while this path does one dgemm per Arrow batch. Candidates stream
-    — nothing but the current query block is ever resident."""
+    The same rows as topk_bruteforce, cos_sim and rnk included (pinned
+    by tests), at a fraction of the cost: the JVM HOF path folds
+    64-element lambdas per pair, while this path folds one numpy
+    (queries × batch) block per dimension. Candidates stream — nothing
+    but the current query block is ever resident."""
     import numpy as np
+    import pyarrow as pa
 
     spark = queries_df.sparkSession
     cand = candidates_df.select(F.col(id_col), F.col(vec_col))
@@ -1113,19 +1129,18 @@ def topk_vectorized(
 
     def block_topk(q_block):
         q_ids = np.array([r[0] for r in q_block], dtype=np.int64)
-        q_mat = np.array([r[1] for r in q_block], dtype=np.float64)
-        q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-        bc = spark.sparkContext.broadcast((q_ids, q_mat))
+        vecs = [r[1] for r in q_block]
+        dim = next((len(v) for v in vecs if v is not None), 0)
+        qv = _vectors(pa.array(vecs, pa.list_(pa.float64())), dim)
+        bc = spark.sparkContext.broadcast((q_ids, qv))
 
         def local_topk(batches):
-            ids, mat = bc.value
-            for pdf in batches:
-                c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-                c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-                c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-                yield _local_topk(ids, c_mat @ mat.T, c_ids, k)
+            ids, qv = bc.value
+            for batch in batches:
+                c_ids = batch.column(0).to_numpy().astype(np.int64)
+                yield from _scored_topk(ids, qv, c_ids, _vectors(batch.column(1), dim), k)
 
-        return cand.mapInPandas(local_topk, schema)
+        return cand.mapInArrow(local_topk, schema)
 
     locals_: list[DataFrame] = []
     block: list = []
@@ -1143,13 +1158,7 @@ def topk_vectorized(
     local = locals_[0]
     for extra in locals_[1:]:
         local = local.unionAll(extra)
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        local.filter(F.col("query_id") != F.col("cand_id"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "cos_sim", F.col("rnk").cast("bigint").alias("rnk"))
-    )
+    return _rank_topk(local, k)
 
 
 TOPK_PAIRS_ORACLE = """
@@ -1182,133 +1191,13 @@ WHERE rnk <= 10
     tags=("similarity", "llm", "udf"),
 )
 def similarity_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-10, Arrow-vectorized (BLAS matmul per batch) — the
-    fast exact path. Oracle-checked on the top-k PAIR SET (query_id,
-    cand_id): dgemm accumulates in a different order than a sequential
-    SQL fold, so raw cos_sim can differ by ulps while the selected
-    set is identical (the corpus has no ulp-scale score ties at the
-    k boundary); rank/score equality with the HOF brute force is
-    additionally pinned in tests/test_similarity_ivf.py."""
+    """Exact top-10, Arrow-vectorized (the cosine kernel per batch) —
+    the fast exact path. Oracle-checked on the top-k pair set
+    (query_id, cand_id); row equality with the HOF brute force, cos_sim
+    and rnk included, is pinned in tests/test_similarity_ivf.py."""
     emb = load(spark, sf_dir, "embeddings")
     return topk_vectorized(emb.filter(F.col("vec_id") % 20 == 0), emb, k=10).select(
         "query_id", "cand_id"
-    )
-
-
-def ivf_topk_vectorized(
-    queries_df: DataFrame,
-    candidates_df: DataFrame,
-    k: int = 10,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF top-k with the probe stage as per-cluster BLAS: queries and
-    candidates are cogrouped by cluster_id and each cluster computes
-    one (|Q_c| × |C_c|) similarity matrix in numpy, emitting its local
-    top-k per query; the global window then ranks n_probe·k rows per
-    query. Candidate selection is identical to ivf_topk (same
-    assignment, same probed clusters, exact cosine), so results match
-    it exactly up to fp association — pinned in tests.
-
-    This is the cluster-scale shape: each cogroup task holds ONE
-    cluster (corpus/|clusters| rows), so memory per task is bounded
-    and clusters process in parallel; nothing quadratic is resident.
-    """
-    import numpy as np
-    import pandas as pd
-
-    centroids = sample_centroids(candidates_df, n_clusters, id_col, vec_col)
-    cand = ivf_assign_vectorized(candidates_df, centroids, 1, id_col, vec_col).select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"), "cluster_id"
-    )
-    qry = ivf_assign_vectorized(queries_df, centroids, n_probe, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "cluster_id"
-    )
-
-    def score(qpdfs, cpdfs) -> pd.DataFrame:
-        q = pd.concat(list(qpdfs)) if not isinstance(qpdfs, pd.DataFrame) else qpdfs
-        c = pd.concat(list(cpdfs)) if not isinstance(cpdfs, pd.DataFrame) else cpdfs
-        if len(q) == 0 or len(c) == 0:
-            return pd.DataFrame({"query_id": [], "cand_id": [], "cos_sim": []}).astype(
-                {"query_id": "int64", "cand_id": "int64", "cos_sim": "float64"}
-            )
-        qm = np.array(list(q["qv"]), dtype=np.float64)
-        cm = np.array(list(c["cv"]), dtype=np.float64)
-        qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-        cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-        return _local_topk(
-            q["query_id"].to_numpy(), cm @ qm.T, c["cand_id"].to_numpy(), k
-        )
-
-    local = (
-        qry.groupBy("cluster_id")
-        .cogroup(cand.groupBy("cluster_id"))
-        .applyInPandas(
-            lambda lq, rc: score(lq, rc),
-            "query_id long, cand_id long, cos_sim double",
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        local.filter(F.col("query_id") != F.col("cand_id"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "cos_sim", F.col("rnk").cast("bigint").alias("rnk"))
-    )
-
-
-def ivf_assign_vectorized(
-    df: DataFrame,
-    centroids: DataFrame,
-    n_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow/numpy twin of ivf_assign: centroids collect to a numpy
-    matrix (broadcast via closure capture — they are tiny) and each
-    Arrow batch assigns with one matmul + argsort. Ordering matches
-    the HOF form: cosine descending, cluster_id ascending on ties.
-
-    A second kernel beside :func:`ivf_assign`, sharing no logic with
-    it; the caller chooses. It stays because it is faster behind
-    :func:`ivf_topk_vectorized`: with ``ivf_assign`` in its place
-    (identical output rows; sf0.1, 4 cores, 7 interleaved pairs, wall
-    time under a load of about 2) ``similarity_ivf_ann`` went from
-    1.16 to 2.03 s and ``similarity_knn_join_cogrouped`` from 1.05 to
-    1.68 s (medians)."""
-    import numpy as np
-    import pandas as pd
-
-    rows = centroids.select("cluster_id", "centroid").collect()
-    c_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    c_mat = np.array([r[1] for r in rows], dtype=np.float64)
-    c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-    order = np.argsort(c_ids)
-    c_ids, c_mat = c_ids[order], c_mat[order]  # id-ascending → stable ties
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vm = np.array(list(pdf[vec_col]), dtype=np.float64)
-            vm_n = vm / np.linalg.norm(vm, axis=1, keepdims=True)
-            sims = vm_n @ c_mat.T  # (batch, |C|)
-            # stable argsort keeps id-ascending order on exact ties
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), n_probe),
-                    vec_col: [v for v in pdf[vec_col] for _ in range(n_probe)],
-                    "cluster_id": c_ids[top].ravel(),
-                }
-            )
-
-    vec_type = dict(df.dtypes)[vec_col]
-    return df.select(id_col, vec_col).mapInPandas(
-        assign, f"{id_col} long, {vec_col} {vec_type}, cluster_id int"
     )
 
 
@@ -1628,7 +1517,7 @@ class IvfPqIndex(NamedTuple):
     write_ivfpq_index writes as a parquet sidecar), the [m][k][dsub]
     codebook literals, the corpus encoded to PQ codes, cluster-assigned,
     behind the persist barrier, and the centroid rows collected once,
-    which every probe compiles into its plan without a Spark job. Build
+    which every probe hands the assignment kernel without a Spark job. Build
     ONCE (:func:`ivfpq_index`), probe many times (:func:`ivfpq_probe`)
     — the encoded-codes frame IS the stored index (4 B/vector, the
     point of PQ); re-encoding it per tuning point is the recompute the
@@ -1823,7 +1712,7 @@ def ivfpq_probe(
     # r5 persist barrier restored (the barrier the broadcast replaced),
     # degrading gracefully instead of failing on the 8 GiB cap.
     dtab_bytes = m * len(books[0]) * 8 + 48
-    probe_side = _probe_side(qry, queries_df, n_probe, dtab_bytes, _pq_barrier)
+    probe_side = _probe_side(qry, queries_df, n_probe, dtab_bytes)
     scored = (
         probe_side.join(cand, "cluster_id")
         .filter(F.col("query_id") != F.col("cand_id"))
@@ -1867,9 +1756,9 @@ def ivfpq_probe(
         .select(
             "query_id",
             "cand_id",
-            (_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias(
-                "cos_sim"
-            ),
+            F.try_divide(
+                _dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn")
+            ).alias("cos_sim"),
         )
     )
     w2 = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
@@ -2136,8 +2025,8 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     by design — exactly the approximation the paper makes to avoid
     the quadratic all-pairs pass.
 
-    Scale: the centroid set is a broadcast literal; assignment is
-    map-side; the pair join is hash-partitioned ON cluster_id, so
+    Scale: the centroid set rides in the assignment kernel's closure;
+    assignment is map-side; the pair join is hash-partitioned ON cluster_id, so
     total pair work is Σ|cluster|², bounded by the cluster balance
     the IVF slow tier measures (max/median 1.1) — never |corpus|².
     At 100 TB with √n clusters this is the linear-ish pass that makes
@@ -2161,11 +2050,10 @@ def _semdedup_prune(cl: DataFrame) -> DataFrame:
         F.col("vnorm").alias("nb"), "cluster_id",
     )
     rm = (
-        a.join(b, "cluster_id")
+        # pinned: a cluster's members are corpus-sized, never a broadcast
+        a.join(b.hint("shuffle_hash"), "cluster_id")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))) >= 0.30
-        )
+        .filter(F.try_divide(_dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")) >= 0.30)
         .select(F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("__rm", F.lit(1))
@@ -2260,29 +2148,24 @@ def ivf_assign_two_level(
     cosines/vector of coarse work instead of 50 000.
 
     Mechanics (all centroid-side work is driver/numpy on the
-    constant-size collected centroid set, re-broadcast — the same
-    budget sample_centroids already spends):
+    constant-size collected centroid set — the same budget
+    sample_centroids already spends):
 
     1. coarse representatives = the first ``n_coarse`` fine centroids
        in cluster_id order (cluster_id is already hash-rank order, so
        this is a deterministic subsample);
     2. every fine centroid maps to its nearest coarse representative
-       (driver-side k·n_coarse cosines, exact);
+       (driver-side k·n_coarse cosines, exact, ties to the lowest
+       coarse id);
     3. phase 1: each vector scores the ``n_coarse`` reps and keeps its
        ``n_probe_coarse`` best cells;
     4. phase 2: each vector scores only the probed cells' fine
-       members and keeps the best.
+       members and keeps the best by (coalesce(-csim, +Inf), fine id).
 
-    Both phases run on the literal kernel of :func:`ivf_assign` (one
-    map-side projection, no exchange): phase 1 is
-    :func:`_literal_topn` over the reps, and phase 2 CASE-dispatches
-    each probed cell id to that cell's :func:`_literal_structs` and
-    takes the array_min. The evaluated work per row stays n_coarse +
-    Σ|probed cells|. Past the literal budget, for a degenerate probe
-    count, or if a duplicate rep leaves a coarse cell EMPTY (the
-    literal dispatch needs every cell), both phases run on the join
-    fallback (:func:`_join_topn`): phase 2 is an EQUI join on coarse_id
-    against the broadcast fine centroids, never a cross join.
+    All three run on the cosine kernel (:func:`_fold`), the phases in
+    one map-side pass (no join, no exchange), so the work per row is
+    n_coarse + Σ|probed cells|. A row whose probed cells are all empty
+    (a duplicate rep can empty a cell) gets no row, as in the oracle.
 
     Exactness: with ``n_probe_coarse = n_coarse`` the result is
     IDENTICAL to ``ivf_assign(df, centroids, 1)`` (every fine centroid
@@ -2292,77 +2175,43 @@ def ivf_assign_two_level(
     schema matches ivf_assign(n_probe=1): (id, vec, vnorm,
     cluster_id).
 
-    Oracle-parity note (ADVICE r7): step 2's fine→coarse map is the
-    one surface where PYTHON arithmetic (``_cos`` below: generator
-    ``sum`` + ``math.sqrt``) is replayed by the DuckDB oracle
-    (``_sql_cos``: ``list_reduce`` fold + ``sqrt``) rather than by a
-    Spark expression. Both are strict LEFT folds of IEEE-754 doubles
-    over the same element order — Python's ``sum`` accumulates
-    left-to-right, DuckDB's ``list_reduce`` folds list order — and
-    ``x*y``/``sqrt``/``/`` are all correctly-rounded single ops, so
-    the per-pair cosines are bit-identical, not merely close; an
-    EXACT tie between coarse reps is then broken by lowest coarse id
-    on both sides (``-j`` here, ``coarse_id ASC`` in the oracle).
-    If either engine ever re-associated its fold (e.g. pairwise
-    summation), this map — and the catalog hash — would flag it."""
+    Oracle parity (ADVICE r7): the DuckDB oracle replays step 2 with
+    ``_sql_cos``, the same strict left fold, so its cosines are
+    bit-identical, and an exact tie goes to the lowest coarse id."""
     import math
+
+    import numpy as np
 
     crows = codebook_rows(centroids)
     if n_coarse is None:
-        n_coarse = max(1, int(math.isqrt(len(crows))))
-    n_probe_coarse = min(n_probe_coarse, n_coarse)
-    # coarse ids are the reps' 0-based indexes
-    reps = [(j, v) for j, (_, v) in enumerate(crows[:n_coarse])]
+        n_coarse = max(1, math.isqrt(len(crows)))
+    n_probe = min(n_probe_coarse, n_coarse)
+    cids, book, dim = _book(crows)
+    reps = book.take(slice(0, n_coarse))
+    home = _nearest(_key(*_csim(book, reps)), 1)[:, 0]
+    cells = [np.nonzero(home == j)[0] for j in range(n_coarse)]
+    none = np.iinfo(np.int64).max
 
-    def _cos(a, b):
-        if None in a or None in b:
-            # no cosine: ranked below every real one, as the join
-            # fallback ranks a null csim
-            return -math.inf
-        num = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a)) or 1.0
-        nb = math.sqrt(sum(x * x for x in b)) or 1.0
-        return num / (na * nb)
+    def pick(v: _Vecs):
+        probed = _nearest(_key(*_csim(v, reps)), n_probe)
+        # each row's best (d, fine id) so far, merged cell by cell
+        d, best = np.full(len(v.norm), np.nan), np.full(len(v.norm), none)
+        for j, cell in enumerate(cells):
+            r = np.nonzero((probed == j).any(axis=1))[0]
+            if not (len(r) and len(cell)):
+                continue
+            key = _key(*_csim(v.take(r), book.take(cell)))
+            loc = _nearest(key, 1)[:, 0]
+            ar = np.arange(len(r))
+            dd = np.stack([d[r], key[ar, loc]], axis=1)
+            ii = np.stack([best[r], cids[cell][loc]], axis=1)
+            w = np.lexsort((ii, dd), axis=-1)[:, 0]
+            d[r], best[r] = dd[ar, w], ii[ar, w]
+        at = np.nonzero(best != none)[0]
+        return at, best[at]
 
-    # fine centroid -> nearest coarse rep (ties: lowest coarse id)
-    fine_rows = []
-    members: dict[int, list[tuple[int, list[float]]]] = {j: [] for j in range(n_coarse)}
-    for cid, cvec in crows:
-        best = max(range(n_coarse), key=lambda j: (_cos(cvec, reps[j][1]), -j))
-        fine_rows.append((int(cid), int(best), cvec))
-        members[best].append((cid, cvec))
-
-    v = df.select(F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("vnorm"))
-    if (
-        n_probe_coarse >= 1
-        and all(members.values())
-        # reps and fine centroids are both compiled in: k + n_coarse rows
-        and _literal_ok(crows + reps)
-    ):
-        probed = _literal_topn(reps, vec_col, "vnorm", n_probe_coarse)
-        if n_probe_coarse == 1:
-            probed = f"array({probed})"
-        dispatch = "CASE p " + " ".join(
-            f"WHEN {j} THEN "
-            + _literal_structs(
-                cells, vec_col, "vnorm", [f"CAST({cid} AS INT)" for cid, _ in cells]
-            )
-            for j, cells in members.items()
-        ) + " END"
-        best_s = f"array_min(flatten(transform({probed}, p -> {dispatch})))"
-        return v.withColumn("cluster_id", F.expr(f"({best_s}).i"))
-
-    spark = df.sparkSession
-    elem = dict(df.dtypes)[vec_col].split("<")[1]
-    coarse = spark.createDataFrame(reps, f"cluster_id int, centroid array<{elem}")
-    fine = spark.createDataFrame(
-        fine_rows, f"cluster_id int, coarse_id int, centroid array<{elem}"
-    )
-    probed = ivf_assign(df, coarse, n_probe_coarse, id_col, vec_col, rows=reps)
-    return _join_topn(
-        probed.withColumnRenamed("cluster_id", "coarse_id"),
-        fine, 1, id_col, vec_col, on="coarse_id",
-    )
+    width = max(n_coarse, *map(len, cells))
+    return _assign_pass(df, centroids, id_col, vec_col, dim, width, pick)
 
 
 TWO_LEVEL_ASSIGN_ORACLE = f"""

@@ -125,7 +125,7 @@ def semantic_gate(
         old_side.join(F.broadcast(new_side), "cluster_id")
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(
-            (_dot(F.col("vec_a"), F.col("vec_b")) / (F.col("n_a") * F.col("n_b")))
+            F.try_divide(_dot(F.col("vec_a"), F.col("vec_b")), F.col("n_a") * F.col("n_b"))
             >= threshold
         )
         .select(F.col("id_b").alias("id"))

@@ -154,7 +154,6 @@ _SLOW_TESTS = {
     "test_catalog_oracle.py::test_catalog_entry[dedup_connected_components]",  # 10.2s
     "test_plan_contracts.py::test_plan_lint[retrieval_ann_tuning_curve]",  # 10.2s
     "test_incremental_neardup.py::test_real_stream_drive",  # 10.0s
-    "test_similarity_ivf.py::test_ivf_assign_multiprobe_literal_equals_window_form",  # 9.7s
     "test_catalog_oracle.py::test_catalog_entry[stream_incremental_semdedup]",  # 9.7s
     "test_pipeline_shards.py::test_manifest_identical_over_vortex_datasource",  # 9.6s
     "test_catalog_oracle.py::test_catalog_entry[dedup_minhash_lsh_pairs]",  # 9.4s

@@ -47,9 +47,8 @@ ALLOWED: dict[str, tuple[tuple[str, ...], str]] = {
         "the tuning curve measures the IVF/IVF-PQ paths AGAINST the "
         "exact baseline, so the plan contains both by construction: "
         "the |Q|-row BNLJ of the exact ground truth (oracle-tier, "
-        "computed once per tuning run) plus the 16-ROW centroid "
-        "broadcasts of the six ANN legs (constant-size build sides); "
-        "all counting joins are hash-wise on (query_id, cand_id)",
+        "computed once per tuning run); all counting joins are "
+        "hash-wise on (query_id, cand_id)",
     ),
     "retrieval_hybrid_rrf": (
         ("nested-loop-join",),
@@ -109,39 +108,10 @@ ALLOWED: dict[str, tuple[tuple[str, ...], str]] = {
         "memory compression, not scan avoidance); at scale the same "
         "kernel runs per probed IVF cluster (IVF-ADC)",
     ),
-    "similarity_ivfpq_ann": (
-        ("nested-loop-join",),
-        "16-ROW centroid broadcast for cluster assignment — constant-"
-        "size build side at any corpus scale (same shape as ivf_ann); "
-        "the candidate scan itself joins hash-wise on cluster_id",
-    ),
-    "similarity_adc_stored_codes": (
-        ("nested-loop-join",),
-        "same 16-ROW centroid broadcast as similarity_ivfpq_ann (query "
-        "cluster assignment); the stored-codes scan joins hash-wise on "
-        "cluster_id",
-    ),
-    "similarity_assign_two_level": (
-        ("nested-loop-join",),
-        "r15: fully map-side from centroid literals (zero joins in the "
-        "plan); the allowance covers only the over-budget fallback "
-        "form's 4-ROW coarse-cell broadcast",
-    ),
-    "dedup_semantic_cluster_two_level": (
-        ("nested-loop-join",),
-        "r15: the assignment is map-side (similarity_assign_two_level); "
-        "the pair prune joins hash-wise on cluster_id; the allowance "
-        "covers only the over-budget fallback form",
-    ),
     "basket_brand_affinity": (
         ("nested-loop-join",),
         "1-ROW broadcast (order total for the lift denominator) — "
         "constant-size build side at any SF",
-    ),
-    "dedup_semantic_cluster": (
-        ("nested-loop-join",),
-        "16-ROW centroid broadcast for cluster assignment (ivf_assign "
-        "shape); the dedup pair join itself is hash-wise on cluster_id",
     ),
     "stream_hll_distinct_events": (
         ("nested-loop-join",),

@@ -328,6 +328,29 @@ def test_all_duplicate_batch_commits_empty_stores(spark, tmp_path):
     assert got == {1: "kept", 2: "kept", 3: "exact", 4: "near_dup", 5: "kept"}, got
 
 
+def test_zero_embedding_doc_is_kept(spark, tmp_path):
+    """A doc whose embedding is all zeros has no cosine to any other
+    (null, as DuckDB's 0.0/0.0 is), so the semantic gate keeps it; the
+    division raised DIVIDE_BY_ZERO on every retry before. Two zero docs
+    in two batches share a cluster (every csim of theirs is null, so
+    both take the lowest cluster id) and both read kept."""
+    register(spark)
+    corpus, centroids = _tiny_chain_corpus(spark)
+    zero = _mk(
+        spark,
+        [
+            (6, "s", "a note on vectors whose every component is zero", [0.0, 0.0]),
+            (7, "s", "ansi division semantics differ across sql engines", [0.0, 0.0]),
+        ],
+    )
+    root = str(tmp_path / "z")
+    first = corpus.filter(F.col("doc_id") <= 2).unionByName(zero.filter("doc_id = 6"))
+    ingest_process_batch(first, 0, centroids, root)
+    ingest_process_batch(zero.filter("doc_id = 7"), 1, centroids, root)
+    got = {r["doc_id"]: r["stage"] for r in _manifest(spark, root).collect()}
+    assert got == {1: "kept", 2: "kept", 6: "kept", 7: "kept"}, got
+
+
 def test_retried_batch_is_idempotent(spark, tmp_path):
     """Replaying a middle batch reads only strictly-earlier state for
     every store (lsh, ivf, raw — the raw store carries the exact

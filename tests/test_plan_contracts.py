@@ -175,7 +175,6 @@ _NESTED_LOOP_OK = {
     "similarity_topk_bruteforce",
     "structure_scalar_subquery",
     "structure_correlated_exists",
-    "similarity_ivf_ann",  # vectors × broadcast centroid set (|C|=16) by design
     "tpch_q22_global_sales_opportunity",  # 1-row scalar (avg balance) broadcast cross
     "string_levenshtein_pairs",  # theta-join over a tiny broadcast dim by design
     "tpch_q11_important_stock",  # 1-row global total broadcast cross by design
@@ -184,17 +183,12 @@ _NESTED_LOOP_OK = {
     "pipeline_source_mixture_weights",  # 1-row corpus-totals broadcast cross
     "sample_temperature_mixture",  # same 1-row totals cross in its rate subtree
     "similarity_pq_adc_topk",  # ADC IS a linear scan over compressed codes; scale path is IVF-ADC per probed cluster
-    "similarity_ivfpq_ann",  # 16-row centroid broadcast for assignment; candidate scan joins hash-wise on cluster_id
-    "similarity_adc_stored_codes",  # same 16-row centroid broadcast; stored-codes scan joins hash-wise on cluster_id
-    "similarity_assign_two_level",  # r15: map-side literal assignment (no joins); 4-row coarse broadcast only in the over-budget fallback
-    "dedup_semantic_cluster_two_level",  # r15: map-side assignment; pair prune joins hash-wise on cluster_id
     "sketch_hll_distinct",  # 1-row HLL-estimate broadcast joined to the exact count
     "sketch_histogram_quantile",  # 1-row extent + ≤1024-row sketch × 3 probes, all constant-size
     "sketch_histogram_grouped_quantiles",  # per-group sketch × 2 probes, constant-size build sides
     "stats_drift_chi_square",  # 1-row extent + totals broadcasts over the 64-row cell table
     "sketch_hll_daily_cumulative",  # 64-row register-grid broadcast, constant at any volume
     "stream_hll_distinct_events",  # 1-row register-estimate broadcast joined to the exact count
-    "dedup_semantic_cluster",  # 16-row centroid broadcast; pair join is hash-wise on cluster_id
     "basket_brand_affinity",  # 1-row order-total broadcast for the lift denominator
     "stats_drift_ks",  # 1-row cohort-totals broadcast over the distinct-value ECDF
     "text_bm25_topk",  # 1-row corpus-stats broadcast (n_docs, tot_len in-plan)
@@ -202,7 +196,7 @@ _NESTED_LOOP_OK = {
     "retrieval_hybrid_rrf",  # 1-row query-vector broadcast + 40-row full-outer fuse; dense leg pluggable (IVF at scale)
     "retrieval_knn_eval",  # metrics decorate the exact-kNN baseline's |Q|-row broadcast; ranker pluggable
     "retrieval_recall_curve_by_label",  # same |Q|-row kNN-baseline broadcast; curve consumes only (query_id, cand_id, rnk)
-    "retrieval_ann_tuning_curve",  # exact-baseline |Q|-row BNLJ (the ground truth being tuned against) + 16-row centroid broadcasts of the ANN legs
+    "retrieval_ann_tuning_curve",  # exact-baseline |Q|-row BNLJ (the ground truth being tuned against)
 }
 _PYTHON_EVAL_OK = {
     "udtf_split_sentences",       # Python UDTF by design

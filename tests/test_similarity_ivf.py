@@ -33,14 +33,19 @@ def test_ivf_recall_beats_probed_fraction(spark):
     assert r8 > r4, (r4, r8)
 
 
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
 def test_ivf_full_probe_equals_bruteforce(spark):
     """n_probe == n_clusters degenerates to exact search: every query
-    probes every cluster, so the candidate set is the full corpus."""
-    emb = load(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 200)
+    probes every cluster, so the candidate set is the full corpus, and
+    the kernel's rerank returns exactly the HOF brute force's rows,
+    cos_sim and rnk included."""
+    emb = load(spark, SF_DIR, "embeddings")
     q = emb.filter(F.col("vec_id") % 50 == 0)
-    base = _pairs(topk_bruteforce(q, emb, k=5))
-    full = _pairs(ivf_topk(q, emb, k=5, n_clusters=4, n_probe=4))
-    assert full == base
+    base = _rows(topk_bruteforce(q, emb, k=5))
+    assert _rows(ivf_topk(q, emb, k=5, n_clusters=8, n_probe=8)) == base
 
 
 def test_ivf_corpus_partition_is_disjoint(spark):
@@ -57,28 +62,44 @@ def test_ivf_corpus_partition_is_disjoint(spark):
 
 
 def test_vectorized_topk_equals_bruteforce(spark):
-    """The Arrow/numpy exact path returns the same (query, cand) sets
-    as the HOF brute force (cos values identical up to fp assoc.)."""
+    """The Arrow/numpy exact path returns exactly the HOF brute force's
+    rows, cos_sim and rnk included: the kernel folds in _dot's order."""
     from duckdb_vortex_spark.operators.similarity import topk_vectorized
 
     emb = load(spark, SF_DIR, "embeddings")
     q = emb.filter(F.col("vec_id") % 50 == 0)
-    base = _pairs(topk_bruteforce(q, emb, k=5))
-    fast = _pairs(topk_vectorized(q, emb, k=5))
-    assert fast == base
+    assert _rows(topk_vectorized(q, emb, k=5)) == _rows(topk_bruteforce(q, emb, k=5))
 
 
-def test_ivf_vectorized_equals_hof(spark):
-    """Per-cluster BLAS probe scoring selects the same (query, cand)
-    top-k sets as the HOF probe join (identical candidate sets and
-    exact cosine on both paths)."""
-    from duckdb_vortex_spark.operators.similarity import ivf_topk_vectorized
+def test_fold_is_a_left_fold():
+    """Spark-free: the kernel's dots and norms are the doubles of a
+    pure-Python left fold from 0.0 (Python floats are IEEE doubles), and
+    its csim is dot / (norm · norm), on seeded float32 vectors."""
+    import math
 
-    emb = load(spark, SF_DIR, "embeddings")
-    q = emb.filter(F.col("vec_id") % 50 == 0)
-    a = _pairs(ivf_topk(q, emb, k=5, n_clusters=8, n_probe=3))
-    b = _pairs(ivf_topk_vectorized(q, emb, k=5, n_clusters=8, n_probe=3))
-    assert a == b
+    import numpy as np
+    import pyarrow as pa
+
+    from duckdb_vortex_spark.operators.similarity import _csim, _vectors
+
+    rng = np.random.default_rng(15)
+    a = rng.standard_normal((7, 33)).astype(np.float32)
+    b = rng.standard_normal((5, 33)).astype(np.float32)
+
+    def fold(x, y):
+        acc = 0.0
+        for u, v in zip(x, y):
+            acc = acc + float(u) * float(v)
+        return acc
+
+    va, vb = (_vectors(pa.array(m.tolist(), pa.list_(pa.float32())), 33) for m in (a, b))
+    csim, null = _csim(va, vb)
+    assert not null.any()
+    for i, x in enumerate(a):
+        assert va.norm[i] == math.sqrt(fold(x, x))
+        for j, y in enumerate(b):
+            want = fold(x, y) / (math.sqrt(fold(x, x)) * math.sqrt(fold(y, y)))
+            assert csim[i, j].hex() == want.hex(), (i, j)
 
 
 def test_vectorized_topk_chunked_query_block(spark):
@@ -393,16 +414,15 @@ def test_lloyd_refine_deterministic_and_exact_means(spark):
     assert counts and all(c["count"] <= 5 for c in counts)
 
 
-def test_lloyd_refine_null_embeddings_and_literal_budget(spark):
-    """r15 hardening (ADVICE r14 + VERDICT r14 wrong #2):
-    (a) rows with null, dim-mismatched, or null-element embeddings
-    assign to no cluster and are SKIPPED — null crashed
-    ``idx_to_cid[None]``, short vectors crashed the sums loop's
-    vec[i], and null elements silently biased cluster 0's mean; the
-    refined means must equal a refine over only the valid rows;
-    (b) when k*(dim+1) exceeds LLOYD_LITERAL_BUDGET the assignment
-    falls back to the join form and the refined centroids are the
-    same."""
+def test_lloyd_refine_skips_invalid_embeddings(spark):
+    """r15 hardening (ADVICE r14): rows with null, dim-mismatched, or
+    null-element embeddings assign to no cluster and are SKIPPED —
+    null crashed ``idx_to_cid[None]``, short vectors crashed the sums
+    loop's vec[i], and null elements silently biased cluster 0's mean;
+    the refined means must equal a refine over only the valid rows,
+    and equal the quantized means of the HOF reference assignment."""
+    import math
+
     from duckdb_vortex_spark.operators import similarity as sim
 
     rows = [
@@ -411,11 +431,10 @@ def test_lloyd_refine_null_embeddings_and_literal_budget(spark):
         (2, [0.0, 0.0, 1.0, 0.0]),
         (3, None),               # null embedding
         (4, [1.0, 0.0]),         # dim-mismatched (zip_with null-pads)
-        # null ELEMENT (r15 self-review): every csim nulls, and a
-        # struct with d=NULL compares SMALLEST, so the argmin would
-        # FORCE-assign this row to cluster index 0 — inflating its
-        # count while the element sums skip nulls, silently biasing
-        # cluster 0's mean. Must be skipped like the others.
+        # null ELEMENT (r15 self-review): every csim nulls, so the row
+        # would sort to the lowest cluster_id — inflating its count
+        # while the element sums skip nulls, silently biasing cluster
+        # 0's mean. Must be skipped like the others.
         (5, [None, 0.0, 1.0, 0.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
@@ -434,248 +453,182 @@ def test_lloyd_refine_null_embeddings_and_literal_budget(spark):
     )
     assert got == want, "null/mismatched rows must not shift any mean"
 
-    # (b) past the plan-size budget (k*(dim+1)=2*5=10 > a patched 8)
-    # the assignment runs on the join fallback: same centroids
-    orig = sim.LLOYD_LITERAL_BUDGET
-    sim.LLOYD_LITERAL_BUDGET = 8
-    try:
-        over = sorted(
-            (r["cluster_id"], tuple(r["centroid"]))
-            for r in sim.lloyd_refine(df, cents, 1).collect()
-        )
-    finally:
-        sim.LLOYD_LITERAL_BUDGET = orig
-    assert over == got
-    # real constant untouched and generous enough for the repo's sizes
-    assert sim.LLOYD_LITERAL_BUDGET == 65_536
+    Q = 1_000_000
+    members: dict = {}
+    for r in _hof_cells(valid, cents, 1).collect():
+        members.setdefault(r["cluster_id"], []).append(r["embedding"])
+    ref = sorted(
+        (cid, tuple(sum(math.floor(v[i] * Q + 0.5) for v in vs) / (Q * len(vs)) for i in range(4)))
+        for cid, vs in members.items()
+    )
+    assert got == ref
 
 
-def test_ivf_assign_literal_path_equals_join_form(spark):
-    """r15 optimization pin: the map-side centroid-literal 1-probe
-    assignment (no crossJoin, no groupBy exchange) is ROW-IDENTICAL —
-    every column, including vnorm bits and the cluster_id tie rule —
-    to the join fallback (crossJoin + row_number window, the
-    over-budget path), on the real corpus AND on degenerate rows (null
-    vector, short vector, null element): both forms assign every
-    degenerate row to the lowest cluster_id, since all csims go null
-    and the order falls through to the index/cluster tie-break."""
-    from duckdb_vortex_spark.operators import similarity
-    from duckdb_vortex_spark.operators.similarity import (
-        LLOYD_LITERAL_BUDGET,
-        ivf_assign,
-        sample_centroids,
+def _hof_cells(df, cents, n_probe, id_col="vec_id", vec_col="embedding"):
+    """The HOF reference for ivf_assign: a cross join scored with
+    _dot/_norm, ranked by row_number over (coalesce(-csim, +Inf),
+    cluster_id)."""
+    from pyspark.sql import Window
+
+    from duckdb_vortex_spark.operators.similarity import _dot, _norm
+
+    v = df.select(id_col, vec_col, _norm(F.col(vec_col)).alias("vnorm"))
+    c = cents.select("cluster_id", "centroid", _norm(F.col("centroid")).alias("cn"))
+    csim = F.try_divide(_dot(F.col(vec_col), F.col("centroid")), F.col("vnorm") * F.col("cn"))
+    w = Window.partitionBy(id_col).orderBy(F.coalesce(-csim, F.lit(float("inf"))), "cluster_id")
+    return (
+        v.crossJoin(c)
+        .withColumn("__r", F.row_number().over(w))
+        .filter(F.col("__r") <= n_probe)
+        .select(id_col, vec_col, "vnorm", "cluster_id")
     )
 
+
+def _bits(x):
+    """A double as its exact value (hex), NaN as one token."""
+    return None if x is None else "nan" if x != x else float(x).hex()
+
+
+def _cell_rows(df):
+    return sorted(
+        (
+            r["vec_id"],
+            None if r["embedding"] is None else tuple(map(_bits, r["embedding"])),
+            _bits(r["vnorm"]),
+            r["cluster_id"],
+        )
+        for r in df.collect()
+    )
+
+
+def _assert_map_side(df):
+    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    for op in ("Exchange", "Join", "Aggregate", "Window"):
+        assert op not in plan, plan
+
+
+def _degenerate_corpus(spark):
+    """The sf0.001 embeddings plus one row of each degenerate kind."""
     emb = load(spark, SF_DIR, "embeddings")
     degenerate = spark.createDataFrame(
         [
-            (900001, None, 0),
-            (900002, [1.0] * 3, 0),
-            (900003, [1.0] * 63 + [None], 0),
+            (900001, None, 0),                   # null vector
+            (900002, [1.0] * 3, 0),              # short
+            (900003, [0.5] * 65, 0),             # long
+            (900004, [1.0] * 63 + [None], 0),    # null element
+            (900005, [float("nan")] + [1.0] * 63, 0),  # NaN element
+            (900006, [0.0] * 64, 0),             # zero vector
         ],
         emb.schema,
     )
-    corpus = emb.unionByName(degenerate)
-    cents = sample_centroids(emb, 8)
+    return emb, emb.unionByName(degenerate)
 
-    lit = ivf_assign(corpus, cents, n_probe=1)
-    # force the join fallback by shrinking the budget
-    orig = similarity.LLOYD_LITERAL_BUDGET
-    similarity.LLOYD_LITERAL_BUDGET = 0
-    try:
-        join_form = ivf_assign(corpus, cents, n_probe=1)
-    finally:
-        similarity.LLOYD_LITERAL_BUDGET = orig
-    assert LLOYD_LITERAL_BUDGET == orig
 
-    def rows(df):
-        return sorted(
-            (r["vec_id"], tuple(r["embedding"] or []), r["vnorm"], r["cluster_id"])
-            for r in df.collect()
-        )
+def test_ivf_assign_kernel_equals_hof_reference(spark):
+    """The cosine kernel's assignment is ROW-IDENTICAL — every column,
+    vnorm bits included, and the (coalesce(-csim, +Inf), cluster_id)
+    order — to the HOF reference, at n_probe 1, 2 and 4, on the real
+    corpus, on degenerate vectors (null, short, long, null element,
+    NaN element, zero) and against NaN, Inf, null-element, zero and
+    duplicate centroids. Each vector's 1-probe cell is its first
+    multi-probe cell. The pass is map-side: no exchange, join, aggregate
+    or window."""
+    from duckdb_vortex_spark.operators.similarity import ivf_assign, sample_centroids
 
-    a, b = rows(lit), rows(join_form)
-    assert len(a) == corpus.count()
-    assert a == b
-    # the literal plan is genuinely map-side: no exchange anywhere
-    plan = lit._sc._jvm.PythonSQLUtils.explainString(
-        lit._jdf.queryExecution(), "formatted"
+    emb, corpus = _degenerate_corpus(spark)
+    sample = [(r["cluster_id"], list(r["centroid"])) for r in sample_centroids(emb, 8).collect()]
+    odd = [
+        (8, [float("nan")] * 64),
+        (9, [float("inf")] + [0.5] * 63),
+        (10, [None] + [0.5] * 63),
+        (11, [0.0] * 64),
+        (12, sample[3][1]),  # duplicate of cluster 3
+    ]
+    cents = spark.createDataFrame(sample + odd, "cluster_id int, centroid array<float>")
+    first = {}
+    for n_probe in (1, 2, 4):
+        got = ivf_assign(corpus, cents, n_probe=n_probe)
+        rows = _cell_rows(got)
+        assert len(rows) == corpus.count() * n_probe
+        assert rows == _cell_rows(_hof_cells(corpus, cents, n_probe)), n_probe
+        _assert_map_side(got)
+        if n_probe == 1:
+            first = {r[0]: r[3] for r in rows}
+        else:
+            assert all(first[r[0]] in {c[3] for c in rows if c[0] == r[0]} for r in rows)
+
+
+def test_zero_norm_cosine_is_null(spark):
+    """A zero vector or a zero centroid has no cosine: the csim is null,
+    as DuckDB's 0.0/0.0 is, where Spark's ANSI division raised
+    DIVIDE_BY_ZERO. The zero vector assigns to the lowest cluster ids,
+    and topk_bruteforce ranks it with a null cos_sim."""
+    from duckdb_vortex_spark.operators.similarity import ivf_assign, topk_bruteforce
+
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.0, 1.0])],
+        "vec_id bigint, embedding array<double>",
     )
-    assert "Exchange" not in plan, plan
-    assert "SortAggregate" not in plan, plan
-
-
-def test_ivf_assign_multiprobe_literal_equals_window_form(spark):
-    """r16 optimization pin (VERDICT r15 next #4): the map-side
-    n_probe>1 assignment (literal csims → slice(array_sort) top-cells
-    → explode; no crossJoin, no per-id row_number window exchange) is
-    ROW-IDENTICAL — every column, vnorm bits, the (csim desc,
-    cluster_id asc) order rule — to the crossJoin+window join
-    fallback (the over-budget path). Degenerate
-    coverage: null vector, short vector, null-element vector — all
-    csims go null TOGETHER (per-row, every centroid), and both forms
-    fall through to the lowest cluster_ids. A per-centroid null (only
-    reachable via a zero-norm centroid) cannot occur: under Spark 4's
-    default ANSI mode the division THROWS identically in both forms,
-    so all-null-or-all-finite is exhaustive; the literal sort key
-    still maps a null to +Inf (coalesce) = the window's `csim DESC`
-    NULLS LAST placement, belt-and-suspenders."""
-    from duckdb_vortex_spark.operators import similarity
-    from duckdb_vortex_spark.operators.similarity import (
-        LLOYD_LITERAL_BUDGET,
-        ivf_assign,
-        sample_centroids,
+    cents = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 0.0])],
+        "cluster_id int, centroid array<double>",
     )
-
-    emb = load(spark, SF_DIR, "embeddings")
-    degenerate = spark.createDataFrame(
-        [
-            (900001, None, 0),
-            (900002, [1.0] * 3, 0),
-            (900003, [1.0] * 63 + [None], 0),
-        ],
-        emb.schema,
-    )
-    corpus = emb.unionByName(degenerate)
-    cents = sample_centroids(emb, 7)
-
-    for n_probe in (2, 4, 99):  # 99 > |C|: slice returns all cells
-        lit = ivf_assign(corpus, cents, n_probe=n_probe)
-        orig = similarity.LLOYD_LITERAL_BUDGET
-        similarity.LLOYD_LITERAL_BUDGET = 0
-        try:
-            window_form = ivf_assign(corpus, cents, n_probe=n_probe)
-        finally:
-            similarity.LLOYD_LITERAL_BUDGET = orig
-        assert LLOYD_LITERAL_BUDGET == orig
-
-        def rows(df):
-            return sorted(
-                (r["vec_id"], tuple(r["embedding"] or []), r["vnorm"], r["cluster_id"])
-                for r in df.collect()
-            )
-
-        a, b = rows(lit), rows(window_form)
-        assert len(a) == corpus.count() * min(n_probe, 7)
-        assert a == b, f"n_probe={n_probe}"
-        # genuinely map-side: no exchange, no join, no window anywhere
-        plan = lit._sc._jvm.PythonSQLUtils.explainString(
-            lit._jdf.queryExecution(), "formatted"
-        )
-        assert "Exchange" not in plan, plan
-        assert "Window" not in plan, plan
-        assert "Join" not in plan, plan
+    for n_probe, want in ((1, {(1, 2), (2, 0), (3, 1)}),
+                          (2, {(1, 2), (1, 1), (2, 0), (2, 1), (3, 1), (3, 2)})):
+        got = ivf_assign(vecs, cents, n_probe=n_probe)
+        assert {(r["vec_id"], r["cluster_id"]) for r in got.collect()} == want
+    top = {(r["query_id"], r["cand_id"]): r["cos_sim"] for r in topk_bruteforce(vecs, vecs, k=2).collect()}
+    assert top[(1, 2)] is None and top[(2, 1)] is None and top[(1, 3)] == 0.0
 
 
-def test_ivf_assign_nonfinite_centroid_falls_back(spark):
-    """ADVICE r15: repr'd non-finite doubles ('nanD'/'infD') are not
-    parseable Spark SQL literals, and a null element has no literal,
-    so a NaN/Inf/null centroid value must route BOTH literal paths
-    (1-probe argmin, multi-probe slice) to the join fallback —
-    computing through, same rows as a budget-forced fallback —
-    instead of raising. The fallback orders every n_probe by one key,
-    so each vector's 1-probe cell is among its 2-probe cells. The
-    two-level assignment's driver-side fine→coarse map falls back the
-    same way on a null element: same cells as ivf_assign."""
-    from duckdb_vortex_spark.operators import similarity
+def test_two_level_kernel_equals_hof_reference(spark):
+    """The two-level assignment (phase 1 top cells of the reps, phase 2
+    the best of the probed cells' members, both on the cosine kernel in
+    one map-side pass) is ROW-IDENTICAL — every column, vnorm bits, and
+    the (coalesce(-csim, +Inf), id) tie rules of the fine→coarse map and
+    both phases — to a HOF reference (cross join + window, then an
+    equi-join on the coarse cell + window), on the real corpus and the
+    degenerate vectors, at n_probe_coarse 1, 2 and 4. No exchange, join,
+    aggregate or window. A null centroid element is computed through."""
     from duckdb_vortex_spark.operators.similarity import (
         ivf_assign,
         ivf_assign_two_level,
+        sample_centroids,
     )
 
-    emb = load(spark, SF_DIR, "embeddings").limit(50)
-    tables = {
-        "nonfinite": [
-            (0, [1.0] * 64),
-            (1, [float("nan")] * 64),
-            (2, [float("inf")] + [0.5] * 63),
-        ],
-        "null_element": [
-            (0, [1.0] * 64),
-            (1, [None] + [0.5] * 63),
-            (2, [0.5] * 63 + [-1.0]),
-        ],
-    }
+    from pyspark.sql import Window
 
-    def rows(df):
-        return sorted((r["vec_id"], r["cluster_id"]) for r in df.collect())
+    from duckdb_vortex_spark.operators.similarity import _dot, _norm
 
-    for name, table in tables.items():
-        cents = spark.createDataFrame(table, "cluster_id int, centroid array<double>")
-        got = {}
-        for n_probe in (1, 2):
-            got[n_probe] = rows(ivf_assign(emb, cents, n_probe=n_probe))  # no raise
-            orig = similarity.LLOYD_LITERAL_BUDGET
-            similarity.LLOYD_LITERAL_BUDGET = 0
-            try:
-                want = ivf_assign(emb, cents, n_probe=n_probe)
-            finally:
-                similarity.LLOYD_LITERAL_BUDGET = orig
-            assert got[n_probe] == rows(want), (name, n_probe)
-        assert len(got[1]) == 50, name
-        assert set(got[1]) <= set(got[2]), name
+    emb, corpus = _degenerate_corpus(spark)
+    cents = sample_centroids(emb, 16)
+    reps = cents.filter("cluster_id < 4")
+    home = _hof_cells(
+        cents.select(F.col("cluster_id").alias("vec_id"), F.col("centroid").alias("embedding")),
+        reps, 1,
+    ).select(F.col("vec_id").alias("fine"), F.col("cluster_id").alias("coarse"))
+    members = cents.join(home, cents.cluster_id == home.fine).drop("fine")
+    csim = F.try_divide(
+        _dot(F.col("embedding"), F.col("centroid")), F.col("vnorm") * _norm(F.col("centroid"))
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.coalesce(-csim, F.lit(float("inf"))), "cluster_id")
+    for p in (1, 2, 4):
+        want = (
+            _hof_cells(corpus, reps, p)
+            .withColumnRenamed("cluster_id", "coarse")
+            .join(members, "coarse")
+            .withColumn("__r", F.row_number().over(w))
+            .filter("__r = 1")
+            .select("vec_id", "embedding", "vnorm", "cluster_id")
+        )
+        got = ivf_assign_two_level(corpus, cents, n_coarse=4, n_probe_coarse=p)
+        assert _cell_rows(got) == _cell_rows(want), p
+        _assert_map_side(got)
 
-    cents = spark.createDataFrame(
+    null_elem = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [None, 1.0])], "cluster_id int, centroid array<double>"
     )
     emb2 = emb.select("vec_id", F.slice("embedding", 1, 2).alias("embedding"))
-    assert rows(ivf_assign_two_level(emb2, cents)) == rows(ivf_assign(emb2, cents, 1))
-
-
-def test_two_level_literal_path_equals_join_form(spark):
-    """r15 optimization pin: the fully map-side two-level assignment
-    (phase 1 rep-scoring + phase 2 CASE-dispatched probed-cell argmin,
-    both from centroid literals — no crossJoin window, no equi-join,
-    no groupBy exchange) is ROW-IDENTICAL — every column, vnorm bits,
-    and the (csim desc, id asc) tie rules of BOTH phases — to the
-    join fallback (crossJoin window, then equi-join window: the
-    over-budget path), on the real corpus AND on degenerate
-    rows (null vector, short vector, null element: all csims go null,
-    both forms fall through to the lowest probed-cell fine id)."""
-    from duckdb_vortex_spark.operators import similarity
-    from duckdb_vortex_spark.operators.similarity import (
-        LLOYD_LITERAL_BUDGET,
-        ivf_assign_two_level,
-        sample_centroids,
+    assert _cell_rows(ivf_assign_two_level(emb2, null_elem)) == _cell_rows(
+        ivf_assign(emb2, null_elem, 1)
     )
-
-    emb = load(spark, SF_DIR, "embeddings")
-    degenerate = spark.createDataFrame(
-        [
-            (900001, None, 0),
-            (900002, [1.0] * 3, 0),
-            (900003, [1.0] * 63 + [None], 0),
-        ],
-        emb.schema,
-    )
-    corpus = emb.unionByName(degenerate)
-    cents = sample_centroids(emb, 16)
-
-    lit = ivf_assign_two_level(corpus, cents, n_coarse=4, n_probe_coarse=2)
-    # force the join fallback (window, then equi-join + window)
-    orig = similarity.LLOYD_LITERAL_BUDGET
-    similarity.LLOYD_LITERAL_BUDGET = 0
-    try:
-        join_form = ivf_assign_two_level(
-            corpus, cents, n_coarse=4, n_probe_coarse=2
-        )
-    finally:
-        similarity.LLOYD_LITERAL_BUDGET = orig
-    assert LLOYD_LITERAL_BUDGET == orig
-
-    def rows(df):
-        return sorted(
-            (r["vec_id"], tuple(r["embedding"] or []), r["vnorm"], r["cluster_id"])
-            for r in df.collect()
-        )
-
-    a, b = rows(lit), rows(join_form)
-    assert len(a) == corpus.count()
-    assert a == b
-    # genuinely map-side: no exchange, no join, no aggregate anywhere
-    plan = lit._sc._jvm.PythonSQLUtils.explainString(
-        lit._jdf.queryExecution(), "formatted"
-    )
-    assert "Exchange" not in plan, plan
-    assert "Join" not in plan, plan
-    assert "Aggregate" not in plan, plan

@@ -198,19 +198,13 @@ def test_pq_code_budget_breaks_the_recall_plateau(spark):
 
 def test_probe_broadcast_guard_falls_back_row_identical(spark):
     """r16 (ADVICE r15, medium): the probe-side F.broadcast in
-    ivf_probe / ivfpq_probe is gated on an estimated broadcast
-    footprint. Past PROBE_BROADCAST_MAX_BYTES the
-    join runs unhinted (PQ paths restore the r5 persist barrier) and
-    must return EXACTLY the same rows — the guard changes strategy,
-    never results. The guard's count is LIMIT-bounded, so it never
-    pays a full scan of a huge query set."""
+    ivfpq_probe is gated on an estimated broadcast footprint. Past
+    PROBE_BROADCAST_MAX_BYTES the join runs unhinted with the r5
+    persist barrier restored and must return EXACTLY the same rows —
+    the guard changes strategy, never results. The guard's count is
+    LIMIT-bounded, so it never pays a full scan of a huge query set."""
     from duckdb_vortex_spark.operators import similarity as sim
-    from duckdb_vortex_spark.operators.similarity import (
-        ivf_index,
-        ivf_probe,
-        ivfpq_index,
-        ivfpq_probe,
-    )
+    from duckdb_vortex_spark.operators.similarity import ivfpq_index, ivfpq_probe
 
     emb = load(spark, SF_DIR, "embeddings").limit(200)
     qry = emb.filter(F.col("vec_id") % 20 == 0)
@@ -218,24 +212,16 @@ def test_probe_broadcast_guard_falls_back_row_identical(spark):
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
-    iidx = ivf_index(emb, n_clusters=8)
     pidx = ivfpq_index(emb, n_clusters=8)
-    got = {
-        "ivf": rows(ivf_probe(iidx, qry, k=5, n_probe=2)),
-        "ivfpq": rows(ivfpq_probe(pidx, qry, k=5, n_probe=2)),
-    }
+    got = rows(ivfpq_probe(pidx, qry, k=5, n_probe=2))
     orig = sim.PROBE_BROADCAST_MAX_BYTES
-    sim.PROBE_BROADCAST_MAX_BYTES = 1  # force every guard to fall back
+    sim.PROBE_BROADCAST_MAX_BYTES = 1  # force the guard to fall back
     try:
-        fb = {
-            "ivf": rows(ivf_probe(iidx, qry, k=5, n_probe=2)),
-            "ivfpq": rows(ivfpq_probe(pidx, qry, k=5, n_probe=2)),
-        }
+        fb = rows(ivfpq_probe(pidx, qry, k=5, n_probe=2))
     finally:
         sim.PROBE_BROADCAST_MAX_BYTES = orig
     assert sim.PROBE_BROADCAST_MAX_BYTES == orig
-    for name in got:
-        assert got[name] == fb[name], name
+    assert got == fb
 
 
 def test_probe_bounded_count_memo(spark):
