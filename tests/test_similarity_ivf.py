@@ -102,6 +102,28 @@ def test_fold_is_a_left_fold():
             assert csim[i, j].hex() == want.hex(), (i, j)
 
 
+def test_ivf_vectorized_equals_hof(spark):
+    """At a partial probe (3 of 8 clusters) the per-cluster kernel
+    rerank returns exactly the rows — cos_sim and rnk included — of a
+    HOF probe join: each query's 3 cells from the HOF assignment joined
+    to the index's candidates on cluster_id, scored with _dot/_norm and
+    ranked by the same window."""
+    from duckdb_vortex_spark.operators.similarity import _rank_topk, cosine, ivf_index, ivf_probe
+
+    emb = load(spark, SF_DIR, "embeddings")
+    q = emb.filter(F.col("vec_id") % 50 == 0)
+    index = ivf_index(emb, 8)
+    cells = _hof_cells(q, index.centroids, 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"), "cluster_id"
+    )
+    scored = (
+        cells.join(index.cand, "cluster_id")
+        .filter(F.col("query_id") != F.col("cand_id"))
+        .select("query_id", "cand_id", cosine(F.col("qv"), F.col("cv")).alias("cos_sim"))
+    )
+    assert _rows(ivf_probe(index, q, k=5, n_probe=3)) == _rows(_rank_topk(scored, 5))
+
+
 def test_vectorized_topk_chunked_query_block(spark):
     """Driver-memory bound: with max_query_block smaller than |Q| the
     query set streams in blocks (one candidate pass per block) and the
@@ -524,16 +546,52 @@ def _degenerate_corpus(spark):
     return emb, emb.unionByName(degenerate)
 
 
-def test_ivf_assign_kernel_equals_hof_reference(spark):
-    """The cosine kernel's assignment is ROW-IDENTICAL — every column,
-    vnorm bits included, and the (coalesce(-csim, +Inf), cluster_id)
-    order — to the HOF reference, at n_probe 1, 2 and 4, on the real
-    corpus, on degenerate vectors (null, short, long, null element,
-    NaN element, zero) and against NaN, Inf, null-element, zero and
-    duplicate centroids. Each vector's 1-probe cell is its first
-    multi-probe cell. The pass is map-side: no exchange, join, aggregate
-    or window."""
-    from duckdb_vortex_spark.operators.similarity import ivf_assign, sample_centroids
+def _assert_matches_hof(corpus, cents, n_probes):
+    """ivf_assign is row-identical to the HOF reference at each n_probe,
+    map-side, and each vector's 1-probe cell is among its multi-probe
+    cells."""
+    from duckdb_vortex_spark.operators.similarity import ivf_assign
+
+    first = {}
+    for n_probe in n_probes:
+        got = ivf_assign(corpus, cents, n_probe=n_probe)
+        rows = _cell_rows(got)
+        assert len(rows) == corpus.count() * n_probe
+        assert rows == _cell_rows(_hof_cells(corpus, cents, n_probe)), n_probe
+        _assert_map_side(got)
+        if n_probe == 1:
+            first = {r[0]: r[3] for r in rows}
+        else:
+            assert all(first[r[0]] in {c[3] for c in rows if c[0] == r[0]} for r in rows)
+
+
+def test_ivf_assign_literal_path_equals_join_form(spark):
+    """The map-side assignment (one cosine-kernel pass, where a literal
+    SQL kernel once ran) is ROW-IDENTICAL — every column, vnorm bits
+    included, and the (coalesce(-csim, +Inf), cluster_id) order — to
+    the join form (crossJoin + row_number window over _dot/_norm), at
+    n_probe 1, 2 and 4, on the real corpus and on degenerate vectors
+    (null, short, long, null element, NaN element, zero). The pass has
+    no exchange, join, aggregate or window."""
+    from duckdb_vortex_spark.operators.similarity import sample_centroids
+
+    emb, corpus = _degenerate_corpus(spark)
+    _assert_matches_hof(corpus, sample_centroids(emb, 8), (1, 2, 4))
+
+
+def test_ivf_assign_nonfinite_centroid_falls_back(spark):
+    """A NaN, Inf, null-element, zero or duplicate centroid is computed
+    through by the one kernel — no second path — with the rows of the
+    join form at n_probe 1, 2 and 4, on the real corpus and the
+    degenerate vectors: a null element or a zero norm gives that
+    centroid a null csim, ordered after every number. The two-level
+    assignment's driver-side fine→coarse map computes a null-element
+    centroid through the same way: same cells as ivf_assign."""
+    from duckdb_vortex_spark.operators.similarity import (
+        ivf_assign,
+        ivf_assign_two_level,
+        sample_centroids,
+    )
 
     emb, corpus = _degenerate_corpus(spark)
     sample = [(r["cluster_id"], list(r["centroid"])) for r in sample_centroids(emb, 8).collect()]
@@ -545,17 +603,15 @@ def test_ivf_assign_kernel_equals_hof_reference(spark):
         (12, sample[3][1]),  # duplicate of cluster 3
     ]
     cents = spark.createDataFrame(sample + odd, "cluster_id int, centroid array<float>")
-    first = {}
-    for n_probe in (1, 2, 4):
-        got = ivf_assign(corpus, cents, n_probe=n_probe)
-        rows = _cell_rows(got)
-        assert len(rows) == corpus.count() * n_probe
-        assert rows == _cell_rows(_hof_cells(corpus, cents, n_probe)), n_probe
-        _assert_map_side(got)
-        if n_probe == 1:
-            first = {r[0]: r[3] for r in rows}
-        else:
-            assert all(first[r[0]] in {c[3] for c in rows if c[0] == r[0]} for r in rows)
+    _assert_matches_hof(corpus, cents, (1, 2, 4))
+
+    null_elem = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [None, 1.0])], "cluster_id int, centroid array<double>"
+    )
+    emb2 = emb.select("vec_id", F.slice("embedding", 1, 2).alias("embedding"))
+    assert _cell_rows(ivf_assign_two_level(emb2, null_elem)) == _cell_rows(
+        ivf_assign(emb2, null_elem, 1)
+    )
 
 
 def test_zero_norm_cosine_is_null(spark):
@@ -589,9 +645,8 @@ def test_two_level_kernel_equals_hof_reference(spark):
     both phases — to a HOF reference (cross join + window, then an
     equi-join on the coarse cell + window), on the real corpus and the
     degenerate vectors, at n_probe_coarse 1, 2 and 4. No exchange, join,
-    aggregate or window. A null centroid element is computed through."""
+    aggregate or window."""
     from duckdb_vortex_spark.operators.similarity import (
-        ivf_assign,
         ivf_assign_two_level,
         sample_centroids,
     )
@@ -624,11 +679,3 @@ def test_two_level_kernel_equals_hof_reference(spark):
         got = ivf_assign_two_level(corpus, cents, n_coarse=4, n_probe_coarse=p)
         assert _cell_rows(got) == _cell_rows(want), p
         _assert_map_side(got)
-
-    null_elem = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [None, 1.0])], "cluster_id int, centroid array<double>"
-    )
-    emb2 = emb.select("vec_id", F.slice("embedding", 1, 2).alias("embedding"))
-    assert _cell_rows(ivf_assign_two_level(emb2, null_elem)) == _cell_rows(
-        ivf_assign(emb2, null_elem, 1)
-    )
