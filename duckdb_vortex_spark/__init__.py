@@ -50,7 +50,6 @@ _EXPORTS = {
     "connected_components": ("duckdb_vortex_spark.operators.dedup", "connected_components"),
     "simhash": ("duckdb_vortex_spark.operators.dedup", "simhash"),
     "topk_bruteforce": ("duckdb_vortex_spark.operators.similarity", "topk_bruteforce"),
-    "topk_vectorized": ("duckdb_vortex_spark.operators.similarity", "topk_vectorized"),
     "lsh_topk": ("duckdb_vortex_spark.operators.similarity", "lsh_topk"),
     "ivf_topk": ("duckdb_vortex_spark.operators.similarity", "ivf_topk"),
     "ivf_index": ("duckdb_vortex_spark.operators.similarity", "ivf_index"),

@@ -19,7 +19,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load, query
-from .similarity import _norm
 from .text import tokens
 
 # --- token-window chunking ----------------------------------------------
@@ -86,6 +85,17 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- embedding transforms ------------------------------------------------
+
+
+def _norm(a: Column) -> Column:
+    """A vector's L2 norm, folded left to right over doubles."""
+    return F.sqrt(
+        F.aggregate(
+            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+    )
 
 
 def normalize_embeddings(df: DataFrame, vec_col: str = "embedding") -> DataFrame:

@@ -243,7 +243,8 @@ def retrieval_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id, cand_id, rnk))."""
     emb = load(spark, sf_dir, "embeddings")
     lab = emb.select("vec_id", "label")
-    topk = topk_bruteforce(emb.filter(F.col("vec_id") % 20 == 0), emb, k=10)
+    queries = emb.filter(F.col("vec_id") % 20 == 0)
+    topk = topk_bruteforce(queries, emb, k=10)
     # Label decoration broadcasts the TOP-K side (|Q|·k rows, bounded
     # by construction) and streams the corpus-sized label map — the
     # r11 audit caught the previous form broadcasting the (vec_id,
@@ -252,9 +253,7 @@ def retrieval_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # zero shuffles of it.
     j = F.broadcast(
         F.broadcast(topk).join(
-            lab.withColumnRenamed("vec_id", "query_id").withColumnRenamed(
-                "label", "qlab"
-            ),
+            queries.select(F.col("vec_id").alias("query_id"), F.col("label").alias("qlab")),
             "query_id",
         )
     ).join(
@@ -352,16 +351,15 @@ def retrieval_recall_curve_by_label(spark: SparkSession, sf_dir: str) -> DataFra
     consumes only (query_id, cand_id, rnk))."""
     emb = load(spark, sf_dir, "embeddings")
     lab = emb.select("vec_id", "label")
-    topk = topk_bruteforce(emb.filter(F.col("vec_id") % 20 == 0), emb, k=10)
+    queries = emb.filter(F.col("vec_id") % 20 == 0)
+    topk = topk_bruteforce(queries, emb, k=10)
     # Same label-decoration shape as `retrieval_knn_eval`: broadcast
     # the bounded top-k side, stream the corpus-sized label map (r11
     # audit — the map must never be the broadcast build side).
     j = (
         F.broadcast(
             F.broadcast(topk).join(
-                lab.withColumnRenamed("vec_id", "query_id").withColumnRenamed(
-                    "label", "qlab"
-                ),
+                queries.select(F.col("vec_id").alias("query_id"), F.col("label").alias("qlab")),
                 "query_id",
             )
         )
@@ -540,7 +538,8 @@ def retrieval_ann_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     harness computes it once on a sample); each ANN leg is the shipped
     bucketed plan (centroids/codebooks broadcast, probed-cluster scans)
     and the curve itself decorates 6 top-k lists of |Q|·k rows — all
-    counting happens on bounded frames. Each leg is localCheckpointed:
+    counting happens on bounded frames; |Q| is counted once on the
+    driver and enters every row as a literal. Each leg is localCheckpointed:
     it feeds two cutoffs, and 7 independent subtrees under one union
     would otherwise make Catalyst re-analysis the dominant cost (the
     r8 lineage rule, incremental_pipeline.py).
@@ -561,7 +560,7 @@ def retrieval_ann_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ividx = ivf_index(emb, n_clusters=16)
     ividx = ividx._replace(cand=ividx.cand.localCheckpoint(eager=True))
     pqidx = ivfpq_index(emb, n_clusters=16, m=4, k_codes=16)
-    nq = queries.agg(F.count("*").cast("bigint").alias("n_queries"))
+    n_queries = queries.count()
     out = None
     for np_ in _TUNING_PROBES:
         ivf = (
@@ -585,15 +584,14 @@ def retrieval_ann_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                         ["query_id", "cand_id"],
                     )
                     .agg(F.count("*").cast("bigint").alias("hits"))
-                    .crossJoin(F.broadcast(nq))
                     .select(
                         F.lit(method).alias("method"),
                         F.lit(np_).cast("bigint").alias("n_probe"),
                         F.lit(k).cast("bigint").alias("k"),
-                        "n_queries",
+                        F.lit(n_queries).cast("bigint").alias("n_queries"),
                         "hits",
                         F.expr(
-                            f"CAST((hits * 1000000) DIV ({k} * n_queries) AS BIGINT)"
+                            f"CAST((hits * 1000000) DIV ({k} * {n_queries}) AS BIGINT)"
                         ).alias("recall_mu"),
                     )
                 )

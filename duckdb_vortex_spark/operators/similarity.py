@@ -1,16 +1,17 @@
 """Similarity search over embedding columns (SURVEY.md §2C):
-brute-force cosine top-k as the exact baseline, plus an LSH-bucketed
-approximate variant as the scale path.
+exact cosine top-k as the baseline, plus LSH-, IVF- and PQ-bucketed
+approximate variants as the scale paths.
 
-Embeddings are ``array<float>`` columns. Dot products are computed
-either with ``F.zip_with`` + ``F.aggregate`` over doubles (JVM-side) or
-by the numpy cosine kernel (``_fold``), which folds in the same order;
-both are (verified) bit-identical to DuckDB's sequential ``list_sum``
-reduction, which is what makes the entries oracle-checkable.
+Embeddings are ``array<float>`` columns. Every exact cosine (pair
+scores, top-k, IVF assignment and rerank, SemDeDup) runs on one numpy
+kernel (``_fold``) in Arrow-batched Python workers. It folds each dot
+product left to right over doubles, the order of DuckDB's sequential
+``list_sum`` reduction, so its cosines are bit-identical to the
+oracles' and the entries are oracle-checkable.
 
 Scale design:
-- brute force is O(|Q|·|C|) — exact, used for small query sets and as
-  the verifier/recall-oracle for the approximate path.
+- the exact top-k is O(|Q|·|C|) — used for small query sets and as
+  the verifier/recall-oracle for the approximate paths.
 - the LSH path buckets vectors by random-hyperplane sign signatures
   (signatures per-row, no shuffle; probes only same-bucket candidates).
   At 100 TB the candidate join shuffles on the bucket key; recall is
@@ -26,7 +27,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
 from ..catalog import load, query
 from ..session import scoped_persist
@@ -52,29 +53,6 @@ def _pq_barrier(df: DataFrame, corpus: bool = False) -> DataFrame:
     return scoped_persist(df, PQ_CODES_STORAGE if corpus else PQ_QUERY_STORAGE)
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Null for a zero norm, as DuckDB's division gives."""
-    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
-
-
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     """Each query's ``k`` best of ``scored`` (query_id, cand_id,
     cos_sim): cos_sim desc, ties by cand_id, ranked as a bigint."""
@@ -88,8 +66,8 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
 
 def _sql_cos(a: str, b: str) -> str:
     """DuckDB cosine over two list expressions, folded in the same
-    left-to-right double sequence as the Spark HOF ``cosine`` — proven
-    bit-identical by the brute-force entry's driver hash match."""
+    left-to-right double sequence as the cosine kernel (:func:`_fold`) —
+    proven bit-identical by the exact top-k entry's driver hash match."""
 
     def sq(v: str) -> str:
         return f"list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
@@ -101,6 +79,11 @@ def _sql_cos(a: str, b: str) -> str:
     )
 
 
+# Query rows per broadcast block of the exact top-k: 64k × 64 dims ×
+# 8 B ≈ 32 MB on the driver and in every task.
+_QUERY_BLOCK = 1 << 16
+
+
 def topk_bruteforce(
     queries_df: DataFrame,
     candidates_df: DataFrame,
@@ -108,39 +91,57 @@ def topk_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors per query (self-matches excluded).
-    Cross join + per-query window; ties broken by candidate id."""
-    # Norms are precomputed per side (|Q|+|C| norm evaluations instead
-    # of 2·|Q|·|C| inside the cross join); the value is IEEE-identical
-    # to computing them per pair, so oracle parity is unaffected.
-    q = queries_df.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    c = candidates_df.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    # Broadcast the QUERY side, stream the corpus (r11 audit): the
-    # linear scan is the declared cost of this oracle-tier baseline,
-    # but which side the nested loop BUILDS is still a scale choice —
-    # without the pin, the local threshold broadcast the corpus-sized
-    # candidate table, the one side that must never be resident.
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.try_divide(
-                _dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn")
-            ).alias("cos_sim"),
-        )
-    )
-    return _rank_topk(scored, k)
+    """Exact top-k cosine neighbors per query (self-matches excluded),
+    ranked by cos_sim desc, ties by candidate id: (query_id, cand_id,
+    cos_sim, rnk).
+
+    A query block is broadcast to every task, and each candidate
+    partition scores its Arrow batches against it on the cosine kernel
+    (:func:`_fold`), keeping only its local top-k per query. The global
+    top-k then ranks |partitions|·k rows per query — the standard
+    two-phase top-k, with no join: the corpus streams and nothing but
+    the current query block is resident.
+
+    Driver memory is BOUNDED: queries are streamed off the cluster via
+    ``toLocalIterator`` in blocks of at most ``_QUERY_BLOCK`` rows, one
+    candidate pass per block, results unioned. For |Q| approaching
+    |corpus| the cogrouped IVF path (:func:`ivf_topk`) is the right
+    tool and this function is the lookup-side primitive."""
+    import numpy as np
+    import pyarrow as pa
+
+    spark = queries_df.sparkSession
+    cand = candidates_df.select(F.col(id_col), F.col(vec_col))
+    schema = "query_id long, cand_id long, cos_sim double"
+
+    def block_topk(q_block):
+        q_ids = np.array([r[0] for r in q_block], dtype=np.int64)
+        qv = _vectors(pa.array([r[1] for r in q_block], pa.list_(pa.float64())))
+        bc = spark.sparkContext.broadcast((q_ids, qv))
+
+        def local_topk(batches):
+            ids, qv = bc.value
+            for batch in batches:
+                c_ids = batch.column(0).to_numpy().astype(np.int64)
+                yield from _scored_topk(ids, qv, c_ids, _vectors(batch.column(1)), k)
+
+        return cand.mapInArrow(local_topk, schema)
+
+    locals_: list[DataFrame] = []
+    block: list = []
+    for r in queries_df.select(id_col, vec_col).toLocalIterator():
+        block.append(r)
+        if len(block) >= _QUERY_BLOCK:
+            locals_.append(block_topk(block))
+            block = []
+    if block:
+        locals_.append(block_topk(block))
+    if not locals_:
+        return spark.createDataFrame([], schema + ", rnk bigint")
+    local = locals_[0]
+    for extra in locals_[1:]:
+        local = local.unionAll(extra)
+    return _rank_topk(local, k)
 
 
 TOPK_ORACLE = """
@@ -266,10 +267,7 @@ def lsh_topk(
         .select("query_id", "qv", "cand_id", "cv")
         .distinct()
     )
-    scored = cand.select(
-        "query_id", "cand_id", cosine(F.col("qv"), F.col("cv")).alias("cos_sim")
-    )
-    return _rank_topk(scored, k)
+    return _rank_topk(_pair_cos(cand, "qv", "cv"), k)
 
 
 def _lsh_ann_oracle(n_planes: int = 8, n_tables: int = 4, dim: int = 64, k: int = 10) -> str:
@@ -277,7 +275,7 @@ def _lsh_ann_oracle(n_planes: int = 8, n_tables: int = 4, dim: int = 64, k: int 
     hyperplanes are deterministic md5-derived floats computed driver-
     side and inlined as literals in BOTH plans (repr round-trips
     doubles exactly), and the dot-product fold order matches the Spark
-    HOF (bit-identical per the brute-force entry), so every signature
+    HOF signatures (bit-identical per the exact top-k entry), so every signature
     bit — and therefore every bucket, candidate, and ranked result —
     agrees across engines."""
 
@@ -330,7 +328,8 @@ def similarity_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-10 (the 100 TB scale path).
     FULLY oracle-checked (upgraded from rows-only): the hyperplanes
     are deterministic literals shared with the oracle SQL and the
-    whole bucket→probe→re-rank pipeline is deterministic HOF math, so
+    whole bucket→probe→re-rank pipeline is deterministic (HOF
+    signatures, the cosine kernel's re-rank), so
     DuckDB reproduces the exact ranked output. Recall vs the exact
     baseline is additionally asserted in pytest."""
     emb = load(spark, sf_dir, "embeddings")
@@ -427,14 +426,18 @@ def _probe_side(qry: DataFrame, queries_df: DataFrame, n_probe: int, row_bytes: 
 
 # --- the cosine kernel -----------------------------------------------------
 #
-# One numpy cosine serves IVF assignment (flat and two-level), the IVF
-# rerank and the exact block top-k, in Arrow-batched Python workers
-# (numpy and pyarrow only). It is vectorized over rows and sequential
-# over dimensions: ``acc = acc + a[i] * b[i]`` from 0.0 is the order of
-# _dot's and _norm's aggregate, and numpy's float64 multiply, add,
-# divide and sqrt are each correctly rounded, so every csim is the
-# double ``_dot(a, b) / (_norm(a) * _norm(b))`` gives. A zero
-# denominator gives a null csim, as the HOF divisions' try_divide does.
+# One numpy cosine serves every exact cosine of the package — the exact
+# top-k, IVF assignment (flat and two-level), the IVF rerank, the pair
+# scores of the LSH rerank, the near-dup pairs and the IVF-PQ rerank,
+# SemDeDup's prune and the streaming semantic gate — in Arrow-batched
+# Python workers (numpy and pyarrow only). It is vectorized over rows
+# and sequential over dimensions: ``acc = acc + a[i] * b[i]`` from 0.0
+# is the order of a SQL left fold over the zipped elements (DuckDB's
+# ``list_sum``, the HOF reference in tests/hof_reference.py), and
+# numpy's float64 multiply, add, divide and sqrt are each correctly
+# rounded, so every csim is the double ``dot(a, b) / (norm(a) *
+# norm(b))`` of that fold. A zero denominator gives a null csim, as
+# DuckDB's division does.
 
 _BLOCK_CELLS = 1 << 18  # rows × columns of one kernel block
 
@@ -451,24 +454,29 @@ def _fold(a, b):
 
 
 class _Vecs(NamedTuple):
-    """Vectors as the kernel reads them. ``x`` is (dim, rows) float64,
-    dimension-major for the fold. ``ok`` marks the rows whose cosine is
-    defined: not null, ``dim`` long (``zip_with`` pads a length mismatch
-    with null) and no null element. ``norm`` is each row's own _norm,
-    whatever its length, and ``null`` marks where that is null: a null
-    vector or a null element."""
+    """Vectors as the kernel reads them. ``x`` is (width, rows) float64,
+    dimension-major for the fold, each row zero-padded past its length.
+    ``len`` is each row's length, -1 for a null vector. ``null`` marks a
+    null vector or one with a null element, ``ok`` the other rows, and
+    ``norm`` is each row's own norm (null where ``null`` is). Two rows
+    have a cosine only if both are ok and of one length, as a
+    ``zip_with`` fold pads a length mismatch with null. The padding
+    leaves the fold exact: an accumulator that starts at +0.0 is never
+    -0.0, so adding 0.0 * 0.0 never changes it."""
 
     x: object
+    len: object
     ok: object
     norm: object
     null: object
 
     def take(self, r) -> "_Vecs":
-        return _Vecs(self.x[:, r], self.ok[r], self.norm[r], self.null[r])
+        return _Vecs(self.x[:, r], *(f[r] for f in self[1:]))
 
 
-def _vectors(arr, dim: int) -> _Vecs:
-    """The :class:`_Vecs` of an Arrow list array."""
+def _vectors(arr) -> _Vecs:
+    """The :class:`_Vecs` of an Arrow list array, as wide as its
+    longest row."""
     import numpy as np
     import pyarrow.compute as pc
 
@@ -477,46 +485,86 @@ def _vectors(arr, dim: int) -> _Vecs:
     offs = arr.offsets.to_numpy()[:n]  # positions in arr.values
     vals = arr.values.to_numpy(zero_copy_only=False).astype(np.float64)
     enull = arr.values.is_null().to_numpy(zero_copy_only=False)
-    x = np.zeros((dim, n))
+    x = np.zeros((int(lens.max(initial=0)), n))
     norm = np.full(n, np.nan)
     null = lens < 0
-    ok = np.zeros(n, bool)
     for length in np.unique(lens[lens >= 0]):
         r = np.nonzero(lens == length)[0]
         g = offs[r][:, None] + np.arange(length)
         xl = vals[g].T
         norm[r] = np.sqrt(_fold(xl, xl))
         null[r] = enull[g].any(axis=1)
-        if length == dim:
-            x[:, r] = xl
-            ok[r] = ~null[r]
-    return _Vecs(x, ok, norm, null)
+        x[:length, r] = xl
+    return _Vecs(x, lens, ~null, norm, null)
 
 
 def _book(rows: list[tuple[int, list[float]]]):
     """A codebook's cluster ids (ascending, as `codebook_rows` sorts
-    them), its :class:`_Vecs` and its one dimension."""
+    them) and its :class:`_Vecs`."""
     import numpy as np
     import pyarrow as pa
 
     dims = {len(v) for _, v in rows}
     if len(dims) > 1:
         raise ValueError(f"centroids of different dimensions: {sorted(dims)}")
-    dim = dims.pop() if dims else 0
     vecs = pa.array([v for _, v in rows], pa.list_(pa.float64()))
-    return np.array([cid for cid, _ in rows], dtype=np.int64), _vectors(vecs, dim), dim
+    return np.array([cid for cid, _ in rows], dtype=np.int64), _vectors(vecs)
 
 
-def _csim(a: _Vecs, b: _Vecs):
-    """(csim, null): every row of ``a`` against every row of ``b``. A
-    csim is null where either side's cosine is undefined or the
-    denominator is zero."""
+def _cos(a: _Vecs, b: _Vecs):
+    """(csim, null) of each row of ``a`` against the row of ``b`` it
+    broadcasts with. A csim is null where either side is null, the
+    lengths differ or the denominator is zero."""
     import numpy as np
 
     with np.errstate(all="ignore"):
-        den = a.norm[:, None] * b.norm
-        csim = _fold(a.x[:, :, None], b.x[:, None, :]) / den
-    return csim, ~(a.ok[:, None] & b.ok) | (den == 0)
+        den = a.norm * b.norm
+        csim = _fold(a.x, b.x) / den
+    return csim, ~(a.ok & b.ok) | (a.len != b.len) | (den == 0)
+
+
+def _csim(a: _Vecs, b: _Vecs):
+    """(csim, null): every row of ``a`` against every row of ``b``."""
+    return _cos(_Vecs(*(f[..., None] for f in a)), b)
+
+
+def _pair_cos(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """``pairs`` with its vector columns ``a`` and ``b`` replaced by
+    their cosine, ``cos_sim``, row by row in one map-side pass."""
+    rest = [f for f in pairs.schema if f.name not in (a, b)]
+    names = [f.name for f in rest] + ["cos_sim"]
+
+    def score(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            csim, null = _cos(_vectors(batch.column(a)), _vectors(batch.column(b)))
+            cols = [batch.column(f.name) for f in rest]
+            yield pa.RecordBatch.from_arrays([*cols, pa.array(csim, mask=null)], names=names)
+
+    return pairs.mapInArrow(score, StructType([*rest, StructField("cos_sim", DoubleType())]))
+
+
+def _reached(a_ids, a_cids, a: _Vecs, b_ids, b_cids, b: _Vecs, threshold: float):
+    """Mask over the rows of ``b``: some row of ``a`` in the same
+    cluster (``*_cids``) with a smaller id has a csim at or above
+    ``threshold``. A NaN csim reaches every threshold, as Spark and
+    DuckDB order NaN above every number; a null csim reaches none.
+    Scored cluster by cluster, in row blocks of ``b``."""
+    import numpy as np
+
+    hit = np.zeros(len(b_ids), bool)
+    for c in np.intersect1d(a_cids, b_cids):
+        ra, rb = np.nonzero(a_cids == c)[0], np.nonzero(b_cids == c)[0]
+        ca, ids = a.take(ra), a_ids[ra]
+        step = max(1, _BLOCK_CELLS // len(ra))
+        for s in range(0, len(rb), step):
+            blk = rb[s : s + step]
+            csim, null = _csim(b.take(blk), ca)
+            with np.errstate(invalid="ignore"):
+                reach = ~(null | (csim < threshold)) & (ids < b_ids[blk, None])
+            hit[blk] = reach.any(axis=1)
+    return hit
 
 
 def _key(csim, null):
@@ -556,7 +604,7 @@ def _topk(q_ids, c_ids, csim, null, k: int):
     return rows[keep], cols[keep]
 
 
-def _assign_pass(df, centroids, id_col, vec_col, dim, width, pick) -> DataFrame:
+def _assign_pass(df, centroids, id_col, vec_col, width, pick) -> DataFrame:
     """One map-side ``mapInArrow`` pass over (id, vec): each row with its
     vnorm, once per cluster id that ``pick`` gives it. pick(block) →
     (row indexes, cluster ids) for a :class:`_Vecs` block of at most
@@ -572,7 +620,7 @@ def _assign_pass(df, centroids, id_col, vec_col, dim, width, pick) -> DataFrame:
         import pyarrow as pa
 
         for batch in batches:
-            v = _vectors(batch.column(1), dim)
+            v = _vectors(batch.column(1))
             for s in range(0, batch.num_rows, step):
                 at, cids = pick(v.take(slice(s, s + step)))
                 at = at + s
@@ -713,22 +761,22 @@ def ivf_assign(
     otherwise they are collected here, one Spark job per call.
 
     One map-side ``mapInArrow`` pass, no join and no exchange: the
-    centroids ride in the cosine kernel's closure (:func:`_fold`), which
-    computes every csim as the HOF ``_dot / (_norm · _norm)`` does. A
+    centroids ride in the cosine kernel's closure (:func:`_fold`). A
     csim is null for a null vector, one whose length differs from the
     centroids', one with a null element, against a centroid with a null
     element, or for a zero norm on either side; the sort key
     coalesce(-csim, +Inf) puts a null after every number and a NaN
-    last. vnorm is the row's own _norm."""
+    last. vnorm is the row's own L2 norm, null for a null vector or
+    element."""
     import numpy as np
 
-    cids, book, dim = _book(codebook_rows(centroids) if rows is None else rows)
+    cids, book = _book(codebook_rows(centroids) if rows is None else rows)
 
     def pick(v: _Vecs):
         top = _nearest(_key(*_csim(v, book)), n_probe)
         return np.repeat(np.arange(top.shape[0]), top.shape[1]), cids[top].ravel()
 
-    return _assign_pass(df, centroids, id_col, vec_col, dim, len(cids), pick)
+    return _assign_pass(df, centroids, id_col, vec_col, len(cids), pick)
 
 
 class IvfIndex(NamedTuple):
@@ -831,16 +879,15 @@ def ivf_probe(
     schema = StructType(
         [qry.schema["query_id"], cand.schema["cand_id"], StructField("cos_sim", DoubleType())]
     )
-    dim = len(index.rows[0][1]) if index.rows else 0
     local = (
         qry.groupBy("cluster_id")
         .cogroup(cand.groupBy("cluster_id"))
-        .applyInArrow(_rerank(k, dim), schema)
+        .applyInArrow(_rerank(k), schema)
     )
     return _rank_topk(local, k)
 
 
-def _rerank(k: int, dim: int):
+def _rerank(k: int):
     """The cogroup function of :func:`ivf_probe`: one cluster's queries
     (query_id, qv, cluster_id) against its candidates (cand_id, cv,
     cluster_id), each query's local top ``k`` by the kernel's csim."""
@@ -851,7 +898,7 @@ def _rerank(k: int, dim: int):
         q_ids = q.column("query_id").combine_chunks()
         c_ids = c.column("cand_id").combine_chunks()
         schema = pa.schema([("query_id", q_ids.type), ("cand_id", c_ids.type), ("cos_sim", pa.float64())])
-        qv, cv = (_vectors(t.column(v).combine_chunks(), dim) for t, v in ((q, "qv"), (c, "cv")))
+        qv, cv = (_vectors(t.column(v).combine_chunks()) for t, v in ((q, "qv"), (c, "cv")))
         return pa.Table.from_batches(
             list(_scored_topk(q_ids.to_numpy(), qv, c_ids.to_numpy(), cv, k)), schema
         )
@@ -1004,11 +1051,8 @@ def similarity_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 10 == 0)
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cosine(F.col("va"), F.col("vb")).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= 0.30)
-    )
+    pairs = a.join(b, F.col("id_a") < F.col("id_b")).select("id_a", "id_b", "va", "vb")
+    return _pair_cos(pairs, "va", "vb").filter(F.col("cos_sim") >= 0.30)
 
 
 # --- label-centroid cosine matrix ----------------------------------------
@@ -1089,78 +1133,6 @@ def similarity_label_centroid_matrix(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-# --- Arrow-vectorized exact top-k -----------------------------------------
-
-
-def topk_vectorized(
-    queries_df: DataFrame,
-    candidates_df: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_query_block: int = 65536,
-) -> DataFrame:
-    """Exact cosine top-k, Arrow/numpy path: the query block is
-    broadcast to every task, and each candidate partition scores its
-    Arrow batches against it on the cosine kernel (:func:`_fold`),
-    keeping only its local top-k per query. The global top-k then
-    aggregates |partitions|·k rows per query — the standard two-phase
-    top-k.
-
-    Driver memory is BOUNDED: queries are streamed off the cluster via
-    ``toLocalIterator`` in blocks of at most ``max_query_block`` rows
-    (64k × 64 dims × 8 B ≈ 32 MB per broadcast), one candidate pass per
-    block, results unioned. Only one block is resident on the driver at
-    a time, so |Q| can grow without a driver OOM; for |Q| approaching
-    |corpus| the cogrouped IVF path (:func:`ivf_topk`) is the right
-    tool and this function is the lookup-side primitive.
-
-    The same rows as topk_bruteforce, cos_sim and rnk included (pinned
-    by tests), at a fraction of the cost: the JVM HOF path folds
-    64-element lambdas per pair, while this path folds one numpy
-    (queries × batch) block per dimension. Candidates stream — nothing
-    but the current query block is ever resident."""
-    import numpy as np
-    import pyarrow as pa
-
-    spark = queries_df.sparkSession
-    cand = candidates_df.select(F.col(id_col), F.col(vec_col))
-    schema = "query_id long, cand_id long, cos_sim double"
-
-    def block_topk(q_block):
-        q_ids = np.array([r[0] for r in q_block], dtype=np.int64)
-        vecs = [r[1] for r in q_block]
-        dim = next((len(v) for v in vecs if v is not None), 0)
-        qv = _vectors(pa.array(vecs, pa.list_(pa.float64())), dim)
-        bc = spark.sparkContext.broadcast((q_ids, qv))
-
-        def local_topk(batches):
-            ids, qv = bc.value
-            for batch in batches:
-                c_ids = batch.column(0).to_numpy().astype(np.int64)
-                yield from _scored_topk(ids, qv, c_ids, _vectors(batch.column(1), dim), k)
-
-        return cand.mapInArrow(local_topk, schema)
-
-    locals_: list[DataFrame] = []
-    block: list = []
-    for r in queries_df.select(id_col, vec_col).toLocalIterator():
-        block.append(r)
-        if len(block) >= max_query_block:
-            locals_.append(block_topk(block))
-            block = []
-    if block:
-        locals_.append(block_topk(block))
-    if not locals_:
-        return spark.createDataFrame([], schema + ", rnk bigint").select(
-            "query_id", "cand_id", "cos_sim", "rnk"
-        )
-    local = locals_[0]
-    for extra in locals_[1:]:
-        local = local.unionAll(extra)
-    return _rank_topk(local, k)
-
-
 TOPK_PAIRS_ORACLE = """
 WITH q AS (
   SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % 20 = 0
@@ -1191,12 +1163,12 @@ WHERE rnk <= 10
     tags=("similarity", "llm", "udf"),
 )
 def similarity_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-10, Arrow-vectorized (the cosine kernel per batch) —
-    the fast exact path. Oracle-checked on the top-k pair set
-    (query_id, cand_id); row equality with the HOF brute force, cos_sim
-    and rnk included, is pinned in tests/test_similarity_ivf.py."""
+    """Exact top-10 as the top-k pair set (query_id, cand_id):
+    :func:`topk_bruteforce`, oracle-checked on the pairs alone. Its row
+    equality with a HOF reference top-k, cos_sim and rnk included, is
+    pinned in tests/test_similarity_ivf.py."""
     emb = load(spark, sf_dir, "embeddings")
-    return topk_vectorized(emb.filter(F.col("vec_id") % 20 == 0), emb, k=10).select(
+    return topk_bruteforce(emb.filter(F.col("vec_id") % 20 == 0), emb, k=10).select(
         "query_id", "cand_id"
     )
 
@@ -1649,8 +1621,8 @@ def ivfpq_probe(
     broadcast-attached the same way. The only exchange this path adds
     is the final top-k window's hash-partition of the BOUNDED |Q|·R
     exact frame (the prior "no new shuffle at any corpus size" claim
-    overstated — ADVICE r14); the rerank kernel itself is |Q|·R
-    exact dots.
+    overstated — ADVICE r14); the rerank itself is |Q|·R
+    exact cosines, row by row on the cosine kernel.
     """
     if rerank:
         # Partition-pruned fetch ONLY against the index's own sidecar
@@ -1735,32 +1707,22 @@ def ivfpq_probe(
         *(["cluster_id"] if pruned else []),
         F.col(id_col).alias("cand_id"),
         F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
     )
-    qv = queries_df.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
+    qv = queries_df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     # broadcast the bounded shortlist (|Q|*R rows) against the vector
     # table: with a cluster-partitioned table the (cluster_id, cand_id)
     # join lets dynamic partition pruning skip every un-probed
     # cluster's files; otherwise the fetch is one map-side pass. Then
     # the (equally bounded) result broadcasts against the query vectors.
-    exact = (
+    pairs = (
         cv.join(
             F.broadcast(shortlist),
             ["cluster_id", "cand_id"] if pruned else ["cand_id"],
         )
         .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "cand_id",
-            F.try_divide(
-                _dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn")
-            ).alias("cos_sim"),
-        )
+        .select("query_id", "cand_id", "qv", "cv")
     )
+    exact = _pair_cos(pairs, "qv", "cv")
     w2 = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
     return (
         exact.withColumn("rn", F.row_number().over(w2))
@@ -2026,7 +1988,8 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quadratic all-pairs pass.
 
     Scale: the centroid set rides in the assignment kernel's closure;
-    assignment is map-side; the pair join is hash-partitioned ON cluster_id, so
+    assignment is map-side; the prune is hash-partitioned ON cluster_id
+    and scores each cluster against itself, so
     total pair work is Σ|cluster|², bounded by the cluster balance
     the IVF slow tier measures (max/median 1.1) — never |corpus|².
     At 100 TB with √n clusters this is the linear-ish pass that makes
@@ -2039,30 +2002,24 @@ def _semdedup_prune(cl: DataFrame) -> DataFrame:
     """SemDeDup's greedy prune over a 1-probe assignment ``cl``
     (vec_id, embedding, vnorm, cluster_id): a row is removed when a
     lower-id member of its own cluster reaches cosine 0.30. Returns
-    (vec_id, cluster_id BIGINT, is_kept); the pair join is
-    hash-partitioned on cluster_id."""
-    a = cl.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"),
-        F.col("vnorm").alias("na"), "cluster_id",
+    (vec_id, cluster_id BIGINT, is_kept) from one pass: the rows are
+    hash-partitioned on cluster_id and each cluster is scored against
+    itself on the cosine kernel (:func:`_reached`), so the assignment
+    runs once."""
+    rows = cl.select("vec_id", "embedding", F.col("cluster_id").cast("bigint").alias("cluster_id"))
+    schema = StructType(
+        [rows.schema["vec_id"], rows.schema["cluster_id"], StructField("is_kept", BooleanType())]
     )
-    b = cl.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"),
-        F.col("vnorm").alias("nb"), "cluster_id",
-    )
-    rm = (
-        # pinned: a cluster's members are corpus-sized, never a broadcast
-        a.join(b.hint("shuffle_hash"), "cluster_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.try_divide(_dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")) >= 0.30)
-        .select(F.col("id_b").alias("vec_id"))
-        .distinct()
-        .withColumn("__rm", F.lit(1))
-    )
-    return cl.join(rm, "vec_id", "left").select(
-        "vec_id",
-        F.col("cluster_id").cast("bigint").alias("cluster_id"),
-        F.col("__rm").isNull().alias("is_kept"),
-    )
+
+    def prune(t):
+        import pyarrow as pa
+
+        ids, cids = (t.column(c).to_numpy() for c in ("vec_id", "cluster_id"))
+        v = _vectors(t.column("embedding").combine_chunks())
+        kept = ~_reached(ids, cids, v, ids, cids, v, 0.30)
+        return pa.table([t.column("vec_id"), t.column("cluster_id"), pa.array(kept)], names=schema.names)
+
+    return rows.groupBy("cluster_id").applyInArrow(prune, schema)
 
 
 # --- ADC search over a STORED codes artifact (VERDICT r6 #7c) -------------
@@ -2139,7 +2096,7 @@ def ivf_assign_two_level(
 ) -> DataFrame:
     """Hierarchical (coarse→fine) nearest-centroid assignment: the
     designated fix for the flat-assignment wall the r7 slow-tier
-    breakdown named (scripts/breakdown_slow_tier.py): with cluster
+    breakdown named: with cluster
     count k ∝ corpus (SemDeDup's fixed-cluster-SIZE regime), flat
     assignment does n·k cosines — the one super-linear term in the
     whole recipe. Two levels make it n·(n_coarse +
@@ -2186,7 +2143,7 @@ def ivf_assign_two_level(
     if n_coarse is None:
         n_coarse = max(1, math.isqrt(len(crows)))
     n_probe = min(n_probe_coarse, n_coarse)
-    cids, book, dim = _book(crows)
+    cids, book = _book(crows)
     reps = book.take(slice(0, n_coarse))
     home = _nearest(_key(*_csim(book, reps)), 1)[:, 0]
     cells = [np.nonzero(home == j)[0] for j in range(n_coarse)]
@@ -2211,7 +2168,7 @@ def ivf_assign_two_level(
         return at, best[at]
 
     width = max(n_coarse, *map(len, cells))
-    return _assign_pass(df, centroids, id_col, vec_col, dim, width, pick)
+    return _assign_pass(df, centroids, id_col, vec_col, width, pick)
 
 
 TWO_LEVEL_ASSIGN_ORACLE = f"""

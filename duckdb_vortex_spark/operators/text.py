@@ -144,21 +144,6 @@ def md5_fingerprint(col) -> Column:
     return F.md5(_normalized(c))
 
 
-def analyze(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis column family to a corpus."""
-    return df.select(
-        "*",
-        token_count(text_col).alias("n_tokens"),
-        word_token_count(text_col).alias("n_word_tokens"),
-        stopword_ratio(text_col).alias("stopword_ratio"),
-        punct_ratio(text_col).alias("punct_ratio"),
-        mean_token_len(text_col).alias("mean_token_len"),
-        quality_score(text_col).alias("quality"),
-        lang_id(text_col).alias("lang_pred"),
-        md5_fingerprint(text_col).alias("fingerprint"),
-    )
-
-
 # --- catalog entries ----------------------------------------------------
 
 TOKEN_ORACLE = """

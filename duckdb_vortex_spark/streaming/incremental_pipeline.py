@@ -39,7 +39,7 @@ Spark jobs per batch. A job costs driver planning, AQE and scheduling
 whatever the batch size, and at micro-batch sizes the job count, not
 the row count, sets a batch's cost. Measured at sf0.01 on 4 cores (the
 benchmark's chain part, second pass, the 334-document batch that reads
-history; the first batch, with no history, runs 27 → 20):
+history; the first batch, with no history, runs 27 → 19):
 
   stage            before  after  what runs now
   land raw            3      3    range sampling and exchange, write
@@ -54,12 +54,13 @@ history; the first batch, with no history, runs 27 → 20):
   lsh write           1      1
   semantic gate       2      1    near-dropped broadcast (the codebook
                                   is no longer collected per batch)
-  probed clusters     2      1    one collect, deduplicated on the driver
+  batch rows          2      1    one collect of the batch's rows
   ivf write           3      3    range sampling and exchange, write
-  manifest            6      4    semantic new-side broadcast, one
-                                  broadcast of the stage-tagged dropped
-                                  ids, aggregate, write
-  total              35     23
+  manifest            6      3    one broadcast of the stage-tagged
+                                  dropped ids (the semantic gate's
+                                  cosine pass runs inside it),
+                                  aggregate, write
+  total              35     22
 
 Store writes run on the write pool, each submitted only after a
 main-thread job has materialized the lineage cut it reads, so two

@@ -15,13 +15,16 @@ integrated chain (`incremental_pipeline`) runs third. Shape at 100 TB/day:
    (`similarity.sample_centroids`) so an external oracle can replay
    the pick exactly;
 2. per batch, 1-probe assignment of the NEW vectors against the
-   broadcast codebook — map-side only, no shuffle of the corpus;
+   codebook in the cosine kernel's closure — map-side only, no
+   shuffle of the corpus;
 3. candidates = landed index rows in the batch's probed clusters
    ONLY: the index is written cluster-SORTED, so the candidate scan
    zone-map-prunes to O(batch clusters) chunks — the IVF
    inverted-list layout as batch-dir storage, never a corpus scan;
 4. exact cosine vs candidates (+ earlier same-batch, same-cluster
-   rows); a new vector is dropped iff some EARLIER vector (earlier
+   rows) on the numpy cosine kernel, in one map-side pass over the
+   candidates with the collected batch rows in its closure; a new
+   vector is dropped iff some EARLIER vector (earlier
    batch, or same batch with smaller id) in the SAME cluster reaches
    the threshold. ALL vectors are indexed — dropped ones too — so the
    whole-history manifest is a pure function of (codebook, arrival
@@ -48,11 +51,13 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..catalog import load, query
 from ..operators.similarity import (
-    _dot,
+    _reached,
     _sql_cos,
+    _vectors,
     codebook_rows,
     ivf_assign,
     sample_centroids,
@@ -98,38 +103,42 @@ def semantic_gate(
     (cluster_id, id, vec, vnorm), None before the first batch, read
     fresh with pushdown on. Returns the ids of rows with an earlier row
     in the same cluster (a prior batch, or a smaller id in this batch)
-    whose cosine reaches ``threshold``; an id may repeat.
+    whose cosine reaches ``threshold``; an id may repeat. A NaN cosine
+    reaches every threshold, a null one (a null vector or element, a
+    length mismatch, a zero norm) none.
 
-    The batch's probed clusters are collected (one cluster id per row,
-    deduplicated on the driver; the collect materializes ``asg``'s cut)
-    and applied to ``landed`` as a literal filter, so the index scan
-    zone-map-prunes to those clusters' chunks. The id guard ``id_a <
+    The batch's (cluster_id, id, vec) rows are collected in one job,
+    which materializes ``asg``'s cut. Their clusters are applied to
+    ``landed`` as a literal filter, so the index scan zone-map-prunes to
+    those clusters' chunks, and the rows ride in the closure of one
+    map-side pass over the landed rows and the batch itself, scored on
+    the cosine kernel (`similarity._reached`). The id guard ``id_a <
     id_b`` is right for landed rows too, since ids are unique across the
     stream."""
+    import numpy as np
 
-    def side(df: DataFrame, s: str) -> DataFrame:
-        return df.select(
-            "cluster_id",
-            F.col("id").alias(f"id_{s}"),
-            F.col("vec").alias(f"vec_{s}"),
-            F.col("vnorm").alias(f"n_{s}"),
-        )
-
-    probed = sorted({r["cluster_id"] for r in asg.select("cluster_id").collect()})
-    new_side, old_side = side(asg, "b"), side(asg, "a")
+    scored = asg.select("cluster_id", "id", "vec")
+    batch = scored.toArrow()
+    ids, cids = (batch.column(c).to_numpy() for c in ("id", "cluster_id"))
+    id_type = batch.schema.field("id").type
+    vecs = _vectors(batch.column("vec").combine_chunks())
     if landed is not None:
-        landed = landed.filter(F.col("cluster_id").isin(probed))
-        old_side = side(landed, "a").unionByName(old_side)
-    return (
-        # batch side bounded → broadcast; the landed index rows stream
-        old_side.join(F.broadcast(new_side), "cluster_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.try_divide(_dot(F.col("vec_a"), F.col("vec_b")), F.col("n_a") * F.col("n_b"))
-            >= threshold
-        )
-        .select(F.col("id_b").alias("id"))
-    )
+        probed = np.unique(cids).tolist()
+        scored = landed.filter(F.col("cluster_id").isin(probed)).select(
+            "cluster_id", "id", "vec"
+        ).unionByName(scored)
+
+    def gate(batches):
+        import pyarrow as pa
+
+        for a in batches:
+            hit = _reached(
+                a.column(1).to_numpy(), a.column(0).to_numpy(), _vectors(a.column(2)),
+                ids, cids, vecs, threshold,
+            )
+            yield pa.RecordBatch.from_arrays([pa.array(ids[hit], id_type)], names=["id"])
+
+    return scored.mapInArrow(gate, StructType([asg.schema["id"]]))
 
 
 def cluster_sorted(asg: DataFrame) -> DataFrame:

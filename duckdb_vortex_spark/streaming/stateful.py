@@ -201,76 +201,3 @@ def batch_user_sessions(events: DataFrame, gap_us: int = _GAP_US) -> DataFrame:
             F.max("us").alias("last_us"),
         )
     )
-
-
-# --- Spark 4 transformWithState twin --------------------------------------
-# The current-generation stateful API (SPIP: State V2): typed state
-# handles (ValueState/ListState/MapState), timers, and TTL replace the
-# single opaque tuple of applyInPandasWithState. Same operator, same
-# state size (one small record per user), expressed both ways so users
-# on either API generation can adopt the pattern.
-
-try:  # pragma: no cover - import guard exercised implicitly
-    # the State-V2 python protocol speaks protobuf to the JVM; without
-    # google.protobuf the driver worker crashes at init, so gate on it
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotalsProcessor(StatefulProcessor):
-        """Per-user running (n_events, sum_value, last_seen_us) via a
-        ValueState handle — update-mode emission per batch."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            (user_id,) = key
-            if self._state.exists():
-                n, sv, last_us = self._state.get()
-            else:
-                n, sv, last_us = 0, 0.0, None
-            for pdf in rows:
-                n += len(pdf)
-                sv += float(pdf["value"].sum())
-                us = int(pdf["ts"].max().value // 1000)
-                last_us = us if last_us is None else max(last_us, us)
-            self._state.update((n, sv, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "sum_value": [sv],
-                    "last_seen": [pd.Timestamp(last_us * 1000)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # pre-4.0 PySpark, or protobuf absent
-    HAS_TRANSFORM_WITH_STATE = False
-
-
-def running_user_totals_v2(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas form of :func:`running_user_totals`
-    (requires Spark 4 AND google.protobuf — the State-V2 worker
-    protocol; gated so environments without protobuf fall back to the
-    applyInPandasWithState form). Same semantics, same state size."""
-    if not HAS_TRANSFORM_WITH_STATE:
-        raise RuntimeError(
-            "transformWithState requires pyspark >= 4.0 with google.protobuf"
-        )
-    return (
-        events.select("user_id", "ts", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningTotalsProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )

@@ -3,7 +3,7 @@
 min-to-max spread was 0.98 in BENCH_SPREADS.json — roughly 2x across
 3 warm runs, the noisiest headline query — while every other entry
 spread <= 0.57. This script names the unstable stage with numbers,
-the breakdown_slow_tier.py method: time CUMULATIVE sub-plans of the
+the cumulative-prefix method: time CUMULATIVE sub-plans of the
 exact shipped plan (narrow projections so the noop sink measures the
 operator, not serialization width), n warm runs each, and report
 per-stage median AND per-stage spread. The stage whose cumulative

@@ -6,7 +6,7 @@ thesis predicts falling — so either the ladder hadn't left the
 fixed-floor regime (the ×16/×32 legs answer that) or a second
 PER-ROW cost hides in one stage. This names the stage.
 
-Method (breakdown_slow_tier.py discipline): time CUMULATIVE
+Method: time CUMULATIVE
 sub-plans of each engine's exact shipped q21 at ×1 and ×K; the
 consecutive deltas attribute wall to stages, and the per-stage ×1→×K
 marginal ratio says which stage's residual does not amortize.

@@ -24,38 +24,10 @@ ALLOWED: dict[str, tuple[tuple[str, ...], str]] = {
         ("nested-loop-join", "cartesian-product"),
         "edit-distance theta join; pre-filtered to a bounded block",
     ),
-    "similarity_topk_bruteforce": (
-        ("nested-loop-join",),
-        "the exact quadratic BASELINE kept for oracle duty; production "
-        "twins are topk_vectorized / ivf_ann (bucketed)",
-    ),
-    "retrieval_knn_eval": (
-        ("nested-loop-join",),
-        "metrics decorate the exact-kNN BASELINE's top-k list (the "
-        "|Q|-row query broadcast); production swaps in ivf/ivfpq — "
-        "the metric computation consumes only (query_id, cand_id, rnk)",
-    ),
-    "retrieval_recall_curve_by_label": (
-        ("nested-loop-join",),
-        "same bounded BNLJ as retrieval_knn_eval (the |Q|-row query "
-        "broadcast of the exact-kNN BASELINE ranker); the curve "
-        "consumes only (query_id, cand_id, rnk), so production swaps "
-        "in ivf/ivfpq without touching the aggregation",
-    ),
-    "retrieval_ann_tuning_curve": (
-        ("nested-loop-join",),
-        "the tuning curve measures the IVF/IVF-PQ paths AGAINST the "
-        "exact baseline, so the plan contains both by construction: "
-        "the |Q|-row BNLJ of the exact ground truth (oracle-tier, "
-        "computed once per tuning run); all counting joins are "
-        "hash-wise on (query_id, cand_id)",
-    ),
     "retrieval_hybrid_rrf": (
         ("nested-loop-join",),
-        "two bounded BNLJs: the dense leg's 1-ROW query-vector "
-        "broadcast (constant at any corpus size; swap in ivf_ann for "
-        "the corpus-scale leg — fusion only consumes (id, rank)) and "
-        "the full outer fuse of two top-20 lists (40 rows total)",
+        "one bounded BNLJ: the full outer fuse of two top-20 lists "
+        "(40 rows total)",
     ),
     "dedup_ngram_jaccard_pairs": (
         ("nested-loop-join",),

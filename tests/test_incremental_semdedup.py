@@ -12,19 +12,17 @@ import os
 from pyspark.sql import functions as F
 
 from duckdb_vortex_spark.catalog import load
-from duckdb_vortex_spark.operators.similarity import (
-    _dot,
-    ivf_assign,
-    sample_centroids,
-)
+from duckdb_vortex_spark.operators.similarity import ivf_assign, sample_centroids
 from duckdb_vortex_spark.sources.vortex import register
 from duckdb_vortex_spark.streaming.incremental_semdedup import (
     incremental_semdedup_stream,
+    semantic_gate,
     semdedup_process_batch,
 )
 from duckdb_vortex_spark.streaming.sinks import batch_dirs, compact_dataset_incremental
 
 from .conftest import SF_DIR
+from .hof_reference import _dot, cosine
 
 THRESH = 0.4
 
@@ -72,6 +70,69 @@ def _batch_answer(emb, centroids):
         x["vec_id"]: x["vec_id"] not in dropped
         for x in emb.select("vec_id").collect()
     }
+
+
+def _hof_gate(asg, landed, threshold):
+    """The HOF reference gate: the ids of batch rows with a landed or
+    batch row in the same cluster, with a smaller id, whose `cosine`
+    reaches ``threshold`` (Spark's ``>=``, under which NaN reaches every
+    threshold and null none)."""
+    old = asg if landed is None else landed.unionByName(asg)
+    a = old.select("cluster_id", F.col("id").alias("id_a"), F.col("vec").alias("va"))
+    b = asg.select("cluster_id", F.col("id").alias("id_b"), F.col("vec").alias("vb"))
+    return {
+        r["id_b"]
+        for r in a.join(b, "cluster_id")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(cosine(F.col("va"), F.col("vb")) >= threshold)
+        .collect()
+    }
+
+
+def test_semantic_gate_equals_hof_reference(spark):
+    """The kernel gate drops exactly the ids the HOF reference gate
+    drops, with and without landed rows, on adversarial vectors: zero
+    vectors, null elements, NaN elements (a NaN cosine drops), a null
+    vector, a length mismatch and an equal-length pair of another
+    length, a duplicate pair scoring exactly at the threshold, and a
+    batch row with a lower id than its landed duplicate (kept)."""
+    nan = float("nan")
+    schema = "cluster_id int, id bigint, vec array<float>, vnorm double"
+    landed = spark.createDataFrame(
+        [
+            (0, 10, [1.0, 0.0, 0.0], None),
+            (0, 20, [0.6, 0.8, 0.0], None),
+            (0, 30, [0.0, 0.0, 0.0], None),  # zero vector
+            (0, 40, [1.0, None, 0.0], None),  # null element
+            (1, 50, [nan, 1.0, 1.0], None),  # NaN element
+            (3, 90, [1.0, 0.0, 0.0], None),  # a cluster the batch does not probe
+        ],
+        schema,
+    )
+    asg = spark.createDataFrame(
+        [
+            (0, 5, [1.0, 0.0, 0.0], None),  # lower id than its landed duplicate 10
+            (0, 15, [2.0, 0.0, 0.0], None),  # cosine 1.0 with 5 and 10
+            (0, 25, [0.6, 0.8, 0.0], None),  # exactly at the threshold with 20
+            (0, 35, [0.0, 0.0, 0.0], None),
+            (0, 45, [1.0, 0.0, None], None),
+            (1, 55, [0.0, 1.0, 1.0], None),  # NaN cosine with 50
+            (1, 60, [nan, 0.0, 0.0], None),
+            (2, 65, [1.0, 2.0, 3.0], None),
+            (0, 70, [3.0, 4.0], None),  # length mismatch with the 3-dim rows
+            (0, 75, [6.0, 8.0], None),  # cosine 1.0 with 70
+            (0, 80, None, None),
+            (0, 85, [1.0, 0.001, 0.0], None),  # just below the threshold
+        ],
+        schema,
+    )
+    at = asg.filter("id = 25").select(F.col("vec").alias("b"))
+    thr = at.crossJoin(landed.filter("id = 20").select(F.col("vec").alias("a")))
+    thr = thr.select(cosine(F.col("a"), F.col("b"))).first()[0]
+    assert thr < 1.0
+    for lnd, want in ((None, {15, 60, 75}), (landed, {15, 25, 55, 60, 75})):
+        assert _hof_gate(asg, lnd, thr) == want
+        assert {r["id"] for r in semantic_gate(asg, lnd, thr).collect()} == want
 
 
 def test_chopping_invariance(spark, tmp_path):

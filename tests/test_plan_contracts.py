@@ -172,7 +172,6 @@ _NESTED_LOOP_OK = {
     "dedup_ngram_jaccard_pairs",
     "dedup_containment_pairs",  # ordered-pair theta join, same bounded fixture
     "sketch_count_min_estimate",  # |keys|x4 probes vs 256-row broadcast sketch
-    "similarity_topk_bruteforce",
     "structure_scalar_subquery",
     "structure_correlated_exists",
     "tpch_q22_global_sales_opportunity",  # 1-row scalar (avg balance) broadcast cross
@@ -193,10 +192,7 @@ _NESTED_LOOP_OK = {
     "stats_drift_ks",  # 1-row cohort-totals broadcast over the distinct-value ECDF
     "text_bm25_topk",  # 1-row corpus-stats broadcast (n_docs, tot_len in-plan)
     "sketch_hll_set_intersection",  # 1-row audit x 1-row pivoted-estimates cross
-    "retrieval_hybrid_rrf",  # 1-row query-vector broadcast + 40-row full-outer fuse; dense leg pluggable (IVF at scale)
-    "retrieval_knn_eval",  # metrics decorate the exact-kNN baseline's |Q|-row broadcast; ranker pluggable
-    "retrieval_recall_curve_by_label",  # same |Q|-row kNN-baseline broadcast; curve consumes only (query_id, cand_id, rnk)
-    "retrieval_ann_tuning_curve",  # exact-baseline |Q|-row BNLJ (the ground truth being tuned against)
+    "retrieval_hybrid_rrf",  # 40-row full-outer fuse of the two top-20 lists
 }
 _PYTHON_EVAL_OK = {
     "udtf_split_sentences",       # Python UDTF by design

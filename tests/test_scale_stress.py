@@ -484,7 +484,9 @@ def test_semdedup_10x(spark):
     SIZE, 50k clusters for LAION). With k=16 at 1x and k=160 at 10x,
     per-cluster population stays constant and total pair work grows
     10x, not 100x. Skew evidence: max/median cluster size."""
-    from duckdb_vortex_spark.operators.similarity import _dot, ivf_assign, sample_centroids
+    from duckdb_vortex_spark.operators.similarity import ivf_assign, sample_centroids
+
+    from .hof_reference import _dot
 
     def run(e, k):
         cl = ivf_assign(e, sample_centroids(e, k), 1).select(

@@ -15,6 +15,7 @@ from duckdb_vortex_spark.catalog import load
 from duckdb_vortex_spark.operators.similarity import ivf_topk, topk_bruteforce
 
 from .conftest import SF_DIR
+from .hof_reference import _dot, _norm, cosine
 
 
 def _pairs(df):
@@ -61,14 +62,33 @@ def test_ivf_corpus_partition_is_disjoint(spark):
     assert assigned.select("vec_id").distinct().count() == emb.count()
 
 
-def test_vectorized_topk_equals_bruteforce(spark):
-    """The Arrow/numpy exact path returns exactly the HOF brute force's
-    rows, cos_sim and rnk included: the kernel folds in _dot's order."""
-    from duckdb_vortex_spark.operators.similarity import topk_vectorized
+def _hof_topk(q, c, k):
+    """The HOF reference top-k: a cross join scored with `cosine`,
+    self-matches dropped, ranked by the package's window."""
+    from duckdb_vortex_spark.operators.similarity import _rank_topk
 
-    emb = load(spark, SF_DIR, "embeddings")
-    q = emb.filter(F.col("vec_id") % 50 == 0)
-    assert _rows(topk_vectorized(q, emb, k=5)) == _rows(topk_bruteforce(q, emb, k=5))
+    scored = (
+        q.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+        .crossJoin(c.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv")))
+        .filter(F.col("query_id") != F.col("cand_id"))
+        .select("query_id", "cand_id", cosine(F.col("qv"), F.col("cv")).alias("cos_sim"))
+    )
+    return _rank_topk(scored, k)
+
+
+def test_vectorized_topk_equals_bruteforce(spark):
+    """The exact top-k (block top-k on the cosine kernel) returns
+    exactly the rows of a HOF reference top-k, cos_sim and rnk
+    included, on the real corpus and on degenerate vectors (null,
+    short, long, null element, NaN element, zero) as queries and
+    candidates: the kernel folds in _dot's order, and a NaN cos_sim
+    ranks first as Spark orders it."""
+    emb, corpus = _degenerate_corpus(spark)
+    q = corpus.filter((F.col("vec_id") % 50 == 0) | (F.col("vec_id") > 900000))
+    def rows(df):
+        return sorted((r.query_id, r.cand_id, _bits(r.cos_sim), r.rnk) for r in df.collect())
+
+    assert rows(topk_bruteforce(q, corpus, k=5)) == rows(_hof_topk(q, corpus, 5))
 
 
 def test_fold_is_a_left_fold():
@@ -92,7 +112,7 @@ def test_fold_is_a_left_fold():
             acc = acc + float(u) * float(v)
         return acc
 
-    va, vb = (_vectors(pa.array(m.tolist(), pa.list_(pa.float32())), 33) for m in (a, b))
+    va, vb = (_vectors(pa.array(m.tolist(), pa.list_(pa.float32()))) for m in (a, b))
     csim, null = _csim(va, vb)
     assert not null.any()
     for i, x in enumerate(a):
@@ -108,7 +128,7 @@ def test_ivf_vectorized_equals_hof(spark):
     HOF probe join: each query's 3 cells from the HOF assignment joined
     to the index's candidates on cluster_id, scored with _dot/_norm and
     ranked by the same window."""
-    from duckdb_vortex_spark.operators.similarity import _rank_topk, cosine, ivf_index, ivf_probe
+    from duckdb_vortex_spark.operators.similarity import _rank_topk, ivf_index, ivf_probe
 
     emb = load(spark, SF_DIR, "embeddings")
     q = emb.filter(F.col("vec_id") % 50 == 0)
@@ -124,17 +144,33 @@ def test_ivf_vectorized_equals_hof(spark):
     assert _rows(ivf_probe(index, q, k=5, n_probe=3)) == _rows(_rank_topk(scored, 5))
 
 
-def test_vectorized_topk_chunked_query_block(spark):
-    """Driver-memory bound: with max_query_block smaller than |Q| the
+def test_vectorized_topk_chunked_query_block(spark, monkeypatch):
+    """Driver-memory bound: with a query block smaller than |Q| the
     query set streams in blocks (one candidate pass per block) and the
     unioned result is identical to the single-block path."""
-    from duckdb_vortex_spark.operators.similarity import topk_vectorized
+    from duckdb_vortex_spark.operators import similarity
 
     emb = load(spark, SF_DIR, "embeddings")
     q = emb.filter(F.col("vec_id") % 50 == 0)
-    whole = _pairs(topk_vectorized(q, emb, k=5))
-    chunked = _pairs(topk_vectorized(q, emb, k=5, max_query_block=3))
-    assert chunked == whole
+    whole = _rows(topk_bruteforce(q, emb, k=5))
+    monkeypatch.setattr(similarity, "_QUERY_BLOCK", 3)
+    assert _rows(topk_bruteforce(q, emb, k=5)) == whole
+
+
+def test_semdedup_runs_the_assignment_once(spark):
+    """Each SemDeDup entry's executed plan (sf0.001) holds exactly one
+    assignment MapInArrow over one embeddings scan: the prune scores
+    each cluster against itself in one grouped pass, where a cluster_id
+    self-join and a keep-flag join once evaluated the assignment three
+    times."""
+    import re
+
+    from duckdb_vortex_spark.catalog import entries
+
+    for name in ("dedup_semantic_cluster", "dedup_semantic_cluster_two_level"):
+        plan = entries()[name].builder(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, (name, plan)
+        assert plan.count("embeddings.parquet") == 1, (name, plan)
 
 
 def test_two_level_assignment_exact_at_full_probe(spark):
@@ -492,8 +528,6 @@ def _hof_cells(df, cents, n_probe, id_col="vec_id", vec_col="embedding"):
     cluster_id)."""
     from pyspark.sql import Window
 
-    from duckdb_vortex_spark.operators.similarity import _dot, _norm
-
     v = df.select(id_col, vec_col, _norm(F.col(vec_col)).alias("vnorm"))
     c = cents.select("cluster_id", "centroid", _norm(F.col("centroid")).alias("cn"))
     csim = F.try_divide(_dot(F.col(vec_col), F.col("centroid")), F.col("vnorm") * F.col("cn"))
@@ -652,8 +686,6 @@ def test_two_level_kernel_equals_hof_reference(spark):
     )
 
     from pyspark.sql import Window
-
-    from duckdb_vortex_spark.operators.similarity import _dot, _norm
 
     emb, corpus = _degenerate_corpus(spark)
     cents = sample_centroids(emb, 16)

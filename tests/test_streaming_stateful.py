@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from duckdb_vortex_spark.catalog import load
@@ -93,45 +92,3 @@ def test_sessionizer_stream_equals_batch_any_order(spark, tmp_path):
         for r in batch_user_sessions(spark.read.parquet(path)).collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_transform_with_state_totals_converge_to_batch(spark, tmp_path):
-    """Spark-4 transformWithStateInPandas twin: same convergence
-    property as the applyInPandasWithState form."""
-    from duckdb_vortex_spark.streaming.stateful import (
-        HAS_TRANSFORM_WITH_STATE,
-        running_user_totals_v2,
-    )
-
-    if not HAS_TRANSFORM_WITH_STATE:
-        pytest.skip("transformWithState needs pyspark>=4 + google.protobuf")
-    events = load(spark, SF_DIR, "events").select("user_id", "ts", "value")
-    src = str(tmp_path / "events_replay_v2")
-    events.repartition(4).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    q = (
-        running_user_totals_v2(stream)
-        .writeStream.format("memory")
-        .queryName("user_totals_v2")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-
-    emitted = spark.table("user_totals_v2").toPandas()
-    final = emitted.sort_values("n_events").groupby("user_id").tail(1)
-    want = batch_user_totals(spark.read.parquet(src)).toPandas()
-    got = {int(r.user_id): r for _, r in final.iterrows()}
-    assert len(got) == len(want)
-    for _, w in want.iterrows():
-        g = got[int(w.user_id)]
-        assert int(g.n_events) == int(w.n_events)
-        assert math.isclose(float(g.sum_value), float(w.sum_value), rel_tol=1e-9)
-        assert g.last_seen == w.last_seen
