@@ -30,7 +30,7 @@ from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
 from ..catalog import load, query
-from ..session import scoped_persist
+from ..session import _local_frame, scoped_persist
 
 # Storage levels for the PQ interpreted-HOF persist barriers (the
 # distance-table / codes subtrees that MUST cache — a repartition
@@ -137,7 +137,7 @@ def topk_bruteforce(
     if block:
         locals_.append(block_topk(block))
     if not locals_:
-        return spark.createDataFrame([], schema + ", rnk bigint")
+        return _local_frame(spark, [], schema + ", rnk bigint")
     local = locals_[0]
     for extra in locals_[1:]:
         local = local.unionAll(extra)
@@ -359,15 +359,18 @@ def sample_centroids(
     single-partition window — and the K winning rows collect to the
     driver, which is fine because centroids are small by definition
     (they get broadcast right back out). cluster_id = rank in
-    (hash, id) order, so the mapping is itself reproducible."""
+    (hash, id) order, so the mapping is itself reproducible. The rows
+    become a frame through Arrow (`session._local_frame`), so
+    materializing the codebook starts no Python worker."""
     rows = (
         df.select(F.col(id_col), F.col(vec_col))
         .orderBy(_centroid_hash(F.col(id_col)), F.col(id_col))
         .limit(n_clusters)
         .collect()
     )
-    return df.sparkSession.createDataFrame(
-        [(i, list(r[1])) for i, r in enumerate(rows)],
+    return _local_frame(
+        df.sparkSession,
+        [(i, r[1]) for i, r in enumerate(rows)],
         f"cluster_id int, centroid array<{dict(df.dtypes)[vec_col].split('<')[1]}",
     )
 
@@ -729,7 +732,8 @@ def lloyd_refine(
         for r in sums:
             n = r["__n"]
             new[r["cluster_id"]] = [r[f"__s{i}"] / (Q * n) for i in range(dim)]
-        centroids = df.sparkSession.createDataFrame(
+        centroids = _local_frame(
+            df.sparkSession,
             [(cid, new[cid]) for cid in sorted(new)],
             f"cluster_id int, centroid {vec_t}",
         )
@@ -1798,9 +1802,9 @@ def write_ivfpq_index(
         for s, book in enumerate(index.books)
         for c, vec in enumerate(book)
     ]
-    spark.createDataFrame(
-        rows, "s int, c int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/books")
+    _local_frame(spark, rows, "s int, c int, centroid array<double>").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/books")
     if corpus_df is not None:
         # The index's own assignment is authoritative: a cluster_id
         # already on corpus_df (e.g. the frame came through ivf_assign,

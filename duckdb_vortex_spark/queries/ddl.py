@@ -112,7 +112,7 @@ def ddl_insert_append_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format(F.min("date_col"), "yyyy-MM-dd").alias("min_date"),
             F.max("ts_col").alias("max_ts"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
@@ -161,7 +161,7 @@ def read_csv_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "noisy",
             F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -202,6 +202,6 @@ def read_json_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("c_name").alias("min_name"),
             F.max("c_name").alias("max_name"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load, query
 from ..operators.asof import asof_join
+from ..session import _local_frame
 from .tpch import dec
 
 INNER_ORACLE = """
@@ -342,7 +343,7 @@ def join_null_safe_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dim = (
         o.select(F.col("o_orderpriority").alias("prio_key")).distinct()
-        .unionAll(o.sparkSession.createDataFrame([(None,)], "prio_key string"))
+        .unionAll(_local_frame(o.sparkSession, [(None,)], "prio_key string"))
     )
     return (
         dim.join(counts, F.col("fact_prio").eqNullSafe(F.col("prio_key")), "left")

@@ -197,3 +197,23 @@ def pin_utc(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
+
+
+def _local_frame(spark: SparkSession, rows, schema):
+    """A frame of driver-local ``rows`` (tuples in ``schema``'s column
+    order; ``schema`` a DDL string or a StructType), built from a
+    ``pyarrow.Table``. ``createDataFrame`` of a Python list puts a
+    PythonRDD in the frame's lineage, and the first action over it
+    starts a Python worker pool of its own; an Arrow table is
+    parallelized by the JVM and starts no Python worker. A null stays
+    null, where the pandas path would turn a null array element into
+    NaN."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)

@@ -797,7 +797,6 @@ def write_sorted(
     path: str,
     sort_cols: list[str],
     chunk_rows: int = 65536,
-    num_files: int | None = None,
     **options,
 ) -> None:
     """Write a vortex dataset clustered on ``sort_cols``: range-
@@ -811,14 +810,13 @@ def write_sorted(
     of them. Range partitioning also bounds per-task memory (no hot
     partition), unlike a global orderBy(1-partition) write.
 
-    ``num_files`` fixes the range-partition (= output file) count;
-    default is the session's shuffle partitioning. Small state-sized
-    datasets should bound it (see sinks.STATE_FILES) — one tiny file
-    per shuffle partition is pure open() overhead on every read."""
-    cols = [c for c in sort_cols]
+    The range cut has no partition count, so AQE sizes the output
+    files by bytes: contiguous range partitions coalesce to about the
+    advisory partition size each (one file for a small dataset, more
+    as it grows), and each file stays one sorted key range."""
     (
-        (df.repartitionByRange(num_files, *cols) if num_files else df.repartitionByRange(*cols))
-        .sortWithinPartitions(*cols)
+        df.repartitionByRange(*sort_cols)
+        .sortWithinPartitions(*sort_cols)
         .write.format("vortex")
         .mode(options.pop("mode", "append"))
         .option("chunk_rows", chunk_rows)
@@ -907,9 +905,11 @@ def dataset_stats(spark, path: str):
 
     At 100 TB this is the statistics path a query planner or data
     catalog wants: cost is O(files), footer reads are a few KB each,
-    and the per-file rows parallelize with ``spark.createDataFrame``
-    staying driver-side only for the file list (the same listing any
-    scan performs)."""
+    and the per-file rows parallelize through Arrow
+    (`session._local_frame`), staying driver-side only for the file
+    list (the same listing any scan performs)."""
+    from ..session import _local_frame
+
     rows = []
     for f in _expand(path):
         footer = vfmt.read_footer(f)
@@ -945,7 +945,8 @@ def dataset_stats(spark, path: str):
                     sorted(encs),
                 )
             )
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         rows,
         "file string, column string, n_rows bigint, n_chunks bigint, "
         "min string, max string, null_count bigint, encodings array<string>",

@@ -80,7 +80,7 @@ def vortex_copy_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Materialize before the scratch dir disappears: the driver may
         # collect lazily after this function returns.
-        out = spark.createDataFrame(out.collect(), out.schema)
+        out = spark.createDataFrame(out.toArrow(), out.schema)
         return out
     finally:
         shutil.rmtree(os.path.dirname(path), ignore_errors=True)
@@ -125,7 +125,7 @@ def vortex_typed_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFra
             F.min("l_shipdate").alias("min_ship"),
             F.max("l_returnflag").alias("max_flag"),
         )
-        out = spark.createDataFrame(out.collect(), out.schema)
+        out = spark.createDataFrame(out.toArrow(), out.schema)
         return out
     finally:
         shutil.rmtree(os.path.dirname(path), ignore_errors=True)
@@ -180,7 +180,7 @@ def vortex_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("o_custkey").cast("bigint").alias("sum_cust"),
             )
         )
-        out = spark.createDataFrame(out.collect(), out.schema)
+        out = spark.createDataFrame(out.toArrow(), out.schema)
         return out
     finally:
         shutil.rmtree(os.path.dirname(path), ignore_errors=True)
@@ -227,7 +227,7 @@ def vortex_ree_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("l_orderkey").cast("bigint").alias("sum_key"),
             )
         )
-        out = spark.createDataFrame(out.collect(), out.schema)
+        out = spark.createDataFrame(out.toArrow(), out.schema)
         return out
     finally:
         shutil.rmtree(os.path.dirname(path), ignore_errors=True)
@@ -264,7 +264,7 @@ def vortex_bloom_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.format("vortex").mode("append").option("chunk_rows", 2048).save(path)
         back = spark.read.format("vortex").option("pushdown", "true").load(path)
         out = back.filter(F.col("sparse_key").isin(700, 7007, 7010, 77777))
-        out = spark.createDataFrame(out.collect(), out.schema)
+        out = spark.createDataFrame(out.toArrow(), out.schema)
         return out
     finally:
         shutil.rmtree(os.path.dirname(path), ignore_errors=True)
@@ -336,7 +336,7 @@ def vortex_nested_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.element_at("custs", 1)).alias("sum_cust"),
             F.min(F.col("st.odate")).alias("min_date"),
         )
-        out = spark.createDataFrame(out.collect(), out.schema)
+        out = spark.createDataFrame(out.toArrow(), out.schema)
         return out
     finally:
         shutil.rmtree(os.path.dirname(path), ignore_errors=True)
@@ -397,7 +397,7 @@ def vortex_s3_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
             ).alias("sum_cents"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         srv.shutdown()
         srv.server_close()
@@ -464,6 +464,6 @@ def vortex_incremental_compaction(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         # Materialize before the scratch dir disappears: the driver may
         # collect lazily after this function returns.
-        return spark.createDataFrame(out.collect(), out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(os.path.dirname(path), ignore_errors=True)

@@ -53,7 +53,6 @@ from ..operators.contamination import (
 )
 from ..operators.dedup import minhash_signatures
 from .sinks import (
-    STATE_FILES,
     job_label,
     overwrite_batch_atomic,
     read_state,
@@ -76,10 +75,7 @@ def build_eval_index(
     eval-set-sized, so sorting is trivial)."""
     esig = minhash_signatures(eval_df, text_col, id_col, num_hashes, n)
     overwrite_batch_atomic(
-        esig.repartitionByRange(STATE_FILES, "id").sortWithinPartitions("id"),
-        index_dir,
-        0,
-        max_files=None,
+        esig.repartitionByRange("id").sortWithinPartitions("id"), index_dir, 0
     )
 
 

@@ -80,7 +80,6 @@ from ..operators.dedup import (
 )
 from ..operators.text import tokens
 from .sinks import (
-    STATE_FILES,
     job_label,
     overlapped_batch_writes,
     overwrite_batch_atomic,
@@ -242,7 +241,7 @@ def neardup_process_batch(
                 F.col(text_col).alias("text"),
                 tokens(text_col).alias("__toks"),
             )
-            .repartitionByRange(STATE_FILES, "id")
+            .repartitionByRange("id")
             .sortWithinPartitions("id"),
             num_hashes,
             n,
@@ -260,7 +259,7 @@ def neardup_process_batch(
         )
         # the gate's broadcast builds have materialized sig's cut
         bw.submit(
-            overwrite_batch_atomic, raw, raw_dir, batch_id, max_files=None,
+            overwrite_batch_atomic, raw, raw_dir, batch_id,
             label=f"neardup b{batch_id}: raw (write)",
         )
         bw.submit(

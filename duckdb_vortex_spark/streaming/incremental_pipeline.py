@@ -35,32 +35,39 @@ composition of the standalone modules' gate functions:
 4. manifest row per batch document: first failing gate
    (stage ∈ exact | near_dup | semantic | kept).
 
-Spark jobs per batch. A job costs driver planning, AQE and scheduling
-whatever the batch size, and at micro-batch sizes the job count, not
-the row count, sets a batch's cost. Measured at sf0.01 on 4 cores (the
-benchmark's chain part, second pass, the 334-document batch that reads
-history; the first batch, with no history, runs 27 → 19):
+Spark jobs and tasks per batch. A job costs driver planning, AQE and
+scheduling whatever the batch size, and at micro-batch sizes the job
+and task counts, not the row count, set a batch's cost. Measured at
+sf0.01 on 4 cores (the benchmark's chain part, the 334-document batch
+that reads history; the first, 166-document batch runs 19 jobs and 21
+tasks):
 
-  stage            before  after  what runs now
-  land raw            3      3    range sampling and exchange, write
-  exact gate          5      2    one broadcast of the batch
-                                  fingerprints (in-batch semi self-join
-                                  and history join), distinct
-  near-dup gate      13      8    exact-dropped broadcast (s1 cut),
-                                  batch keys, hot-bucket aggregate and
-                                  broadcast, capped-bucket broadcast,
-                                  pair distinct, shingle broadcast,
-                                  index-pair broadcast
+  stage            jobs  tasks  what runs
+  land raw            3      3  range sampling and exchange, write
+  exact gate          2      3  one broadcast of the batch
+                                fingerprints (in-batch semi self-join
+                                and history join), distinct
+  near-dup gate       8      9  exact-dropped broadcast (s1 cut),
+                                batch keys, hot-bucket aggregate and
+                                broadcast, capped-bucket broadcast,
+                                pair distinct, shingle broadcast,
+                                index-pair broadcast
   lsh write           1      1
-  semantic gate       2      1    near-dropped broadcast (the codebook
-                                  is no longer collected per batch)
-  batch rows          2      1    one collect of the batch's rows
-  ivf write           3      3    range sampling and exchange, write
-  manifest            6      3    one broadcast of the stage-tagged
-                                  dropped ids (the semantic gate's
-                                  cosine pass runs inside it),
-                                  aggregate, write
-  total              35     22
+  semantic gate       2      3  near-dropped broadcast, one collect
+                                of the batch's rows
+  ivf write           3      3  range sampling and exchange, write
+  manifest            3      6  one broadcast of the stage-tagged
+                                dropped ids (the semantic gate's
+                                cosine pass runs inside it),
+                                aggregate, write
+  total              22     28
+
+Every cut and store write has no fixed partition count, so AQE sizes
+each by bytes: one partition, one task and one part file per store
+while a batch is KBs–MBs, more as it grows. With a fixed four-way cut
+per store the same batches ran 66 and 91 tasks, and each Python task
+(a store write, a state read, the semantic kernel) held Python
+workers of its own.
 
 Store writes run on the write pool, each submitted only after a
 main-thread job has materialized the lineage cut it reads, so two
@@ -123,7 +130,6 @@ from .incremental_dedup import exact_gate, fingerprint
 from .incremental_neardup import lsh_buckets, lsh_signatures, neardup_gate
 from .incremental_semdedup import assign_clusters, cluster_sorted, semantic_gate
 from .sinks import (
-    STATE_FILES,
     compact_dataset_incremental,
     job_label,
     overlapped_batch_writes,
@@ -149,22 +155,20 @@ CHAIN_STORE_SORT = {
 
 
 def compact_chain_stores(
-    spark: SparkSession,
-    root: str,
-    max_files: int = STATE_FILES,
-    before: int | None = None,
+    spark: SparkSession, root: str, before: int | None = None
 ) -> dict[str, str | None]:
     """Maintenance pass over the chain's state stores: one
-    incremental (tiered) compaction each, bounded to ``max_files``
-    part files per segment, folding a tail run of segments once the
-    live count would pass the history-scaled cap
+    incremental (tiered) compaction each, its segment files sized by
+    bytes (one at micro-batch sizes), folding a tail run of segments
+    once the live count would pass the history-scaled cap
     max(4, ceil(log2(history))) — see
     `sinks.compact_dataset_incremental`. That cap is what keeps per-row
     rewrite cost O(log n) on an UNBOUNDED 24/7 stream. Run BETWEEN
     micro-batches on checkpoint-committed batches only; with it
     interleaved every N batches, a per-batch state read opens at most
-    ``cap + N`` dirs / ``(cap + N) * max_files`` files, O(log batches)
-    — the bound `test_chain_state_file_count_bounded` pins.
+    ``cap + N`` dirs, O(log batches), each holding one file while the
+    store is KBs–MBs — the bound `test_chain_state_file_count_bounded`
+    pins.
 
     ``before`` (REQUIRED when called from inside a stream's
     foreachBatch): the current batch id. A crash mid-batch-N
@@ -181,9 +185,7 @@ def compact_chain_stores(
         p = os.path.join(root, store)
         if os.path.isdir(p):
             with job_label(spark, f"compact {store}"):
-                out[store] = compact_dataset_incremental(
-                    spark, p, cols, max_files=max_files, before=before
-                )
+                out[store] = compact_dataset_incremental(spark, p, cols, before=before)
     return out
 
 
@@ -229,7 +231,7 @@ def ingest_process_batch(
                 F.col("doc_id").alias("id"), fingerprint("text").alias("fp"),
                 "source", "text", "vec", tokens("text").alias("__toks"),
             )
-            .repartitionByRange(STATE_FILES, "id")
+            .repartitionByRange("id")
             .sortWithinPartitions("id"),
             num_hashes, n, rows_per_band,
         ).localCheckpoint(eager=False)
@@ -243,8 +245,7 @@ def ingest_process_batch(
             None if landed is None else landed.select(F.col("fp").alias("__fp")),
         )
         bw.submit(
-            overwrite_batch_atomic, raw, raw_d, batch_id, max_files=None,
-            label=stage("land raw (write)"),
+            overwrite_batch_atomic, raw, raw_d, batch_id, label=stage("land raw (write)")
         )
 
         # 2. NEAR-DUP gate over s1 (its broadcast builds materialize s1)
@@ -276,7 +277,7 @@ def ingest_process_batch(
         sem_dropped = semantic_gate(asg, landed_ivf, sem_threshold)
         bw.submit(
             overwrite_batch_atomic, cluster_sorted(asg), ivf_d, batch_id,
-            max_files=None, label=stage("ivf store (write)"),
+            label=stage("ivf store (write)"),
         )
 
         # 4. manifest: first failing gate. The dropped sets are disjoint

@@ -64,7 +64,6 @@ from ..operators.similarity import (
 )
 from .incremental_neardup import keep_manifest
 from .sinks import (
-    STATE_FILES,
     job_label,
     overlapped_batch_writes,
     overwrite_batch_atomic,
@@ -144,10 +143,9 @@ def semantic_gate(
 def cluster_sorted(asg: DataFrame) -> DataFrame:
     """The index rows as they are landed: range-partitioned and sorted
     on (cluster_id, id), so each file's cluster_id zone maps stay tight
-    for later batches' probed-cluster scans."""
-    return asg.repartitionByRange(STATE_FILES, "cluster_id", "id").sortWithinPartitions(
-        "cluster_id", "id"
-    )
+    for later batches' probed-cluster scans. The range cut has no
+    partition count: AQE sizes it by bytes, one file per KB–MB batch."""
+    return asg.repartitionByRange("cluster_id", "id").sortWithinPartitions("cluster_id", "id")
 
 
 def semdedup_process_batch(
@@ -176,7 +174,7 @@ def semdedup_process_batch(
         dropped = semantic_gate(asg, landed, threshold)
         bw.submit(
             overwrite_batch_atomic, cluster_sorted(asg), index_dir, batch_id,
-            max_files=None, label=f"semdedup b{batch_id}: index (write)",
+            label=f"semdedup b{batch_id}: index (write)",
         )
         manifest = keep_manifest(asg.select("id"), dropped, "vec_id")
         overwrite_batch_atomic(manifest, manifest_dir, batch_id)

@@ -40,6 +40,10 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _part_files(d):
+    return [f for f in os.listdir(d) if not f.startswith(".")]
+
+
 def test_stream_tumbling_equals_batch(spark, event_stream_dir):
     schema = _batch_events(spark, event_stream_dir).schema
     stream = stream_from_directory(spark, event_stream_dir, schema, max_files_per_trigger=2)
@@ -519,13 +523,13 @@ def test_major_compaction_bounds_live_segments(spark, tmp_path, monkeypatch):
 
     for b in range(6):
         land(b)
-        seg = sinks.compact_dataset_incremental(spark, path, sort_cols=["k"], max_files=2)
+        seg = sinks.compact_dataset_incremental(spark, path, sort_cols=["k"])
         assert seg is not None
         live = sinks._live_segments(path)
         assert len(live) <= sinks._fold_cap(b + 1), f"live segments past the cap: {live}"
-        # every live segment respects the max_files bound
+        # a KB-sized segment is one part file
         for s in live:
-            assert len([f for f in os.listdir(s) if not f.startswith(".")]) <= 2
+            assert len(_part_files(s)) == 1, s
     # each pass brought one batch, so a segment spanning several folded
     # earlier segments: the leveled fold ran
     assert any(hi > lo for lo, hi in sinks._seg_ranges(path).values())
@@ -542,17 +546,61 @@ def test_major_compaction_bounds_live_segments(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sinks, "AUTO_SEGMENT_FLOOR", 10**6)
     for b in range(6, 9):
         land(b)
-        assert sinks.compact_dataset_incremental(spark, path, sort_cols=["k"], max_files=2)
+        seg = sinks.compact_dataset_incremental(spark, path, sort_cols=["k"])
+        assert seg and len(_part_files(seg)) == 1, seg
     monkeypatch.setattr(sinks, "AUTO_SEGMENT_FLOOR", 1)
     orig = sinks.shutil.rmtree
     try:
         sinks.shutil.rmtree = lambda *a, **kw: None
-        seg = sinks.compact_dataset_incremental(spark, path, sort_cols=["k"], max_files=2)
+        seg = sinks.compact_dataset_incremental(spark, path, sort_cols=["k"])
     finally:
         sinks.shutil.rmtree = orig
     assert seg is not None, "the pure-maintenance fold must run"
+    assert len(_part_files(seg)) == 1, seg
     assert len(sinks._segments(path)) > len(sinks._live_segments(path))
     assert sinks.read_vortex_dataset_tiered(spark, path).count() == 3600
+
+
+def test_multi_mb_batch_lands_in_several_files(spark, tmp_path):
+    """A store write has no fixed file count: a count-free range cut
+    and a compacted segment are sized by bytes, so a micro-batch of
+    KBs lands as one file (the tests above) while a batch of about
+    6 MB of strings still lands in several, each one sorted key range.
+    A cap sized for KB batches would write a large batch through one
+    task."""
+    import duckdb_vortex_spark.streaming.sinks as sinks
+    from duckdb_vortex_spark.sources import vortex_format as vfmt
+    from duckdb_vortex_spark.sources.vortex import register
+
+    register(spark)
+    path = str(tmp_path / "big")
+    rows = spark.range(0, 48_000).select(
+        F.col("id").alias("k"), F.sha2(F.col("id").cast("string"), 512).alias("s")
+    )
+    sinks.overwrite_batch_atomic(
+        rows.repartitionByRange("k").sortWithinPartitions("k"), path, 1
+    )
+
+    def assert_sorted_files(d):
+        files = _part_files(d)
+        assert len(files) > 1, (d, files)
+        ranges = []
+        for f in files:
+            footer = vfmt.read_footer(os.path.join(d, f))
+            stats = [vfmt.chunk_stats(footer, ci, "k") for ci in range(len(footer.chunks))]
+            ranges.append(
+                (
+                    min(st[0] for st in stats),
+                    max(st[1] for st in stats),
+                    sum(c["n_rows"] for c in footer.chunks),
+                )
+            )
+        ranges.sort()
+        assert sum(n for _, _, n in ranges) == 48_000
+        assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), ranges
+
+    assert_sorted_files(sinks.batch_dirs(path, 10**9)[0])
+    assert_sorted_files(sinks.compact_dataset_incremental(spark, path, sort_cols=["k"]))
 
 
 def test_compaction_random_interleaving_content_exact(spark, tmp_path, monkeypatch):
@@ -606,11 +654,10 @@ def test_compaction_random_interleaving_content_exact(spark, tmp_path, monkeypat
             try:
                 if op.endswith("_crash"):  # segment commits, ALL GC skipped
                     sinks.shutil.rmtree = lambda *a, **kw: None
-                seg = sinks.compact_dataset_incremental(
-                    spark, path, sort_cols=["k"], max_files=2
-                )
+                seg = sinks.compact_dataset_incremental(spark, path, sort_cols=["k"])
             finally:
                 sinks.shutil.rmtree = orig
+            assert seg is None or len(_part_files(seg)) == 1, (h, op, seg)
             if seg is not None and sinks._seg_ranges(path)[seg][0] <= watermark:
                 run_folds += 1  # the fold took existing segments along
             if op.endswith("_crash") and seg is not None:
@@ -787,8 +834,8 @@ def test_leveled_runfold_spares_the_giant(spark, tmp_path):
             path,
             b,
         )
-        seg = sinks.compact_dataset_incremental(spark, path, sort_cols=["k"], max_files=2)
-        assert seg is not None
+        seg = sinks.compact_dataset_incremental(spark, path, sort_cols=["k"])
+        assert seg is not None and len(_part_files(seg)) == 1, seg
         lo, hi = sinks._seg_ranges(path)[seg]
         fold_spans.append(hi - lo + 1)
         if lo == 0 and b > 0:
@@ -976,7 +1023,7 @@ def test_land_session_dataset_bounded_disk(spark, tmp_path):
     prev = None
     for i in range(5):
         df = spark.range(0, 10 + i).select(F.col("id").alias("k"))
-        cur = sinks.land_session_dataset(df, "bounded-test", max_files=1)
+        cur = sinks.land_session_dataset(df, "bounded-test")
         assert cur.count() == 10 + i
         if prev is not None:
             assert prev.count() == 9 + i, "previous landing must survive one re-land"
