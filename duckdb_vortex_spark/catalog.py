@@ -24,6 +24,9 @@ Determinism rules baked into every entry (see SURVEY.md §7 traps):
 
 from __future__ import annotations
 
+import os
+import stat
+import weakref
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -60,8 +63,56 @@ class CatalogEntry:
 _REGISTRY: dict[str, CatalogEntry] = {}
 
 
+# session -> {file identity and infer confs: the schema Spark inferred}
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring a local file's schema once
+    per session: a later read of the same unchanged file passes the
+    memoized schema back and runs no job."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    # the file's identity, then the SQL confs that change the types
+    # Spark infers from a parquet footer
+    key = (
+        os.path.abspath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        st.st_ino,
+        spark.conf.get("spark.sql.parquet.binaryAsString"),
+        spark.conf.get("spark.sql.parquet.int96AsTimestamp"),
+        spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled"),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"),
+    )
+    memo = _SCHEMAS.setdefault(spark, {})
+    if key in memo:
+        return spark.read.schema(memo[key]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[key] = df.schema
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read one driver table (TESTDATA.md): parquet, schema from footer.
+
+    Spark infers a parquet schema with a whole job
+    (``SchemaMergeUtils.mergeSchemasInParallel``, even for one file), and
+    every builder loads every table it reads. So the first read of a
+    table file in a session infers, and later reads pass that schema
+    back through ``spark.read.schema(...)``, which runs no job and plans
+    the same ``FileScan parquet``. The memo is per session and keyed by
+    the file's absolute path, size, mtime and inode plus the session's
+    values of the four SQL confs that change the inferred types, so a
+    rewritten file or a changed conf infers again (``events`` sets
+    ``nanosAsLong``, so a table bound before a session's first
+    ``events`` load is inferred once more after it). A directory, a URI
+    or a missing path is not memoized: it goes to ``spark.read.parquet``
+    as is, with the same error.
 
     ``events.ts`` has shipped as either parquet TIMESTAMP(NANOS) (round-1
     testdata) or TIMESTAMP(MICROS) (round-2 regeneration), so the
@@ -77,19 +128,20 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
       under the pinned-UTC session so every downstream entry sees one
       timestamp type regardless of which testdata vintage is on disk.
     """
+    path = f"{sf_dir}/{table}.parquet"
     if table == "events":
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        df = _read_parquet(spark, path)
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
         if not isinstance(ts_type, T.TimestampType):
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    return _read_parquet(spark, path)
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:

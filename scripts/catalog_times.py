@@ -1,18 +1,20 @@
-"""Full-catalog timing tier (VERDICT r5 #8): one warm sf0.01 pass over
-EVERY catalog entry, per-entry wall seconds to CATALOG_TIMES.json.
+"""Per-entry census of the catalog: one warm sf0.01 pass over EVERY
+catalog entry, each entry's wall seconds and Spark jobs to
+CATALOG_TIMES.json.
 
-The bench headline set covers ~28 queries; the other ~200 entries had
-no per-round timing signal, so a perf regression outside the headline
-set stayed invisible until it compounded. This artifact is the cheap
-tripwire: a single warm execution per entry (Spark side only — the
-DuckDB oracle is the correctness gate's job), n=1, so on this box
-(30–80% cross-session spread) only LARGE moves are signal. The
-comparison printout therefore flags ≥3× against the previous artifact,
-not small drifts.
+The session comes from ``get_spark``, so it carries the engine's
+configs. Each entry runs once to warm up, then once measured: its
+builder under one job group, then a ``noop`` write of the result under
+another. Jobs are counted per group through ``statusTracker()``, so
+``build_jobs`` are the jobs the builder itself runs (probes, fixpoint
+loops, eager checkpoints, schema inference) and ``jobs`` adds the ones
+the write runs. Wall time is one measured run (n=1), so only large
+moves are signal; job counts are exact.
 
 Usage:
-    python scripts/catalog_times.py            # writes CATALOG_TIMES.json
-    python scripts/catalog_times.py --compare  # also diff vs existing file
+    python scripts/catalog_times.py    # writes CATALOG_TIMES.json and
+                                       # flags >=3x wall or any job gain
+                                       # against the file it replaces
 """
 from __future__ import annotations
 
@@ -26,69 +28,91 @@ SF_DIR = "/root/testdata/sf0.01"
 OUT = ROOT / "CATALOG_TIMES.json"
 
 
+def _jobs(sc, group: str, fn):
+    """(fn(), the number of Spark jobs it ran under job group ``group``)."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
 def main() -> None:
     prev = None
     if OUT.exists():
         try:
             prev = json.loads(OUT.read_text())
-        except Exception:
+        except ValueError:
             prev = None
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
     sys.path.insert(0, str(ROOT))
     import __spark_entry__ as E
+    from duckdb_vortex_spark.session import get_spark
+
+    spark = get_spark("catalog-times")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
 
     qs = E.queries()
-    # one tiny warm-up so the first timed entry doesn't absorb JVM/
-    # codegen warm-up costs the others never pay
-    next(iter(qs.values()))(spark, SF_DIR).limit(1).collect()
-
-    times: dict[str, float] = {}
+    rows: dict[str, dict] = {}
     errs: dict[str, str] = {}
     t0 = time.time()
     for i, (name, fn) in enumerate(qs.items()):
-        t_e = time.time()
         try:
-            fn(spark, SF_DIR).toPandas()
-            times[name] = round(time.time() - t_e, 3)
-        except Exception as e:  # timing tier must not mask the gate
+            _noop(fn(spark, SF_DIR))
+            t_e = time.time()
+            df, build_jobs = _jobs(sc, f"census-build-{name}", lambda: fn(spark, SF_DIR))
+            _, run_jobs = _jobs(sc, f"census-run-{name}", lambda: _noop(df))
+            rows[name] = {
+                "wall": round(time.time() - t_e, 3),
+                "jobs": build_jobs + run_jobs,
+                "build_jobs": build_jobs,
+            }
+        except Exception as e:  # noqa: BLE001 — the census records, the gate judges
             errs[name] = f"{type(e).__name__}: {e}"
         if (i + 1) % 50 == 0:
             print(f"  {i + 1}/{len(qs)} ({time.time() - t0:.0f}s)", flush=True)
 
     doc = {
         "sf": 0.01,
-        "n_timed": 1,
-        "note": "single warm pass, Spark side only; n=1 on a 30-80%-spread "
-                "box — treat <3x moves as noise, use scripts/retime.py to "
-                "settle anything flagged",
+        "cpus": sc.defaultParallelism,
+        "note": "one warm-up, then one measured builder call plus noop write "
+                "per entry; wall n=1 (treat <3x moves as noise), jobs exact",
         "total_sec": round(time.time() - t0, 1),
-        "entries": times,
+        "total_wall": round(sum(r["wall"] for r in rows.values()), 1),
+        "total_jobs": sum(r["jobs"] for r in rows.values()),
+        "total_build_jobs": sum(r["build_jobs"] for r in rows.values()),
+        "entries": rows,
         "errors": errs,
     }
     OUT.write_text(json.dumps(doc, indent=1, sort_keys=True) + "\n")
-    print(f"wrote {OUT}: {len(times)} entries, total {doc['total_sec']}s"
+    print(f"wrote {OUT}: {len(rows)} entries, {doc['total_jobs']} jobs "
+          f"({doc['total_build_jobs']} at build), wall {doc['total_wall']}s"
           + (f", {len(errs)} ERRORS" if errs else ""))
+    top = sorted(rows.items(), key=lambda kv: -kv[1]["build_jobs"])[:10]
+    print("  most build jobs: " + ", ".join(f"{n} {r['build_jobs']}" for n, r in top))
 
-    if prev and prev.get("entries"):
-        moved = []
-        for name, t in times.items():
-            p = prev["entries"].get(name)
-            if p and p > 0.05 and t / p >= 3.0:
-                moved.append((t / p, name, p, t))
-        for r, name, p, t in sorted(moved, reverse=True):
-            print(f"  REGRESSION? {name}: {p:.2f}s -> {t:.2f}s ({r:.1f}x)")
-        if not moved:
-            print("  no >=3x regressions vs previous artifact")
+    old = (prev or {}).get("entries", {})
+    moved = False
+    for name, r in rows.items():
+        p = old.get(name)
+        if p is None:
+            continue
+        if p["wall"] > 0.05 and r["wall"] / p["wall"] >= 3.0:
+            moved = True
+            print(f"  REGRESSION? {name}: {p['wall']:.2f}s -> {r['wall']:.2f}s")
+        if r["jobs"] > p["jobs"]:
+            moved = True
+            print(f"  MORE JOBS: {name}: {p['jobs']} -> {r['jobs']}")
+    if old and not moved:
+        print("  no >=3x wall regression and no job gain vs previous artifact")
+    spark.stop()
     if errs:
         sys.exit(1)
 

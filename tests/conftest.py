@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
 import warnings
 
 import duckdb
@@ -38,6 +39,20 @@ def oracle():
         )
     yield con
     con.close()
+
+
+def run_counting_jobs(spark, fn):
+    """(fn(), the number of Spark jobs submitted while it ran), counted
+    under a job group of its own through ``statusTracker()``."""
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _canon_value(v) -> str:

@@ -8,9 +8,75 @@ import pytest
 
 from duckdb_vortex_spark import catalog
 
-from .conftest import SF_DIR, assert_matches_oracle
+from .conftest import SF_DIR, assert_matches_oracle, run_counting_jobs
 
 ENTRIES = catalog.entries()
+
+# entry -> (most Spark jobs its builder may run at sf0.001, why it runs
+# any). Every entry not listed builds its DataFrame with no job.
+BUILD_JOBS: dict[str, tuple[int, str]] = {
+    # fixpoint loops: connected_components / recursive_cte rounds
+    "pipeline_fuzzy_curation_manifest": (76, "connected-components rounds over MinHash pairs"),
+    "dedup_minhash_keep_canonical": (74, "connected-components rounds over MinHash pairs"),
+    "dedup_connected_components": (58, "connected-components rounds, one eager checkpoint each"),
+    "graph_bfs_hops": (34, "recursive_cte rounds, one eager checkpoint each"),
+    "structure_recursive_cte": (27, "recursive_cte rounds, one eager checkpoint each"),
+    "graph_pagerank_bipartite": (22, "three iterations, one eager localCheckpoint each"),
+    # streaming chains: micro-batches land in VTX1 stores at build
+    "stream_incremental_ingest_pipeline": (70, "two chain batches: gates, store writes, manifest"),
+    "stream_incremental_decontam": (
+        57,
+        "micro-batches through the decontam gate and its stores (55 or 57 from run to run)",
+    ),
+    "stream_incremental_neardup": (42, "micro-batches through the near-dup gate and its stores"),
+    "stream_incremental_semdedup": (24, "micro-batches through the semantic gate and its index"),
+    "vortex_incremental_compaction": (11, "streamed VTX1 segments written, then compacted"),
+    # indexes built and probed at build
+    "retrieval_ann_tuning_curve": (32, "builds two indexes, probes each at three n_probe"),
+    "similarity_adc_stored_codes": (6, "codebook collect, then the PQ codes copied to VTX1"),
+    "similarity_ivfpq_ann": (3, "codebook collect and the probe's bounded broadcast count"),
+    # the entry writes its input (VTX1, a table, a text file) at build
+    "vortex_zorder_pruned_scan": (7, "z-ordered VTX1 copy written, result built through Arrow"),
+    "vortex_copy_roundtrip_agg": (5, "VTX1 copy written, result built through Arrow"),
+    "vortex_ree_clustered_scan": (5, "clustered VTX1 copy written, result built through Arrow"),
+    "vortex_nested_roundtrip_scan": (4, "nested VTX1 copy written, result built through Arrow"),
+    "vortex_s3_roundtrip_scan": (3, "VTX1 copy written, result built through Arrow"),
+    "vortex_typed_roundtrip_checksum": (3, "VTX1 copy written, result built through Arrow"),
+    "vortex_bloom_pruned_scan": (2, "VTX1 copy written, result built through Arrow"),
+    "ddl_insert_append_table": (5, "CTAS and INSERT write the table, result built through Arrow"),
+    "bucketed_join_colocated_agg": (4, "both bucketed tables written with saveAsTable"),
+    "read_json_typed_roundtrip": (4, "JSON fixture written, result built through Arrow"),
+    "read_csv_typed_roundtrip": (2, "CSV fixture written, result built through Arrow"),
+    # an eager scalar or checkpoint sizes or bounds the plan
+    "text_corpus_stats": (4, "vocabulary size is an eager distinct count"),
+    "text_tfidf_sparse_topk": (2, "document count for the idf is eager"),
+    "dedup_containment_pairs": (2, "document count sizes the bounded verify block"),
+    "dedup_ngram_jaccard_pairs": (2, "document count sizes the bounded verify block"),
+    "contamination_neardup_eval": (2, "eval index is an eager localCheckpoint"),
+    # one collect: the codebook rows or the query block reach the driver
+    "dedup_semantic_cluster": (1, "sample_centroids collects the codebook"),
+    "dedup_semantic_cluster_two_level": (1, "sample_centroids collects the codebook"),
+    "similarity_assign_two_level": (1, "sample_centroids collects the codebook"),
+    "similarity_ivf_ann": (1, "sample_centroids collects the codebook"),
+    "similarity_knn_join_cogrouped": (1, "sample_centroids collects the codebook"),
+    "similarity_pq_adc_topk": (1, "sample_centroids collects the PQ codebooks"),
+    "similarity_pq_codes": (1, "sample_centroids collects the PQ codebooks"),
+    "similarity_topk_bruteforce": (1, "topk_bruteforce collects its query block"),
+    "similarity_topk_vectorized": (1, "topk_bruteforce collects its query block"),
+    "retrieval_hybrid_rrf": (1, "topk_bruteforce collects its query block"),
+    "retrieval_knn_eval": (1, "topk_bruteforce collects its query block"),
+    "retrieval_recall_curve_by_label": (1, "topk_bruteforce collects its query block"),
+}
+
+
+@pytest.fixture(scope="module")
+def bound_tables(spark):
+    """Bind every driver table once, so a builder's job count does not
+    depend on whether an earlier test already loaded its tables.
+    ``events`` goes first: its load sets a conf the schema memo keys on,
+    and the conf stays set for the session."""
+    catalog.load(spark, SF_DIR, "events")
+    catalog.register_views(spark, SF_DIR)
 
 
 def _assert_flat_schema(name, df):
@@ -33,9 +99,13 @@ def _assert_flat_schema(name, df):
 
 
 @pytest.mark.parametrize("name", sorted(ENTRIES))
-def test_catalog_entry(name, spark, oracle):
+def test_catalog_entry(name, spark, oracle, bound_tables):
     e = ENTRIES[name]
-    df = e.builder(spark, SF_DIR)
+    df, jobs = run_counting_jobs(spark, lambda: e.builder(spark, SF_DIR))
+    budget, _why = BUILD_JOBS.get(name, (0, "builds with no job"))
+    assert jobs <= budget, (
+        f"[{name}] the builder ran {jobs} Spark jobs, its budget is {budget}"
+    )
     _assert_flat_schema(name, df)
     if e.oracle is None:
         assert df.count() >= 0  # rows-only check, mirrors driver's weak gate
