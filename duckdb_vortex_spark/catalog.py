@@ -108,9 +108,9 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     the same ``FileScan parquet``. The memo is per session and keyed by
     the file's absolute path, size, mtime and inode plus the session's
     values of the four SQL confs that change the inferred types, so a
-    rewritten file or a changed conf infers again (``events`` sets
-    ``nanosAsLong``, so a table bound before a session's first
-    ``events`` load is inferred once more after it). A directory, a URI
+    rewritten file or a changed conf infers again. ``events`` reads
+    under ``nanosAsLong``, which :func:`session.get_spark` sets when it
+    builds the session. A directory, a URI
     or a missing path is not memoized: it goes to ``spark.read.parquet``
     as is, with the same error.
 

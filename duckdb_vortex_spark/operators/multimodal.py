@@ -1054,82 +1054,6 @@ def probe_containers(media: DataFrame, id_col: str = "doc_id", payload_col: str 
     return media.select(id_col, payload_col).mapInPandas(batches, _CONTAINER_SCHEMA)
 
 
-# ---------------------------------------------------------------------------
-# MP3 frame-header probe (MPEG audio metadata — no decode)
-# ---------------------------------------------------------------------------
-
-# bitrate kbit/s by [version V1/V2][layer III] index (ISO 11172-3 / 13818-3)
-_MP3_BITRATES_V1L3 = (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-_MP3_BITRATES_V2L3 = (0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160)
-_MP3_RATES = {3: (44100, 48000, 32000), 2: (22050, 24000, 16000), 0: (11025, 12000, 8000)}
-
-
-def _parse_mp3_meta(payload: bytes) -> dict:
-    """MPEG audio (MP3) frame-header walk: sample rate, bitrate mode,
-    channel mode, frame count and duration estimate — header METADATA
-    only, the Layer III decode (huffman + IMDCT + synthesis filterbank)
-    stays behind the codec seam. Skips a leading ID3v2 tag; resyncs on
-    garbage; stops at the first junk run after valid frames."""
-    pos = 0
-    if payload[:3] == b"ID3" and len(payload) >= 10:
-        size = 0
-        for b in payload[6:10]:
-            size = (size << 7) | (b & 0x7F)  # syncsafe int
-        pos = 10 + size
-    n_frames = 0
-    rates: set = set()
-    bitrates: set = set()
-    mono = None
-    total_samples = 0
-    while pos + 4 <= len(payload):
-        b0, b1, b2, b3 = payload[pos : pos + 4]
-        if b0 != 0xFF or (b1 & 0xE0) != 0xE0:
-            if n_frames:
-                break  # trailing junk after valid frames: done
-            pos += 1  # resync before the first frame
-            continue
-        version = (b1 >> 3) & 0x3  # 3=MPEG1, 2=MPEG2, 0=MPEG2.5
-        layer = (b1 >> 1) & 0x3  # 1 = Layer III
-        if version == 1 or layer != 1:
-            if n_frames:
-                break
-            pos += 1
-            continue
-        br_idx = (b2 >> 4) & 0xF
-        sr_idx = (b2 >> 2) & 0x3
-        if br_idx in (0, 15) or sr_idx == 3:
-            if n_frames:
-                break
-            pos += 1
-            continue
-        sample_rate = _MP3_RATES[version][sr_idx]
-        kbps = (_MP3_BITRATES_V1L3 if version == 3 else _MP3_BITRATES_V2L3)[br_idx]
-        padding = (b2 >> 1) & 1
-        spf = 1152 if version == 3 else 576  # samples per frame, Layer III
-        frame_len = (spf // 8) * kbps * 1000 // sample_rate + padding
-        if frame_len < 4:
-            break
-        n_frames += 1
-        total_samples += spf
-        rates.add(sample_rate)
-        bitrates.add(kbps)
-        mono = ((b3 >> 6) & 0x3) == 3
-        pos += frame_len
-    if not n_frames:
-        raise ValueError("no MPEG audio frames found")
-    rate = rates.pop() if len(rates) == 1 else None
-    vbr = len(bitrates) > 1
-    return {
-        "container": "mp3",
-        "n_frames": n_frames,
-        "sample_rate": rate,
-        "bitrate_kbps": None if vbr else bitrates.pop(),  # None = VBR
-        "vbr": vbr,
-        "mono": mono,
-        "duration_s": (total_samples / rate) if rate else None,
-    }
-
-
 # --- AVI (RIFF) container + MJPEG video decode ----------------------------
 
 def _riff_subchunks(buf: bytes, pos: int, end: int):

@@ -2,12 +2,15 @@
 exact cosine top-k as the baseline, plus LSH-, IVF- and PQ-bucketed
 approximate variants as the scale paths.
 
-Embeddings are ``array<float>`` columns. Every exact cosine (pair
-scores, top-k, IVF assignment and rerank, SemDeDup) runs on one numpy
-kernel (``_fold``) in Arrow-batched Python workers. It folds each dot
-product left to right over doubles, the order of DuckDB's sequential
-``list_sum`` reduction, so its cosines are bit-identical to the
-oracles' and the entries are oracle-checkable.
+Embeddings are ``array<float>`` columns. All vector arithmetic runs on
+one numpy kernel (``_fold``) in Arrow-batched Python workers: every
+exact cosine (pair scores, top-k, IVF assignment and rerank, SemDeDup),
+the PQ distance tables behind encoding and ADC scoring, and the LSH
+hyperplane signatures. It folds each dot product left to right over
+doubles, the order of DuckDB's sequential ``list_sum`` reduction, so
+its results are bit-identical to the oracles' and the entries are
+oracle-checkable. Codebooks and hyperplanes ride in the workers'
+closures as numpy arrays, never as plan literals.
 
 Scale design:
 - the exact top-k is O(|Q|·|C|) — used for small query sets and as
@@ -22,35 +25,16 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType, BooleanType, DoubleType, IntegerType, LongType, StringType, StructField, StructType,
+)
 
 from ..catalog import load, query
-from ..session import _local_frame, scoped_persist
-
-# Storage levels for the PQ interpreted-HOF persist barriers (the
-# distance-table / codes subtrees that MUST cache — a repartition
-# barrier does not survive RepartitionByExpression projection
-# pushdown, see pq_adc_topk).
-#
-# Split by what the barrier holds (VERDICT r5 #4): the CODES side
-# grows ∝ corpus — SCALE.md's standing rule is that pinning executor
-# heap ∝ corpus is a tax at 100 TB — so it caches DISK_ONLY
-# (serialized, off the GC heap). An interleaved A/B (r7, 2×7 runs,
-# sf0.1, each arm driving PQ_CODES_STORAGE) measured DISK_ONLY median
-# 2.649 s vs MEMORY_AND_DISK 2.700 s: the scale-safe level is locally
-# free. The QUERY side is bounded (|queries| × m·k doubles) and stays
-# on the default level.
-PQ_CODES_STORAGE = StorageLevel.DISK_ONLY
-PQ_QUERY_STORAGE = StorageLevel.MEMORY_AND_DISK
-
-
-def _pq_barrier(df: DataFrame, corpus: bool = False) -> DataFrame:
-    return scoped_persist(df, PQ_CODES_STORAGE if corpus else PQ_QUERY_STORAGE)
+from ..session import _local_frame
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -208,57 +192,20 @@ def lsh_topk(
     tests/test_similarity.py asserts it on the driver corpus. At scale
     each table's bucket join is a shuffle on (table, signature) — no
     cross join anywhere."""
-    planes = [
-        [_hyperplane(dim, p, t) for p in range(n_planes)] for t in range(n_tables)
-    ]
+    import numpy as np
 
-    def signature_sql(t: int) -> str:
-        # ONE F.expr per table (see pq_encode PERF note: building the
-        # 8×64 literals through Column calls costs thousands of py4j
-        # round trips — ~7 s of driver time per plan; even the SQL-text
-        # parse is ~0.5 s per expression, so the four table expressions
-        # are built ONCE against a standardized column name and reused
-        # by both join sides). Identical arithmetic/order to the
-        # previous per-plane Column form and to the DuckDB oracle, so
-        # signatures are value-identical.
-        planes_lit = (
-            "array("
-            + ",".join(
-                "array(" + ",".join(f"{v!r}D" for v in planes[t][p]) + ")"
-                for p in range(n_planes)
-            )
-            + ")"
-        )
-        return (
-            f"concat('{t}:', concat_ws('', transform({planes_lit}, pl -> "
-            f"CAST(CAST(aggregate(zip_with(__vec, pl, "
-            f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
-            f"(a, b) -> a + b) > 0 AS INT) AS STRING))))"
-        )
-
-    sigs_arr = F.array(*[F.expr(signature_sql(t)) for t in range(n_tables)])
-
-    def with_sigs(df: DataFrame, idname: str, vecname: str) -> DataFrame:
-        return (
-            df.withColumnRenamed(vecname, "__vec")
-            .select(idname, "__vec", F.explode(sigs_arr).alias("sig"))
-            .withColumnRenamed("__vec", vecname)
-        )
-
-    q = with_sigs(
-        queries_df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-        "query_id",
-        "qv",
+    planes = np.array(
+        [[_hyperplane(dim, p, t) for p in range(n_planes)] for t in range(n_tables)]
     )
-    c = with_sigs(
-        candidates_df.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv")),
-        "cand_id",
-        "cv",
+    q = _signatures(
+        queries_df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")), planes
     )
-    # The bucket join SHUFFLES on sig, as the docstring promises — the
-    # r11 audit caught the local threshold silently broadcasting the
-    # corpus-side signature table instead (corpus-sized build, the
-    # wrong 100-TB shape). shuffle_hash on the query side makes the
+    c = _signatures(
+        candidates_df.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv")), planes
+    )
+    # The bucket join SHUFFLES on sig, as the docstring promises (the
+    # local threshold would broadcast the corpus-side signatures, the
+    # wrong 100-TB shape); shuffle_hash on the query side makes the
     # per-partition build the |Q|-share of each sig partition.
     cand = (
         q.hint("shuffle_hash")
@@ -273,11 +220,11 @@ def lsh_topk(
 def _lsh_ann_oracle(n_planes: int = 8, n_tables: int = 4, dim: int = 64, k: int = 10) -> str:
     """DuckDB oracle running the IDENTICAL LSH algorithm: the
     hyperplanes are deterministic md5-derived floats computed driver-
-    side and inlined as literals in BOTH plans (repr round-trips
-    doubles exactly), and the dot-product fold order matches the Spark
-    HOF signatures (bit-identical per the exact top-k entry), so every signature
-    bit — and therefore every bucket, candidate, and ranked result —
-    agrees across engines."""
+    side, inlined here as literals (repr round-trips doubles exactly)
+    and carried by the signature kernel's closure, and the dot-product
+    fold order matches the kernel's, so every signature bit — and
+    therefore every bucket, candidate, and ranked result — agrees
+    across engines."""
 
     def dot(vec: str, plane: list[float]) -> str:
         lits = ", ".join(repr(v) for v in plane)
@@ -328,7 +275,7 @@ def similarity_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-10 (the 100 TB scale path).
     FULLY oracle-checked (upgraded from rows-only): the hyperplanes
     are deterministic literals shared with the oracle SQL and the
-    whole bucket→probe→re-rank pipeline is deterministic (HOF
+    whole bucket→probe→re-rank pipeline is deterministic (kernel
     signatures, the cosine kernel's re-rank), so
     DuckDB reproduces the exact ranked output. Recall vs the exact
     baseline is additionally asserted in pytest."""
@@ -375,72 +322,22 @@ def sample_centroids(
     )
 
 
-# Guard bound for the r15 probe-side broadcast (ADVICE r15, medium):
-# the query side of the IVF-PQ probe join is bounded *by convention*
-# (|Q|·n_probe rows of m·k-double distance tables), but nothing
-# validated it — a caller probing a huge query batch would hit Spark's
-# 8 GiB / 512M-row broadcast hard cap and FAIL outright where the
-# unhinted join degraded gracefully to sort-merge. 1 GiB leaves
-# comfortable headroom under the hard cap and the default driver heap.
-PROBE_BROADCAST_MAX_BYTES = 1 << 30
-
-# Bounded-count memo keyed weakly on the query DataFrame: tuning-curve
-# style sweeps probe the same frame many times; the size estimate is a
-# plan-time decision, so one LIMIT-bounded count per frame suffices.
-_PROBE_COUNT_CACHE: "weakref.WeakKeyDictionary" = None  # initialized below
-
-
-def _probe_bounded_count(df: DataFrame, bound: int) -> int:
-    """min(|df|, bound+1) via a LIMIT-bounded scan — the guard never
-    pays a full count of an arbitrarily large query set. Memoized per
-    frame (weakly): a cached value is reusable when it was exact
-    (≤ its own limit) or already exceeds the current bound."""
-    global _PROBE_COUNT_CACHE
-    if _PROBE_COUNT_CACHE is None:
-        import weakref
-
-        _PROBE_COUNT_CACHE = weakref.WeakKeyDictionary()
-    try:
-        cached = _PROBE_COUNT_CACHE.get(df)
-    except TypeError:  # non-weakref-able frame flavor
-        cached = None
-    if cached is not None:
-        n, lim = cached
-        if n <= lim or n > bound:
-            return n
-    n = df.limit(bound + 1).count()
-    try:
-        _PROBE_COUNT_CACHE[df] = (n, bound)
-    except TypeError:
-        pass
-    return n
-
-
-def _probe_side(qry: DataFrame, queries_df: DataFrame, n_probe: int, row_bytes: int) -> DataFrame:
-    """The query side of the IVF-PQ probe join: ``qry`` broadcast when
-    its estimated footprint (|Q| · n_probe rows × row_bytes) fits
-    PROBE_BROADCAST_MAX_BYTES, else behind the PQ persist barrier — the
-    guard changes the join strategy, never the rows."""
-    max_rows = max(1, PROBE_BROADCAST_MAX_BYTES // max(1, n_probe * row_bytes))
-    if _probe_bounded_count(queries_df, max_rows) <= max_rows:
-        return F.broadcast(qry)
-    return _pq_barrier(qry)
-
-
-# --- the cosine kernel -----------------------------------------------------
+# --- the vector kernel -----------------------------------------------------
 #
-# One numpy cosine serves every exact cosine of the package — the exact
-# top-k, IVF assignment (flat and two-level), the IVF rerank, the pair
-# scores of the LSH rerank, the near-dup pairs and the IVF-PQ rerank,
-# SemDeDup's prune and the streaming semantic gate — in Arrow-batched
-# Python workers (numpy and pyarrow only). It is vectorized over rows
-# and sequential over dimensions: ``acc = acc + a[i] * b[i]`` from 0.0
-# is the order of a SQL left fold over the zipped elements (DuckDB's
-# ``list_sum``, the HOF reference in tests/hof_reference.py), and
-# numpy's float64 multiply, add, divide and sqrt are each correctly
-# rounded, so every csim is the double ``dot(a, b) / (norm(a) *
-# norm(b))`` of that fold. A zero denominator gives a null csim, as
-# DuckDB's division does.
+# One numpy fold serves all vector arithmetic of the package in
+# Arrow-batched Python workers (numpy and pyarrow only): every exact
+# cosine — the exact top-k, IVF assignment (flat and two-level), the IVF
+# rerank, the pair scores of the LSH rerank, the near-dup pairs and the
+# IVF-PQ rerank, SemDeDup's prune and the streaming semantic gate — the
+# PQ distance tables of encoding and ADC scoring, and the LSH
+# hyperplane dots. It is vectorized over rows and sequential over
+# dimensions: ``acc = acc + a[i] * b[i]`` from 0.0 is the order of a SQL
+# left fold over the zipped elements (DuckDB's ``list_sum``, the HOF
+# reference in tests/hof_reference.py), and numpy's float64 multiply,
+# add, subtract, divide and sqrt are each correctly rounded, so every
+# csim is the double ``dot(a, b) / (norm(a) * norm(b))`` of that fold
+# and every PQ distance the double of its squared-difference fold. A
+# zero denominator gives a null csim, as DuckDB's division does.
 
 _BLOCK_CELLS = 1 << 18  # rows × columns of one kernel block
 
@@ -458,23 +355,25 @@ def _fold(a, b):
 
 class _Vecs(NamedTuple):
     """Vectors as the kernel reads them. ``x`` is (width, rows) float64,
-    dimension-major for the fold, each row zero-padded past its length.
-    ``len`` is each row's length, -1 for a null vector. ``null`` marks a
-    null vector or one with a null element, ``ok`` the other rows, and
-    ``norm`` is each row's own norm (null where ``null`` is). Two rows
-    have a cosine only if both are ok and of one length, as a
-    ``zip_with`` fold pads a length mismatch with null. The padding
+    dimension-major for the fold, each row zero-padded past its length;
+    ``gap`` (same shape) marks a null element or a position past the
+    row's length. ``len`` is each row's length, -1 for a null vector.
+    ``null`` marks a null vector or one with a null element, ``ok`` the
+    other rows, and ``norm`` is each row's own norm (null where ``null``
+    is). Two rows have a cosine only if both are ok and of one length,
+    as a ``zip_with`` fold pads a length mismatch with null. The padding
     leaves the fold exact: an accumulator that starts at +0.0 is never
     -0.0, so adding 0.0 * 0.0 never changes it."""
 
     x: object
+    gap: object
     len: object
     ok: object
     norm: object
     null: object
 
     def take(self, r) -> "_Vecs":
-        return _Vecs(self.x[:, r], *(f[r] for f in self[1:]))
+        return _Vecs(self.x[:, r], self.gap[:, r], *(f[r] for f in self[2:]))
 
 
 def _vectors(arr) -> _Vecs:
@@ -489,6 +388,7 @@ def _vectors(arr) -> _Vecs:
     vals = arr.values.to_numpy(zero_copy_only=False).astype(np.float64)
     enull = arr.values.is_null().to_numpy(zero_copy_only=False)
     x = np.zeros((int(lens.max(initial=0)), n))
+    gap = np.ones(x.shape, bool)
     norm = np.full(n, np.nan)
     null = lens < 0
     for length in np.unique(lens[lens >= 0]):
@@ -498,7 +398,8 @@ def _vectors(arr) -> _Vecs:
         norm[r] = np.sqrt(_fold(xl, xl))
         null[r] = enull[g].any(axis=1)
         x[:length, r] = xl
-    return _Vecs(x, lens, ~null, norm, null)
+        gap[:length, r] = enull[g].T
+    return _Vecs(x, gap, lens, ~null, norm, null)
 
 
 def _book(rows: list[tuple[int, list[float]]]):
@@ -589,19 +490,16 @@ def _nearest(key, n: int):
     return np.argsort(key, axis=1, kind="stable")[:, : max(n, 0)]
 
 
-def _topk(q_ids, c_ids, csim, null, k: int):
-    """(row, column) of each query row's ``k`` best candidate columns in
-    `_rank_topk`'s order: cos_sim desc with NaN first (Spark sorts NaN
-    above every value) and null last, then cand_id asc. Self-matches
-    are dropped."""
+def _topk(c_ids, cls, val, k: int):
+    """(row, column) of each row's ``k`` first candidate columns by
+    (cls, val, cand_id) ascending. ``val`` is read only where ``cls`` is
+    1 (a number); a ``cls`` of 3 drops the pair."""
     import numpy as np
 
-    cls = np.where(null, 2, np.where(np.isnan(csim), 0, 1))
-    cls[q_ids[:, None] == c_ids] = 3
-    with np.errstate(all="ignore"):
-        val = np.where(cls == 1, -csim, 0.0)
-    order = np.lexsort((np.broadcast_to(c_ids, csim.shape), val, cls), axis=-1)[:, :k]
-    rows = np.repeat(np.arange(len(q_ids)), order.shape[1])
+    with np.errstate(invalid="ignore"):
+        val = np.where(cls == 1, val, 0.0)
+    order = np.lexsort((np.broadcast_to(c_ids, val.shape), val, cls), axis=-1)[:, :k]
+    rows = np.repeat(np.arange(len(val)), order.shape[1])
     cols = order.ravel()
     keep = cls[rows, cols] < 3
     return rows[keep], cols[keep]
@@ -642,18 +540,145 @@ def _assign_pass(df, centroids, id_col, vec_col, width, pick) -> DataFrame:
 
 def _scored_topk(q_ids, qv: _Vecs, c_ids, cv: _Vecs, k: int):
     """Record batches (query_id, cand_id, cos_sim) of each query's local
-    top ``k`` candidates (:func:`_topk`), scored in query-row blocks."""
+    top ``k`` candidates in `_rank_topk`'s order — cos_sim desc with NaN
+    first (Spark sorts NaN above every value) and null last, then
+    cand_id — scored in query-row blocks. Self-matches are dropped."""
+    import numpy as np
     import pyarrow as pa
 
     step = max(1, _BLOCK_CELLS // max(1, len(c_ids)))
     for s in range(0, len(q_ids), step):
         blk = slice(s, s + step)
         csim, null = _csim(qv.take(blk), cv)
-        r, col = _topk(q_ids[blk], c_ids, csim, null, k)
+        cls = np.where(null, 2, np.where(np.isnan(csim), 0, 1))
+        cls[q_ids[blk, None] == c_ids] = 3
+        r, col = _topk(c_ids, cls, -csim, k)
         yield pa.RecordBatch.from_arrays(
             [pa.array(q_ids[blk][r]), pa.array(c_ids[col]), pa.array(csim[r, col], mask=null[r, col])],
             names=["query_id", "cand_id", "cos_sim"],
         )
+
+
+def _pq_d2(v: _Vecs, books):
+    """(tables, null) of product quantization: ``tables[s, row, c]`` is
+    the squared L2 distance of the row's subspace s to entry c of
+    subspace s's codebook, the fold ``_fold(d, d)`` of d = x_s − c_s, for
+    ``books`` an (m, k, dsub) array. ``null[s, row]`` marks a subspace
+    that a ``zip_with`` fold nulls: a null vector, a null element in the
+    subspace, or a vector too short to fill it. Elements past m·dsub are
+    never read."""
+    import numpy as np
+
+    m, k, dsub = books.shape
+    w = min(len(v.x), m * dsub)
+    x = np.zeros((m * dsub, v.x.shape[1]))
+    gap = np.ones(x.shape, bool)
+    x[:w], gap[:w] = v.x[:w], v.gap[:w]
+    tables = np.empty((m, x.shape[1], k))
+    with np.errstate(all="ignore"):
+        for s in range(m):
+            d = x[s * dsub : (s + 1) * dsub, :, None] - books[s].T[:, None, :]
+            tables[s] = _fold(d, d)
+    return tables, gap.reshape(m, dsub, -1).any(axis=1)
+
+
+def _adc(books, k: int, self_ok: bool):
+    """The cell function of the PQ scans: one cell's queries (query_id,
+    qv) against its candidates (cand_id, codes, cluster_id), each
+    query's local top ``k`` as (query_id, cand_id, cluster_id,
+    approx_d2). approx_d2 is the in-order sum over s = 0..m-1 of the
+    query's distance table (:func:`_pq_d2`) at the candidate's code s,
+    null where a table is; the order is the probes' window, approx_d2
+    asc with null first and NaN last, then cand_id. ``self_ok`` keeps a
+    query's pair with itself."""
+    import numpy as np
+
+    books = np.array(books, dtype=np.float64)
+    m, n_codes = books.shape[:2]
+
+    def score(q, c):
+        import pyarrow as pa
+
+        q_ids, c_ids, cells = (
+            t.column(n).to_numpy() for t, n in ((q, "query_id"), (c, "cand_id"), (c, "cluster_id"))
+        )
+        codes = c.column("codes").combine_chunks().flatten().to_numpy().reshape(len(c_ids), m)
+        qv = _vectors(q.column("qv").combine_chunks())
+        qt, ct = q.schema.field("query_id").type, c.schema.field("cand_id").type
+        schema = pa.schema([("query_id", qt), ("cand_id", ct), ("cluster_id", pa.int64()), ("approx_d2", pa.float64())])
+        out = []
+        step = max(1, _BLOCK_CELLS // max(len(c_ids), m * n_codes))
+        for s in range(0, len(q_ids), step):
+            blk = slice(s, s + step)
+            tables, null = _pq_d2(qv.take(blk), books)
+            null = null.any(axis=0)[:, None]
+            d2 = tables[0][:, codes[:, 0]]
+            for j in range(1, m):
+                d2 = d2 + tables[j][:, codes[:, j]]
+            cls = np.where(null, 0, np.where(np.isnan(d2), 2, 1))
+            if not self_ok:
+                cls[q_ids[blk, None] == c_ids] = 3
+            r, col = _topk(c_ids, cls, d2, k)
+            cols = [
+                pa.array(q_ids[blk][r], qt), pa.array(c_ids[col], ct),
+                pa.array(cells[col], pa.int64()), pa.array(d2[r, col], mask=null[r, 0]),
+            ]
+            out.append(pa.RecordBatch.from_arrays(cols, schema=schema))
+        return pa.Table.from_batches(out, schema)
+
+    return score
+
+
+def _cells(qry: DataFrame, cand: DataFrame, score, fields: list) -> DataFrame:
+    """The cell skeleton of the probes and the ADC scan: queries
+    (query_id, qv, cluster_id) cogrouped with candidates (cand_id, …,
+    cluster_id) on a bigint cluster_id; ``score(q, c)`` turns one cell
+    into (query_id, cand_id, *fields) rows, each query's local top-k.
+    A candidate lives in one cell and a query visits distinct cells, so
+    no pair is scored twice and a global window over the survivors
+    ranks exactly."""
+    qry, cand = (t.withColumn("cluster_id", F.col("cluster_id").cast("bigint")) for t in (qry, cand))
+    schema = StructType([qry.schema["query_id"], cand.schema["cand_id"], *fields])
+    return qry.groupBy("cluster_id").cogroup(cand.groupBy("cluster_id")).applyInArrow(score, schema)
+
+
+def _signatures(df: DataFrame, planes) -> DataFrame:
+    """(id, vec, sig) rows of an (id, vec) frame in one map-side pass,
+    one row per LSH table t of ``planes`` (a (tables, planes, dim)
+    array): sig is ``t:`` and one bit per hyperplane, 1 where the
+    vector's fold with it is above 0 — a NaN dot included, as Spark and
+    DuckDB order NaN above every number. A null vector, a null element
+    or a length other than dim nulls every dot, and a null bit is
+    skipped, as ``concat_ws`` skips it: the sig is ``t:`` alone."""
+    import numpy as np
+
+    n_tables, n_planes, dim = planes.shape
+    flat = planes.reshape(-1, dim).T  # (dim, tables · planes)
+    step = max(1, _BLOCK_CELLS // flat.shape[1])
+
+    def sign(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            v = _vectors(batch.column(1))
+            for s in range(0, batch.num_rows, step):
+                b = v.take(slice(s, s + step))
+                dots = _fold(b.x[:, :, None], flat[:, None, :])
+                with np.errstate(invalid="ignore"):
+                    bits = np.where((dots > 0) | np.isnan(dots), "1", "0")
+                bits = bits.reshape(-1, n_tables, n_planes)
+                bits[~b.ok | (b.len != dim)] = ""
+                at = np.repeat(np.arange(s, s + len(bits)), n_tables)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        batch.column(0).take(at),
+                        batch.column(1).take(at),
+                        pa.array([f"{t}:{''.join(r)}" for row in bits for t, r in enumerate(row)]),
+                    ],
+                    names=[*batch.schema.names, "sig"],
+                )
+
+    return df.mapInArrow(sign, StructType([*df.schema, StructField("sig", StringType())]))
 
 
 def lloyd_refine(
@@ -863,36 +888,32 @@ def ivf_probe(
     """Probe a built IVF index: queries probe their ``n_probe``
     nearest clusters → exact cosine re-rank within probed clusters.
 
-    The rerank is a per-cluster cogroup: each group scores one cluster's
-    queries against its candidates on the cosine kernel and keeps each
-    query's local top ``k``; the global window then ranks the
-    n_probe·k survivors per query. Candidates live in exactly one
-    cluster and a query probes distinct clusters, so no pair is scored
-    twice. The cogroup exchanges the candidate frame on cluster_id,
-    which a broadcast of the query side would avoid; it was still the
-    cheaper plan on every shape measured (SCALE.md)."""
-    qry = ivf_assign(
-        queries_df, index.centroids, n_probe, id_col, vec_col, rows=index.rows
-    ).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        F.col("cluster_id").cast("bigint").alias("cluster_id"),
-    )
-    cand = index.cand.select(
-        "cand_id", "cv", F.col("cluster_id").cast("bigint").alias("cluster_id")
-    )
-    schema = StructType(
-        [qry.schema["query_id"], cand.schema["cand_id"], StructField("cos_sim", DoubleType())]
-    )
-    local = (
-        qry.groupBy("cluster_id")
-        .cogroup(cand.groupBy("cluster_id"))
-        .applyInArrow(_rerank(k), schema)
+    Each probed cell scores its queries against its candidates on the
+    cosine kernel and keeps each query's local top ``k`` (:func:`_cells`);
+    the global window then ranks the n_probe·k survivors per query. The
+    cogroup exchanges the candidate frame on cluster_id, which a
+    broadcast of the query side would avoid; it was still the cheaper
+    plan on every shape measured (SCALE.md)."""
+    local = _cells(
+        _probe_queries(index, queries_df, n_probe, id_col, vec_col),
+        index.cand,
+        _rerank(k),
+        [StructField("cos_sim", DoubleType())],
     )
     return _rank_topk(local, k)
 
 
+def _probe_queries(index, queries_df: DataFrame, n_probe: int, id_col: str, vec_col: str) -> DataFrame:
+    """(query_id, qv, cluster_id): each query in its ``n_probe``
+    nearest cells of ``index`` (an :class:`IvfIndex` or
+    :class:`IvfPqIndex`), assigned on the index's collected codebook."""
+    return ivf_assign(
+        queries_df, index.centroids, n_probe, id_col, vec_col, rows=index.rows
+    ).select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "cluster_id")
+
+
 def _rerank(k: int):
-    """The cogroup function of :func:`ivf_probe`: one cluster's queries
+    """The cell function of :func:`ivf_probe`: one cluster's queries
     (query_id, qv, cluster_id) against its candidates (cand_id, cv,
     cluster_id), each query's local top ``k`` by the kernel's csim."""
 
@@ -1214,8 +1235,8 @@ def pq_codebooks(
 
     Like IVF's centroid pick, the sample is a distributed top-K
     (TakeOrderedAndProject) and the k×dim result collects to the
-    driver only to be re-broadcast as plan literals — constant-size
-    at any corpus scale."""
+    driver only to ride back out in the kernel's closure —
+    constant-size at any corpus scale."""
     cent = (
         centroids if centroids is not None
         else sample_centroids(df, k, id_col=id_col, vec_col=vec_col)
@@ -1228,32 +1249,6 @@ def pq_codebooks(
         [[float(x) for x in r["centroid"][s * dsub : (s + 1) * dsub]] for r in cent]
         for s in range(m)
     ]
-
-
-def _cb_sql(cb: list[list[float]]) -> str:
-    """One nested-array SQL literal for a subspace codebook. Double
-    literals via repr (shortest round-trip decimal; Double.parseDouble
-    recovers the exact bits), so SQL-text construction is value-exact."""
-    return (
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{x!r}D" for x in cent) + ")" for cent in cb
-        )
-        + ")"
-    )
-
-
-def _d2_vec_sql(vec_col: str, cb: list[list[float]], s: int, dsub: int) -> str:
-    """SQL for the k-vector of squared-L2 distances between subspace s
-    of ``vec_col`` and the codebook — identical arithmetic (and
-    evaluation order) to the DuckDB oracle's list_sum/list_transform
-    form."""
-    return (
-        f"transform({_cb_sql(cb)}, c -> aggregate(zip_with("
-        f"slice({vec_col}, {s * dsub + 1}, {dsub}), c, "
-        f"(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-        f"0.0D, (a, b) -> a + b))"
-    )
 
 
 def pq_encode(
@@ -1270,36 +1265,53 @@ def pq_encode(
     in RAM (Jégou et al., "Product Quantization for Nearest Neighbor
     Search", TPAMI 2011).
 
-    Map-side only: codebooks are plan literals (broadcast), encoding
-    is per-row column algebra — zero shuffle at any scale. All
-    arithmetic is double with a fixed evaluation order, so an external
-    SQL engine reproduces codes AND error bit-for-bit.
+    One map-side ``mapInArrow`` pass, zero shuffle at any scale: the
+    codebooks ride in the kernel's closure and each block's distance
+    tables come from :func:`_pq_d2`. A code is the argmin over the k
+    entries as Spark orders doubles (NaN above every number, ties to
+    the lowest code); a null subspace (see :func:`_pq_d2`) takes code 0
+    and nulls ``qerr``, the in-order sum of the m picked distances. All
+    arithmetic is double in a fixed order, so an external SQL engine
+    reproduces codes AND error bit-for-bit."""
+    import numpy as np
 
-    PERF: each subspace's argmin is ONE F.expr SQL string (a
-    struct-min over the distance vector) — building the same tree
-    through per-literal Column calls costs ~3000 py4j round trips and
-    ~6 s of driver time per plan; SQL-text construction is ~10 calls."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    k = len(codebooks[0])
-    # struct-min: lexicographic (d2, index) min == argmin with ties to
-    # the lowest code — same tie rule as the oracle's ORDER BY d2, cid
-    mins = [
-        F.expr(
-            f"array_min(zip_with({_d2_vec_sql(vec_col, codebooks[s], s, dsub)}, "
-            f"sequence(0, {k - 1}), (d, i) -> struct(d AS d, i AS i)))"
-        ).alias(f"__m{s}")
-        for s in range(m)
-    ]
-    step = df.select(F.col(id_col), *[F.col(c) for c in passthrough], *mins)
-    codes = F.array(*[F.col(f"__m{s}.i").cast("int") for s in range(m)])
-    qerr = F.col("__m0.d")
-    for s in range(1, m):
-        qerr = qerr + F.col(f"__m{s}.d")
-    return step.select(
-        F.col(id_col), *[F.col(c) for c in passthrough],
-        codes.alias("codes"), qerr.alias("qerr"),
+    books = np.array(codebooks, dtype=np.float64)
+    m, k, _ = books.shape
+    cols = [id_col, *passthrough]
+    schema = StructType(
+        [
+            *(df.schema[c] for c in cols),
+            StructField("codes", ArrayType(IntegerType())),
+            StructField("qerr", DoubleType()),
+        ]
     )
+    step = max(1, _BLOCK_CELLS // (m * k))
+
+    def encode(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            v = _vectors(batch.column(vec_col))
+            for s in range(0, batch.num_rows, step):
+                tables, null = _pq_d2(v.take(slice(s, s + step)), books)
+                n = tables.shape[1]
+                code = _nearest(tables.reshape(-1, k), 1).reshape(m, n)
+                code[null] = 0
+                err = np.take_along_axis(tables, code[..., None], axis=2)[..., 0]
+                qerr = err[0]
+                for e in err[1:]:
+                    qerr = qerr + e
+                offsets = pa.array(np.arange(0, (n + 1) * m, m), pa.int32())
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        *(batch.column(c).slice(s, n) for c in cols),
+                        pa.ListArray.from_arrays(offsets, pa.array(code.T.ravel(), pa.int32())),
+                        pa.array(qerr, mask=null.any(axis=0)),
+                    ],
+                    names=[*cols, "codes", "qerr"],
+                )
+
+    return df.select(*cols, vec_col).mapInArrow(encode, schema)
 
 
 # The oracle runs the IDENTICAL algorithm in SQL: portable-hash
@@ -1379,53 +1391,40 @@ def pq_adc_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) approximate top-k: each full-precision
-    query builds an m×k distance TABLE against the codebooks (per-row
-    column algebra), then scans candidates' codes summing m table
-    lookups — the PQ search kernel (Jégou et al. 2011 §IV).
+    query builds an m×k distance TABLE against the codebooks, then scans
+    candidates' codes summing m table lookups — the PQ search kernel
+    (Jégou et al. 2011 §IV). Self pairs are scored like any other.
 
-    Scale shape: the scan is deliberately a query×codes cross join —
-    ADC *is* a linear scan over compressed codes; its win is the 64×
-    memory compression (4 bytes vs 256), not scan avoidance. At 100 TB
-    the codes live inside IVF clusters (IVF-ADC): the same kernel runs
-    per probed cluster only, and this composition is ivf_topk with
-    codes_df as the per-cluster payload. Top-k per query is a window
-    over the scan — TakeOrdered shape, no global sort."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    # one F.expr per subspace (see pq_encode PERF note): the transform
-    # over the nested codebook literal IS the distance table
-    dtab_cols = [
-        F.expr(_d2_vec_sql(vec_col, codebooks[s], s, dsub)).alias(f"__dtab{s}")
-        for s in range(m)
-    ]
-    # persist() both join inputs: higher-order functions are interpreted
-    # (no codegen) and the optimizer inlines the 64 distance-table
-    # aggregates (and the encoder's 64 argmin aggregates) past the
-    # join, re-evaluating them once per PAIR instead of once per row —
-    # measured 8.4 s vs 1.5 s at sf0.1. A repartition barrier does NOT
-    # stop it (the projection is pushed through RepartitionByExpression);
-    # persist does, and matches reality at scale: the codes table is
-    # pre-materialized storage (4 bytes/vector — the point of PQ) and
-    # the query-side table is |queries| × m·k doubles, both bounded.
-    # Same persist-the-reused-subtree pattern as minhash signatures.
-    q = _pq_barrier(queries_df.select(F.col(id_col).alias("query_id"), *dtab_cols))
-    c = _pq_barrier(codes_df.select(F.col(id_col).alias("cand_id"), "codes"), corpus=True)
-    ad2 = None
-    for s in range(m):
-        term = F.element_at(f"__dtab{s}", F.col("codes")[s] + 1)
-        ad2 = term if ad2 is None else ad2 + term
-    # Broadcast the query-side distance tables (|Q| × m·k doubles —
-    # bounded by construction), stream the codes: ADC's linear scan is
-    # the declared cost, but the CODES table is the corpus and must
-    # never be the broadcast build side (r11 audit: the local
-    # threshold picked exactly that).
-    scored = F.broadcast(q).crossJoin(c).select("query_id", "cand_id", ad2.alias("approx_d2"))
-    w = W.partitionBy("query_id").orderBy("approx_d2", "cand_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "cand_id", "approx_d2")
+    Scale shape: ADC *is* a linear scan over compressed codes; its win
+    is the 64× memory compression (4 bytes vs 256), not scan avoidance.
+    The codes shuffle once into hash buckets (one per shuffle
+    partition) and every query visits every bucket: the cell skeleton
+    of the IVF probes (:func:`_cells`) with all cells probed, scored on
+    the same kernel (:func:`_adc`), so no pair is formed as a row. At
+    100 TB the codes live inside IVF clusters (IVF-ADC,
+    :func:`ivfpq_probe`): the same kernel runs per probed cluster only.
+    Top-k per query is a window over the per-bucket survivors."""
+    n = int(queries_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    qry = queries_df.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+        F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("cluster_id"),
     )
+    cand = codes_df.select(
+        F.col(id_col).alias("cand_id"), "codes", F.pmod(F.xxhash64(id_col), F.lit(n)).alias("cluster_id")
+    )
+    scored = _cells(
+        qry, cand, _adc(codebooks, k, self_ok=True),
+        [StructField("cluster_id", LongType()), StructField("approx_d2", DoubleType())],
+    )
+    return _adc_first(scored, k).select("query_id", "cand_id", "approx_d2")
+
+
+def _adc_first(scored: DataFrame, n: int) -> DataFrame:
+    """Each query's ``n`` first rows of ``scored`` by (approx_d2,
+    cand_id): the global window over the cells' survivors."""
+    w = W.partitionBy("query_id").orderBy("approx_d2", "cand_id")
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= n)
 
 
 PQ_ADC_ORACLE = """
@@ -1491,8 +1490,8 @@ class IvfPqIndex(NamedTuple):
     """A built IVF-PQ index: the centroid TABLE (DataFrame — ADVICE
     r13: the centroids are a (cluster_id, centroid) frame that
     write_ivfpq_index writes as a parquet sidecar), the [m][k][dsub]
-    codebook literals, the corpus encoded to PQ codes, cluster-assigned,
-    behind the persist barrier, and the centroid rows collected once,
+    codebooks, the corpus encoded to PQ codes and cluster-assigned (a
+    lazy frame, like :class:`IvfIndex`'s), and the centroid rows collected once,
     which every probe hands the assignment kernel without a Spark job. Build
     ONCE (:func:`ivfpq_index`), probe many times (:func:`ivfpq_probe`)
     — the encoded-codes frame IS the stored index (4 B/vector, the
@@ -1500,16 +1499,12 @@ class IvfPqIndex(NamedTuple):
     split forbids (r13)."""
 
     centroids: DataFrame  # (cluster_id, centroid) — k rows, broadcast-sized
-    books: list  # [m][k][dsub] floats — plan literals
+    books: list  # [m][k][dsub] floats — the ADC kernel's closure
     cand: DataFrame  # (cand_id, cluster_id, codes)
     rows: list  # codebook_rows(centroids), collected once at build or load
-    # Optional raw-vector sidecar (r15, VERDICT r14 wrong #1): the
-    # corpus vectors WITH their cluster_id, written PARTITIONED BY
-    # cluster_id by write_ivfpq_index(..., corpus_df=...). Rerank's
-    # exact-vector fetch against this frame joins on
-    # (cluster_id, cand_id), so the scan partition-prunes to the
-    # shortlist's clusters — the point-read the docstring promises —
-    # instead of one full map-side pass over the raw vector table.
+    # Optional raw-vector sidecar: the corpus vectors with their
+    # cluster_id, partitioned by it (write_ivfpq_index(corpus_df=...)),
+    # so rerank's exact-vector fetch partition-prunes to the shortlist.
     vectors: DataFrame | None = None
 
 
@@ -1523,7 +1518,7 @@ def ivfpq_index(
     refine_iters: int = 0,
 ) -> IvfPqIndex:
     """Build the IVF-PQ index: centroids, per-subspace codebooks, and
-    the corpus encoded + cluster-assigned behind the persist barrier.
+    the corpus encoded + cluster-assigned (two map-side kernel passes).
 
     ``refine_iters=N`` Lloyd-refines the COARSE quantizer only (the
     IVF centroids — :func:`lloyd_refine`); the PQ codebooks keep the
@@ -1546,13 +1541,10 @@ def ivfpq_index(
         centroids=sample if k_codes == n_clusters else None,
     )
     rows = codebook_rows(centroids)
-    cand = _pq_barrier(  # same interpreted-HOF barrier as pq_adc_topk
-        pq_encode(
-            ivf_assign(corpus_df, centroids, 1, id_col, vec_col, rows=rows),
-            books, id_col, vec_col, passthrough=("cluster_id",),
-        ).select(F.col(id_col).alias("cand_id"), "cluster_id", "codes"),
-        corpus=True,
-    )
+    cand = pq_encode(
+        ivf_assign(corpus_df, centroids, 1, id_col, vec_col, rows=rows),
+        books, id_col, vec_col, passthrough=("cluster_id",),
+    ).select(F.col(id_col).alias("cand_id"), "cluster_id", "codes")
     return IvfPqIndex(centroids, books, cand, rows)
 
 
@@ -1570,8 +1562,8 @@ def ivfpq_topk(
     """IVF-ADC composition (Jégou et al. 2011 §V — the production ANN
     layout): :func:`ivfpq_index` + :func:`ivfpq_probe` in one call.
 
-    This is the 100 TB shape end-to-end: centroids + codebooks are
-    broadcast literals; the corpus shuffles once on cluster_id (and
+    This is the 100 TB shape end-to-end: centroids + codebooks ride
+    in the kernel's closure; the corpus shuffles once on cluster_id (and
     would persist bucketed-by-cluster for reuse); per query the scan
     cost is n_probe/n_clusters of the codes — 4 bytes per candidate —
     instead of a full-precision linear scan. pq_adc_topk is the
@@ -1594,7 +1586,10 @@ def ivfpq_probe(
 ) -> DataFrame:
     """Probe a built IVF-PQ index: a query probes its ``n_probe``
     nearest clusters and runs the ADC kernel only over those
-    clusters\' codes.
+    clusters\' codes — :func:`ivf_probe`'s cell skeleton
+    (:func:`_cells`) with the ADC score (:func:`_adc`) in place of the
+    cosine: each cell keeps each query's local top ``rerank or k`` with
+    self-matches dropped, then the global window ranks.
 
     ``rerank=R`` (VERDICT r13 next #2) adds the production refinement
     step (Jégou et al. 2011 §V.C): ADC distances are biased by
@@ -1605,8 +1600,7 @@ def ivfpq_probe(
     ``(query_id, cand_id, cos_sim)`` with — the two orderings are
     different metrics and must not be conflated.
 
-    Scale shape of the fetch (r15 — VERDICT r14 wrong #1 + ADVICE):
-    the ADC shortlist is |Q|·R rows — BOUNDED by construction — and
+    Scale shape of the fetch: the ADC shortlist is |Q|·R rows — BOUNDED by construction — and
     carries each candidate's ``cluster_id``. When the raw-vector
     table is cluster-partitioned (``index.vectors`` — the sidecar
     ``write_ivfpq_index(..., corpus_df=...)`` lands, used
@@ -1621,23 +1615,15 @@ def ivfpq_probe(
     if it happens to carry a ``cluster_id`` column: a caller-side
     label is not trusted to match THIS index's assignment (a stale
     one would silently drop shortlist candidates in the two-key
-    join). Pruning engages only for the index's own sidecar. The query side is
-    broadcast-attached the same way. The only exchange this path adds
-    is the final top-k window's hash-partition of the BOUNDED |Q|·R
-    exact frame (the prior "no new shuffle at any corpus size" claim
-    overstated — ADVICE r14); the rerank itself is |Q|·R
-    exact cosines, row by row on the cosine kernel.
+    join). Pruning engages only for the index's own sidecar. The query
+    vectors are broadcast-attached the same way. The only exchange the
+    fetch adds is the final top-k window's hash-partition of the
+    BOUNDED |Q|·R exact frame; the rerank itself is |Q|·R exact
+    cosines, row by row on the cosine kernel.
     """
     if rerank:
-        # Partition-pruned fetch ONLY against the index's own sidecar
-        # (r15 self-review): deciding by a column literally named
-        # cluster_id in a caller-passed corpus_df would let a STALE
-        # assignment (a prior ivf_assign with different clusters, an
-        # older index's sidecar) silently drop shortlist candidates in
-        # the (cluster_id, cand_id) join — wrong top-k, no error. The
-        # sidecar is the one frame whose labels are this index's by
-        # construction; an explicit corpus_df always fetches by
-        # cand_id alone.
+        # partition-pruned fetch only against the index's own sidecar,
+        # the one frame whose cluster labels are this index's
         pruned = corpus_df is None or corpus_df is index.vectors
         if corpus_df is None:
             corpus_df = index.vectors  # cluster-partitioned sidecar
@@ -1653,86 +1639,33 @@ def ivfpq_probe(
             )
         if rerank < k:
             raise ValueError(f"rerank={rerank} must be >= k={k}")
-    centroids, books, cand = index.centroids, index.books, index.cand
-    m = len(books)
-    dsub = len(books[0][0])
-    dtab_cols = [
-        F.expr(_d2_vec_sql(vec_col, books[s], s, dsub)).alias(f"__dtab{s}")
-        for s in range(m)
-    ]
-    # r15: no persist barrier on the probe side — the broadcast below
-    # IS the materialization barrier (the relation is built once and
-    # the per-pair ADC sum references its materialized __dtab columns;
-    # A/B'd with no re-evaluation blowup and one fewer cached frame +
-    # cache-write job per probe). pq_adc_topk's crossJoin keeps its
-    # persist: that is the shape the r5 inlining blowup was measured on.
-    qry = (
-        ivf_assign(queries_df, centroids, n_probe, id_col, vec_col, rows=index.rows)
-        .select(F.col(id_col).alias("query_id"), "cluster_id", F.col(vec_col))
-        .select("query_id", "cluster_id", *dtab_cols)
+    scored = _cells(
+        _probe_queries(index, queries_df, n_probe, id_col, vec_col),
+        index.cand,
+        _adc(index.books, rerank or k, self_ok=False),
+        [StructField("cluster_id", LongType()), StructField("approx_d2", DoubleType())],
     )
-    ad2 = None
-    for s in range(m):
-        term = F.element_at(f"__dtab{s}", F.col("codes")[s] + 1)
-        ad2 = term if ad2 is None else ad2 + term
-    # r15 optimization (guide §3.1/§2.4): the probe side is bounded in
-    # the designed regime (|Q|*n_probe rows of m*k-double distance
-    # tables) while cand is the corpus-sized codes frame. Without the
-    # hint the persisted probe frame's unknown size estimate made the
-    # planner SORT-MERGE this join — exchanging + sorting the ENTIRE
-    # codes frame on a 16-value cluster_id key (r15 before-plan): a
-    # skewed corpus shuffle at any scale. Broadcasting the query side
-    # makes the scan of the codes map-side: zero corpus-sized exchange
-    # in the probe. r16 (ADVICE r15): the hint is GUARDED — past
-    # PROBE_BROADCAST_MAX_BYTES the join falls back unhinted with the
-    # r5 persist barrier restored (the barrier the broadcast replaced),
-    # degrading gracefully instead of failing on the 8 GiB cap.
-    dtab_bytes = m * len(books[0]) * 8 + 48
-    probe_side = _probe_side(qry, queries_df, n_probe, dtab_bytes)
-    scored = (
-        probe_side.join(cand, "cluster_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", "cluster_id", ad2.alias("approx_d2"))
-    )
-    w = W.partitionBy("query_id").orderBy("approx_d2", "cand_id")
-    ranked = scored.withColumn("rn", F.row_number().over(w))
+    ranked = _adc_first(scored, rerank or k)
     if not rerank:
-        return ranked.filter(F.col("rn") <= k).select(
-            "query_id", "cand_id", "approx_d2"
-        )
-    # cluster_id rides along (VERDICT r14 wrong #1): each candidate
-    # lives in exactly one cluster, so the shortlist stays |Q|*R rows
-    # and its clusters are exactly what the exact-vector fetch needs
-    # to prune a cluster-partitioned vector table.
-    shortlist = ranked.filter(F.col("rn") <= rerank).select(
-        "query_id", "cand_id", "cluster_id"
-    )
+        return ranked.select("query_id", "cand_id", "approx_d2")
+    # cluster_id rides along: each candidate lives in exactly one
+    # cluster, so the shortlist's clusters are exactly what the
+    # exact-vector fetch needs to prune a cluster-partitioned table.
+    shortlist = ranked.select("query_id", "cand_id", "cluster_id")
     cv = corpus_df.select(
         *(["cluster_id"] if pruned else []),
         F.col(id_col).alias("cand_id"),
         F.col(vec_col).alias("cv"),
     )
     qv = queries_df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    # broadcast the bounded shortlist (|Q|*R rows) against the vector
-    # table: with a cluster-partitioned table the (cluster_id, cand_id)
-    # join lets dynamic partition pruning skip every un-probed
-    # cluster's files; otherwise the fetch is one map-side pass. Then
-    # the (equally bounded) result broadcasts against the query vectors.
+    # the bounded shortlist broadcasts against the vector table, then
+    # against the query vectors (see the docstring's fetch shape)
     pairs = (
-        cv.join(
-            F.broadcast(shortlist),
-            ["cluster_id", "cand_id"] if pruned else ["cand_id"],
-        )
+        cv.join(F.broadcast(shortlist), ["cluster_id", "cand_id"] if pruned else ["cand_id"])
         .join(F.broadcast(qv), "query_id")
         .select("query_id", "cand_id", "qv", "cv")
     )
-    exact = _pair_cos(pairs, "qv", "cv")
-    w2 = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        exact.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "cand_id", "cos_sim")
-    )
+    return _rank_topk(_pair_cos(pairs, "qv", "cv"), k).drop("rnk")
 
 
 def write_ivf_index(index: IvfIndex, path: str) -> None:
@@ -1806,20 +1739,11 @@ def write_ivfpq_index(
         "overwrite"
     ).parquet(f"{path}/books")
     if corpus_df is not None:
-        # The index's own assignment is authoritative: a cluster_id
-        # already on corpus_df (e.g. the frame came through ivf_assign,
-        # or is an older index's sidecar) would duplicate the column in
-        # the join below — an analysis error at write time at best, a
-        # sidecar partitioned by a STALE assignment at worst (r15
-        # self-review). Drop it before tagging.
+        # the index's own assignment is authoritative: a stale
+        # cluster_id already on corpus_df is dropped before tagging
         (
             corpus_df.drop("cluster_id")
-            .join(
-                index.cand.select(
-                    F.col("cand_id").alias(id_col), "cluster_id"
-                ),
-                id_col,
-            )
+            .join(index.cand.select(F.col("cand_id").alias(id_col), "cluster_id"), id_col)
             .write.partitionBy("cluster_id")
             .mode("overwrite")
             .parquet(f"{path}/vectors")
@@ -1841,12 +1765,8 @@ def read_ivfpq_index(spark: SparkSession, path: str) -> IvfPqIndex:
     try:
         vectors = spark.read.parquet(f"{path}/vectors")
     except AnalysisException as e:
-        # Only ABSENCE degrades to vectors=None (the artifact was
-        # written without corpus_df=). A sidecar that EXISTS but fails
-        # to read (permissions, corruption, transient object-store
-        # error) must surface loudly — swallowing it would make a
-        # later rerank probe claim "no sidecar, pass corpus_df" while
-        # the real failure is infrastructure (r15 self-review).
+        # only an absent sidecar degrades to vectors=None; one that
+        # exists but fails to read (permissions, corruption) is raised
         if "PATH_NOT_FOUND" not in str(e) and "does not exist" not in str(e):
             raise
         vectors = None
@@ -2045,11 +1965,12 @@ def similarity_adc_stored_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     layouts), which is precisely what makes codes a durable index
     artifact rather than a per-session computation. The search is
     :func:`ivfpq_probe` over an :class:`IvfPqIndex` whose codes are the
-    stored copy, behind the corpus persist barrier."""
+    stored copy."""
     import os
+    import shutil
     import tempfile
 
-    from ..sources.vortex import register
+    from ..sources.vortex import register, write_sorted
 
     emb = load(spark, sf_dir, "embeddings")
     centroids = sample_centroids(emb, 16)
@@ -2063,13 +1984,7 @@ def similarity_adc_stored_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "codes",
     )
     register(spark)
-    path = os.path.join(
-        tempfile.gettempdir(), f"dvs_adc_codes_{os.getpid()}.vortex"
-    )
-    import shutil
-
-    from ..sources.vortex import write_sorted
-
+    path = os.path.join(tempfile.gettempdir(), f"dvs_adc_codes_{os.getpid()}.vortex")
     shutil.rmtree(path, ignore_errors=True)
     # cluster-sorted layout — the IVF inverted-list form: codes of one
     # cluster are contiguous, every chunk's cluster_id zone map is a
@@ -2081,7 +1996,7 @@ def similarity_adc_stored_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored = spark.read.format("vortex").option("pushdown", "true").load(path)
     index = IvfPqIndex(
         centroids, books,
-        _pq_barrier(stored.select("cand_id", "cluster_id", "codes"), corpus=True),
+        stored.select("cand_id", "cluster_id", "codes"),
         rows,
     )
     return ivfpq_probe(index, emb.filter(F.col("vec_id") % 20 == 0), k=10, n_probe=4)

@@ -33,6 +33,9 @@ def get_spark(app_name: str = "duckdb_vortex_spark", cpus: int | None = None) ->
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # the conf ``catalog.load("events")`` reads under; set up front, so
+        # that load does not change a key of the schema memo mid-session
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # executor Python workers fork from this package's daemon (see
         # worker_daemon), and every worker imports the package from any cwd
         .config("spark.python.daemon.module", "duckdb_vortex_spark.worker_daemon")
@@ -144,7 +147,7 @@ _PERSISTED: list = []
 _PERSISTED_LOCK = threading.Lock()
 
 
-def scoped_persist(df, storage_level=None):
+def scoped_persist(df):
     """``df.persist()`` with eager-release bookkeeping (ADVICE r12).
 
     The pair-generating operators (MinHash/SimHash/shingle/token
@@ -166,7 +169,7 @@ def scoped_persist(df, storage_level=None):
     persist itself already retains (which is the pre-existing persist
     contract, not new retention).
     """
-    p = df.persist() if storage_level is None else df.persist(storage_level)
+    p = df.persist()
     with _PERSISTED_LOCK:
         _PERSISTED.append(p)
     return p

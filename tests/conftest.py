@@ -132,7 +132,6 @@ _SLOW_TESTS = {
     "test_incremental_pipeline.py::test_stream_restart_resumes_batch_ids_across_compaction",  # 39.6s
     "test_vortex_property.py::test_roundtrip_random_nested_rows",  # 37.6s
     "test_incremental_decontam.py::test_chop_and_order_invariance",  # 36.4s
-    "test_similarity_pq.py::test_probe_broadcast_guard_falls_back_row_identical",  # 34.9s
     "test_catalog_oracle.py::test_catalog_entry[dedup_minhash_keep_canonical]",  # 32.9s
     "test_incremental_pipeline.py::test_real_stream_drive",  # 31.7s
     "test_catalog_oracle.py::test_catalog_entry[stream_incremental_neardup]",  # 28.4s

@@ -32,9 +32,11 @@ BUILD_JOBS: dict[str, tuple[int, str]] = {
     "stream_incremental_semdedup": (24, "micro-batches through the semantic gate and its index"),
     "vortex_incremental_compaction": (11, "streamed VTX1 segments written, then compacted"),
     # indexes built and probed at build
-    "retrieval_ann_tuning_curve": (32, "builds two indexes, probes each at three n_probe"),
-    "similarity_adc_stored_codes": (6, "codebook collect, then the PQ codes copied to VTX1"),
-    "similarity_ivfpq_ann": (3, "codebook collect and the probe's bounded broadcast count"),
+    "retrieval_ann_tuning_curve": (
+        32,
+        "builds two indexes, probes each at three n_probe; each checkpointed probe runs its cogroup's stages",
+    ),
+    "similarity_adc_stored_codes": (4, "codebook collect, then the PQ codes copied to VTX1"),
     # the entry writes its input (VTX1, a table, a text file) at build
     "vortex_zorder_pruned_scan": (7, "z-ordered VTX1 copy written, result built through Arrow"),
     "vortex_copy_roundtrip_agg": (5, "VTX1 copy written, result built through Arrow"),
@@ -58,6 +60,7 @@ BUILD_JOBS: dict[str, tuple[int, str]] = {
     "dedup_semantic_cluster_two_level": (1, "sample_centroids collects the codebook"),
     "similarity_assign_two_level": (1, "sample_centroids collects the codebook"),
     "similarity_ivf_ann": (1, "sample_centroids collects the codebook"),
+    "similarity_ivfpq_ann": (1, "sample_centroids collects the codebook"),
     "similarity_knn_join_cogrouped": (1, "sample_centroids collects the codebook"),
     "similarity_pq_adc_topk": (1, "sample_centroids collects the PQ codebooks"),
     "similarity_pq_codes": (1, "sample_centroids collects the PQ codebooks"),
@@ -72,10 +75,7 @@ BUILD_JOBS: dict[str, tuple[int, str]] = {
 @pytest.fixture(scope="module")
 def bound_tables(spark):
     """Bind every driver table once, so a builder's job count does not
-    depend on whether an earlier test already loaded its tables.
-    ``events`` goes first: its load sets a conf the schema memo keys on,
-    and the conf stays set for the session."""
-    catalog.load(spark, SF_DIR, "events")
+    depend on whether an earlier test already loaded its tables."""
     catalog.register_views(spark, SF_DIR)
 
 

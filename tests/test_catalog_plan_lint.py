@@ -74,12 +74,6 @@ ALLOWED: dict[str, tuple[tuple[str, ...], str]] = {
         "inherits pipeline_source_mixture_weights' 1-ROW totals "
         "broadcast in its rate subtree — constant-size build side",
     ),
-    "similarity_pq_adc_topk": (
-        ("nested-loop-join", "cartesian-product"),
-        "ADC IS a linear scan over compressed codes (its win is 64x "
-        "memory compression, not scan avoidance); at scale the same "
-        "kernel runs per probed IVF cluster (IVF-ADC)",
-    ),
     "basket_brand_affinity": (
         ("nested-loop-join",),
         "1-ROW broadcast (order total for the lift denominator) — "

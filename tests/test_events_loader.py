@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import types as T
 
 from duckdb_vortex_spark import catalog
+from duckdb_vortex_spark.session import get_spark
 
 from .conftest import SF_DIR, run_counting_jobs
 
@@ -166,3 +167,21 @@ def test_memo_schema_equals_inferred_for_every_table(spark):
         memo, jobs = run_counting_jobs(spark, partial(catalog._read_parquet, spark, path))
         assert jobs == 0, t
         assert _fields(memo.schema) == _fields(spark.read.parquet(path).schema), t
+
+
+def test_table_bound_before_events_binds_again_without_a_job(spark, tmp_path):
+    """``get_spark`` sets the conf the ``events`` load reads under, so
+    that load does not change the schema memo's key: a table bound
+    before a session's first ``events`` load binds again after it with
+    no job."""
+    import shutil
+
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    spark = get_spark("dvs-tests", cpus=8)  # the running session, configured as conftest builds it
+    (tmp_path / "bound").mkdir()
+    table = shutil.copy(f"{SF_DIR}/region.parquet", tmp_path / "bound")  # unread in this session
+    catalog._read_parquet(spark, str(table))
+    _write_events(tmp_path, _VINTAGES["ns"])
+    catalog.load(spark, str(tmp_path), "events")
+    _, jobs = run_counting_jobs(spark, partial(catalog._read_parquet, spark, str(table)))
+    assert jobs == 0

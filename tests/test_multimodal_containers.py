@@ -87,52 +87,6 @@ def test_probe_containers_spark(spark):
     assert got[3].container is None  # unparseable -> null row, no crash
 
 
-# --- MP3 frame-header probe ------------------------------------------------
-
-
-def _mp3_frame(kbps_idx=9, sr_idx=0, padding=0, mono=False):
-    """One MPEG1 Layer III frame: header + zero payload of correct length."""
-    b1 = 0xFB  # sync + MPEG1 + Layer III + no CRC
-    b2 = (kbps_idx << 4) | (sr_idx << 2) | (padding << 1)
-    b3 = 0xC0 if mono else 0x00
-    from duckdb_vortex_spark.operators.multimodal import _MP3_BITRATES_V1L3, _MP3_RATES
-
-    kbps = _MP3_BITRATES_V1L3[kbps_idx]
-    rate = _MP3_RATES[3][sr_idx]
-    flen = 144 * kbps * 1000 // rate + padding
-    return bytes([0xFF, b1, b2, b3]) + b"\x00" * (flen - 4)
-
-
-def test_mp3_probe_cbr():
-    from duckdb_vortex_spark.operators.multimodal import _parse_mp3_meta
-
-    payload = b"".join(_mp3_frame() for _ in range(38))  # ~1 s at 44.1k
-    m = _parse_mp3_meta(payload)
-    assert m["container"] == "mp3" and m["n_frames"] == 38
-    assert m["sample_rate"] == 44100 and m["bitrate_kbps"] == 128
-    assert not m["mono"]
-    assert abs(m["duration_s"] - 38 * 1152 / 44100) < 1e-9
-
-
-def test_mp3_probe_vbr_and_id3():
-    from duckdb_vortex_spark.operators.multimodal import _parse_mp3_meta
-
-    id3 = b"ID3\x04\x00\x00" + bytes([0, 0, 0, 10]) + b"\x00" * 10
-    payload = id3 + _mp3_frame(9) + _mp3_frame(11) + _mp3_frame(9, padding=1)
-    m = _parse_mp3_meta(payload)
-    assert m["n_frames"] == 3
-    assert m["bitrate_kbps"] is None and m["vbr"]  # mixed bitrates -> VBR
-
-
-def test_mp3_probe_rejects_non_audio():
-    import pytest as _pytest
-
-    from duckdb_vortex_spark.operators.multimodal import _parse_mp3_meta
-
-    with _pytest.raises(ValueError):
-        _parse_mp3_meta(b"definitely not mpeg audio data" * 4)
-
-
 # --- pointer-table media fetch over RANGED object-store reads --------------
 
 

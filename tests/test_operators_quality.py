@@ -14,6 +14,7 @@ from duckdb_vortex_spark.operators.multimodal import documents_as_media, extract
 from duckdb_vortex_spark.operators.similarity import lsh_topk, topk_bruteforce
 
 from .conftest import SF_DIR
+from .hof_reference import adversarial_embeddings, lsh_signature
 
 
 def test_lsh_ann_finds_near_duplicates(spark):
@@ -52,6 +53,28 @@ def test_lsh_ann_recall_weak_neighbors(spark):
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, f"LSH recall too low: {recall:.3f}"
+
+
+def test_lsh_signatures_equal_hof_reference(spark):
+    """The kernel's LSH signatures equal the HOF reference signatures,
+    (vec_id, sig) pair for pair, on the corpus plus adversarial rows: a
+    NaN dot sets its bit (NaN sorts above 0), and a null vector, a null
+    element or a length other than 64 leaves the bare ``t:`` prefix."""
+    import numpy as np
+
+    from duckdb_vortex_spark.operators.similarity import _hyperplane, _signatures
+
+    planes = np.array([[_hyperplane(64, p, t) for p in range(8)] for t in range(4)])
+    df = adversarial_embeddings(load(spark, SF_DIR, "embeddings"))
+    got = sorted(tuple(r) for r in _signatures(df, planes).select("vec_id", "sig").collect())
+    pcols = ", ".join(f"p{t} array<array<double>>" for t in range(4))
+    pdf = spark.createDataFrame([tuple(planes.tolist())], pcols)
+    sigs = F.array(*[lsh_signature(F.col("embedding"), F.col(f"p{t}"), t) for t in range(4)])
+    want = sorted(tuple(r) for r in df.crossJoin(pdf).select("vec_id", F.explode(sigs)).collect())
+    assert got == want
+    by_id = dict(got)
+    assert by_id[900001] == by_id[900002] == by_id[900004] == by_id[900005] == "3:"
+    assert by_id[900006] == "3:00000000"
 
 
 def test_approx_count_distinct_error(spark):

@@ -181,7 +181,6 @@ _NESTED_LOOP_OK = {
     "text_bigram_lift",  # 1-row corpus-total broadcast cross (single-pass form)
     "pipeline_source_mixture_weights",  # 1-row corpus-totals broadcast cross
     "sample_temperature_mixture",  # same 1-row totals cross in its rate subtree
-    "similarity_pq_adc_topk",  # ADC IS a linear scan over compressed codes; scale path is IVF-ADC per probed cluster
     "sketch_hll_distinct",  # 1-row HLL-estimate broadcast joined to the exact count
     "sketch_histogram_quantile",  # 1-row extent + ≤1024-row sketch × 3 probes, all constant-size
     "sketch_histogram_grouped_quantiles",  # per-group sketch × 2 probes, constant-size build sides

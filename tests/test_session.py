@@ -19,9 +19,7 @@ def test_scoped_persist_registers_and_releases(spark):
     assert df.storageLevel.useMemory
     assert len(_PERSISTED) == 1
     df.count()  # materialize the cache
-    df2 = scoped_persist(spark.range(10), StorageLevel.DISK_ONLY)
-    assert df2.storageLevel == StorageLevel.DISK_ONLY
-    assert release_persisted() == 2
+    assert release_persisted() == 1
     assert _PERSISTED == []
     assert df.storageLevel == StorageLevel.NONE
     # releasing with nothing registered is a no-op

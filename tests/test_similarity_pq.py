@@ -22,6 +22,7 @@ from duckdb_vortex_spark.operators.similarity import (
 )
 
 from .conftest import SF_DIR
+from .hof_reference import adversarial_embeddings, pq_d2_table
 
 
 def test_pq_codes_shape_and_range(spark):
@@ -196,44 +197,111 @@ def test_pq_code_budget_breaks_the_recall_plateau(spark):
     assert best["code_bytes_per_vector"] == 4 * base["code_bytes_per_vector"]
 
 
-def test_probe_broadcast_guard_falls_back_row_identical(spark):
-    """r16 (ADVICE r15, medium): the probe-side F.broadcast in
-    ivfpq_probe is gated on an estimated broadcast footprint. Past
-    PROBE_BROADCAST_MAX_BYTES the join runs unhinted with the r5
-    persist barrier restored and must return EXACTLY the same rows —
-    the guard changes strategy, never results. The guard's count is
-    LIMIT-bounded, so it never pays a full scan of a huge query set."""
-    from duckdb_vortex_spark.operators import similarity as sim
-    from duckdb_vortex_spark.operators.similarity import ivfpq_index, ivfpq_probe
-
-    emb = load(spark, SF_DIR, "embeddings").limit(200)
-    qry = emb.filter(F.col("vec_id") % 20 == 0)
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    pidx = ivfpq_index(emb, n_clusters=8)
-    got = rows(ivfpq_probe(pidx, qry, k=5, n_probe=2))
-    orig = sim.PROBE_BROADCAST_MAX_BYTES
-    sim.PROBE_BROADCAST_MAX_BYTES = 1  # force the guard to fall back
-    try:
-        fb = rows(ivfpq_probe(pidx, qry, k=5, n_probe=2))
-    finally:
-        sim.PROBE_BROADCAST_MAX_BYTES = orig
-    assert sim.PROBE_BROADCAST_MAX_BYTES == orig
-    assert got == fb
+def _books_frame(spark, books):
+    """One row holding each subspace's codebook as column b<s>."""
+    cols = ", ".join(f"b{s} array<array<double>>" for s in range(len(books)))
+    return spark.createDataFrame([tuple(books)], cols)
 
 
-def test_probe_bounded_count_memo(spark):
-    """The guard's LIMIT-bounded count caches per query frame: an
-    exact count (≤ its limit) is reusable for any bound; an over-bound
-    probe is reusable for smaller bounds only."""
-    from duckdb_vortex_spark.operators import similarity as sim
+def _adversarial_books(books):
+    """``books`` with, in every subspace, entry 5 a copy of entry 3 (a
+    tie, which goes to code 3) and a NaN element in entry 7."""
+    books = [[list(c) for c in sub] for sub in books]
+    for sub in books:
+        sub[5] = list(sub[3])
+        sub[7][2] = float("nan")
+    return books
 
-    df = spark.range(50).toDF("vec_id")
-    assert sim._probe_bounded_count(df, 100) == 50  # exact
-    assert sim._probe_bounded_count(df, 10) == 50   # memo hit (exact)
-    df2 = spark.range(50).toDF("vec_id")
-    assert sim._probe_bounded_count(df2, 10) == 11  # over-bound probe
-    assert sim._probe_bounded_count(df2, 5) == 11   # reusable: > bound
-    assert sim._probe_bounded_count(df2, 200) == 50  # re-counted exact
+
+def _hof_encode(df, books):
+    """The HOF reference encoder: per subspace, the struct-min of
+    (distance, code) over :func:`pq_d2_table` (nulls first, NaN last,
+    ties to the lowest code), and the in-order sum of the picked
+    distances."""
+    m, k, dsub = len(books), len(books[0]), len(books[0][0])
+    mins = [
+        F.array_min(
+            F.zip_with(
+                pq_d2_table(F.col("embedding"), F.col(f"b{s}"), s, dsub),
+                F.sequence(F.lit(0), F.lit(k - 1)),
+                lambda d, i: F.struct(d.alias("d"), i.alias("i")),
+            )
+        ).alias(f"m{s}")
+        for s in range(m)
+    ]
+    step = df.crossJoin(_books_frame(df.sparkSession, books)).select("vec_id", *mins)
+    qerr = F.col("m0.d")
+    for s in range(1, m):
+        qerr = qerr + F.col(f"m{s}.d")
+    codes = F.array(*[F.col(f"m{s}.i").cast("int") for s in range(m)])
+    return step.select("vec_id", codes.alias("codes"), qerr.alias("qerr"))
+
+
+def _hof_adc_topk(queries, codes, books, k):
+    """The HOF reference ADC scan: each query's distance tables crossed
+    with every candidate's codes, the in-order sum of m lookups, ranked
+    by (approx_d2, cand_id)."""
+    from pyspark.sql import Window
+
+    m, dsub = len(books), len(books[0][0])
+    tables = queries.crossJoin(_books_frame(queries.sparkSession, books)).select(
+        F.col("vec_id").alias("query_id"),
+        *[pq_d2_table(F.col("embedding"), F.col(f"b{s}"), s, dsub).alias(f"t{s}") for s in range(m)],
+    )
+    ad2 = F.element_at("t0", F.col("codes")[0] + 1)
+    for s in range(1, m):
+        ad2 = ad2 + F.element_at(f"t{s}", F.col("codes")[s] + 1)
+    w = Window.partitionBy("query_id").orderBy("approx_d2", "cand_id")
+    return (
+        tables.crossJoin(codes.select(F.col("vec_id").alias("cand_id"), "codes"))
+        .select("query_id", "cand_id", ad2.alias("approx_d2"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "cand_id", "approx_d2")
+    )
+
+
+def _bits(rows):
+    """Rows with every double as its exact hex (NaN and null included)."""
+    def canon(v):
+        if isinstance(v, float):
+            return v.hex()
+        return tuple(v) if isinstance(v, list) else v
+
+    return sorted(tuple(canon(v) for v in r) for r in rows)
+
+
+def test_pq_encode_equals_hof_reference(spark):
+    """The kernel's codes and qerr are bit-identical to the HOF
+    reference encoder, on the corpus plus adversarial rows (null vector,
+    null element, NaN element, short, long and all-zero vectors), for
+    the sampled codebooks and for codebooks with a duplicate entry and
+    a NaN element."""
+    emb = load(spark, SF_DIR, "embeddings")
+    df = adversarial_embeddings(emb)
+    books = pq_codebooks(emb, m=4, k=16)
+    for bk in (books, _adversarial_books(books)):
+        got = _bits(pq_encode(df, bk).select("vec_id", "codes", "qerr").collect())
+        assert got == _bits(_hof_encode(df, bk).collect())
+    enc = {r[0]: r for r in _bits(pq_encode(df, _adversarial_books(books)).collect())}
+    assert enc[900001][1:] == ((0, 0, 0, 0), None)  # a null vector: code 0, null error
+    assert enc[900003][2] == "nan"  # a NaN element
+    assert 5 not in {c for r in enc.values() for c in r[1]}  # the tie goes to code 3
+
+
+def test_pq_adc_topk_equals_hof_reference(spark):
+    """The kernel's ADC scan returns exactly the HOF reference scan's
+    (query_id, cand_id, approx_d2) rows, bit for bit, with the
+    adversarial rows among the queries and the candidates. The codes
+    come from the sampled codebooks and are scored against the
+    adversarial ones, so lookups of entry 7 give NaN distances beside
+    numbers, and a null query's distances are all null."""
+    emb = load(spark, SF_DIR, "embeddings")
+    df = adversarial_embeddings(emb)
+    sampled = pq_codebooks(emb, m=4, k=16)
+    books = _adversarial_books(sampled)
+    codes = pq_encode(df, sampled)
+    q = df.filter((F.col("vec_id") % 20 == 0) | (F.col("vec_id") > 900000))
+    got = _bits(pq_adc_topk(q, codes, books, k=10).collect())
+    assert got == _bits(_hof_adc_topk(q, codes, books, 10).collect())
+    assert {r[0] for r in got} >= set(range(900001, 900007))
