@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load, query
+from ..plans.recursive import fixpoint_rounds
 from ..session import scoped_persist
 from .text import tokens
 
@@ -418,33 +419,35 @@ def connected_components(edges: DataFrame, node_col_a: str = "doc_a", node_col_b
     The pointer-jumping step (label ← label-of-label, the classic
     Shiloach-Vishkin / hash-to-min halving) doubles the distance a
     minimum travels per round, so convergence is O(log diameter):
-    ~9 rounds for that 300-chain, ~30 for a corpus-sized path. Lineage
-    is truncated per round (localCheckpoint), the same guard
-    plans/recursive.py uses. Raises ``RuntimeError`` if labels still
-    change in round ``CC_MAX_ROUNDS``: unconverged labels would split
-    components silently.
+    ~9 rounds for that 300-chain, ~30 for a corpus-sized path. The
+    rounds run on ``plans.recursive.fixpoint_rounds``: each round is
+    checkpointed once and carries every node's label from the start of
+    the round (``prev``), so the stop test is a filter on that
+    checkpoint. The symmetric edge list is checkpointed before the node
+    set is derived from it, so the upstream pair plan runs once. Raises
+    ``RuntimeError`` if labels still change in round ``CC_MAX_ROUNDS``:
+    unconverged labels would split components silently.
     """
-    sym = edges.select(
-        F.col(node_col_a).alias("a"), F.col(node_col_b).alias("b")
-    ).union(
-        edges.select(F.col(node_col_b).alias("a"), F.col(node_col_a).alias("b"))
+    sym = (
+        edges.select(F.col(node_col_a).alias("a"), F.col(node_col_b).alias("b"))
+        .union(edges.select(F.col(node_col_b).alias("a"), F.col(node_col_a).alias("b")))
+        .localCheckpoint(eager=True)
     )
     nodes = sym.select(F.col("a").alias("node")).distinct()
-    labels = nodes.withColumn("component", F.col("node")).localCheckpoint(eager=True)
-    sym = sym.localCheckpoint(eager=True)
-    for _ in range(CC_MAX_ROUNDS):
+
+    def propagate(rounds: list[DataFrame]) -> DataFrame:
+        labels = rounds[-1].select("node", F.col("component").alias("prev"))
         neighbor_min = (
             sym.join(labels, sym.b == labels.node)
             .groupBy(sym.a.alias("node2"))
-            .agg(F.min("component").alias("nbr_min"))
+            .agg(F.min("prev").alias("nbr_min"))
         )
         hopped = labels.join(
             neighbor_min, labels.node == F.col("node2"), "left"
         ).select(
             "node",
-            F.least(
-                F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-            ).alias("component"),
+            "prev",
+            F.least(F.col("prev"), F.coalesce(F.col("nbr_min"), F.col("prev"))).alias("component"),
         )
         # pointer jump: component ← component's own component. Labels
         # always point INTO the same component (they start as self and
@@ -454,29 +457,22 @@ def connected_components(edges: DataFrame, node_col_a: str = "doc_a", node_col_b
         parent = hopped.select(
             F.col("node").alias("p_node"), F.col("component").alias("p_comp")
         )
-        new_labels = (
-            hopped.join(parent, hopped.component == F.col("p_node"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("p_comp"), F.col("component"))
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
+        return hopped.join(parent, hopped.component == F.col("p_node"), "left").select(
+            "node",
+            F.least(
+                F.col("component"), F.coalesce(F.col("p_comp"), F.col("component"))
+            ).alias("component"),
+            "prev",
         )
-        stable = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .isEmpty()
-        )
-        labels = new_labels
-        if stable:
-            return labels
-    raise RuntimeError(
-        f"connected_components: labels still changing after "
-        f"CC_MAX_ROUNDS={CC_MAX_ROUNDS} rounds"
+
+    rounds = fixpoint_rounds(
+        nodes.withColumn("component", F.col("node")),
+        propagate,
+        F.col("component") != F.col("prev"),
+        CC_MAX_ROUNDS,
+        "connected_components: labels still changing after CC_MAX_ROUNDS",
     )
+    return rounds[-1].select("node", "component")
 
 
 def minhash_dedup_keep(df: DataFrame, threshold: float = 0.8, **kwargs) -> DataFrame:

@@ -88,7 +88,7 @@ def hybrid_rrf(
     return fused.orderBy(F.col("rrf_mu").desc(), "doc_id").limit(k_final)
 
 
-HYBRID_ORACLE = r"""
+HYBRID_ORACLE = rf"""
 WITH t AS (
   SELECT doc_id, list_filter(string_split_regex(text, '\s+'), x -> x != '') AS t
   FROM documents
@@ -123,11 +123,7 @@ WITH t AS (
   SELECT embedding AS v FROM embeddings WHERE vec_id = 0
 ), cos AS (
   SELECT c.vec_id AS doc_id,
-    list_sum(list_transform(list_zip(q.v, c.embedding),
-             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      / (sqrt(list_sum(list_transform(q.v, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-      AS cos_sim
+    {_sql_cos("q.v", "c.embedding")} AS cos_sim
   FROM qv q, embeddings c WHERE c.vec_id <> 0
 ), dense AS (
   SELECT doc_id, CAST(row_number() OVER (ORDER BY cos_sim DESC, doc_id) AS BIGINT) AS dense_rank
@@ -189,7 +185,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- retrieval evaluation metrics -----------------------------------------
 
-KNN_EVAL_ORACLE = """
+KNN_EVAL_ORACLE = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding AS qv, label AS qlab
   FROM embeddings WHERE vec_id % 20 = 0
@@ -197,11 +193,7 @@ WITH q AS (
 scored AS (
   SELECT
     q.query_id, q.qlab, c.vec_id AS cand_id, c.label AS clab,
-    list_sum(list_transform(list_zip(q.qv, c.embedding),
-             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      / (sqrt(list_sum(list_transform(q.qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-      AS cos_sim
+    {_sql_cos("q.qv", "c.embedding")} AS cos_sim
   FROM q JOIN embeddings c ON c.vec_id != q.query_id
 ),
 ranked AS (
@@ -293,7 +285,7 @@ def retrieval_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- grouped recall curves (the eval-dashboard slice) -----------------------
 
-RECALL_CURVE_ORACLE = """
+RECALL_CURVE_ORACLE = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding AS qv, label AS qlab
   FROM embeddings WHERE vec_id % 20 = 0
@@ -301,11 +293,7 @@ WITH q AS (
 scored AS (
   SELECT
     q.query_id, q.qlab, c.label AS clab, c.vec_id AS cand_id,
-    list_sum(list_transform(list_zip(q.qv, c.embedding),
-             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      / (sqrt(list_sum(list_transform(q.qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-      AS cos_sim
+    {_sql_cos("q.qv", "c.embedding")} AS cos_sim
   FROM q JOIN embeddings c ON c.vec_id != q.query_id
 ),
 ranked AS (

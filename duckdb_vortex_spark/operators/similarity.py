@@ -128,7 +128,7 @@ def topk_bruteforce(
     return _rank_topk(local, k)
 
 
-TOPK_ORACLE = """
+TOPK_ORACLE = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % 20 = 0
 ),
@@ -136,11 +136,7 @@ scored AS (
   SELECT
     q.query_id,
     c.vec_id AS cand_id,
-    list_sum(list_transform(list_zip(q.qv, c.embedding),
-             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      / (sqrt(list_sum(list_transform(q.qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-      AS cos_sim
+    {_sql_cos("q.qv", "c.embedding")} AS cos_sim
   FROM q JOIN embeddings c ON c.vec_id != q.query_id
 )
 SELECT query_id, cand_id, cos_sim, rnk
@@ -1050,16 +1046,12 @@ def similarity_knn_join_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame
     return ivf_topk(emb, emb, k=5).select("query_id", "cand_id")
 
 
-PAIRS_ORACLE = """
+PAIRS_ORACLE = f"""
 WITH pairs AS (
   SELECT
     a.vec_id AS id_a,
     b.vec_id AS id_b,
-    list_sum(list_transform(list_zip(a.embedding, b.embedding),
-             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-      AS cos_sim
+    {_sql_cos("a.embedding", "b.embedding")} AS cos_sim
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
   WHERE a.vec_id % 10 = 0 AND b.vec_id % 10 = 0
 )
@@ -1158,7 +1150,7 @@ def similarity_label_centroid_matrix(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-TOPK_PAIRS_ORACLE = """
+TOPK_PAIRS_ORACLE = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % 20 = 0
 ),
@@ -1166,11 +1158,7 @@ scored AS (
   SELECT
     q.query_id,
     c.vec_id AS cand_id,
-    list_sum(list_transform(list_zip(q.qv, c.embedding),
-             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      / (sqrt(list_sum(list_transform(q.qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-      AS cos_sim
+    {_sql_cos("q.qv", "c.embedding")} AS cos_sim
   FROM q JOIN embeddings c ON c.vec_id != q.query_id
 )
 SELECT query_id, cand_id

@@ -8,9 +8,11 @@ query. Pure integer arithmetic end-to-end, so the iterative Spark
 loop and DuckDB's recursive CTE agree exactly.
 
 Scale: each hop is two equi joins (frontier⋈edges by side), shuffled
-on the node key; the frontier is localCheckpoint-ed per iteration
-(plans/recursive.py's lineage discipline), and hop count bounds the
-loop — state is O(reached nodes), never O(paths)."""
+on the node key; the hops run on ``recursive_cte``, so each round's
+frontier is materialized once by ``plans.recursive.fixpoint_rounds``,
+and hop count bounds the loop — state is O(reached nodes), never
+O(paths). ``pagerank`` keeps its own fixed-count loop: it has no
+convergence test."""
 
 from __future__ import annotations
 

@@ -5,7 +5,10 @@ and is not part of a docstring (a string literal that is the first
 statement of a module, class or function). Lines are found with
 ``tokenize``; docstrings with ``ast``.
 
-Usage: python scripts/code_lines.py FILE [FILE ...]
+Usage: python scripts/code_lines.py PATH [PATH ...]
+
+A PATH that is a directory stands for every ``*.py`` file under it, in
+sorted order.
 
 Prints one line per file, ``<physical> <code> <path>``, followed by one
 indented line per top-level def or class, ``<physical> <code> <name>``
@@ -19,6 +22,7 @@ import io
 import os
 import sys
 import tokenize
+from pathlib import Path
 
 _NON_CODE = {
     tokenize.COMMENT,
@@ -71,11 +75,23 @@ def count(path: str) -> tuple[int, int, list[tuple[str, int, int]]]:
     return len(src.splitlines()), len(code), defs
 
 
+def _files(paths: list[str]) -> list[str]:
+    """``paths`` with each directory replaced by its ``*.py`` files,
+    sorted."""
+    out: list[str] = []
+    for path in paths:
+        if os.path.isdir(path):
+            out.extend(sorted(str(p) for p in Path(path).rglob("*.py")))
+        else:
+            out.append(path)
+    return out
+
+
 def main(paths: list[str]) -> None:
     if not paths:
         sys.exit(__doc__)
     tot_phys = tot_code = 0
-    for path in paths:
+    for path in _files(paths):
         phys, code, defs = count(path)
         tot_phys += phys
         tot_code += code

@@ -15,12 +15,19 @@ ENTRIES = catalog.entries()
 # entry -> (most Spark jobs its builder may run at sf0.001, why it runs
 # any). Every entry not listed builds its DataFrame with no job.
 BUILD_JOBS: dict[str, tuple[int, str]] = {
-    # fixpoint loops: connected_components / recursive_cte rounds
-    "pipeline_fuzzy_curation_manifest": (76, "connected-components rounds over MinHash pairs"),
-    "dedup_minhash_keep_canonical": (74, "connected-components rounds over MinHash pairs"),
-    "dedup_connected_components": (58, "connected-components rounds, one eager checkpoint each"),
-    "graph_bfs_hops": (34, "recursive_cte rounds, one eager checkpoint each"),
-    "structure_recursive_cte": (27, "recursive_cte rounds, one eager checkpoint each"),
+    # fixpoint loops: plans.recursive.fixpoint_rounds under
+    # connected_components / recursive_cte
+    "pipeline_fuzzy_curation_manifest": (
+        52,
+        "connected-components rounds over MinHash pairs, one materialization per round",
+    ),
+    "dedup_minhash_keep_canonical": (
+        50,
+        "connected-components rounds over MinHash pairs, one materialization per round",
+    ),
+    "dedup_connected_components": (44, "connected-components rounds, one materialization per round"),
+    "graph_bfs_hops": (33, "recursive_cte rounds, one materialization per round"),
+    "structure_recursive_cte": (27, "recursive_cte rounds, one materialization per round"),
     "graph_pagerank_bipartite": (22, "three iterations, one eager localCheckpoint each"),
     # streaming chains: micro-batches land in VTX1 stores at build
     "stream_incremental_ingest_pipeline": (70, "two chain batches: gates, store writes, manifest"),

@@ -235,26 +235,53 @@ def test_span_trim_invariants(spark):
         assert full == 1, f"dup group kept {full} full copies"
 
 
-def _path_and_clique(spark):
-    path = [(i, i + 1) for i in range(119)]  # 0-1-2-...-119
-    clique = [(1000, 1001), (1001, 1002), (1000, 1002)]
-    return spark.createDataFrame(path + clique, ["doc_a", "doc_b"])
+_PATH = [(i, i + 1) for i in range(119)]  # 0-1-2-...-119
+_CLIQUE = [(1000, 1001), (1001, 1002), (1000, 1002)]
+
+# Graphs that stress min-label propagation, each an undirected pair list.
+_CC_GRAPHS = {
+    # diameter 119: plain 1-hop propagation would need 119 rounds, past
+    # the 50-round cap; a disjoint 3-clique keeps its own minimum
+    "path_and_clique": _PATH + _CLIQUE,
+    # the same path listed from its far end, every pair (larger, smaller)
+    "descending_path": [(i + 1, i) for i in reversed(range(119))],
+    # every leaf's minimum reaches the others only through the hub
+    "star_hub_largest": [(500, i) for i in range(40)],
+    "clique": [(a, b) for a in range(10, 18) for b in range(a + 1, 18)],
+    "duplicates_and_self_loop": [(3, 4), (4, 3), (3, 4), (4, 5), (5, 5), (9, 9), (4, 4)],
+    # two interleaved paths: evens and odds never meet
+    "two_components": [(i, i + 2) for i in range(38)],
+}
 
 
-def test_connected_components_long_path_converges(spark):
-    """Pointer jumping (r6): a 120-node PATH has diameter 119 — plain
-    1-hop min-propagation would need 119 rounds, past the 50-round cap;
-    label-of-label halving converges in O(log d). Every node must label
-    to node 0, and a disjoint 3-clique must keep its own minimum."""
+def _edges(spark, pairs):
+    return spark.createDataFrame(pairs, "doc_a bigint, doc_b bigint")
+
+
+@pytest.mark.parametrize("graph", sorted(_CC_GRAPHS))
+def test_connected_components_long_path_converges(spark, graph):
+    """Pointer jumping (r6) converges in O(log diameter) rounds, and
+    every node's component equals the driver union-find reference's
+    (the minimum id of its component) on each adversarial graph."""
     from duckdb_vortex_spark.operators.dedup import connected_components
 
-    got = {
-        r.node: r.component
-        for r in connected_components(_path_and_clique(spark)).collect()
-    }
-    assert all(got[i] == 0 for i in range(120))
-    assert all(got[i] == 1000 for i in (1000, 1001, 1002))
-    assert len(got) == 123
+    from .graph_reference import union_find_components
+
+    got = connected_components(_edges(spark, _CC_GRAPHS[graph])).collect()
+    assert len(got) == len({r.node for r in got})
+    assert {r.node: r.component for r in got} == union_find_components(_CC_GRAPHS[graph])
+
+
+def test_connected_components_job_budget(spark):
+    """One materialization per round: the 120-node path builds with at
+    most the jobs measured on the one-helper loop (its rounds, the
+    edge-list and seed checkpoints), with no convergence join."""
+    from duckdb_vortex_spark.operators.dedup import connected_components
+
+    from .conftest import run_counting_jobs
+
+    _, jobs = run_counting_jobs(spark, lambda: connected_components(_edges(spark, _PATH)))
+    assert jobs <= 66, jobs  # 87 with the parent's convergence join
 
 
 def test_connected_components_raises_at_cap(spark, monkeypatch):
@@ -265,7 +292,7 @@ def test_connected_components_raises_at_cap(spark, monkeypatch):
 
     monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="connected_components.*CC_MAX_ROUNDS=1"):
-        dedup.connected_components(_path_and_clique(spark))
+        dedup.connected_components(_edges(spark, _CC_GRAPHS["path_and_clique"]))
 
 
 def test_minhash_expr_form_identical(spark):

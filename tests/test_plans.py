@@ -163,14 +163,29 @@ def test_recursive_raises_when_frontier_outlives_cap(spark):
         recursive_cte(*_cycle(spark), distinct=False, max_iterations=5)
 
 
-def test_recursive_union_all_depth(spark):
+@pytest.mark.parametrize("depth", [5, 25])
+def test_recursive_union_all_depth(spark, depth):
+    """A depth of 25 runs past any fixed checkpoint cadence: the
+    result is the flat union of every round's checkpoint."""
     seed = spark.createDataFrame([(0,)], ["n"])
 
     def step(frontier):
-        return frontier.filter(F.col("n") < 5).select((F.col("n") + 1).alias("n"))
+        return frontier.filter(F.col("n") < depth).select((F.col("n") + 1).alias("n"))
 
     out = recursive_cte(seed, step)
-    assert _rows(out) == [(i,) for i in range(6)]
+    assert _rows(out) == [(i,) for i in range(depth + 1)]
+
+
+def test_recursive_distinct_returns_duplicate_seed_row_once(spark):
+    """UNION-distinct recursion is a set: a row the seed holds twice
+    (and the step produces again) is in the result once."""
+    seed = spark.createDataFrame([(0,), (0,), (1,)], ["n"])
+
+    def step(frontier):
+        return frontier.filter(F.col("n") < 3).select((F.col("n") + 1).alias("n"))
+
+    out = recursive_cte(seed, step, distinct=True)
+    assert _rows(out) == [(0,), (1,), (2,), (3,)]
 
 
 def test_lint_plan_flags_cartesian_and_passes_clean(spark):
