@@ -36,11 +36,7 @@ N_TIMED = 3  # timed runs per query (after 1 warm-up); median reported
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from duckdb_vortex_spark import catalog
-from duckdb_vortex_spark.session import (
-    get_spark,
-    quiet_accumulator_noise,
-    release_persisted,
-)
+from duckdb_vortex_spark.session import get_spark, quiet_accumulator_noise
 
 # Headline set: the flagship relational queries + the scale-critical
 # LLM-pipeline operators. Kept explicit so bench time stays bounded as
@@ -139,9 +135,9 @@ def main() -> None:
         med = statistics.median(runs)
         timings[name] = round(med, 4)
         spreads[name] = round((max(runs) - min(runs)) / med, 2) if med else 0.0
-        # Some operators persist() intermediates (minhash/simhash sigs,
-        # token arrays). Left in place they accumulate across the 20
-        # queries and the resulting executor-memory/GC pressure inflates
+        # Cached frames and the blocks of lineage cuts (minhash/simhash
+        # sigs, token arrays) left in place accumulate across the 20
+        # queries, and the resulting executor-memory/GC pressure inflates
         # later timings (q21 measured 2.0 s solo vs 5.0 s at the tail of
         # a dirty session). Clearing AFTER each query keeps measurements
         # independent while the warm-up → timed pair still shares cache.
@@ -150,7 +146,6 @@ def main() -> None:
         # are only unlinked once the driver GC collects their handles,
         # and the default periodic GC (30 min) never fires inside a
         # bench run.
-        release_persisted()  # drain the scoped-persist registry (ADVICE r12)
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
         # Let the ContextCleaner DRAIN before the next query's timed

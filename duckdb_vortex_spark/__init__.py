@@ -73,8 +73,6 @@ _EXPORTS = {
         "window_counts_hot_isolated",
     ),
     "lint_final_plan": ("duckdb_vortex_spark.plans.lint", "lint_final_plan"),
-    "scoped_persist": ("duckdb_vortex_spark.session", "scoped_persist"),
-    "release_persisted": ("duckdb_vortex_spark.session", "release_persisted"),
     "run_slt_file": ("duckdb_vortex_spark.compat.slt", "run_slt_file"),
     "chunk_documents": ("duckdb_vortex_spark.operators.chunking", "chunk_documents"),
     "normalize_embeddings": ("duckdb_vortex_spark.operators.chunking", "normalize_embeddings"),

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load, query
 from ..plans.recursive import fixpoint_rounds
-from ..session import scoped_persist
 from .text import tokens
 
 # --- shared shingling ---------------------------------------------------
@@ -37,9 +36,10 @@ def shingles(col, n: int = 3) -> Column:
     PERF: the tokenization expression is inlined into the per-index
     lambda by Catalyst (no CSE into lambdas), i.e. split+filter runs
     once per *shingle*, not once per row. Fine for one-shot use; for
-    hot paths, materialize the token array first (``.persist()`` or an
-    exchange boundary) and call :func:`shingles_from_tokens` on the
-    resulting attribute — ~5× faster on the documents corpus."""
+    hot paths, materialize the token array first (a lineage cut,
+    ``localCheckpoint``, or an exchange boundary) and call
+    :func:`shingles_from_tokens` on the resulting attribute — ~5× faster
+    on the documents corpus."""
     return shingles_from_tokens(tokens(col), n)
 
 
@@ -170,13 +170,14 @@ def ngram_jaccard_pairs_bruteforce(
     any size but only *affordable* as the verifier on candidate pairs
     or on oracle-scale corpora; the scale path is minhash_lsh_pairs.
 
-    The shingle table is persist()ed: the optimizer otherwise inlines
-    the tokenize+shingle expression past the theta join and recomputes
-    it once per PAIR instead of once per doc (interpreted HOFs, no
-    CSE) — measured 2× on the bounded fixture. Built via
-    :func:`shingle_table` so the cache BUILD pays tokenize once per
-    row, not once per shingle index (round 5: 3.07 → 0.32 s/sf0.1)."""
-    sh = scoped_persist(shingle_table(df, text_col, id_col, n))
+    The shingle table's lineage is cut (``localCheckpoint``): the
+    optimizer otherwise inlines the tokenize+shingle expression past the
+    theta join and recomputes it once per PAIR instead of once per doc
+    (interpreted HOFs, no CSE) — measured 2× on the bounded fixture.
+    Built via :func:`shingle_table` so the cut pays tokenize once per
+    row, not once per shingle index (round 5: 3.07 → 0.32 s/sf0.1). The
+    cut is lazy and its blocks live as long as the returned frame."""
+    sh = shingle_table(df, text_col, id_col, n).localCheckpoint(eager=False)
     a = sh.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("id").alias("doc_b"), F.col("sh").alias("sh_b"))
     return _with_jaccard(a.join(b, F.col("doc_a") < F.col("doc_b"))).filter(
@@ -329,10 +330,10 @@ def minhash_lsh_pairs(
     # minhash expressions, so tokenize+shingle work runs k times/row.
     sig = minhash_signatures(df, text_col, id_col, num_hashes, n)
     # The signature table feeds three consumers (bucketing, and both
-    # sides of the verify join); persist it so shingling+hashing runs
-    # once — at 100 TB this is the classic two-phase layout where the
-    # signature table would be written out before the join phase.
-    sig = scoped_persist(sig)
+    # sides of the verify join); cut its lineage so shingling+hashing
+    # runs once — at 100 TB this is the classic two-phase layout where
+    # the signature table would be written out before the join phase.
+    sig = sig.localCheckpoint(eager=False)
     buckets = band_buckets(sig, num_hashes, rows_per_band)
     bucket_sizes = buckets.groupBy("band", "h").agg(F.count("*").alias("bn"))
     # Every (band, h)-keyed join below is pinned shuffle_hash: the
@@ -709,9 +710,10 @@ def simhash_neardup_pairs(
             for (oi, wi), (oj, wj) in combinations(blocks, 2)
         ]
     )
-    # persist AFTER argument validation: an error path must not leave
-    # a registered cache entry behind (r13 review)
-    sig = scoped_persist(simhash(df, text_col, id_col).withColumnRenamed(id_col, "id"))
+    # the signature table feeds the bucketing and both verify joins: cut
+    # its lineage so the hashing runs once
+    sig = simhash(df, text_col, id_col).withColumnRenamed(id_col, "id")
+    sig = sig.localCheckpoint(eager=False)
     buckets = sig.select("id", F.posexplode(band_vals).alias("band", "h"))
     a = buckets.select("band", "h", F.col("id").alias("doc_a"))
     b = buckets.select("band", "h", F.col("id").alias("doc_b"))
@@ -813,7 +815,8 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     m = max(1, math.ceil(d.count() / 320.0))
-    sh = scoped_persist(shingle_table(d.filter(F.col("doc_id") % m == 0), "text", "doc_id", 3))
+    sh = shingle_table(d.filter(F.col("doc_id") % m == 0), "text", "doc_id", 3)
+    sh = sh.localCheckpoint(eager=False)
     a = sh.select(F.col("id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("id").alias("doc_b"), F.col("sh").alias("sh_b"))
     sized = (

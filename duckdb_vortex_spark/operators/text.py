@@ -15,7 +15,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load, query
-from ..session import scoped_persist
 
 # Stopwords for the quality heuristic: tiny, fixed, English-ish. The
 # point is the Spark plumbing (set-membership ratio over tokens), not
@@ -281,7 +280,7 @@ def text_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     would switch to approx_count_distinct (HLL, no shuffle of raw
     tokens) — kept exact here for the oracle."""
     d = load(spark, sf_dir, "documents")
-    toks = scoped_persist(d.select("doc_id", tokens("text").alias("toks")))
+    toks = d.select("doc_id", tokens("text").alias("toks")).localCheckpoint(eager=False)
     counts = toks.select(F.size("toks").cast("bigint").alias("n"))
     vocab = (
         toks.select(F.explode("toks").alias("tok"))

@@ -1,5 +1,5 @@
 """Physical-plan linting as a user-facing API (the programmatic form
-of tests/test_plan_contracts.py): inspect an executed plan for the
+of the catalog-wide lint in tests/test_catalog_oracle.py): inspect an executed plan for the
 three classic scale killers before shipping a pipeline to a cluster.
 
 At 100 TB a plan defect is an outage, not a slowdown — a cartesian
@@ -271,8 +271,7 @@ def fact_broadcast_findings(
     side of ``df``'s physical plan. Empty list = clean. Treat any hit
     as the q21-class scale bug unless the entry deliberately broadcasts
     a bounded slice the filter heuristic cannot see (declare it where
-    you assert, the way tests/test_catalog_plan_lint.py::FACT_BCAST_OK
-    does).
+    you assert, with a reason).
 
     A filter/reduction only clears a scan if it sits on the scan's own
     ancestor path to the BroadcastExchange root — a filtered sibling
@@ -322,8 +321,8 @@ def heuristic_broadcast_findings(
     large DIMENSION you intend to broadcast — say a 300 MB enrichment
     table on a cluster with fat executors — is flagged exactly like a
     fact, because on-disk size is all this heuristic sees. Raise
-    ``min_bytes`` or treat the finding as a declaration prompt, the
-    way FACT_BCAST_OK declarations work in the CI form. Conversely a
+    ``min_bytes`` or treat the finding as a prompt to declare the
+    broadcast deliberate, with a reason. Conversely a
     source smaller than ``min_bytes`` TODAY that grows 1000× in
     production is missed — the named-fact-table form stays the
     stronger contract when you do know your facts.

@@ -10,7 +10,6 @@ timestamp round-trip semantics: /root/reference/test/sql/timestamp.test).
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import SparkSession
 
@@ -135,60 +134,13 @@ def quiet_accumulator_noise(spark: SparkSession) -> bool:
     return True
 
 
-# ADVICE r13: list mutation is guarded by a lock so concurrent
-# scoped_persist/release_persisted calls from a multithreaded driver
-# can't corrupt the registry. NOTE the semantic contract stays
-# single-operation-at-a-time: release_persisted() drains EVERYTHING,
-# so a release at one operation's boundary still unpersists frames a
-# concurrent operation is mid-query on (silent recompute, not wrong
-# results — unpersist never changes values). Multithreaded drivers
-# should serialize operation boundaries or skip the drain.
-_PERSISTED: list = []
-_PERSISTED_LOCK = threading.Lock()
-
-
-def scoped_persist(df):
-    """``df.persist()`` with eager-release bookkeeping (ADVICE r12).
-
-    The pair-generating operators (MinHash/SimHash/shingle/token
-    frames with 2–3 downstream join consumers) persist intermediates;
-    a bare ``persist()`` with no ``unpersist()`` accumulates cached
-    blocks across repeated calls in one long session. Every such site
-    routes through here, and harnesses (bench.py, the verify gate)
-    call :func:`release_persisted` after materializing each query's
-    result. Caller contract: release AFTER the returned DataFrame is
-    materialized — unpersisting earlier silently degrades the persist
-    to a no-op and recomputes the frame per consumer.
-
-    Library consumers: a long-lived session calling these operators in
-    a loop should call :func:`release_persisted` (exported at package
-    level) at its own operation boundaries — the registry holds strong
-    references on purpose (a weak registry could not drain the JVM
-    cache entries its frames pin), so without a drain call it grows by
-    one small handle per persist, on top of the cached blocks the
-    persist itself already retains (which is the pre-existing persist
-    contract, not new retention).
-    """
-    p = df.persist()
-    with _PERSISTED_LOCK:
-        _PERSISTED.append(p)
-    return p
-
-
 def release_persisted() -> int:
-    """Unpersist every frame registered via :func:`scoped_persist`;
-    returns how many were released. Safe to call at any time (frames
-    already materialized keep their computed results)."""
-    with _PERSISTED_LOCK:
-        drained, _PERSISTED[:] = _PERSISTED[:], []
-    n = 0
-    for frame in drained:
-        try:
-            frame.unpersist()
-            n += 1
-        except Exception:
-            pass  # session gone / already unpersisted: nothing to leak
-    return n
+    """Returns 0: operators cut their intermediates' lineage with
+    ``localCheckpoint(eager=False)``, whose blocks live as long as the
+    frame, so there is no registry left to drain.
+    ``perfbench/catalog_mix.py`` is its last caller; the next change to
+    the benchmark deletes both that call and this function."""
+    return 0
 
 
 def pin_utc(spark: SparkSession) -> SparkSession:

@@ -116,26 +116,28 @@ def decontam_process_batch(
         # persisted, the tiny index pins both broadcast builds (ebuck + esh)
         # to one scan
         esig = load_eval_index(spark_, index_dir) if own_index else eval_index_df
-        flags = decontaminate_against_index(
-            batch_df,
-            esig,
-            text_col=text_col,
-            id_col=id_col,
-            threshold=threshold,
-            num_hashes=num_hashes,
-            n=n,
-            rows_per_band=rows_per_band,
-        )
-        passthrough = [c for c in batch_df.columns if c not in (text_col,)]
-        manifest = (
-            batch_df.select(*passthrough)
-            # flags is batch-bounded → broadcast (r16, guide §3.1)
-            .join(F.broadcast(flags), F.col(id_col) == flags.id)
-            .select(*passthrough, "max_jaccard", "is_kept")
-        )
-        overwrite_batch_atomic(manifest, manifest_dir, batch_id)
-        if own_index:
-            esig.unpersist()
+        try:
+            flags = decontaminate_against_index(
+                batch_df,
+                esig,
+                text_col=text_col,
+                id_col=id_col,
+                threshold=threshold,
+                num_hashes=num_hashes,
+                n=n,
+                rows_per_band=rows_per_band,
+            )
+            passthrough = [c for c in batch_df.columns if c not in (text_col,)]
+            manifest = (
+                batch_df.select(*passthrough)
+                # flags is batch-bounded → broadcast (r16, guide §3.1)
+                .join(F.broadcast(flags), F.col(id_col) == flags.id)
+                .select(*passthrough, "max_jaccard", "is_kept")
+            )
+            overwrite_batch_atomic(manifest, manifest_dir, batch_id)
+        finally:
+            if own_index:
+                esig.unpersist()
 
 
 def incremental_decontam_stream(

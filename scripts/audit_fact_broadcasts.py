@@ -5,7 +5,7 @@ FACT table scanned without a selective filter or reducing operator.
 
 The check itself lives in `duckdb_vortex_spark.plans.lint.
 fact_broadcast_findings` and runs in CI on every entry
-(tests/test_catalog_plan_lint.py); this script is the ad-hoc CLI form
+(tests/test_catalog_oracle.py); this script is the ad-hoc CLI form
 for auditing after a plan change without waiting on the suite.
 
 Background: the local 64 MB broadcast threshold sees the PROJECTED
@@ -15,7 +15,7 @@ cost +0.86 s of 1.95 s at the 8x replica, q4 broadcast a 4.8M-row
 lineitem build (CHANGES_r11.md).
 
 Usage: python scripts/audit_fact_broadcasts.py [entry ...]
-Exit 1 on any hit not declared in the CI test's FACT_BCAST_OK.
+Exit 1 on any hit.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 def main() -> int:
-    from tests.test_catalog_plan_lint import FACT_BCAST_OK, FACT_TABLES
+    from tests.test_catalog_oracle import FACT_TABLES
 
     names = [a for a in sys.argv[1:] if not a.startswith("-")] or sorted(
         catalog.queries()
@@ -56,9 +56,6 @@ def main() -> int:
             continue
         hits = fact_broadcast_findings(df, FACT_TABLES)
         if not hits:
-            continue
-        if name in FACT_BCAST_OK:
-            print(f"  ok   {name}: fact broadcast ({hits}) — {FACT_BCAST_OK[name]}")
             continue
         flagged.append((name, hits))
         print(f"  FLAG {name}: unfiltered fact table(s) {hits} on a broadcast build side")

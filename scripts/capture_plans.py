@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
 from duckdb_vortex_spark import catalog  # noqa: E402
-from duckdb_vortex_spark.session import get_spark, release_persisted  # noqa: E402
+from duckdb_vortex_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -39,7 +39,6 @@ def main() -> None:
         )
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
-        release_persisted()
         spark.catalog.clearCache()
         print(f"captured {name}_{tag}.txt", file=sys.stderr)
     spark.stop()

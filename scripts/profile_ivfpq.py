@@ -19,7 +19,7 @@ from duckdb_vortex_spark.operators.similarity import (  # noqa: E402
     ivfpq_index,
     ivfpq_probe,
 )
-from duckdb_vortex_spark.session import get_spark, release_persisted  # noqa: E402
+from duckdb_vortex_spark.session import get_spark  # noqa: E402
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -41,7 +41,6 @@ def main() -> None:
         out["build"].append(round(t1 - t0, 3))
         out["probe"].append(round(t2 - t1, 3))
         out["total"].append(round(t2 - t0, 3))
-        release_persisted()
         spark.catalog.clearCache()
     meds = {k: statistics.median(v[1:]) for k, v in out.items()}
     print(json.dumps({"runs": out, "medians": meds, "cand_parts": idx.cand.rdd.getNumPartitions()}))

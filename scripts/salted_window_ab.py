@@ -59,7 +59,7 @@ def _join_output(spark, sf_dir: str):
 
 
 # Each arm builds its OWN frames, and only the persisted arm calls
-# scoped_persist — and only at its own build time (r13 review: a
+# persist() — and only at its own build time (r13 review: a
 # shared _build_frames registered the persist at build of ALL arms,
 # so whichever arm ran FIRST paid the cache build against a cached lo
 # it never asked for, and after the first clean() the persisted arm
@@ -88,12 +88,11 @@ def _arm_salt(spark, sf_dir: str):
 def _arm_salt_persisted(spark, sf_dir: str):
     # the practical form: persist the join output so the helper's two
     # consumers (totals pass + attach pass) pay the skewed join ONCE —
-    # each timed run pays its own cache build (cleanup drops it after)
+    # each timed run pays its own cache build (clean() drops it after)
     from duckdb_vortex_spark.plans.skew import window_counts_hot_isolated
-    from duckdb_vortex_spark.session import scoped_persist
 
     return window_counts_hot_isolated(
-        scoped_persist(_join_output(spark, sf_dir)), ["l_orderkey"], AGGS,
+        _join_output(spark, sf_dir).persist(), ["l_orderkey"], AGGS,
         hot_row_threshold=HOT_ROW_THRESHOLD,
     )
 
@@ -109,17 +108,12 @@ def measure_main(sf_dir: str, rounds: int) -> None:
     from pyspark.sql import functions as F
 
     from bench import _materialize
-    from duckdb_vortex_spark.session import (
-        get_spark,
-        quiet_accumulator_noise,
-        release_persisted,
-    )
+    from duckdb_vortex_spark.session import get_spark, quiet_accumulator_noise
 
     spark = get_spark("dvs-salted-window")
     quiet_accumulator_noise(spark)
 
     def clean() -> None:
-        release_persisted()
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
         time.sleep(1.0)

@@ -41,6 +41,13 @@ def oracle():
     con.close()
 
 
+@pytest.fixture(scope="session")
+def linted():
+    """Entry name -> the plan-lint findings of its one build in this
+    session (``test_catalog_oracle.entry_plan_findings``)."""
+    return {}
+
+
 def run_counting_jobs(spark, fn):
     """(fn(), the number of Spark jobs submitted while it ran), counted
     under a job group of its own through ``statusTracker()``."""
@@ -53,6 +60,12 @@ def run_counting_jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def cache_is_empty(spark) -> bool:
+    """Whether Spark's cache manager holds no cached frame: nothing
+    ``persist()``-ed in this session is still registered."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def _canon_value(v) -> str:

@@ -94,48 +94,6 @@ def test_remote_fs_scan_paths_labeled_size_unchecked():
     assert "truncated" not in hits[0]
 
 
-def test_release_persisted_thread_safe_drain():
-    """ADVICE r13: registry mutation is lock-guarded; a concurrent
-    hammer of persist-registrations + drains must never lose or
-    double-release a handle."""
-    import threading
-
-    from duckdb_vortex_spark import session as S
-
-    released = []
-
-    class _FakeDF:
-        def unpersist(self):
-            released.append(self)
-
-        def persist(self, *a):
-            return self
-
-    n_threads, per_thread = 8, 200
-    registered = []
-
-    def producer():
-        for _ in range(per_thread):
-            df = _FakeDF()
-            registered.append(df)
-            S.scoped_persist(df)
-
-    def drainer():
-        for _ in range(50):
-            S.release_persisted()
-
-    threads = [threading.Thread(target=producer) for _ in range(n_threads)] + [
-        threading.Thread(target=drainer) for _ in range(2)
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    S.release_persisted()
-    assert len(released) == n_threads * per_thread
-    assert len(set(map(id, released))) == len(released), "double-release"
-
-
 def test_land_session_dataset_raises_classic_required_on_connect():
     """VERDICT r14 wrong #3: the driver-local landing helper read
     ``sparkContext.applicationId`` OUTSIDE its py4j guard, so on

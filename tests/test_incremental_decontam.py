@@ -10,6 +10,7 @@ import glob
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from duckdb_vortex_spark.catalog import load
@@ -22,7 +23,7 @@ from duckdb_vortex_spark.streaming.incremental_decontam import (
 )
 from duckdb_vortex_spark.streaming.sinks import batch_dirs
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, cache_is_empty
 
 
 def _manifest(spark, man_d):
@@ -134,3 +135,19 @@ def test_retried_batch_is_idempotent(spark, tmp_path):
     }
     assert first == again
     assert len(glob.glob(os.path.join(man_d, "batch-*"))) == 1
+
+
+def test_failed_manifest_write_releases_own_index(spark, tmp_path):
+    """A batch that loads the eval index itself releases it also when
+    its manifest write fails: the failure propagates and no cached
+    frame outlives the batch."""
+    register(spark)
+    docs = load(spark, SF_DIR, "documents").limit(40)
+    idx_d = str(tmp_path / "idx")
+    build_eval_index(docs.filter(F.col("source") == "src0"), idx_d)
+    man_d = tmp_path / "man"
+    man_d.write_text("")  # a file where the manifest dir should be
+    spark.catalog.clearCache()  # what earlier tests left cached is not checked here
+    with pytest.raises(Exception, match="Not a directory"):
+        decontam_process_batch(docs.filter(F.col("source") != "src0"), 0, idx_d, str(man_d))
+    assert cache_is_empty(spark)

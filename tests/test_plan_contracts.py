@@ -12,6 +12,7 @@ from duckdb_vortex_spark import catalog
 from duckdb_vortex_spark.plans.lint import _is_reduced, broadcast_subtrees, re_scan
 
 from .conftest import SF_DIR
+from .test_catalog_oracle import entry_plan_findings
 
 ENTRIES = catalog.entries()
 
@@ -161,54 +162,14 @@ def test_vortex_scan_prunes_columns(spark, tmp_path):
     assert "n_comment" not in plan.split("ReadSchema")[-1] if "ReadSchema" in plan else True
 
 
-# Entries where a nested-loop/cartesian strategy is the correct plan
-# (explicit cross join, non-equi-only predicates) or Python execution
-# is the point (UDTF).
-_NESTED_LOOP_OK = {
-    "join_cross",
-    "join_range_inequality",
-    "join_self_pairs",
-    "similarity_neardup_pairs",
-    "dedup_ngram_jaccard_pairs",
-    "dedup_containment_pairs",  # ordered-pair theta join, same bounded fixture
-    "sketch_count_min_estimate",  # |keys|x4 probes vs 256-row broadcast sketch
-    "structure_scalar_subquery",
-    "structure_correlated_exists",
-    "tpch_q22_global_sales_opportunity",  # 1-row scalar (avg balance) broadcast cross
-    "string_levenshtein_pairs",  # theta-join over a tiny broadcast dim by design
-    "tpch_q11_important_stock",  # 1-row global total broadcast cross by design
-    "geo_points_within_radius",  # small-side theta join; grid-cell join at scale
-    "text_bigram_lift",  # 1-row corpus-total broadcast cross (single-pass form)
-    "pipeline_source_mixture_weights",  # 1-row corpus-totals broadcast cross
-    "sample_temperature_mixture",  # same 1-row totals cross in its rate subtree
-    "sketch_hll_distinct",  # 1-row HLL-estimate broadcast joined to the exact count
-    "sketch_histogram_quantile",  # 1-row extent + ≤1024-row sketch × 3 probes, all constant-size
-    "sketch_histogram_grouped_quantiles",  # per-group sketch × 2 probes, constant-size build sides
-    "stats_drift_chi_square",  # 1-row extent + totals broadcasts over the 64-row cell table
-    "sketch_hll_daily_cumulative",  # 64-row register-grid broadcast, constant at any volume
-    "stream_hll_distinct_events",  # 1-row register-estimate broadcast joined to the exact count
-    "basket_brand_affinity",  # 1-row order-total broadcast for the lift denominator
-    "stats_drift_ks",  # 1-row cohort-totals broadcast over the distinct-value ECDF
-    "text_bm25_topk",  # 1-row corpus-stats broadcast (n_docs, tot_len in-plan)
-    "sketch_hll_set_intersection",  # 1-row audit x 1-row pivoted-estimates cross
-    "retrieval_hybrid_rrf",  # 40-row full-outer fuse of the two top-20 lists
-}
-_PYTHON_EVAL_OK = {
-    "udtf_split_sentences",       # Python UDTF by design
-    "multimodal_feature_extract",  # mapInPandas decode by design
-}
-
-
 @pytest.mark.parametrize("name", sorted(ENTRIES))
-def test_plan_lint(name, spark):
+def test_plan_lint(name, spark, linted):
     """Every catalog entry's physical plan is free of accidental
-    cartesian products and row-at-a-time Python evaluation."""
-    plan = _plan(spark, name)
-    if name not in _NESTED_LOOP_OK:
-        assert "CartesianProduct" not in plan, f"{name}: unexpected cartesian"
-        assert "BroadcastNestedLoopJoin" not in plan, f"{name}: unexpected NL join"
-    if name not in _PYTHON_EVAL_OK:
-        assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
+    cartesian products, nested-loop joins and row-at-a-time Python
+    evaluation: the lint of its one build in this session
+    (``test_catalog_oracle.entry_plan_findings``)."""
+    findings = entry_plan_findings(spark, linted, name)
+    assert not findings, f"{name}: {findings}"
 
 
 def test_runtime_bloom_filter_injection(spark):

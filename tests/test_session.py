@@ -1,35 +1,9 @@
-"""Session harness helpers (ADVICE r12): the scoped-persist registry
-and the message-scoped accumulator-noise filter."""
+"""Session harness helpers: the message-scoped accumulator-noise filter
+and the generated-class cache size."""
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
-
-from duckdb_vortex_spark.session import (
-    _PERSISTED,
-    quiet_accumulator_noise,
-    release_persisted,
-    scoped_persist,
-)
-
-
-def test_scoped_persist_registers_and_releases(spark):
-    release_persisted()  # start clean
-    df = scoped_persist(spark.range(100))
-    assert df.storageLevel.useMemory
-    assert len(_PERSISTED) == 1
-    df.count()  # materialize the cache
-    assert release_persisted() == 1
-    assert _PERSISTED == []
-    assert df.storageLevel == StorageLevel.NONE
-    # releasing with nothing registered is a no-op
-    assert release_persisted() == 0
-
-
-def test_release_persisted_safe_after_double_unpersist(spark):
-    df = scoped_persist(spark.range(5))
-    df.unpersist()  # caller raced the registry: release must not raise
-    assert release_persisted() == 1
+from duckdb_vortex_spark.session import quiet_accumulator_noise
 
 
 def test_quiet_accumulator_noise_scoped_and_idempotent(spark):
