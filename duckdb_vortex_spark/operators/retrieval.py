@@ -523,14 +523,19 @@ def retrieval_ann_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k · |Q|), exact-integer µ-quantized like the sibling curves.
 
     Scale: the exact baseline is the oracle-tier ground truth (a tuning
-    harness computes it once on a sample); each ANN leg is the shipped
-    bucketed plan (centroids/codebooks broadcast, probed-cluster scans)
-    and the curve itself decorates 6 top-k lists of |Q|·k rows — all
-    counting happens on bounded frames; |Q| is counted once on the
-    driver and enters every row as a literal. Each leg is localCheckpointed:
-    it feeds two cutoffs, and 7 independent subtrees under one union
-    would otherwise make Catalyst re-analysis the dominant cost (the
-    r8 lineage rule, incremental_pipeline.py).
+    harness computes it once on a sample): `topk_bruteforce` on the
+    cell skeleton, cut by a lazy localCheckpoint and joined as the
+    broadcast side — it is |Q|·k rows, but a cut cogroup carries no
+    size estimate, so without the hint each join would plan a
+    sort-merge join and shuffle both sides before AQE could switch it.
+    Each ANN leg is the shipped bucketed plan (centroids/codebooks
+    broadcast, probed-cluster scans) and the curve itself decorates 6
+    top-k lists of |Q|·k rows — all counting happens on bounded frames;
+    |Q| is counted once on the driver and enters every row as a
+    literal. Each leg is localCheckpointed: it feeds two cutoffs, and 7
+    independent subtrees under one union would otherwise make Catalyst
+    re-analysis the dominant cost (the r8 lineage rule,
+    incremental_pipeline.py).
 
     r13: each index is BUILT ONCE (ivf_index / ivfpq_index — the
     assigned corpus localCheckpointed, the PQ codes persisted by the
@@ -543,7 +548,7 @@ def retrieval_ann_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         topk_bruteforce(queries, emb, k=10)
         .select("query_id", "cand_id", F.col("rnk").alias("e_rnk"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     ividx = ivf_index(emb, n_clusters=16)
     ividx = ividx._replace(cand=ividx.cand.localCheckpoint(eager=True))
@@ -568,7 +573,7 @@ def retrieval_ann_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 row = (
                     ann.filter(F.col("a_rnk") <= k)
                     .join(
-                        exact.filter(F.col("e_rnk") <= k),
+                        F.broadcast(exact.filter(F.col("e_rnk") <= k)),
                         ["query_id", "cand_id"],
                     )
                     .agg(F.count("*").cast("bigint").alias("hits"))

@@ -13,6 +13,11 @@ oracle-checkable. Codebooks and hyperplanes ride in the workers'
 closures as numpy arrays, never as plan literals.
 
 Scale design:
+- the exact, IVF and ADC top-k share one skeleton: a local top-k per
+  cell (``_cells``, a cogroup scored on the kernel), then one global
+  window. The IVF probes visit a query's n_probe cells; the exact
+  top-k and the ADC scan visit all of them, over hash buckets of the
+  candidates.
 - the exact top-k is O(|Q|·|C|) — used for small query sets and as
   the verifier/recall-oracle for the approximate paths.
 - the LSH path buckets vectors by random-hyperplane sign signatures
@@ -51,21 +56,20 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
 def _sql_cos(a: str, b: str) -> str:
     """DuckDB cosine over two list expressions, folded in the same
     left-to-right double sequence as the cosine kernel (:func:`_fold`) —
-    proven bit-identical by the exact top-k entry's driver hash match."""
+    proven bit-identical by the exact top-k entry's driver hash match.
+    NULL where the kernel gives null: a null vector, a null element, or
+    two different lengths (``list_sum`` would skip the NULL products
+    that ``list_zip`` pads with)."""
 
     def sq(v: str) -> str:
         return f"list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
 
     return (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
+        f"CASE WHEN len({a}) = len({b}) AND list_count({a}) = len({a}) AND list_count({b}) = len({b}) "
+        f"THEN list_sum(list_transform(list_zip({a}, {b}), "
         f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
-        f"/ (sqrt({sq(a)}) * sqrt({sq(b)}))"
+        f"/ (sqrt({sq(a)}) * sqrt({sq(b)})) END"
     )
-
-
-# Query rows per broadcast block of the exact top-k: 64k × 64 dims ×
-# 8 B ≈ 32 MB on the driver and in every task.
-_QUERY_BLOCK = 1 << 16
 
 
 def topk_bruteforce(
@@ -79,53 +83,21 @@ def topk_bruteforce(
     ranked by cos_sim desc, ties by candidate id: (query_id, cand_id,
     cos_sim, rnk).
 
-    A query block is broadcast to every task, and each candidate
-    partition scores its Arrow batches against it on the cosine kernel
-    (:func:`_fold`), keeping only its local top-k per query. The global
-    top-k then ranks |partitions|·k rows per query — the standard
-    two-phase top-k, with no join: the corpus streams and nothing but
-    the current query block is resident.
-
-    Driver memory is BOUNDED: queries are streamed off the cluster via
-    ``toLocalIterator`` in blocks of at most ``_QUERY_BLOCK`` rows, one
-    candidate pass per block, results unioned. For |Q| approaching
-    |corpus| the cogrouped IVF path (:func:`ivf_topk`) is the right
-    tool and this function is the lookup-side primitive."""
-    import numpy as np
-    import pyarrow as pa
-
-    spark = queries_df.sparkSession
-    cand = candidates_df.select(F.col(id_col), F.col(vec_col))
-    schema = "query_id long, cand_id long, cos_sim double"
-
-    def block_topk(q_block):
-        q_ids = np.array([r[0] for r in q_block], dtype=np.int64)
-        qv = _vectors(pa.array([r[1] for r in q_block], pa.list_(pa.float64())))
-        bc = spark.sparkContext.broadcast((q_ids, qv))
-
-        def local_topk(batches):
-            ids, qv = bc.value
-            for batch in batches:
-                c_ids = batch.column(0).to_numpy().astype(np.int64)
-                yield from _scored_topk(ids, qv, c_ids, _vectors(batch.column(1)), k)
-
-        return cand.mapInArrow(local_topk, schema)
-
-    locals_: list[DataFrame] = []
-    block: list = []
-    for r in queries_df.select(id_col, vec_col).toLocalIterator():
-        block.append(r)
-        if len(block) >= _QUERY_BLOCK:
-            locals_.append(block_topk(block))
-            block = []
-    if block:
-        locals_.append(block_topk(block))
-    if not locals_:
-        return _local_frame(spark, [], schema + ", rnk bigint")
-    local = locals_[0]
-    for extra in locals_[1:]:
-        local = local.unionAll(extra)
-    return _rank_topk(local, k)
+    The cell skeleton of the IVF probes with every cell probed: the
+    candidates hash into one bucket per shuffle partition and every
+    query visits every bucket (:func:`_all_buckets`). Each bucket
+    scores its queries against its candidates on the cosine kernel
+    (:func:`_rerank`) and keeps each query's local top-k; the global
+    window then ranks |buckets|·k rows per query — the standard
+    two-phase top-k. Nothing reaches the driver, and a bucket holds
+    |Q| query rows and |C|/|buckets| candidates. For |Q| approaching
+    |corpus| the IVF probe (:func:`ivf_topk`) visits n_probe cells per
+    query instead of all of them."""
+    qry, cand = _all_buckets(
+        queries_df.select(F.col(id_col).cast("bigint").alias("query_id"), F.col(vec_col).alias("qv")),
+        candidates_df.select(F.col(id_col).cast("bigint").alias("cand_id"), F.col(vec_col).alias("cv")),
+    )
+    return _rank_topk(_cells(qry, cand, _rerank(k), [StructField("cos_sim", DoubleType())]), k)
 
 
 TOPK_ORACLE = f"""
@@ -636,6 +608,18 @@ def _cells(qry: DataFrame, cand: DataFrame, score, fields: list) -> DataFrame:
     qry, cand = (t.withColumn("cluster_id", F.col("cluster_id").cast("bigint")) for t in (qry, cand))
     schema = StructType([qry.schema["query_id"], cand.schema["cand_id"], *fields])
     return qry.groupBy("cluster_id").cogroup(cand.groupBy("cluster_id")).applyInArrow(score, schema)
+
+
+def _all_buckets(qry: DataFrame, cand: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The all-cells layout of the exact scans for :func:`_cells`: the
+    candidates (cand_id, …) hash on cand_id into one bucket per shuffle
+    partition, and every query row (query_id, qv) is exploded into
+    every bucket, so each pair is scored in exactly one cell."""
+    n = int(qry.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        qry.withColumn("cluster_id", F.explode(F.sequence(F.lit(0), F.lit(n - 1)))),
+        cand.withColumn("cluster_id", F.pmod(F.xxhash64("cand_id"), F.lit(n))),
+    )
 
 
 def _signatures(df: DataFrame, planes) -> DataFrame:
@@ -1386,20 +1370,16 @@ def pq_adc_topk(
     Scale shape: ADC *is* a linear scan over compressed codes; its win
     is the 64× memory compression (4 bytes vs 256), not scan avoidance.
     The codes shuffle once into hash buckets (one per shuffle
-    partition) and every query visits every bucket: the cell skeleton
-    of the IVF probes (:func:`_cells`) with all cells probed, scored on
-    the same kernel (:func:`_adc`), so no pair is formed as a row. At
+    partition) and every query visits every bucket (:func:`_all_buckets`,
+    as in :func:`topk_bruteforce`): the cell skeleton of the IVF probes
+    (:func:`_cells`) with all cells probed, scored on the same kernel
+    (:func:`_adc`), so no pair is formed as a row. At
     100 TB the codes live inside IVF clusters (IVF-ADC,
     :func:`ivfpq_probe`): the same kernel runs per probed cluster only.
     Top-k per query is a window over the per-bucket survivors."""
-    n = int(queries_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    qry = queries_df.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(F.sequence(F.lit(0), F.lit(n - 1))).alias("cluster_id"),
-    )
-    cand = codes_df.select(
-        F.col(id_col).alias("cand_id"), "codes", F.pmod(F.xxhash64(id_col), F.lit(n)).alias("cluster_id")
+    qry, cand = _all_buckets(
+        queries_df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
+        codes_df.select(F.col(id_col).alias("cand_id"), "codes"),
     )
     scored = _cells(
         qry, cand, _adc(codebooks, k, self_ok=True),

@@ -80,9 +80,10 @@ def build_eval_index(
 
 
 def load_eval_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The eval index `build_eval_index` landed, persisted: it is
-    static, so a stream loads and caches it once."""
-    return read_state(spark, index_dir, 1).persist()
+    """The eval index `build_eval_index` landed, behind a lazy lineage
+    cut: it is static, so a stream loads it once, its first batch
+    materializes it, and its blocks go with the frame."""
+    return read_state(spark, index_dir, 1).localCheckpoint(eager=False)
 
 
 def decontam_process_batch(
@@ -103,41 +104,33 @@ def decontam_process_batch(
     commit the manifest under the batch-id dir. Extra batch columns
     (e.g. ``source``) pass through to the manifest for auditability.
 
-    ``eval_index_df`` (r16): the eval index is STATIC by construction,
-    yet each batch re-loaded and re-persisted it — a long-running
-    stream pays the load + cache write once per micro-batch for state
-    that never changes. Pass the already-persisted index frame (the
-    stream wrapper and the catalog entry do) to load it once per
-    stream; omitted, the per-batch load keeps the old standalone
-    behavior."""
+    ``eval_index_df``: the eval index is STATIC by construction, so the
+    stream wrapper and the catalog entry load it once per stream
+    (`load_eval_index`) and pass it to every batch; omitted, the batch
+    loads it itself."""
     spark_ = batch_df.sparkSession
     with job_label(spark_, f"decontam b{batch_id}: decontam gate"):
-        own_index = eval_index_df is None
-        # persisted, the tiny index pins both broadcast builds (ebuck + esh)
-        # to one scan
-        esig = load_eval_index(spark_, index_dir) if own_index else eval_index_df
-        try:
-            flags = decontaminate_against_index(
-                batch_df,
-                esig,
-                text_col=text_col,
-                id_col=id_col,
-                threshold=threshold,
-                num_hashes=num_hashes,
-                n=n,
-                rows_per_band=rows_per_band,
-            )
-            passthrough = [c for c in batch_df.columns if c not in (text_col,)]
-            manifest = (
-                batch_df.select(*passthrough)
-                # flags is batch-bounded → broadcast (r16, guide §3.1)
-                .join(F.broadcast(flags), F.col(id_col) == flags.id)
-                .select(*passthrough, "max_jaccard", "is_kept")
-            )
-            overwrite_batch_atomic(manifest, manifest_dir, batch_id)
-        finally:
-            if own_index:
-                esig.unpersist()
+        # behind its cut, the tiny index pins both broadcast builds
+        # (ebuck + esh) to one scan
+        esig = load_eval_index(spark_, index_dir) if eval_index_df is None else eval_index_df
+        flags = decontaminate_against_index(
+            batch_df,
+            esig,
+            text_col=text_col,
+            id_col=id_col,
+            threshold=threshold,
+            num_hashes=num_hashes,
+            n=n,
+            rows_per_band=rows_per_band,
+        )
+        passthrough = [c for c in batch_df.columns if c not in (text_col,)]
+        manifest = (
+            batch_df.select(*passthrough)
+            # flags is batch-bounded → broadcast (r16, guide §3.1)
+            .join(F.broadcast(flags), F.col(id_col) == flags.id)
+            .select(*passthrough, "max_jaccard", "is_kept")
+        )
+        overwrite_batch_atomic(manifest, manifest_dir, batch_id)
 
 
 def incremental_decontam_stream(
@@ -196,14 +189,10 @@ def stream_incremental_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df, batch_id, idx_d, os.path.join(root, "man"), eval_index_df=esig
         )
 
-    try:
-        return three_batch_manifest(
-            docs.filter(F.col("source") != "src0"),
-            "doc_id",
-            "decontam",
-            ("doc_id", "source", "max_jaccard", "is_kept"),
-            process_batch,
-        )
-    finally:
-        if esig is not None:
-            esig.unpersist()
+    return three_batch_manifest(
+        docs.filter(F.col("source") != "src0"),
+        "doc_id",
+        "decontam",
+        ("doc_id", "source", "max_jaccard", "is_kept"),
+        process_batch,
+    )

@@ -79,7 +79,7 @@ BUILD_JOBS: dict[str, tuple[int, str]] = {
     "dedup_simhash_neardup_pairs": (2, "lazy lineage cut runs its frame's exchange stage"),
     "dedup_minhash_lsh_pairs": (1, "lazy lineage cut runs its frame's exchange stage"),
     "contamination_neardup_eval": (2, "eval index is an eager localCheckpoint"),
-    # one collect: the codebook rows or the query block reach the driver
+    # one collect: the codebook rows reach the driver
     "dedup_semantic_cluster": (1, "sample_centroids collects the codebook"),
     "dedup_semantic_cluster_two_level": (1, "sample_centroids collects the codebook"),
     "similarity_assign_two_level": (1, "sample_centroids collects the codebook"),
@@ -88,11 +88,6 @@ BUILD_JOBS: dict[str, tuple[int, str]] = {
     "similarity_knn_join_cogrouped": (1, "sample_centroids collects the codebook"),
     "similarity_pq_adc_topk": (1, "sample_centroids collects the PQ codebooks"),
     "similarity_pq_codes": (1, "sample_centroids collects the PQ codebooks"),
-    "similarity_topk_bruteforce": (1, "topk_bruteforce collects its query block"),
-    "similarity_topk_vectorized": (1, "topk_bruteforce collects its query block"),
-    "retrieval_hybrid_rrf": (1, "topk_bruteforce collects its query block"),
-    "retrieval_knn_eval": (1, "topk_bruteforce collects its query block"),
-    "retrieval_recall_curve_by_label": (1, "topk_bruteforce collects its query block"),
 }
 
 

@@ -105,6 +105,7 @@ def test_real_stream_drive(spark, tmp_path):
     q = incremental_decontam_stream(spark, stream, idx_d, man_d, ckpt)
     q.awaitTermination()
     q.stop()
+    assert cache_is_empty(spark), "the stream's eval index outlived the query"
 
     man = _manifest(spark, man_d)
     assert man.count() == a.count() + b.count()
@@ -147,7 +148,6 @@ def test_failed_manifest_write_releases_own_index(spark, tmp_path):
     build_eval_index(docs.filter(F.col("source") == "src0"), idx_d)
     man_d = tmp_path / "man"
     man_d.write_text("")  # a file where the manifest dir should be
-    spark.catalog.clearCache()  # what earlier tests left cached is not checked here
     with pytest.raises(Exception, match="Not a directory"):
         decontam_process_batch(docs.filter(F.col("source") != "src0"), 0, idx_d, str(man_d))
     assert cache_is_empty(spark)

@@ -15,11 +15,16 @@ from duckdb_vortex_spark.catalog import load
 from duckdb_vortex_spark.operators.similarity import ivf_topk, topk_bruteforce
 
 from .conftest import SF_DIR
-from .hof_reference import _dot, _norm, cosine
+from .hof_reference import _dot, _norm, adversarial_embeddings, cosine
 
 
 def _pairs(df):
     return {(r.query_id, r.cand_id) for r in df.collect()}
+
+
+def _topk_rows(rows):
+    """(query_id, cand_id, cos_sim, rnk) rows, sorted, cos_sim as bits."""
+    return sorted((q, c, _bits(cos), rnk) for q, c, cos, rnk in rows)
 
 
 def test_ivf_recall_beats_probed_fraction(spark):
@@ -77,18 +82,17 @@ def _hof_topk(q, c, k):
 
 
 def test_vectorized_topk_equals_bruteforce(spark):
-    """The exact top-k (block top-k on the cosine kernel) returns
-    exactly the rows of a HOF reference top-k, cos_sim and rnk
+    """The exact top-k (a local top-k per bucket on the cosine kernel)
+    returns exactly the rows of a HOF reference top-k, cos_sim and rnk
     included, on the real corpus and on degenerate vectors (null,
     short, long, null element, NaN element, zero) as queries and
     candidates: the kernel folds in _dot's order, and a NaN cos_sim
     ranks first as Spark orders it."""
     emb, corpus = _degenerate_corpus(spark)
     q = corpus.filter((F.col("vec_id") % 50 == 0) | (F.col("vec_id") > 900000))
-    def rows(df):
-        return sorted((r.query_id, r.cand_id, _bits(r.cos_sim), r.rnk) for r in df.collect())
-
-    assert rows(topk_bruteforce(q, corpus, k=5)) == rows(_hof_topk(q, corpus, 5))
+    assert _topk_rows(topk_bruteforce(q, corpus, k=5).collect()) == _topk_rows(
+        _hof_topk(q, corpus, 5).collect()
+    )
 
 
 def test_fold_is_a_left_fold():
@@ -144,17 +148,55 @@ def test_ivf_vectorized_equals_hof(spark):
     assert _rows(ivf_probe(index, q, k=5, n_probe=3)) == _rows(_rank_topk(scored, 5))
 
 
-def test_vectorized_topk_chunked_query_block(spark, monkeypatch):
-    """Driver-memory bound: with a query block smaller than |Q| the
-    query set streams in blocks (one candidate pass per block) and the
-    unioned result is identical to the single-block path."""
-    from duckdb_vortex_spark.operators import similarity
-
+def test_topk_bruteforce_independent_of_bucket_count(spark):
+    """The exact top-k hashes the candidates into one bucket per shuffle
+    partition and visits every bucket with every query, so its rows,
+    cos_sim bits included, are the same for any bucket count: 1 (one
+    cell holds the whole corpus), 3, and the session default. An empty
+    query side gives no rows, with the schema."""
     emb = load(spark, SF_DIR, "embeddings")
     q = emb.filter(F.col("vec_id") % 50 == 0)
-    whole = _rows(topk_bruteforce(q, emb, k=5))
-    monkeypatch.setattr(similarity, "_QUERY_BLOCK", 3)
-    assert _rows(topk_bruteforce(q, emb, k=5)) == whole
+    key = "spark.sql.shuffle.partitions"
+    default = spark.conf.get(key)
+    got = {}
+    try:
+        for n in ("1", "3", default):
+            spark.conf.set(key, n)
+            got[n] = _topk_rows(topk_bruteforce(q, emb, k=5).collect())
+    finally:
+        spark.conf.set(key, default)
+    assert len(got[default]) == 5 * q.count()
+    assert got["1"] == got["3"] == got[default]
+    empty = topk_bruteforce(q.filter(F.lit(False)), emb, k=5)
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == (
+        "struct<query_id:bigint,cand_id:bigint,cos_sim:double,rnk:bigint>"
+    )
+
+
+def test_topk_bruteforce_equals_oracle_on_adversarial_rows(spark):
+    """The DuckDB oracle of the exact top-k (TOPK_ORACLE over the same
+    rows) returns the engine's rows, cos_sim bits and NaN included, on
+    the corpus plus a null vector, a null element, a NaN element, a
+    short, a long and a zero vector: `_sql_cos` gives NULL where the
+    kernel does. Queries are the oracle's own sample, then that sample
+    plus the adversarial rows."""
+    import duckdb
+
+    from duckdb_vortex_spark.operators.similarity import TOPK_ORACLE
+
+    corpus = adversarial_embeddings(load(spark, SF_DIR, "embeddings"))
+    con = duckdb.connect()
+    # a table, not a registered Arrow stream: DuckDB 1.0.0 has crashed the
+    # process scanning these rows through an unguarded cosine
+    con.from_arrow(corpus.toArrow()).create("embeddings")
+    sample = "WHERE vec_id % 20 = 0"
+    for where in (sample, sample + " OR vec_id > 900000"):
+        q = corpus.filter(F.expr(where[len("WHERE ") :]))
+        got = _topk_rows(topk_bruteforce(q, corpus, k=10).collect())
+        want = _topk_rows(con.execute(TOPK_ORACLE.replace(sample, where)).fetchall())
+        assert got == want, where
+    con.close()
 
 
 def test_semdedup_runs_the_assignment_once(spark):
